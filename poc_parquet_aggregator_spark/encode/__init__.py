@@ -5,6 +5,7 @@ from .pipeline import (
     decode_verify,
     encode_dataset,
     manifest_df,
+    plan_read,
     read_decoded,
     read_manifest,
     token_read_stats,
@@ -23,6 +24,7 @@ __all__ = [
     "encode_dataset_by_source",
     "decode_verify",
     "manifest_df",
+    "plan_read",
     "read_decoded",
     "read_manifest",
     "compact_manifest",

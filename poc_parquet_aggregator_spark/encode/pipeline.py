@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import glob
 import json
+import operator
 import os
 import shutil
 import struct
@@ -36,6 +37,8 @@ import time
 import uuid
 import zlib
 from collections.abc import Iterator
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -43,6 +46,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codecs.ints import unwrap_zstd, wrap_zstd
 from ..codecs.strings import (
@@ -55,32 +59,7 @@ from .tokfilter import (
     build_token_filter,
     merge_token_filters,
     token_filter_bounds,
-    token_filter_contains,
     token_filter_contains_any,
-)
-
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("file_stem", T.StringType(), False),
-        T.StructField("part_path", T.StringType(), False),
-        T.StructField("n_chunks", T.LongType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("checksum", T.LongType(), False),
-        T.StructField("codecs_json", T.StringType(), False),
-        T.StructField("doc_id_min", T.StringType(), True),
-        T.StructField("doc_id_max", T.StringType(), True),
-        T.StructField("n_tok_min", T.LongType(), True),
-        T.StructField("n_tok_max", T.LongType(), True),
-        # token VALUE bounds + membership filter (OR of the part's chunk
-        # filters) — the driver merges parts per stem and commits the file
-        # filter to the _tokfilters sidecar (see encode/tokfilter.py)
-        T.StructField("tok_min", T.LongType(), True),
-        T.StructField("tok_max", T.LongType(), True),
-        T.StructField("tok_filter", T.BinaryType(), True),
-    ]
 )
 
 _META_ARROW_SCHEMA = pa.schema(
@@ -98,11 +77,16 @@ _META_ARROW_SCHEMA = pa.schema(
         pa.field("doc_id_max", pa.string()),
         pa.field("n_tok_min", pa.int64()),
         pa.field("n_tok_max", pa.int64()),
+        # token VALUE bounds + membership filter (OR of the part's chunk
+        # filters); the commit merges parts per stem into the file's
+        # _tokfilters sidecar (see encode/tokfilter.py)
         pa.field("tok_min", pa.int64()),
         pa.field("tok_max", pa.int64()),
         pa.field("tok_filter", pa.large_binary()),
     ]
 )
+# the part rows encode tasks yield to the driver (see fold_parts)
+META_SCHEMA = from_arrow_schema(_META_ARROW_SCHEMA)
 
 # parquet column statistics only where a reader predicates: the zone
 # columns (row-group pruning needs their min/max) and the small numeric
@@ -259,7 +243,7 @@ def _pack_extras(
             )
         arr = part.column(idx)
         if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-            raw_bytes += _utf8_size(arr)
+            raw_bytes += len(_utf8_payload(arr))
         else:
             raw_bytes += (arr.type.bit_width // 8) * len(arr)
         kind, payload, codec = _encode_extra_array(arr, zstd, zstd_level)
@@ -350,31 +334,23 @@ def _stem(path: str) -> str:
     return os.path.splitext(os.path.basename(path))[0]
 
 
-def _utf8_payload(arr: "pa.Array") -> bytes:
-    """Concatenated utf-8 bytes of a StringArray, straight from its buffers."""
+def _utf8_payload(arr: "pa.Array") -> memoryview:
+    """Concatenated utf-8 bytes of a StringArray, a zero-copy view of its
+    buffers (its ``len`` is the column's raw string size)."""
     arr = arr.cast(pa.string())
     buf = arr.buffers()
     n = len(arr)
     if n == 0 or buf[2] is None:
-        return b""
+        return memoryview(b"")
     offsets = np.frombuffer(buf[1], dtype=np.int32, count=n + 1, offset=arr.offset * 4)
-    return bytes(memoryview(buf[2])[int(offsets[0]) : int(offsets[-1])])
-
-
-def _utf8_size(arr: "pa.Array") -> int:
-    arr = arr.cast(pa.string())
-    buf = arr.buffers()
-    n = len(arr)
-    if n == 0 or buf[2] is None:
-        return 0
-    offsets = np.frombuffer(buf[1], dtype=np.int32, count=n + 1, offset=arr.offset * 4)
-    return int(offsets[-1] - offsets[0])
+    return memoryview(buf[2])[int(offsets[0]) : int(offsets[-1])]
 
 
 def _encode_chunk_row(
     part: pa.RecordBatch, zstd: bool, zstd_level: int = 3, extras: list[str] | None = None
-) -> tuple[dict, dict]:
-    """Encode one Arrow batch → (metadata row dict, codec meta).
+) -> dict:
+    """Encode one Arrow batch → its chunk row (``_ENC_ARROW_SCHEMA``
+    columns plus the ``fold_parts`` keys that schema drops).
 
     The tokens ListArray flattens ZERO-COPY (values buffer + value_lengths);
     no per-row numpy arrays are ever materialized — this is the difference
@@ -406,8 +382,8 @@ def _encode_chunk_row(
     meta["streams"]["doc_id"] = STR_CODEC_NAMES[did_codec]
     meta["streams"]["source"] = STR_CODEC_NAMES[src_codec]
     extras_blob, extra_bytes = _pack_extras(part, extras or [], zstd, zstd_level, meta)
-    did_bytes = _utf8_size(did_arr)
-    src_bytes = _utf8_size(src_arr)
+    did_bytes = len(_utf8_payload(did_arr))
+    src_bytes = len(_utf8_payload(src_arr))
     bytes_in = int(4 * len(flat) + 4 * len(lengths) + did_bytes + src_bytes + extra_bytes)
     bytes_out = len(tokens_blob) + len(did_blob) + len(src_blob) + len(extras_blob)
     crc = zlib.crc32(flat.tobytes()) ^ zlib.crc32(_utf8_payload(did_arr))
@@ -446,8 +422,11 @@ def _encode_chunk_row(
         "tokens_blob": tokens_blob,
         "extras_blob": extras_blob,
         "meta_json": json.dumps(meta["streams"], sort_keys=True),
+        "n_chunks": 1,
+        "checksum": crc,
+        "codecs": {f"{k}:{v}": 1 for k, v in meta["streams"].items()},
     }
-    return row, meta
+    return row
 
 
 def _split_by_file(batch: pa.RecordBatch, key: str = "_file") -> Iterator[tuple[str, pa.RecordBatch]]:
@@ -468,6 +447,40 @@ def _split_by_file(batch: pa.RecordBatch, key: str = "_file") -> Iterator[tuple[
         yield str(arr[s]), batch.slice(s, e - s)
 
 
+_FOLD_SUMS = ("n_chunks", "n_docs", "n_tokens", "bytes_in", "bytes_out")
+
+
+def fold_parts(rows: list[dict]) -> dict:
+    """Fold rows into one coarser record — chunks into a part, parts into
+    a file or bucket record; rows and result share one shape, so folds
+    compose. Sums, checksum XOR and codec counts add up. Zone bounds skip
+    only MISSING values (an empty doc_id is a real bound: dropping it let
+    the manifest prune files holding matching rows); token zones skip
+    empty rows (``tok_max < tok_min``). The membership filter is the OR of
+    the rows' filters, and only if EVERY row has one — a row missing from
+    the OR would be a false negative."""
+    toks = [r for r in rows if r["tok_min"] is not None and r["tok_max"] is not None
+            and r["tok_max"] >= r["tok_min"]]
+
+    def bound(pick, key, rs=rows):
+        return pick((r[key] for r in rs if r[key] is not None), default=None)
+
+    out = {k: sum(r[k] for r in rows) for k in _FOLD_SUMS}
+    out["checksum"] = reduce(operator.xor, (r["checksum"] for r in rows), 0)
+    out["codecs"] = {}
+    for r in rows:
+        for k, v in r["codecs"].items():
+            out["codecs"][k] = out["codecs"].get(k, 0) + v
+    for col in ("doc_id", "n_tok"):
+        out[f"{col}_min"], out[f"{col}_max"] = bound(min, f"{col}_min"), bound(max, f"{col}_max")
+    out["tok_min"], out["tok_max"] = bound(min, "tok_min", toks), bound(max, "tok_max", toks)
+    whole = rows and all(r["tok_filter"] is not None for r in rows)
+    out["tok_filter"] = (
+        merge_token_filters([bytes(r["tok_filter"]) for r in rows]) if whole else None
+    )
+    return out
+
+
 def _make_encode_fn(
     staging_dir: str,
     zstd: bool,
@@ -483,7 +496,7 @@ def _make_encode_fn(
             if batch.num_rows == 0:
                 continue
             for fname, part in _split_by_file(batch, key):
-                row, _ = _encode_chunk_row(part, zstd, zstd_level, extras=extras)
+                row = _encode_chunk_row(part, zstd, zstd_level, extras=extras)
                 per_file.setdefault(stem_of(str(fname)), []).append(row)
         out_rows = []
         for stem, rows in per_file.items():
@@ -496,48 +509,9 @@ def _make_encode_fn(
                 tbl, part_path, compression="none", use_dictionary=False,
                 write_statistics=_STATS_COLS,
             )
-            codecs: dict[str, int] = {}
-            for r in rows:
-                for stream, codec in json.loads(r["meta_json"]).items():
-                    codecs[f"{stream}:{codec}"] = codecs.get(f"{stream}:{codec}", 0) + 1
-            checksum = 0
-            for r in rows:
-                checksum ^= r["chunk_crc"]
-            out_rows.append(
-                {
-                    "file_stem": stem,
-                    "part_path": part_path,
-                    "n_chunks": len(rows),
-                    "n_docs": sum(r["n_docs"] for r in rows),
-                    "n_tokens": sum(r["n_tokens"] for r in rows),
-                    "bytes_in": sum(r["bytes_in"] for r in rows),
-                    "bytes_out": sum(r["bytes_out"] for r in rows),
-                    "checksum": checksum,
-                    "codecs_json": json.dumps(codecs, sort_keys=True),
-                    "doc_id_min": min((r["doc_id_min"] for r in rows), default=None),
-                    "doc_id_max": max((r["doc_id_max"] for r in rows), default=None),
-                    "n_tok_min": min((r["n_tok_min"] for r in rows), default=None),
-                    "n_tok_max": max((r["n_tok_max"] for r in rows), default=None),
-                    # non-empty token zones only (hi < lo marks an empty
-                    # chunk, which must not poison the part bounds)
-                    "tok_min": min(
-                        (r["tok_min"] for r in rows if r["tok_max"] >= r["tok_min"]),
-                        default=None,
-                    ),
-                    "tok_max": max(
-                        (r["tok_max"] for r in rows if r["tok_max"] >= r["tok_min"]),
-                        default=None,
-                    ),
-                    # a part-level filter is only sound if EVERY chunk
-                    # contributed one — a missing chunk in the OR would be
-                    # a false negative (silently dropped rows downstream)
-                    "tok_filter": (
-                        merge_token_filters([r["tok_filter"] for r in rows])
-                        if all(r["tok_filter"] is not None for r in rows)
-                        else None
-                    ),
-                }
-            )
+            part = fold_parts(rows)
+            part["codecs_json"] = json.dumps(part.pop("codecs"), sort_keys=True)
+            out_rows.append({"file_stem": stem, "part_path": part_path, **part})
         if out_rows:
             yield pa.RecordBatch.from_pylist(out_rows, schema=_META_ARROW_SCHEMA)
 
@@ -712,15 +686,22 @@ def _make_decode_fn(
     return decode_batches
 
 
-def _decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    yield from _make_decode_fn()(batches)
-
-
 # ----------------------------------------------------------------- manifest
 
 
 def _manifest_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
+
+
+def _atomic_write(path: str, data: str | bytes) -> None:
+    """Write ``path`` via a hidden temp file and a rename — the commit
+    step of every manifest-plane write (readers never see a torn file)."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "wb" if isinstance(data, bytes) else "w") as f:
+        f.write(data)
+    os.rename(tmp, path)
 
 
 def _manifest_paths(out_dir: str) -> tuple[list[str], list[str]]:
@@ -776,18 +757,6 @@ _MANIFEST_PRUNE_SCHEMA = (
 )
 
 
-_MANIFEST_PRUNE_FIELDS = [
-    "file_stem",
-    "doc_id_min",
-    "doc_id_max",
-    "n_tok_min",
-    "n_tok_max",
-    "tok_min",
-    "tok_max",
-    "tok_filter",
-]
-
-
 def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     """The manifest as a DataFrame — the cluster-scale form of
     ``read_manifest``. At the 10^12-sequence target (~40M committed
@@ -820,7 +789,7 @@ def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     splits += [(p, 0, -1, "1") for p in loose]
     if not splits:
         return spark.createDataFrame([], _MANIFEST_PRUNE_SCHEMA)
-    fields = list(_MANIFEST_PRUNE_FIELDS)
+    fields = [f.split()[0] for f in _MANIFEST_PRUNE_SCHEMA.split(", ")]
 
     def parse(batches) -> Iterator[pd.DataFrame]:
         def emit(recs: list[dict], prio: str, ords: list[int]) -> pd.DataFrame:
@@ -894,89 +863,146 @@ def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def _keep_stems_df(
-    spark: SparkSession,
+@dataclass(frozen=True)
+class _Zone:
+    """Zone-overlap predicate on ``<col>_min``/``<col>_max``, columns that
+    manifest records and chunk rows share: keep when the zone meets ANY of
+    ``spans`` (closed intervals) or lacks a bound (conservative NULL rule:
+    pre-upgrade encodes stay readable). ``keeps`` tests a record dict,
+    ``column`` renders the same test as a Spark Column."""
+
+    col: str
+    spans: tuple
+
+    def keeps(self, rec: dict) -> bool:
+        lo, hi = rec.get(f"{self.col}_min"), rec.get(f"{self.col}_max")
+        return lo is None or hi is None or any(hi >= a and lo <= b for a, b in self.spans)
+
+    def column(self):
+        lo, hi = F.col(f"{self.col}_min"), F.col(f"{self.col}_max")
+        meets = reduce(operator.or_, [(hi >= a) & (lo <= b) for a, b in self.spans])
+        return lo.isNull() | hi.isNull() | meets
+
+
+@dataclass(frozen=True)
+class ReadPlan:
+    """A read's zone predicates (ANDed) and token ids (sidecar probe).
+    ``stems`` (kept files) and ``funnel`` (files per pruning stage) are
+    set when the driver pruned the files; None on the join path."""
+
+    out_dir: str
+    zones: tuple
+    tok_ids: list[int] | None
+    stems: list[str] | None = None
+    funnel: dict | None = None
+
+    def column(self, columns: list[str] | None = None):
+        """The zones ANDed as one Column (None if none applies); given a
+        frame's ``columns``, only zones whose bounds it has."""
+        cols = [z.column() for z in self.zones
+                if columns is None or {f"{z.col}_min", f"{z.col}_max"} <= set(columns)]
+        return reduce(operator.and_, cols) if cols else None
+
+
+def _sidecar_keeps(out_dir: str, stem: str, has_filter, lo, hi, tok_ids: list[int]) -> bool:
+    """May the file's ``_tokfilters`` sidecar hold one of the ids inside
+    its token zone [lo, hi]? Out-of-zone ids are not probed (a hashed-mode
+    false positive on one must not keep the file); a file without a
+    filter flag or sidecar is kept."""
+    if not has_filter:
+        return True
+    cand = tok_ids if lo is None or hi is None else [t for t in tok_ids if lo <= t <= hi]
+    sidecar = read_token_sidecar(out_dir, stem)
+    return sidecar is None or token_filter_contains_any(sidecar, cand)
+
+
+def _keep_list(plan: ReadPlan) -> tuple[list[str], dict]:
+    """Driver keep-list over ``read_manifest``: (kept stems, funnel)."""
+    stems, zone_pruned = [], 0
+    records = read_manifest(plan.out_dir)
+    for stem, rec in records.items():
+        if not all(z.keeps(rec) for z in plan.zones):
+            zone_pruned += 1
+        elif plan.tok_ids is None or _sidecar_keeps(
+            plan.out_dir, stem, rec.get("tok_filter"), rec.get("tok_min"),
+            rec.get("tok_max"), plan.tok_ids,
+        ):
+            stems.append(stem)
+    return stems, {
+        "files_total": len(records),
+        "files_zone_pruned": zone_pruned,
+        "files_filter_pruned": len(records) - zone_pruned - len(stems),
+        "files_kept": len(stems),
+    }
+
+
+def plan_read(
     out_dir: str,
-    want_lo: str | None,
-    want_hi: str | None,
-    n_tok_range: tuple[int, int] | None,
-    tok_ids: list[int] | None,
-) -> DataFrame:
-    """Distributed file pruning: the manifest DataFrame filtered by the
-    same conservative-keep zone predicates as the driver loops, plus an
-    executor-side sidecar probe for token-content reads (each surviving
-    stem's ``_tokfilters/<stem>.bin`` is opened where the task runs — on
-    a cluster that is the shared object store, and the probe is one small
-    read per FILE, the manifest-plane unit of IO). Returns the stems that
-    survive every requested prune; ``read_decoded`` left-semi-joins the
-    chunk frame against it instead of materializing a driver keep-list."""
-    man = manifest_df(spark, out_dir)
-    if want_lo is not None:
-        man = man.filter(
-            F.col("doc_id_min").isNull()
-            | F.col("doc_id_max").isNull()
-            | ((F.col("doc_id_max") >= want_lo) & (F.col("doc_id_min") <= want_hi))
-        )
+    doc_id_range: tuple[str, str] | None = None,
+    doc_ids: list[str] | None = None,
+    n_tok_range: tuple[int, int] | None = None,
+    tok_ids: int | list[int] | None = None,
+) -> ReadPlan:
+    """Build a selective read's zone predicates once, and prune files on
+    the driver while the manifest is at most MANIFEST_JOIN_BYTES. Above
+    that the keep-list itself is the scale problem (a driver loop over
+    ~40M records, a multi-GB In-expression) and ``read_decoded`` renders
+    the same predicates over ``manifest_df`` instead (``_keep_stems_df``)."""
+    zones = []
+    if doc_id_range:
+        zones.append(_Zone("doc_id", (tuple(doc_id_range),)))
+    if doc_ids:  # one span per id; past a cap, the ids' overall range
+        ids = sorted(set(doc_ids))
+        zones.append(_Zone("doc_id", tuple(
+            [(i, i) for i in ids] if len(ids) <= 256 else [(ids[0], ids[-1])]
+        )))
     if n_tok_range:
-        man = man.filter(
-            F.col("n_tok_min").isNull()
-            | F.col("n_tok_max").isNull()
-            | (
-                (F.col("n_tok_max") >= n_tok_range[0])
-                & (F.col("n_tok_min") <= n_tok_range[1])
-            )
-        )
-    if tok_ids:
-        zone = None
-        for t in tok_ids:
-            c = (F.col("tok_min") <= t) & (F.col("tok_max") >= t)
-            zone = c if zone is None else (zone | c)
-        man = man.filter(F.col("tok_min").isNull() | F.col("tok_max").isNull() | zone)
-        probe_ids = list(tok_ids)
+        zones.append(_Zone("n_tok", (tuple(n_tok_range),)))
+    tids = None if tok_ids is None else _token_id_list(tok_ids)
+    if tids is not None:  # ANY-match: per-id spans OR'd
+        zones.append(_Zone("tok", tuple((t, t) for t in tids)))
+    plan = ReadPlan(out_dir, tuple(zones), tids)
+    # manifest bytes, segments AND loose backlog; the stat() sweep stops
+    # at the threshold (over millions of loose JSONs it is itself slow)
+    segs, loose = _manifest_paths(out_dir)
+    man_bytes = 0
+    for p in (*segs, *loose):
+        man_bytes += os.path.getsize(p)
+        if man_bytes > MANIFEST_JOIN_BYTES:
+            break
+    if not zones or man_bytes > MANIFEST_JOIN_BYTES:
+        return plan
+    return ReadPlan(out_dir, plan.zones, tids, *_keep_list(plan))
 
-        def probe(batches):
-            def bound(v):  # null-tolerant: None or NaN → no bound
-                return None if v is None or v != v else int(v)
 
-            for pdf in batches:
-                keep = []
-                for stem, has_filter, t_lo, t_hi in zip(
+def _keep_stems_df(spark: SparkSession, plan: ReadPlan) -> DataFrame:
+    """The join path's surviving stems: ``manifest_df`` filtered by the
+    plan's zone Column, then each token read's sidecar probed where the
+    task runs (on a cluster, one small object-store read per FILE)."""
+    man = manifest_df(spark, plan.out_dir).filter(plan.column())
+    if plan.tok_ids is None:
+        return man.select("file_stem")
+    out_dir, tok_ids = plan.out_dir, plan.tok_ids
+
+    def probe(batches):
+        def val(v):  # a null reaches pandas as None, NaN or pd.NA
+            try:
+                return v if v == v else None
+            except TypeError:  # bool(pd.NA)
+                return None
+
+        for pdf in batches:
+            keep = [
+                _sidecar_keeps(out_dir, stem, val(flag), val(lo), val(hi), tok_ids)
+                for stem, flag, lo, hi in zip(
                     pdf["file_stem"], pdf["tok_filter"], pdf["tok_min"], pdf["tok_max"]
-                ):
-                    # probe the sidecar ONLY when the record's flag is a
-                    # definite True — exactly the driver path's
-                    # `if rec.get("tok_filter")` rule. A null flag can
-                    # reach pandas as None, NaN (truthy float!) or pd.NA
-                    # (raises on bool()); all mean "pre-filter encode:
-                    # conservative keep" (r6 ADVICE)
-                    try:
-                        probe_it = bool(has_filter) and has_filter == has_filter
-                    except (TypeError, ValueError):  # pd.NA
-                        probe_it = False
-                    if not probe_it:
-                        keep.append(True)
-                        continue
-                    # probe only the ids inside THIS file's zone — the same
-                    # candidate subset the driver path uses, so a hashed-
-                    # mode false positive on an out-of-zone id can't keep a
-                    # file the driver path (and token_read_stats) prunes
-                    lo, hi = bound(t_lo), bound(t_hi)
-                    cand = (
-                        probe_ids
-                        if lo is None or hi is None
-                        else [t for t in probe_ids if lo <= t <= hi]
-                    )
-                    sidecar = read_token_sidecar(out_dir, stem)
-                    keep.append(
-                        sidecar is None
-                        or token_filter_contains_any(sidecar, cand)
-                    )
-                yield pdf.loc[keep, ["file_stem"]]
+                )
+            ]
+            yield pdf.loc[keep, ["file_stem"]]
 
-        return man.select("file_stem", "tok_filter", "tok_min", "tok_max").mapInPandas(
-            probe, schema="file_stem string"
-        )
-    return man.select("file_stem")
+    return man.select("file_stem", "tok_filter", "tok_min", "tok_max").mapInPandas(
+        probe, schema="file_stem string"
+    )
 
 
 def compact_manifest(out_dir: str) -> dict:
@@ -1071,13 +1097,8 @@ def compact_encoded(out_dir: str, max_parts: int = 1) -> dict:
         os.rename(staged, stem_dir)
         shutil.rmtree(old)
         if stem in records:
-            rec = dict(records[stem])
-            rec["n_parts"] = 1
-            rec["compacted_at"] = time.time()
-            tmp = os.path.join(mdir, f".{stem}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f, sort_keys=True)
-            os.rename(tmp, os.path.join(mdir, f"{stem}.json"))
+            rec = {**records[stem], "n_parts": 1, "compacted_at": time.time()}
+            _atomic_write(os.path.join(mdir, f"{stem}.json"), json.dumps(rec, sort_keys=True))
         compacted += 1
     return {"stems_compacted": compacted, "rolled_back": rolled_back}
 
@@ -1104,12 +1125,10 @@ def write_layout(out_dir: str, layout: str, extras: list[list[str]] | None = Non
     uses the layout to decide whether file_stem carries the source prefix
     and the extras list to assemble the decoded schema (atomic rename, same
     protocol as every other manifest write)."""
-    mdir = _manifest_dir(out_dir)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, _LAYOUT_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"layout": layout, "extras": extras or []}, f)
-    os.rename(tmp, os.path.join(mdir, _LAYOUT_FILE))
+    _atomic_write(
+        os.path.join(_manifest_dir(out_dir), _LAYOUT_FILE),
+        json.dumps({"layout": layout, "extras": extras or []}),
+    )
 
 
 def _read_layout_record(out_dir: str) -> dict:
@@ -1137,12 +1156,7 @@ def write_token_sidecar(out_dir: str, stem: str, blob: bytes) -> None:
     (listing cost) in a puffin-style sidecar. Written BEFORE the manifest
     rename: a committed record implies its sidecar is in place, and a
     crash in between re-encodes the file (idempotent, like the data dir)."""
-    d = os.path.join(out_dir, "_tokfilters")
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".{stem}.bin.tmp")
-    with open(tmp, "wb") as f:
-        f.write(blob)
-    os.rename(tmp, _tokfilter_path(out_dir, stem))
+    _atomic_write(_tokfilter_path(out_dir, stem), bytes(blob))
 
 
 def read_token_sidecar(out_dir: str, stem: str) -> bytes | None:
@@ -1153,22 +1167,72 @@ def read_token_sidecar(out_dir: str, stem: str) -> bytes | None:
         return f.read()
 
 
-def _commit_file(out_dir: str, staging_dir: str, stem: str, record: dict) -> None:
-    """Atomic per-file commit: rename encoded-chunk dir into place, then
-    rename the manifest record into place. A crash between the two renames
-    leaves data without manifest → file re-encoded next run (idempotent)."""
-    src = os.path.join(staging_dir, f"file_stem={stem}")
+def _commit_parts(out_dir: str, staging_dir: str, stem: str, rows: list, **fields) -> None:
+    """Atomic per-stem commit. The part rows (META_SCHEMA) fold into the
+    manifest record, plus the caller's ``fields``; the merged filter goes
+    to the sidecar first, then the encoded-chunk dir is renamed into
+    place, then the record. A crash between the renames leaves data
+    without a record → the stem re-encodes next run (idempotent)."""
+    rec = fold_parts([{**r.asDict(), "codecs": json.loads(r["codecs_json"])} for r in rows])
+    tok_filter = rec.pop("tok_filter")
+    rec.update(file_stem=stem, n_parts=len(rows), committed_at=time.time(), **fields)
+    if tok_filter is not None:
+        write_token_sidecar(out_dir, stem, tok_filter)
+        rec["tok_filter"] = True
     dst = os.path.join(out_dir, "data", f"file_stem={stem}")
     os.makedirs(os.path.dirname(dst), exist_ok=True)
     if os.path.exists(dst):
         shutil.rmtree(dst)
-    os.rename(src, dst)
-    mdir = _manifest_dir(out_dir)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".{stem}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(record, f, sort_keys=True)
-    os.rename(tmp, os.path.join(mdir, f"{stem}.json"))
+    os.rename(os.path.join(staging_dir, f"file_stem={stem}"), dst)
+    _atomic_write(os.path.join(_manifest_dir(out_dir), f"{stem}.json"), json.dumps(rec, sort_keys=True))
+
+
+def _job_metrics(metrics: dict, out_dir: str, files: list[str], t0: float) -> dict:
+    """Add the totals every encode job reports to ``metrics``; returns
+    the manifest."""
+    manifest = read_manifest(out_dir)
+    for k in ("n_docs", "n_tokens", "bytes_in", "bytes_out"):
+        metrics[k] = sum(r[k] for r in manifest.values())
+    metrics["input_parquet_bytes"] = sum(os.stat(f).st_size for f in files)
+    metrics["encoded_parquet_bytes"] = sum(
+        os.stat(p).st_size
+        for p in glob.glob(os.path.join(out_dir, "data", "**", "*.parquet"), recursive=True)
+    )
+    metrics["ratio_vs_parquet_zstd"] = (
+        metrics["encoded_parquet_bytes"] / metrics["input_parquet_bytes"]
+    )
+    metrics["wall_s"] = time.time() - t0
+    metrics["tokens_per_s"] = metrics["n_tokens"] / metrics["wall_s"] if metrics["wall_s"] else 0.0
+    return manifest
+
+
+def _input_files(input_path: str | list[str]) -> list[str]:
+    """A job's input parquet files, sorted: a path list, or a directory's
+    ``*.parquet``."""
+    files = sorted(
+        input_path if isinstance(input_path, list)
+        else glob.glob(os.path.join(input_path, "*.parquet"))
+    )
+    if not files:
+        raise ValueError(f"no parquet files under {input_path}")
+    return files
+
+
+def _extra_columns(schema: T.StructType) -> list[tuple[str, str]]:
+    """(name, spark type) of the input's metadata columns beyond the core
+    schema, sorted; an unsupported type fails the job up front."""
+    extras = sorted(
+        (f.name, f.dataType.typeName())
+        for f in schema.fields
+        if f.name not in ("doc_id", "tokens", "n_tok", "source")
+    )
+    for name, t in extras:
+        if t not in _EXTRA_SPARK_TYPES:
+            raise ValueError(
+                f"unsupported extra column {name!r} of type {t!r} "
+                f"(supported: {sorted(_EXTRA_SPARK_TYPES)})"
+            )
+    return extras
 
 
 # ---------------------------------------------------------------- encode job
@@ -1190,13 +1254,7 @@ def encode_dataset(
     job on 8 cores idles 5 cores for the final third; benchmarks that
     measure scaling ratios care, production throughput mostly doesn't)."""
     t0 = time.time()
-    files = (
-        sorted(input_path)
-        if isinstance(input_path, list)
-        else sorted(glob.glob(os.path.join(input_path, "*.parquet")))
-    )
-    if not files:
-        raise ValueError(f"no parquet files under {input_path}")
+    files = _input_files(input_path)
     # commits are keyed by basename stem: same-named files from different
     # directories would collapse into one commit and silently drop data
     stems = [_stem(f) for f in files]
@@ -1219,19 +1277,7 @@ def encode_dataset(
         os.makedirs(staging_dir, exist_ok=True)
         # extra metadata columns beyond the core schema: encoded per type,
         # recorded in the layout so decode reassembles them
-        core = {"doc_id", "tokens", "n_tok", "source"}
-        probe = spark.read.parquet(todo[0])
-        extras = sorted(
-            (f.name, f.dataType.typeName())
-            for f in probe.schema.fields
-            if f.name not in core
-        )
-        for name, t in extras:
-            if t not in _EXTRA_SPARK_TYPES:
-                raise ValueError(
-                    f"unsupported extra column {name!r} of type {t!r} "
-                    f"(supported: {sorted(_EXTRA_SPARK_TYPES)})"
-                )
+        extras = _extra_columns(spark.read.parquet(todo[0]).schema)
         # size input splits to the cluster: Spark's default 128 MB bin-packing
         # would coalesce many small files into a handful of tasks and leave
         # most cores idle. Target ≥2 waves of parallelism.
@@ -1266,83 +1312,12 @@ def encode_dataset(
                 )
                 by_stem[stem] = []
         for stem, rows in by_stem.items():
-            codecs: dict[str, int] = {}
-            for r in rows:
-                for k, v in json.loads(r["codecs_json"]).items():
-                    codecs[k] = codecs.get(k, 0) + v
-            checksum = 0
-            for r in rows:
-                checksum ^= r["checksum"]
-            rec = {
-                "file_stem": stem,
-                "n_parts": len(rows),
-                "n_chunks": sum(r["n_chunks"] for r in rows),
-                "n_docs": sum(r["n_docs"] for r in rows),
-                "n_tokens": sum(r["n_tokens"] for r in rows),
-                "bytes_in": sum(r["bytes_in"] for r in rows),
-                "bytes_out": sum(r["bytes_out"] for r in rows),
-                "checksum": checksum,
-                "codecs": codecs,
-                "doc_id_min": min(
-                    (r["doc_id_min"] for r in rows if r["doc_id_min"]), default=None
-                ),
-                "doc_id_max": max(
-                    (r["doc_id_max"] for r in rows if r["doc_id_max"]), default=None
-                ),
-                # file-level LENGTH bounds: length-bucketed reads prune whole
-                # files from the manifest before any footer is opened, the
-                # same way doc_id range/point reads do
-                "n_tok_min": min(
-                    (r["n_tok_min"] for r in rows if r["n_tok_min"] is not None),
-                    default=None,
-                ),
-                "n_tok_max": max(
-                    (r["n_tok_max"] for r in rows if r["n_tok_max"] is not None),
-                    default=None,
-                ),
-                # token VALUE bounds — file-level zone for content reads;
-                # the membership bitmap itself goes to the sidecar below
-                "tok_min": min(
-                    (r["tok_min"] for r in rows if r["tok_min"] is not None),
-                    default=None,
-                ),
-                "tok_max": max(
-                    (r["tok_max"] for r in rows if r["tok_max"] is not None),
-                    default=None,
-                ),
-                "snapshot": _snapshot(path_of[stem]),
-                "committed_at": time.time(),
-            }
-            # sidecar only when EVERY part carried a filter (see the
-            # part-merge note: a partial OR would yield false negatives)
-            if rows and all(r["tok_filter"] is not None for r in rows):
-                write_token_sidecar(
-                    out_dir,
-                    stem,
-                    merge_token_filters([bytes(r["tok_filter"]) for r in rows]),
-                )
-                rec["tok_filter"] = True
-            _commit_file(out_dir, staging_dir, stem, rec)
+            _commit_parts(
+                out_dir, staging_dir, stem, rows, snapshot=_snapshot(path_of[stem])
+            )
         shutil.rmtree(staging_dir, ignore_errors=True)
 
-    manifest = read_manifest(out_dir)
-    metrics["n_docs"] = sum(r["n_docs"] for r in manifest.values())
-    metrics["n_tokens"] = sum(r["n_tokens"] for r in manifest.values())
-    metrics["bytes_in"] = sum(r["bytes_in"] for r in manifest.values())
-    metrics["bytes_out"] = sum(r["bytes_out"] for r in manifest.values())
-    metrics["input_parquet_bytes"] = sum(os.stat(f).st_size for f in files)
-    data_dir = os.path.join(out_dir, "data")
-    metrics["encoded_parquet_bytes"] = sum(
-        os.stat(p).st_size
-        for p in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
-    )
-    metrics["ratio_vs_parquet_zstd"] = (
-        metrics["encoded_parquet_bytes"] / metrics["input_parquet_bytes"]
-    )
-    metrics["wall_s"] = time.time() - t0
-    metrics["tokens_per_s"] = (
-        metrics["n_tokens"] / metrics["wall_s"] if metrics["wall_s"] else 0.0
-    )
+    _job_metrics(metrics, out_dir, files, t0)
     return metrics
 
 
@@ -1355,7 +1330,6 @@ def read_decoded(
     n_tok_range: tuple[int, int] | None = None,
     contains_token: int | list[int] | None = None,
     columns: list[str] | None = None,
-    manifest_prune: str = "auto",
 ) -> DataFrame:
     """Read the encoded table back as (doc_id, tokens, n_tok, source).
 
@@ -1404,110 +1378,27 @@ def read_decoded(
     (the manifest's per-file bounds still prune files for any range the
     optimizer can see).
 
-    ``manifest_prune`` picks where file-level pruning runs: ``"driver"``
-    is the keep-list loop (one manifest read, an In-filter on file_stem —
-    cheapest while the manifest is driver-memory-sized); ``"join"`` runs
-    the same conservative zone predicates over ``manifest_df`` in the
-    cluster plus an executor-side sidecar probe, and left-semi-joins the
-    chunk frame on the surviving stems — the only shape that holds at the
-    ~40M-record manifest of the 10^12-sequence target, where the driver
-    list (and the In-expression built from it) is itself the bottleneck.
-    ``"auto"`` switches on total segment bytes (MANIFEST_JOIN_BYTES).
-    Both paths produce identical rows (asserted in
-    tests/test_manifest_join.py).
+    File-level pruning comes from ``plan_read``: a driver keep-list (an
+    In-filter on file_stem) while the manifest is small, the same zone
+    predicates over ``manifest_df`` plus an executor-side sidecar probe,
+    left-semi-joined on the surviving stems, once its bytes exceed
+    MANIFEST_JOIN_BYTES. Both paths produce identical rows (asserted in
+    tests/test_manifest_join.py). The same predicates then prune chunks
+    at the scan (parquet row-group stats on the chunk zone columns).
     """
+    plan = plan_read(out_dir, doc_id_range, doc_ids, n_tok_range, contains_token)
     enc = spark.read.parquet(os.path.join(out_dir, "data"))
-    # manifest-level file pruning: each lineage record carries the file's
-    # doc_id bounds, so a range/point read drops whole file_stem partitions
-    # BEFORE any parquet footer is opened — at the 10^12-sequence target
-    # (~40M files) this is driver-side metadata work vs a footer read per
-    # file (the Iceberg data-file-stats analogy of this manifest). Records
-    # without bounds (older encodes) are conservatively kept.
-    want_lo = want_hi = None
-    if doc_id_range:
-        want_lo, want_hi = doc_id_range
-    if doc_ids:
-        ids_sorted = sorted(set(doc_ids))
-        lo2, hi2 = ids_sorted[0], ids_sorted[-1]
-        want_lo = lo2 if want_lo is None else max(want_lo, lo2)
-        want_hi = hi2 if want_hi is None else min(want_hi, hi2)
-    if manifest_prune not in ("auto", "driver", "join"):
-        raise ValueError(f"unknown manifest_prune: {manifest_prune!r}")
-    tids = None if contains_token is None else _token_id_list(contains_token)
-    if want_lo is not None or n_tok_range or tids is not None:
-        # manifest-level file pruning (doc_id bounds, LENGTH bounds, token
-        # zones + sidecar bitmaps): a pruned file never opens a parquet
-        # footer. Pre-upgrade records missing any bound are conservatively
-        # kept by that predicate. Strategy per the docstring: driver
-        # keep-list while the manifest is small, filter-manifest semi-join
-        # once the manifest is itself a dataset.
-        strategy = manifest_prune
-        if strategy == "auto":
-            # total manifest bytes — segments AND the loose backlog (a
-            # never-compacted dir of millions of per-file JSONs is just as
-            # driver-hostile as one huge segment)
-            segs_a, loose_a = _manifest_paths(out_dir)
-            # short-circuit the stat() sweep once the threshold is crossed:
-            # with a never-compacted backlog of millions of loose JSONs the
-            # size scan itself was a driver-scaling bottleneck of exactly
-            # the kind the join path exists to avoid (r6 ADVICE)
-            man_bytes = 0
-            for p in (*segs_a, *loose_a):
-                man_bytes += os.path.getsize(p)
-                if man_bytes > MANIFEST_JOIN_BYTES:
-                    break
-            strategy = "join" if man_bytes > MANIFEST_JOIN_BYTES else "driver"
-        if strategy == "join":
-            enc = enc.join(
-                _keep_stems_df(spark, out_dir, want_lo, want_hi, n_tok_range, tids),
-                "file_stem",
-                "left_semi",
-            )
+    if plan.zones:
+        # manifest-level file pruning: a pruned file never opens a parquet
+        # footer (the Iceberg data-file-stats analogy of this manifest)
+        if plan.stems is None:
+            enc = enc.join(_keep_stems_df(spark, plan), "file_stem", "left_semi")
         else:
-            keep = []
-            for stem, rec in read_manifest(out_dir).items():
-                if (
-                    want_lo is not None
-                    and rec.get("doc_id_min") is not None
-                    and rec.get("doc_id_max") is not None
-                    and not (
-                        rec["doc_id_max"] >= want_lo and rec["doc_id_min"] <= want_hi
-                    )
-                ):
-                    continue
-                if (
-                    n_tok_range
-                    and rec.get("n_tok_min") is not None
-                    and rec.get("n_tok_max") is not None
-                    and not (
-                        rec["n_tok_max"] >= n_tok_range[0]
-                        and rec["n_tok_min"] <= n_tok_range[1]
-                    )
-                ):
-                    continue
-                if tids is not None:
-                    t_lo, t_hi = rec.get("tok_min"), rec.get("tok_max")
-                    cand = (
-                        tids
-                        if t_lo is None or t_hi is None
-                        else [t for t in tids if t_lo <= t <= t_hi]
-                    )
-                    if not cand:
-                        continue
-                    if rec.get("tok_filter"):
-                        sidecar = read_token_sidecar(out_dir, stem)
-                        if sidecar is not None and not token_filter_contains_any(
-                            sidecar, cand
-                        ):
-                            continue
-                keep.append(stem)
-            enc = enc.filter(F.col("file_stem").isin(keep))
+            enc = enc.filter(F.col("file_stem").isin(plan.stems))
     if sources and read_layout(out_dir) == "by-source":
-        cond = None
-        for s in sources:
-            c = F.col("file_stem").startswith(s)
-            cond = c if cond is None else (cond | c)
-        enc = enc.filter(cond)
+        enc = enc.filter(
+            reduce(operator.or_, [F.col("file_stem").startswith(s) for s in sources])
+        )
     if sources and "src_set" in enc.columns:
         # chunk-level source zone (works on ANY layout, incl. per-file):
         # a chunk survives only if it contains one of the wanted sources —
@@ -1523,45 +1414,11 @@ def read_decoded(
                 F.col("src_set"), F.array(*[F.lit(s) for s in sources])
             )
         )
-    if doc_id_range:
-        lo, hi = doc_id_range
-        enc = enc.filter(
-            F.col("doc_id_max").isNull()
-            | ((F.col("doc_id_max") >= lo) & (F.col("doc_id_min") <= hi))
-        )
-    if n_tok_range and "n_tok_max" in enc.columns:
-        # same null-tolerance: length zones NULL on pre-upgrade chunks
-        enc = enc.filter(
-            F.col("n_tok_max").isNull()
-            | (
-                (F.col("n_tok_max") >= n_tok_range[0])
-                & (F.col("n_tok_min") <= n_tok_range[1])
-            )
-        )
-    if contains_token is not None and "tok_max" in enc.columns:
-        # chunk-level token VALUE zone: row-group stats evaluate this at
-        # the scan, so out-of-range chunks never read their blob bytes.
-        # For an id SET, per-id between-predicates OR'd (ANY semantics)
-        zone = None
-        for t in tids:
-            c = (F.col("tok_min") <= t) & (F.col("tok_max") >= t)
-            zone = c if zone is None else (zone | c)
-        enc = enc.filter(F.col("tok_max").isNull() | zone)
-    if doc_ids:
-        # point lookups: a chunk survives only if SOME requested id falls in
-        # its zone map — an OR of per-id between-predicates that parquet
-        # row-group stats evaluate before reading blob bytes. Above a size
-        # cap the expression collapses to the ids' overall range (still
-        # pruning, coarser).
-        ids = sorted(set(doc_ids))
-        if len(ids) <= 256:
-            cond = None
-            for i in ids:
-                c = (F.lit(i) >= F.col("doc_id_min")) & (F.lit(i) <= F.col("doc_id_max"))
-                cond = c if cond is None else (cond | c)
-        else:
-            cond = (F.col("doc_id_max") >= ids[0]) & (F.col("doc_id_min") <= ids[-1])
-        enc = enc.filter(F.col("doc_id_min").isNull() | cond)
+    # chunk-level zones: row-group stats evaluate these at the scan, so
+    # pruned chunks never read their blob bytes
+    chunk_zones = plan.column(enc.columns)
+    if chunk_zones is not None:
+        enc = enc.filter(chunk_zones)
     extras = read_extras(out_dir)
     all_names = [f.name for f in _decoded_schema(extras).fields]
     if columns is None:
@@ -1615,6 +1472,7 @@ def read_decoded(
             (F.col("n_tok") >= n_tok_range[0]) & (F.col("n_tok") <= n_tok_range[1])
         )
     if contains_token is not None:
+        tids = plan.tok_ids
         if len(tids) == 1:
             dec = dec.filter(F.array_contains(F.col("tokens"), F.lit(tids[0])))
         else:
@@ -1627,38 +1485,11 @@ def read_decoded(
 
 
 def token_read_stats(out_dir: str, token: int | list[int]) -> dict:
-    """Driver-side pruning report for a ``contains_token`` read — mirrors
-    read_decoded's manifest logic so tests and benchmarks can assert HOW
-    MUCH a content read skips, not just that its rows are right. Accepts a
-    single id or an ANY-match id list (a file counts as zone-pruned only
-    when EVERY id fails its zone, mirroring the read's per-id OR)."""
-    tids = _token_id_list(token)
-    stats = {
-        "files_total": 0,
-        "files_zone_pruned": 0,
-        "files_filter_pruned": 0,
-        "files_kept": 0,
-    }
-    for stem, rec in read_manifest(out_dir).items():
-        stats["files_total"] += 1
-        t_lo, t_hi = rec.get("tok_min"), rec.get("tok_max")
-        cand = (
-            tids
-            if t_lo is None or t_hi is None
-            else [t for t in tids if t_lo <= t <= t_hi]
-        )
-        if not cand:
-            stats["files_zone_pruned"] += 1
-            continue
-        if rec.get("tok_filter"):
-            sidecar = read_token_sidecar(out_dir, stem)
-            if sidecar is not None and not token_filter_contains_any(
-                sidecar, cand
-            ):
-                stats["files_filter_pruned"] += 1
-                continue
-        stats["files_kept"] += 1
-    return stats
+    """Driver-side pruning funnel of a ``contains_token`` read (a single
+    id or an ANY-match id list): ``plan_read``'s funnel, so tests and
+    benchmarks can assert HOW MUCH a content read skips."""
+    plan = plan_read(out_dir, tok_ids=token)
+    return plan.funnel if plan.funnel is not None else _keep_list(plan)[1]
 
 
 def decode_verify(
@@ -1677,11 +1508,7 @@ def decode_verify(
     any IO — while small-scale gates keep fraction=1. Per-file layout only
     (by-source stems don't map back to input files); at least one file is
     always verified."""
-    files = (
-        sorted(input_path)
-        if isinstance(input_path, list)
-        else sorted(glob.glob(os.path.join(input_path, "*.parquet")))
-    )
+    files = _input_files(input_path)
     if fraction < 1.0:
         if read_layout(out_dir) == "by-source":
             raise ValueError("sampled verify requires the per-file layout")
@@ -1689,7 +1516,6 @@ def decode_verify(
         sampled = [f for f in files if zlib.crc32(_stem(f).encode()) % 1000 < cut]
         files = sampled or files[:1]
         stems = [_stem(f) for f in files]
-        src = spark.read.parquet(*files)
         extras = read_extras(out_dir)
         dec = (
             spark.read.parquet(os.path.join(out_dir, "data"))
@@ -1697,8 +1523,8 @@ def decode_verify(
             .mapInArrow(_make_decode_fn(extras), schema=_decoded_schema(extras))
         )
     else:
-        src = spark.read.parquet(*files)
         dec = read_decoded(spark, out_dir)
+    src = spark.read.parquet(*files)
     joined = src.alias("s").join(dec.alias("d"), "doc_id", "full_outer")
     same = (
         (F.col("s.tokens") == F.col("d.tokens"))

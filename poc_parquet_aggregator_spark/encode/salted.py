@@ -20,7 +20,6 @@ identical buckets byte-for-byte.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -31,15 +30,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
-    _EXTRA_SPARK_TYPES,
     META_SCHEMA,
-    _commit_file,
+    _atomic_write,
+    _commit_parts,
+    _extra_columns,
+    _input_files,
+    _job_metrics,
     _make_encode_fn,
     read_manifest,
     write_layout,
-    write_token_sidecar,
 )
-from .tokfilter import merge_token_filters
 
 
 def _input_snapshot(files: list[str]) -> dict:
@@ -65,13 +65,7 @@ def encode_dataset_by_source(
     input set (a changed input invalidates all buckets — coarse but exact).
     """
     t0 = time.time()
-    files = (
-        sorted(input_path)
-        if isinstance(input_path, list)
-        else sorted(glob.glob(os.path.join(input_path, "*.parquet")))
-    )
-    if not files:
-        raise ValueError(f"no parquet files under {input_path}")
+    files = _input_files(input_path)
     snapshot = _input_snapshot(files)
     done = {
         stem: rec
@@ -93,13 +87,7 @@ def encode_dataset_by_source(
     metrics = {"buckets_skipped": len(done)}
 
     df = spark.read.parquet(*files)
-    core = {"doc_id", "tokens", "n_tok", "source"}
-    extras = sorted(
-        (f.name, f.dataType.typeName()) for f in df.schema.fields if f.name not in core
-    )
-    for name, t in extras:
-        if t not in _EXTRA_SPARK_TYPES:
-            raise ValueError(f"unsupported extra column {name!r} of type {t!r}")
+    extras = _extra_columns(df.schema)
     bucket = F.concat(
         F.col("source"),
         F.lit("_s"),
@@ -138,95 +126,24 @@ def encode_dataset_by_source(
         for r in meta_rows:
             by_bucket.setdefault(r["file_stem"], []).append(r)
         for stem, rows in by_bucket.items():
-            codecs: dict[str, int] = {}
-            for r in rows:
-                for k, v in json.loads(r["codecs_json"]).items():
-                    codecs[k] = codecs.get(k, 0) + v
-            checksum = 0
-            for r in rows:
-                checksum ^= r["checksum"]
-            rec = {
-                "file_stem": stem,
-                "source": stem.rsplit("_s", 1)[0],
-                "salt": int(stem.rsplit("_s", 1)[1]),
-                "n_parts": len(rows),
-                "n_chunks": sum(r["n_chunks"] for r in rows),
-                "n_docs": sum(r["n_docs"] for r in rows),
-                "n_tokens": sum(r["n_tokens"] for r in rows),
-                "bytes_in": sum(r["bytes_in"] for r in rows),
-                "bytes_out": sum(r["bytes_out"] for r in rows),
-                "checksum": checksum,
-                "codecs": codecs,
-                "doc_id_min": min(
-                    (r["doc_id_min"] for r in rows if r["doc_id_min"]), default=None
-                ),
-                "doc_id_max": max(
-                    (r["doc_id_max"] for r in rows if r["doc_id_max"]), default=None
-                ),
-                # same file-level zones as the per-file layout: length
-                # bounds (length-bucketed reads) and token value bounds
-                # (content reads) prune salted partitions from the manifest
-                "n_tok_min": min(
-                    (r["n_tok_min"] for r in rows if r["n_tok_min"] is not None),
-                    default=None,
-                ),
-                "n_tok_max": max(
-                    (r["n_tok_max"] for r in rows if r["n_tok_max"] is not None),
-                    default=None,
-                ),
-                "tok_min": min(
-                    (r["tok_min"] for r in rows if r["tok_min"] is not None),
-                    default=None,
-                ),
-                "tok_max": max(
-                    (r["tok_max"] for r in rows if r["tok_max"] is not None),
-                    default=None,
-                ),
-                "snapshot": snapshot,
-                "committed_at": time.time(),
-            }
-            # sidecar only when EVERY part carried a filter — a partial OR
-            # would be a false negative (same rule as the per-file layout)
-            if rows and all(r["tok_filter"] is not None for r in rows):
-                write_token_sidecar(
-                    out_dir,
-                    stem,
-                    merge_token_filters([bytes(r["tok_filter"]) for r in rows]),
-                )
-                rec["tok_filter"] = True
-            _commit_file(out_dir, staging_dir, stem, rec)
+            source, salt = stem.rsplit("_s", 1)
+            _commit_parts(
+                out_dir, staging_dir, stem, rows,
+                source=source, salt=int(salt), snapshot=snapshot,
+            )
         shutil.rmtree(staging_dir, ignore_errors=True)
         # job summary: the complete bucket universe for this snapshot
         all_buckets = sorted(set(done) | set(by_bucket))
-        tmp = job_path + ".tmp"
-        os.makedirs(os.path.dirname(job_path), exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(
-                {"snapshot": snapshot, "n_salts": n_salts, "buckets": all_buckets}, f
-            )
-        os.rename(tmp, job_path)
+        _atomic_write(
+            job_path,
+            json.dumps({"snapshot": snapshot, "n_salts": n_salts, "buckets": all_buckets}),
+        )
 
-    manifest = read_manifest(out_dir)
-    manifest.pop("_job", None)
+    manifest = _job_metrics(metrics, out_dir, files, t0)
     metrics["buckets_total"] = len(manifest)
-    metrics["n_docs"] = sum(r["n_docs"] for r in manifest.values())
-    metrics["n_tokens"] = sum(r["n_tokens"] for r in manifest.values())
-    metrics["bytes_in"] = sum(r["bytes_in"] for r in manifest.values())
-    metrics["bytes_out"] = sum(r["bytes_out"] for r in manifest.values())
-    metrics["input_parquet_bytes"] = sum(os.stat(f).st_size for f in files)
-    data_dir = os.path.join(out_dir, "data")
-    metrics["encoded_parquet_bytes"] = sum(
-        os.stat(p).st_size
-        for p in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
-    )
-    metrics["ratio_vs_parquet_zstd"] = (
-        metrics["encoded_parquet_bytes"] / metrics["input_parquet_bytes"]
-    )
     # skew evidence: the largest bucket's share of tokens (unsalted, the
     # head source alone would be ~0.6)
     if manifest:
         big = max(r["n_tokens"] for r in manifest.values())
         metrics["max_bucket_token_share"] = big / max(metrics["n_tokens"], 1)
-    metrics["wall_s"] = time.time() - t0
-    metrics["tokens_per_s"] = metrics["n_tokens"] / metrics["wall_s"]
     return metrics

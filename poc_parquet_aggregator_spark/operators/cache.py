@@ -72,10 +72,6 @@ def memo_frame(kind: str, spark: SparkSession, sf: str, build) -> DataFrame:
     return df
 
 
-def memo_get(kind: str, spark: SparkSession, sf: str) -> DataFrame | None:
-    return _FRAME_MEMO.get(memo_key(kind, spark, sf))
-
-
 def purge_frame_memo() -> None:
     """Unpersist and drop every memoized frame (bench uses this so each
     timed run is cold). The purge is SYNCHRONOUS since round 7: blocking

@@ -133,10 +133,6 @@ _KMEANS_ITERS = 1
 _DIM = 64
 
 
-def _fx6(c: Column) -> Column:
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-
-
 def _rank_vs_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, v, centroid_id, rn) — rn ranks centroids per vector by
     cosine (desc, centroid_id tiebreak). Centroids are broadcast. The join

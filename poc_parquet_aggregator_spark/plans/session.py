@@ -35,8 +35,18 @@ _BASE_CONF = {
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }
+
+
+def _host_driver_memory() -> str:
+    """Default driver heap: a quarter of physical RAM (``MemTotal``), at
+    least 1 GiB. In local mode the driver JVM is also the executor and
+    every core runs a Python worker beside it, so the heap leaves most of
+    the host to them (a fixed large heap lets the JVM outgrow the host's
+    RAM and be OOM-killed). ``SPARK_GRAFT_DRIVER_MEM`` overrides."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1024, kib // 1024 // 4)}m"
 
 
 def get_spark(
@@ -49,9 +59,11 @@ def get_spark(
 
     ``cores`` controls local[N] parallelism — the bench harness uses this to
     evidence the two-cluster-size scaling criterion (local[8] vs local[32]).
+    The default is ``SPARK_GRAFT_CPUS``, else the CPUs this process may run
+    on.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         # 2x cores: enough tasks to keep AQE coalescing meaningful locally;
         # on a real cluster this is 2-3x total executor cores.
@@ -59,6 +71,9 @@ def get_spark(
 
     builder = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
     conf = dict(_BASE_CONF)
+    conf["spark.driver.memory"] = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory()
+    )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf["spark.default.parallelism"] = str(cores)
     if extra_conf:

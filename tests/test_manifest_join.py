@@ -1,9 +1,12 @@
-"""Distributed manifest pruning (`manifest_prune="join"`): the
-filter-manifest semi-join path of read_decoded must produce exactly the
-rows of the driver keep-list path for every file-level prune kind
-(doc_id range, n_tok range, token content, combined), and `manifest_df`
+"""Distributed manifest pruning: once the manifest outgrows
+MANIFEST_JOIN_BYTES, read_decoded prunes files with the filter-manifest
+semi-join instead of the driver keep-list. Both paths render the same
+``plan_read`` predicates, so they must keep the same stems and produce
+exactly the same rows for every file-level prune kind (doc_id range,
+n_tok range, token content, combined) on both layouts; `manifest_df`
 must reproduce read_manifest's precedence (loose JSON overrides any
-compacted segment; later segment overrides earlier)."""
+compacted segment; later segment overrides earlier). Tests force the
+join path by shrinking MANIFEST_JOIN_BYTES."""
 
 from __future__ import annotations
 
@@ -14,12 +17,14 @@ import os
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
+import poc_parquet_aggregator_spark.encode.pipeline as pl
 from poc_parquet_aggregator_spark.encode import (
     compact_manifest,
     encode_dataset,
+    encode_dataset_by_source,
     manifest_df,
+    plan_read,
     read_decoded,
     read_manifest,
 )
@@ -49,6 +54,13 @@ def enc_dir(spark, token_dir, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def salted_dir(spark, token_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("enc_salted") / "out")
+    encode_dataset_by_source(spark, token_dir, out, n_salts=2)
+    return out
+
+
 def _rows(df):
     return [tuple(r) for r in df.select("doc_id", "n_tok").orderBy("doc_id").collect()]
 
@@ -65,43 +77,59 @@ def _rare_token(token_dir):
     return next(t for t in sorted(everywhere) if sum(t in s for s in per_file) == 1)
 
 
+def _both_paths(spark, out, monkeypatch, **kwargs):
+    """(driver rows, join rows) of one read; also asserts that the join
+    path's surviving stems are exactly plan_read's driver keep-list."""
+    plan_kw = {"tok_ids" if k == "contains_token" else k: v for k, v in kwargs.items()}
+    drv_plan = plan_read(out, **plan_kw)
+    drv = _rows(read_decoded(spark, out, **kwargs))
+    monkeypatch.setattr(pl, "MANIFEST_JOIN_BYTES", -1)
+    jn_plan = plan_read(out, **plan_kw)
+    assert drv_plan.stems is not None and jn_plan.stems is None
+    jn_stems = sorted(r[0] for r in pl._keep_stems_df(spark, jn_plan).collect())
+    assert jn_stems == sorted(drv_plan.stems)
+    jn = _rows(read_decoded(spark, out, **kwargs))
+    monkeypatch.undo()
+    return drv, jn
+
+
+_PRUNES = {
+    "doc_id_range": {"doc_id_range": ("doc-000000000100", "doc-000000000400")},
+    "n_tok_range": {"n_tok_range": (40, 90)},
+    "doc_ids": {"doc_ids": ["doc-000000000123", "doc-000000004567"]},
+}
+
+
 @pytest.mark.parametrize(
-    "kwargs",
-    [
-        {"doc_id_range": ("doc-000000000100", "doc-000000000400")},
-        {"n_tok_range": (40, 90)},
-        {"doc_ids": ["doc-000000000123", "doc-000000004567"]},
-    ],
-    ids=["doc_id_range", "n_tok_range", "doc_ids"],
+    "case",
+    [*_PRUNES, *(f"{k}-salted" for k in _PRUNES)],
 )
-def test_join_path_equals_driver_path(spark, enc_dir, kwargs):
-    drv = read_decoded(spark, enc_dir, manifest_prune="driver", **kwargs)
-    jn = read_decoded(spark, enc_dir, manifest_prune="join", **kwargs)
-    assert _rows(jn) == _rows(drv) and _rows(drv)
+def test_join_path_equals_driver_path(spark, enc_dir, salted_dir, monkeypatch, case):
+    name, _, layout = case.partition("-")
+    out = salted_dir if layout == "salted" else enc_dir
+    drv, jn = _both_paths(spark, out, monkeypatch, **_PRUNES[name])
+    assert jn == drv and drv
 
 
-def test_join_path_token_content(spark, token_dir, enc_dir):
+def test_join_path_token_content(spark, token_dir, enc_dir, monkeypatch):
     rare = _rare_token(token_dir)
     for arg in (rare, [rare, 59_999]):
-        drv = read_decoded(spark, enc_dir, contains_token=arg, manifest_prune="driver")
-        jn = read_decoded(spark, enc_dir, contains_token=arg, manifest_prune="join")
-        assert _rows(jn) == _rows(drv) and _rows(drv)
+        drv, jn = _both_paths(spark, enc_dir, monkeypatch, contains_token=arg)
+        assert jn == drv and drv
     # absent id: the sidecar probe prunes every file in BOTH paths
-    assert read_decoded(
-        spark, enc_dir, contains_token=59_999, manifest_prune="join"
-    ).count() == 0
+    drv, jn = _both_paths(spark, enc_dir, monkeypatch, contains_token=59_999)
+    assert drv == jn == []
 
 
-def test_join_path_combined_prunes(spark, token_dir, enc_dir):
+def test_join_path_combined_prunes(spark, token_dir, enc_dir, monkeypatch):
     rare = _rare_token(token_dir)
-    kwargs = dict(
+    drv, jn = _both_paths(
+        spark, enc_dir, monkeypatch,
         doc_id_range=("doc-000000000000", "doc-000000005999"),
         n_tok_range=(1, 10_000),
         contains_token=rare,
     )
-    drv = read_decoded(spark, enc_dir, manifest_prune="driver", **kwargs)
-    jn = read_decoded(spark, enc_dir, manifest_prune="join", **kwargs)
-    assert _rows(jn) == _rows(drv) and _rows(drv)
+    assert jn == drv and drv
 
 
 def test_manifest_df_matches_read_manifest(spark, enc_dir):
@@ -150,8 +178,6 @@ def test_manifest_df_same_segment_dup_last_line_wins(spark, tmp_path, monkeypatc
     boundary placement — the r6-ADVICE nondeterministic-tie fix (the
     window now carries the record's line-start offset as a secondary
     key, so ties cannot fall to hash-partition luck)."""
-    import poc_parquet_aggregator_spark.encode.pipeline as pl
-
     out = str(tmp_path / "m2")
     os.makedirs(os.path.join(out, "_manifest"))
     n = 400
@@ -173,21 +199,12 @@ def test_manifest_df_same_segment_dup_last_line_wins(spark, tmp_path, monkeypatc
         assert {r["file_stem"]: r["n_tok_min"] for r in rows} == exp, split
 
 
-def test_bad_strategy_raises(spark, enc_dir):
-    with pytest.raises(ValueError, match="manifest_prune"):
-        read_decoded(
-            spark, enc_dir, n_tok_range=(1, 2), manifest_prune="cluster"
-        ).count()
-
-
 def test_manifest_df_byte_range_split_alignment(spark, tmp_path, monkeypatch):
     """The line-aligned byte-range split logic must never duplicate or
     drop a record wherever the split boundary lands: shrink the split
     size so a small segment parses through MANY splits (boundaries land
     mid-line, on line starts, and at EOF across the sweep) and assert
     exact record identity vs the driver reader."""
-    import poc_parquet_aggregator_spark.encode.pipeline as pl
-
     out = str(tmp_path / "m")
     os.makedirs(os.path.join(out, "_manifest"))
     rng = np.random.default_rng(7)

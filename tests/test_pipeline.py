@@ -962,3 +962,97 @@ def test_length_bucketed_pack_over_encoded(spark, token_dir, tmp_path):
     a = {tuple(r[k] for k in key): r["h"] for r in packed.select(*key, h.alias("h")).collect()}
     b = {tuple(r[k] for k in key): r["h"] for r in packed2.select(*key, h.alias("h")).collect()}
     assert a == b
+
+
+def test_empty_doc_id_keeps_file_bounds(spark, tmp_path, monkeypatch):
+    """An input file whose smallest doc_id is "" and that Spark splits into
+    several parts: the file record must keep "" as its lower bound. A fold
+    that dropped falsy bounds recorded the NEXT part's minimum, so range
+    and point reads pruned the file and returned no rows — on both the
+    driver keep-list and the join prune path."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import poc_parquet_aggregator_spark.encode.pipeline as pl
+    from poc_parquet_aggregator_spark.encode import read_decoded
+
+    src = str(tmp_path / "tokens")
+    (path,) = write_token_table(src, 8000, seed=5, docs_per_file=8000)
+    tbl = pq.read_table(path)
+    ids = tbl.column("doc_id").to_pylist()
+    ids[0] = ""
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("doc_id"),
+        tbl.schema.field("doc_id"),
+        pa.array(ids, pa.string()),
+    )
+    pq.write_table(tbl, path, row_group_size=1600)  # splittable input
+    out = str(tmp_path / "enc")
+    encode_dataset(spark, src, out, target_tasks=16)
+    (rec,) = read_manifest(out).values()
+    assert rec["n_parts"] >= 2
+
+    def truth(mask):
+        t = tbl.filter(mask).select(["doc_id", "n_tok"]).sort_by("doc_id")
+        return list(zip(t.column("doc_id").to_pylist(), t.column("n_tok").to_pylist()))
+
+    lo, hi = "doc-000000000100", "doc-000000000199"
+    want_range = truth(pc.and_(pc.greater_equal(tbl["doc_id"], lo), pc.less_equal(tbl["doc_id"], hi)))
+    point = "doc-000000000150"
+    want_point = truth(pc.equal(tbl["doc_id"], point))
+    assert len(want_range) == 100 and len(want_point) == 1
+    for join_bytes in (pl.MANIFEST_JOIN_BYTES, -1):  # driver, then join path
+        monkeypatch.setattr(pl, "MANIFEST_JOIN_BYTES", join_bytes)
+        for kwargs, want in (
+            ({"doc_id_range": (lo, hi)}, want_range),
+            ({"doc_ids": [point]}, want_point),
+        ):
+            got = read_decoded(spark, out, columns=["doc_id", "n_tok"], **kwargs)
+            assert [tuple(r) for r in got.orderBy("doc_id").collect()] == want, (
+                join_bytes, kwargs,
+            )
+    assert rec["doc_id_min"] == ""
+
+
+def test_fold_parts_rules():
+    """fold_parts on synthetic rows: "" is a real doc_id bound, an empty
+    row's token zone (tok_max < tok_min) is ignored, one row without a
+    filter means no merged filter, and folds compose."""
+    import numpy as np
+
+    from poc_parquet_aggregator_spark.encode.pipeline import fold_parts
+    from poc_parquet_aggregator_spark.encode.tokfilter import (
+        build_token_filter,
+        token_filter_bounds,
+        token_filter_contains,
+    )
+
+    def row(ids, toks, crc):
+        filt = build_token_filter(np.asarray(toks, dtype=np.int32))
+        lo, hi = token_filter_bounds(filt)
+        return {
+            "n_chunks": 1, "n_docs": len(ids), "n_tokens": len(toks),
+            "bytes_in": 10, "bytes_out": 4, "checksum": crc,
+            "codecs": {"doc_id:str_plain": 1},
+            "doc_id_min": min(ids), "doc_id_max": max(ids),
+            "n_tok_min": 0, "n_tok_max": len(toks),
+            "tok_min": lo, "tok_max": hi, "tok_filter": filt,
+        }
+
+    a = row(["", "doc-2"], [7, 8, 10], 0b0011)
+    b = row(["doc-3", "doc-5"], [100], 0b0101)
+    empty = row(["doc-4"], [], 0b1000)
+    assert empty["tok_max"] < empty["tok_min"]
+    f = fold_parts([a, b, empty])
+    assert (f["doc_id_min"], f["doc_id_max"]) == ("", "doc-5")
+    assert (f["tok_min"], f["tok_max"]) == (7, 100)
+    assert (f["n_tok_min"], f["n_tok_max"]) == (0, 3)
+    assert f["n_chunks"] == 3 and f["n_docs"] == 5 and f["bytes_out"] == 12
+    assert f["checksum"] == 0b1110 and f["codecs"] == {"doc_id:str_plain": 3}
+    assert token_filter_contains(f["tok_filter"], 100)
+    assert not token_filter_contains(f["tok_filter"], 9)
+    assert fold_parts([a, {**b, "tok_filter": None}])["tok_filter"] is None
+    nothing = fold_parts([])
+    assert nothing["tok_filter"] is None and nothing["doc_id_min"] is None
+    assert fold_parts([fold_parts([a, b]), empty]) == f
