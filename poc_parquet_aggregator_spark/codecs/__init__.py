@@ -1,15 +1,20 @@
 """Lightweight columnar codecs (pure numpy — no Spark dependency).
 
 Integer codecs (int32 value streams): PLAIN, BITPACK, FOR (frame-of-reference),
-RLE, DICT — self-describing recursive blob format, see ``ints.py``.
-String codecs: STR_PLAIN, STR_DICT, FSST (symbol-table byte compression) —
-see ``strings.py``. Optional transparent zstd post-pass (like Parquet pages)
-— see ``ints.py:wrap_zstd``.
+RLE, DICT, DELTA — self-describing recursive blob format with exact size
+estimates and per-chunk argmin selection, see ``ints.py``.
+String codecs: STR_PLAIN, STR_DICT, FSST (symbol-table byte compression),
+one Arrow-buffer front-end — see ``strings.py``. Lossless float codecs
+(ALP, ALPrd) — see ``floats.py``.
+
+Every stored blob starts with a one-byte id from the registry in
+``ints.py``; the optional zstd post-pass (like Parquet pages,
+``ints.wrap_zstd``) wraps only such blobs, so framing is never ambiguous.
 
 The reference POC's one explicit lightweight encoding is pandas categorical
 (dictionary) + float downcast (/root/reference/src/parquet_reader.py:464-494);
 this package generalizes that seed into the full codec set demanded by the
-north rule, with per-chunk auto-selection in ``select.py``.
+north rule.
 """
 
 from .ints import (
@@ -17,24 +22,18 @@ from .ints import (
     decode_ints,
     encode_ints,
     encode_ints_auto,
-    int_stats,
-    estimate_sizes,
     unwrap_zstd,
     wrap_zstd,
 )
-from .strings import decode_strings, encode_strings_auto
-from .select import select_int_codec
+from .strings import decode_strings_arrow, encode_strings_arrow
 
 __all__ = [
     "CODEC_NAMES",
     "decode_ints",
     "encode_ints",
     "encode_ints_auto",
-    "int_stats",
-    "estimate_sizes",
-    "select_int_codec",
-    "encode_strings_auto",
-    "decode_strings",
+    "encode_strings_arrow",
+    "decode_strings_arrow",
     "wrap_zstd",
     "unwrap_zstd",
 ]

@@ -30,15 +30,15 @@ compression.  This codec extends the north-rule lightweight stack
 scheme, auto-selected against zstd(raw) by exact encoded size like every
 other codec in the engine.
 
-Blob layout (the caller prepends the kind-4 container's flag byte 0x02)::
+Blob layout (``ALP`` / ``ALPRD`` are ids of the registry in ints.py)::
 
-    u8 e | u8 f | u32 n_exceptions
+    u8 ALP | u8 e | u8 f | u32 n_exceptions
     child(lo_blob)  child(hi_blob)      # scaled int64 as two int32 planes
     child(pos_blob)                     # exception row indexes (int32)
-    child(u8 zflag | exc_bytes)         # raw LE doubles, optionally zstd
+    child(exc_blob)                     # RAW blob of LE doubles
 
-``child(b) = u32 len(b) || b``; int blobs are self-describing
-codecs.ints blobs (optionally zstd-wrapped by the pipeline's flag).
+``child(b) = u32 len(b) || b``; every child is a registered blob, zstd-
+wrapped when that is smaller.
 """
 
 from __future__ import annotations
@@ -47,7 +47,19 @@ import struct
 
 import numpy as np
 
-from .ints import encode_ints_auto, decode_ints, wrap_zstd, unwrap_zstd, CODEC_NAMES
+from .ints import (
+    ALP,
+    ALPRD,
+    BLOB_IDS,
+    CODEC_NAMES,
+    children,
+    decode_ints,
+    decode_raw,
+    encode_ints_auto,
+    raw_blob,
+    read_children,
+    wrap_zstd,
+)
 
 _U32 = struct.Struct("<I")
 
@@ -58,8 +70,10 @@ _MAX_EXACT_INT = float(1 << 53)  # beyond this double(i) may not equal i
 _SAMPLE = 1024
 
 
-def _child(b: bytes) -> bytes:
-    return _U32.pack(len(b)) + b
+def _body(payload: bytes, codec_id: int) -> memoryview:
+    if not payload or payload[0] != codec_id:
+        raise ValueError(f"expected a {BLOB_IDS[codec_id]} blob")
+    return memoryview(payload)[1:]
 
 
 def _roundtrip_mask(x: np.ndarray, e: int, f: int) -> tuple[np.ndarray, np.ndarray]:
@@ -99,7 +113,7 @@ def _pick_exponents(x: np.ndarray) -> tuple[int, int, int]:
     return best_ef[0], best_ef[1], best[0]
 
 
-def encode_floats_alp(x: np.ndarray, zstd: bool, zstd_level: int) -> tuple[bytes, str] | None:
+def encode_floats_alp(x: np.ndarray, zstd_level: int) -> tuple[bytes, str] | None:
     """ALP-encode a float64 array, or None when the sample shows no decimal
     structure at all (0 hits — pure noise / all-special columns, where the
     blob would be exceptions wearing a header).  The caller still compares
@@ -125,23 +139,17 @@ def encode_floats_alp(x: np.ndarray, zstd: bool, zstd_level: int) -> tuple[bytes
     pos = np.flatnonzero(~hit)
     if len(pos) * 2 >= len(x):  # mostly exceptions: ALP cannot win
         return None
-    post = (lambda b: wrap_zstd(b, zstd_level)) if zstd else (lambda b: b)
     lo = (i & 0xFFFFFFFF).astype(np.uint32).view(np.int32)
     hi = (i >> 32).astype(np.int32)
     lo_blob, lo_c = encode_ints_auto(lo)
     hi_blob, hi_c = encode_ints_auto(hi)
     pos_blob, _ = encode_ints_auto(pos.astype(np.int32))
-    exc_raw = x[pos].tobytes()
-    exc_z = wrap_zstd(exc_raw, zstd_level if zstd else 1)
-    # explicit flag byte: raw doubles may begin with the ZSTD codec id
-    exc_blob = b"\x00" + exc_raw if (exc_z is exc_raw or exc_z == exc_raw) else b"\x01" + exc_z
     payload = (
-        bytes([e, f])
+        bytes([ALP, e, f])
         + _U32.pack(len(pos))
-        + _child(post(lo_blob))
-        + _child(post(hi_blob))
-        + _child(post(pos_blob))
-        + _child(exc_blob)
+        + children(*(wrap_zstd(b, zstd_level) for b in (
+            lo_blob, hi_blob, pos_blob, raw_blob(x[pos].tobytes())
+        )))
     )
     name = f"f64_alp(e{e},f{f},{CODEC_NAMES[lo_c]}+{CODEC_NAMES[hi_c]})"
     return payload, name
@@ -165,7 +173,7 @@ _RD_MAX_DICT = 8  # 3-bit codes, the paper's cut
 _RD_MAX_LEFT = 16  # left width bound: dict entries stay u16
 
 
-def encode_floats_alprd(x: np.ndarray, zstd: bool, zstd_level: int) -> tuple[bytes, str] | None:
+def encode_floats_alprd(x: np.ndarray, zstd_level: int) -> tuple[bytes, str] | None:
     """ALPrd-encode a float64 array (always succeeds on non-empty input —
     the caller's exact-size argmin decides whether it ships)."""
     if x.dtype != np.float64:
@@ -205,21 +213,18 @@ def encode_floats_alprd(x: np.ndarray, zstd: bool, zstd_level: int) -> tuple[byt
     right = bits & ((np.uint64(1) << wr) - np.uint64(1))
     lo = (right & np.uint64(0xFFFFFFFF)).astype(np.uint32).view(np.int32)
     hi = (right >> np.uint64(32)).astype(np.uint32).view(np.int32)  # ≤ 31 bits
-    post = (lambda b: wrap_zstd(b, zstd_level)) if zstd else (lambda b: b)
     code_blob, code_c_id = encode_ints_auto(codes32)
     lo_blob, lo_c = encode_ints_auto(lo)
     hi_blob, hi_c = encode_ints_auto(hi)
     pos_blob, _ = encode_ints_auto(pos.astype(np.int32))
     excl_blob, _ = encode_ints_auto(left[pos].astype(np.uint32).view(np.int32))
     payload = (
-        bytes([wl, len(dict_vals)])
+        bytes([ALPRD, wl, len(dict_vals)])
         + _U32.pack(len(pos))
         + dict_vals.astype("<u2").tobytes()
-        + _child(post(code_blob))
-        + _child(post(lo_blob))
-        + _child(post(hi_blob))
-        + _child(post(pos_blob))
-        + _child(post(excl_blob))
+        + children(*(wrap_zstd(b, zstd_level) for b in (
+            code_blob, lo_blob, hi_blob, pos_blob, excl_blob
+        )))
     )
     name = (
         f"f64_alprd(w{wl},x{len(pos)},"
@@ -230,23 +235,19 @@ def encode_floats_alprd(x: np.ndarray, zstd: bool, zstd_level: int) -> tuple[byt
 
 def decode_floats_alprd(payload: bytes) -> np.ndarray:
     """Exact inverse of encode_floats_alprd — pure bit reassembly."""
-    mv = memoryview(payload)
+    mv = _body(payload, ALPRD)
     wl, nd = mv[0], mv[1]
     (n_exc,) = _U32.unpack_from(mv, 2)
     p = 6 + 2 * nd
     dict_vals = np.frombuffer(mv[6:p], dtype="<u2").astype(np.uint64)
-    children = []
-    for _ in range(5):
-        (ln,) = _U32.unpack_from(mv, p)
-        children.append(bytes(mv[p + 4 : p + 4 + ln]))
-        p += 4 + ln
-    codes = decode_ints(unwrap_zstd(children[0]))
+    children = read_children(mv, p, 5)
+    codes = decode_ints(children[0])
     left = dict_vals[codes]
     if n_exc:
-        pos = decode_ints(unwrap_zstd(children[3]))
-        left[pos] = decode_ints(unwrap_zstd(children[4])).view(np.uint32).astype(np.uint64)
-    lo = decode_ints(unwrap_zstd(children[1])).view(np.uint32).astype(np.uint64)
-    hi = decode_ints(unwrap_zstd(children[2])).view(np.uint32).astype(np.uint64)
+        pos = decode_ints(children[3])
+        left[pos] = decode_ints(children[4]).view(np.uint32).astype(np.uint64)
+    lo = decode_ints(children[1]).view(np.uint32).astype(np.uint64)
+    hi = decode_ints(children[2]).view(np.uint32).astype(np.uint64)
     wr = np.uint64(64 - wl)
     bits = (left << wr) | (hi << np.uint64(32)) | lo
     return bits.view(np.float64)
@@ -254,21 +255,15 @@ def decode_floats_alprd(payload: bytes) -> np.ndarray:
 
 def decode_floats_alp(payload: bytes) -> np.ndarray:
     """Exact inverse of encode_floats_alp (bit-identical by construction)."""
-    mv = memoryview(payload)
+    mv = _body(payload, ALP)
     e, f = mv[0], mv[1]
     (n_exc,) = _U32.unpack_from(mv, 2)
-    pos_ = 6
-    children = []
-    for _ in range(4):
-        (ln,) = _U32.unpack_from(mv, pos_)
-        children.append(bytes(mv[pos_ + 4 : pos_ + 4 + ln]))
-        pos_ += 4 + ln
-    lo = decode_ints(unwrap_zstd(children[0]))
-    hi = decode_ints(unwrap_zstd(children[1]))
+    children = read_children(mv, 6, 4)
+    lo = decode_ints(children[0])
+    hi = decode_ints(children[1])
     i = (hi.astype(np.int64) << 32) | lo.view(np.uint32).astype(np.int64)
     x = (i.astype(np.float64) * _POW10[f]) / _POW10[e]
     if n_exc:
-        pos = decode_ints(unwrap_zstd(children[2]))
-        exc = children[3][1:] if children[3][0] == 0 else unwrap_zstd(children[3][1:])
-        x[pos] = np.frombuffer(exc, dtype=np.float64)
+        pos = decode_ints(children[2])
+        x[pos] = np.frombuffer(decode_raw(children[3]), dtype=np.float64)
     return x

@@ -1,14 +1,17 @@
-"""Integer codecs over int32 value streams.
+"""Integer codecs over int32 value streams, and the blob id registry.
 
-Self-describing blob format: ``blob = codec_id:uint8 || payload``. Codecs
-compose recursively (RLE's run-values and run-lengths are themselves blobs;
-DICT's dictionary and codes are blobs), so the auto-selector can nest e.g.
-RLE(FOR(values), FOR(lengths)).
+Self-describing blob format: ``blob = codec_id:uint8 || payload``, with
+``codec_id`` from the one registry below (``BLOB_IDS``) for every stored
+blob of the engine. ``wrap_zstd`` wraps only such blobs, so a zstd frame is
+unambiguous. Codecs compose recursively (RLE's run-values and run-lengths
+are themselves blobs; DICT's dictionary and codes are blobs), so the
+auto-selector can nest e.g. RLE(FOR(values), FOR(lengths)).
 
 All kernels are fully vectorized numpy — the Spark pipeline calls them from
 Arrow-batched pandas UDFs, never per row (BASELINE.json input_hint: "no
 per-row Python"). Encode→decode is bit-identical for any int32 input,
-property-tested in tests/test_codecs.py.
+property-tested in tests/test_codecs.py; a truncated blob raises
+``ValueError``.
 
 Sizes (see estimate_sizes) are exact for this format, which makes the
 auto-selector's argmin a true argmin rather than a heuristic.
@@ -21,23 +24,26 @@ import struct
 import numpy as np
 import pyarrow as pa
 
-# codec ids
+# ---- blob id registry: one byte, distinct across every codec family
 PLAIN = 0
 BITPACK = 1  # FOR with reference 0 (requires min >= 0)
 FOR = 2  # frame-of-reference + bit-pack
 RLE = 3  # run-length: child blobs for run values + run lengths
 DICT = 4  # dictionary: child blobs for dict values + codes
-ZSTD = 5  # transparent post-pass wrapper around any blob
+ZSTD = 5  # transparent post-pass wrapper around any other registered blob
 DELTA = 6  # successive differences (uint32 wraparound), child blob for deltas
+RAW = 7  # uninterpreted bytes (token-filter bitmaps, raw doubles)
+STR_PLAIN, STR_DICT, FSST = 16, 17, 18  # string codecs (strings.py)
+ALP, ALPRD = 24, 25  # float codecs (floats.py)
+TOK = 32  # token chunks (encode/chunk.py)
 
 CODEC_NAMES = {
-    PLAIN: "plain",
-    BITPACK: "bitpack",
-    FOR: "for",
-    RLE: "rle",
-    DICT: "dict",
-    ZSTD: "zstd",
-    DELTA: "delta",
+    PLAIN: "plain", BITPACK: "bitpack", FOR: "for", RLE: "rle",
+    DICT: "dict", ZSTD: "zstd", DELTA: "delta",
+}
+BLOB_IDS = {
+    **CODEC_NAMES, RAW: "raw", STR_PLAIN: "str_plain", STR_DICT: "str_dict",
+    FSST: "fsst", ALP: "f64_alp", ALPRD: "f64_alprd", TOK: "tok",
 }
 
 _U32 = struct.Struct("<I")
@@ -216,15 +222,16 @@ def _enc_for(a: np.ndarray, codec_id: int = FOR) -> bytes:
     )
 
 
-def _child(blob: bytes) -> bytes:
-    return _U32.pack(len(blob)) + blob
+def children(*blobs: bytes) -> bytes:
+    """``u32 len || blob`` per blob — the inverse of ``read_children``."""
+    return b"".join(_U32.pack(len(b)) + b for b in blobs)
 
 
-def _enc_rle(a: np.ndarray, value_codec: int | None = None) -> bytes:
+def _enc_rle(a: np.ndarray) -> bytes:
     vals, lens = run_split(a)
-    val_blob = encode_ints(vals.astype(np.int32), value_codec) if value_codec else encode_ints_best(vals.astype(np.int32), allow_rle=False)
+    val_blob, _ = encode_ints_auto(vals.astype(np.int32), delta=False, rle=False)
     len_blob = _enc_for(lens.astype(np.int32), BITPACK)
-    return bytes([RLE]) + _U32.pack(len(a)) + _child(val_blob) + _child(len_blob)
+    return bytes([RLE]) + _U32.pack(len(a)) + children(val_blob, len_blob)
 
 
 def _wrap_deltas(a: np.ndarray) -> np.ndarray:
@@ -244,8 +251,7 @@ def _enc_delta(a: np.ndarray) -> bytes:
     constant-step streams become constant deltas that RLE collapses. The
     delta stream rides the same auto-selected child machinery as every
     other composite codec (one level — no delta-of-delta)."""
-    d = _wrap_deltas(a)
-    child = encode_ints_best(d)
+    child, _ = encode_ints_auto(_wrap_deltas(a), delta=False)
     return bytes([DELTA]) + _U32.pack(len(a)) + child
 
 
@@ -253,7 +259,7 @@ def _enc_dict(a: np.ndarray) -> bytes:
     uniq, codes = np.unique(a, return_inverse=True)
     dict_blob = _enc_for(uniq.astype(np.int32))
     code_blob = _enc_for(codes.astype(np.int32), BITPACK)
-    return bytes([DICT]) + _U32.pack(len(a)) + _child(dict_blob) + _child(code_blob)
+    return bytes([DICT]) + _U32.pack(len(a)) + children(dict_blob, code_blob)
 
 
 def encode_ints(a: np.ndarray, codec_id: int) -> bytes:
@@ -277,22 +283,60 @@ def encode_ints(a: np.ndarray, codec_id: int) -> bytes:
 # ------------------------------------------------------------------- decoders
 
 
+def read_children(body, pos: int, k: int) -> list[bytes]:
+    """The ``k`` children that start at ``pos`` and must fill ``body``
+    exactly; a short or overlong body raises ValueError."""
+    out = []
+    for _ in range(k):
+        if pos + 4 > len(body):
+            break
+        (ln,) = _U32.unpack_from(body, pos)
+        out.append(bytes(body[pos + 4 : pos + 4 + ln]))
+        pos += 4 + ln
+    if len(out) != k or pos != len(body):
+        raise ValueError(f"truncated or malformed blob: children end at {pos} of {len(body)}")
+    return out
+
+
+def _expect_len(n: int, want: int) -> None:
+    if n != want:
+        raise ValueError(f"truncated or malformed int blob: {want} values declared, {n} decoded")
+
+
 def decode_ints(blob: bytes) -> np.ndarray:
-    """Decode any blob (recursively) back to an int32 array. Bit-identical."""
+    """Decode any blob (recursively) back to an int32 array. Bit-identical;
+    a truncated or malformed blob raises ValueError."""
+    try:
+        return _decode_ints(blob)
+    except struct.error as e:
+        raise ValueError(f"truncated int blob: {e}") from None
+
+
+_FOR_HDR = struct.Struct("<IqB")  # n | ref | width byte (layout flags on top)
+
+
+def _decode_ints(blob: bytes) -> np.ndarray:
+    if not blob:
+        raise ValueError("empty int blob")
     codec_id = blob[0]
     if codec_id == ZSTD:
-        return decode_ints(unwrap_zstd(blob))
+        return _decode_ints(unwrap_zstd(blob))
     body = memoryview(blob)[1:]
     if codec_id == PLAIN:
         (n,) = _U32.unpack_from(body, 0)
+        if len(body) != 4 + 4 * n:
+            raise ValueError(f"truncated PLAIN blob: {len(body) - 4} bytes for {n} values")
         return np.frombuffer(body, dtype="<i4", count=n, offset=4).astype(np.int32)
     if codec_id in (FOR, BITPACK):
-        (n,) = _U32.unpack_from(body, 0)
-        (ref,) = _I64.unpack_from(body, 4)
-        width = body[12]
-        raw = bytes(body[13:])
+        n, ref, width = _FOR_HDR.unpack_from(body, 0)
+        raw = bytes(body[_FOR_HDR.size :])
+        bits = width & ~(_GROUP_FLAG | _PLANE_FLAG)
+        if bits > 32 or len(raw) != (n * bits + 7) // 8:
+            raise ValueError(
+                f"truncated or malformed FOR blob: {len(raw)} packed bytes for "
+                f"{n} values of width {bits}"
+            )
         if width & _GROUP_FLAG:
-            width &= ~_GROUP_FLAG
             lo_grouped = np.frombuffer(raw, dtype=np.uint8, count=n)
             hi = np.frombuffer(raw, dtype=np.uint8, count=n, offset=n)
             lo = np.empty(n, dtype=np.uint8)
@@ -300,32 +344,29 @@ def decode_ints(blob: bytes) -> np.ndarray:
             deltas = lo.astype(np.uint32) | (hi.astype(np.uint32) << np.uint32(8))
         else:
             if width & _PLANE_FLAG:
-                width &= ~_PLANE_FLAG
-                raw = _untranspose_planes(raw, n, width // 8)
-            deltas = unpack_bits(raw, n, width)
+                raw = _untranspose_planes(raw, n, bits // 8)
+            deltas = unpack_bits(raw, n, bits)
         # uint32 wraparound add — exact inverse of the encode-side subtract
         return (deltas + np.uint32(ref & 0xFFFFFFFF)).view(np.int32)
     if codec_id == RLE:
         (n,) = _U32.unpack_from(body, 0)
-        (vlen,) = _U32.unpack_from(body, 4)
-        vals = decode_ints(bytes(body[8 : 8 + vlen]))
-        (llen,) = _U32.unpack_from(body, 8 + vlen)
-        lens = decode_ints(bytes(body[12 + vlen : 12 + vlen + llen]))
+        val_blob, len_blob = read_children(body, 4, 2)
+        vals, lens = _decode_ints(val_blob), _decode_ints(len_blob)
+        if len(vals) != len(lens):
+            raise ValueError("malformed RLE blob: run values and lengths differ")
         out = np.repeat(vals, lens.astype(np.int64))
-        assert len(out) == n
+        _expect_len(len(out), n)
         return out
     if codec_id == DICT:
         (n,) = _U32.unpack_from(body, 0)
-        (dlen,) = _U32.unpack_from(body, 4)
-        uniq = decode_ints(bytes(body[8 : 8 + dlen]))
-        (clen,) = _U32.unpack_from(body, 8 + dlen)
-        codes = decode_ints(bytes(body[12 + dlen : 12 + dlen + clen]))
-        assert len(codes) == n
+        dict_blob, code_blob = read_children(body, 4, 2)
+        uniq, codes = _decode_ints(dict_blob), _decode_ints(code_blob)
+        _expect_len(len(codes), n)
         return uniq[codes]
     if codec_id == DELTA:
         (n,) = _U32.unpack_from(body, 0)
-        d = decode_ints(bytes(body[4:]))
-        assert len(d) == n
+        d = _decode_ints(bytes(body[4:]))
+        _expect_len(len(d), n)
         # wraparound cumsum: uint64 accumulate then truncate — exact inverse
         # (n·2^32 < 2^64 for any realistic chunk)
         return (np.cumsum(d.view(np.uint32), dtype=np.uint64) & 0xFFFFFFFF).astype(
@@ -410,21 +451,14 @@ def estimate_sizes(stats: dict) -> dict[int, int]:
     return sizes
 
 
-def encode_ints_best(a: np.ndarray, allow_rle: bool = True) -> bytes:
-    """Encode with the estimate-optimal codec (used for RLE children too)."""
-    stats = int_stats(a)
-    sizes = estimate_sizes(stats)
-    if not allow_rle:
-        sizes.pop(RLE, None)
-    best = min(sizes, key=sizes.get)
-    return encode_ints(a, best)
-
-
-def encode_ints_auto(a: np.ndarray) -> tuple[bytes, int]:
-    """(blob, codec_id) with the auto-selected codec (DELTA considered at
-    this top level only — children never nest delta-of-delta)."""
-    stats = int_stats(a, with_delta=True)
-    sizes = estimate_sizes(stats)
+def encode_ints_auto(
+    a: np.ndarray, delta: bool = True, rle: bool = True
+) -> tuple[bytes, int]:
+    """(blob, codec_id) with the estimate-optimal codec. Child streams pass
+    ``delta=False`` (no delta-of-delta) and RLE's values ``rle=False``."""
+    sizes = estimate_sizes(int_stats(a, with_delta=delta))
+    if not rle:
+        sizes.pop(RLE)
     best = min(sizes, key=sizes.get)
     return encode_ints(a, best), best
 
@@ -432,16 +466,33 @@ def encode_ints_auto(a: np.ndarray) -> tuple[bytes, int]:
 # ------------------------------------------------------------- zstd post-pass
 
 
+def raw_blob(data) -> bytes:
+    """Uninterpreted bytes as a registered (``RAW``) blob."""
+    return bytes([RAW]) + bytes(data)
+
+
+def decode_raw(blob: bytes) -> bytes:
+    """The bytes inside a ``RAW`` blob, zstd-wrapped or not."""
+    inner = unwrap_zstd(blob)
+    if inner[0] != RAW:
+        raise ValueError(f"expected a raw blob, got id {inner[0]}")
+    return inner[1:]
+
+
 def wrap_zstd(blob: bytes, level: int = 3) -> bytes:
-    """Transparent block compression over a codec blob — the same cascade
-    Parquet applies (zstd over dict/RLE pages), kept as an explicit outer
-    wrapper so lightweight-only mode is one flag away.
+    """Transparent block compression over a registered blob — the same
+    cascade Parquet applies (zstd over dict/RLE pages), kept as an explicit
+    outer wrapper. An incompressible blob is returned as is; its first byte
+    is a registered id other than ``ZSTD``, so it cannot pass for a frame.
 
     ``level`` is the effort knob: 3 = throughput mode, 15 = archive mode
     (~13× more CPU per byte, slightly better ratio). Archive mode is the
     storage-bound 100 TB setting — and being CPU-bound, it scales linearly
     with executors where the fast mode hits the memory-bandwidth ceiling.
     """
+    if not blob or blob[0] not in BLOB_IDS or blob[0] == ZSTD:
+        first = blob[0] if blob else None
+        raise ValueError(f"wrap_zstd needs a registered non-zstd blob, got first byte {first}")
     comp = _zstd(level).compress(blob, asbytes=True)
     if len(comp) + 5 >= len(blob) + 1:
         return blob  # incompressible: keep inner blob (id != ZSTD marks it)
@@ -449,7 +500,21 @@ def wrap_zstd(blob: bytes, level: int = 3) -> bytes:
 
 
 def unwrap_zstd(blob: bytes) -> bytes:
+    """The registered blob inside a zstd frame (any other registered blob
+    passes through). An unregistered id, a truncated frame or a frame that
+    does not hold a registered blob raises ValueError."""
+    if not blob or blob[0] not in BLOB_IDS:
+        first = blob[0] if blob else None
+        raise ValueError(f"not a registered blob (first byte {first}); re-encode the data")
     if blob[0] != ZSTD:
         return blob
+    if len(blob) < 5:
+        raise ValueError("truncated zstd frame")
     (raw_len,) = _U32.unpack_from(blob, 1)
-    return _zstd(3).decompress(bytes(memoryview(blob)[5:]), raw_len, asbytes=True)
+    try:
+        inner = _zstd(3).decompress(bytes(memoryview(blob)[5:]), raw_len, asbytes=True)
+    except OSError as e:
+        raise ValueError(f"truncated or corrupt zstd frame: {e}") from None
+    if len(inner) != raw_len or not inner or inner[0] not in BLOB_IDS or inner[0] == ZSTD:
+        raise ValueError("zstd frame does not hold a registered blob")
+    return inner

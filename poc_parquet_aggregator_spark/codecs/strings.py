@@ -14,8 +14,10 @@ the integer codec framework (ints.py); the payload gets one of:
   path is a compiled regex alternation (C-speed scan, leftmost-longest via
   length-sorted alternation) — no per-character Python.
 
-Blob format: ``codec_id:uint8 || payload`` like ints.py, ids disjoint from
-the integer ids so a blob is always self-describing.
+Blob format: ``codec_id:uint8 || payload`` like ints.py; the ids live in
+the one registry there. There is one front-end: ``encode_strings_arrow``
+(``choose_string_codec`` + the per-codec ``build_strings``) and
+``decode_strings_arrow``, both working on Arrow buffers.
 """
 
 from __future__ import annotations
@@ -25,21 +27,25 @@ import struct
 from collections import Counter
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .ints import (
-    ZSTD,
+    BITPACK,
+    BLOB_IDS,
+    FSST,
+    STR_DICT,
+    STR_PLAIN,
+    children,
     decode_ints,
-    encode_ints_best,
+    encode_ints,
+    encode_ints_auto,
+    read_children,
     unwrap_zstd,
+    wrap_zstd,
 )
-from .ints import BITPACK as _BITPACK
-from .ints import encode_ints as _encode_ints
 
-STR_PLAIN = 16
-STR_DICT = 17
-FSST = 18
-
-STR_CODEC_NAMES = {STR_PLAIN: "str_plain", STR_DICT: "str_dict", FSST: "fsst"}
+STR_CODEC_NAMES = {c: BLOB_IDS[c] for c in (STR_PLAIN, STR_DICT, FSST)}
 
 _U32 = struct.Struct("<I")
 
@@ -47,16 +53,6 @@ _ESCAPE = 0xFF
 _MAX_SYMBOLS = 254  # codes 0..253; 0xFF = escape
 _MAX_SYMBOL_LEN = 8
 _TRAIN_ITERS = 5
-
-
-def _child(blob: bytes) -> bytes:
-    return _U32.pack(len(blob)) + blob
-
-
-def _concat(strings: "np.ndarray | list[str]") -> tuple[bytes, np.ndarray]:
-    bs = [s.encode("utf-8") for s in strings]
-    lens = np.fromiter((len(b) for b in bs), dtype=np.int32, count=len(bs))
-    return b"".join(bs), lens
 
 
 # ------------------------------------------------------------- FSST training
@@ -124,26 +120,6 @@ def _fsst_decode_payload(enc: bytes, table: list[bytes]) -> bytes:
 # ----------------------------------------------------------------- encoders
 
 
-def encode_strings(strings, codec_id: int) -> bytes:
-    payload, lens = _concat(strings)
-    lens_blob = encode_ints_best(lens)
-    if codec_id == STR_PLAIN:
-        return bytes([STR_PLAIN]) + _U32.pack(len(lens)) + _child(lens_blob) + payload
-    if codec_id == STR_DICT:
-        uniq, codes = np.unique(np.asarray(strings, dtype=object), return_inverse=True)
-        dict_blob = encode_strings(list(uniq), STR_PLAIN)
-        codes_blob = _encode_ints(codes.astype(np.int32), _BITPACK)
-        return (
-            bytes([STR_DICT])
-            + _U32.pack(len(codes))
-            + _child(dict_blob)
-            + _child(codes_blob)
-        )
-    if codec_id == FSST:
-        return _fsst_from_payload(payload, lens)
-    raise ValueError(f"unknown string codec {codec_id}")
-
-
 def _fsst_from_payload(payload: bytes, lens: np.ndarray) -> bytes:
     """FSST-encode a string chunk given only its flat utf-8 payload and
     per-string lengths — the representation Arrow's offsets/data buffers
@@ -175,174 +151,96 @@ def _fsst_from_payload(payload: bytes, lens: np.ndarray) -> bytes:
         bytes([FSST])
         + _U32.pack(len(lens))
         + bytes([len(table)])
-        + _child(sym_blob)
-        + _child(encode_ints_best(enc_lens))
+        + children(sym_blob, encode_ints_auto(enc_lens, delta=False)[0])
         + enc
     )
 
 
-def encode_strings_auto(strings) -> tuple[bytes, int]:
-    """Pick STR_DICT / FSST / STR_PLAIN by measured size on the chunk."""
-    arr = np.asarray(strings, dtype=object)
-    n = len(arr)
-    if n == 0:
-        return encode_strings(arr, STR_PLAIN), STR_PLAIN
-    n_distinct = len(np.unique(arr))
-    candidates: list[tuple[int, bytes]] = []
-    if n_distinct <= max(16, n // 4):
-        candidates.append((STR_DICT, encode_strings(arr, STR_DICT)))
-    plain = encode_strings(arr, STR_PLAIN)
-    candidates.append((STR_PLAIN, plain))
-    # FSST only worth trying when payload is big enough to amortize the table
-    if len(plain) > 4096 and n_distinct > 16:
-        candidates.append((FSST, encode_strings(arr, FSST)))
-    codec_id, blob = min(candidates, key=lambda t: len(t[1]))
-    return blob, codec_id
-
-
-# --------------------------------------------------- Arrow-native fast path
-
-
 def _plain_from_buffers(payload: bytes, lens: np.ndarray) -> bytes:
-    lens_blob = encode_ints_best(np.ascontiguousarray(lens, dtype=np.int32))
-    return bytes([STR_PLAIN]) + _U32.pack(len(lens)) + _child(lens_blob) + payload
+    lens_blob, _ = encode_ints_auto(np.ascontiguousarray(lens, dtype=np.int32), delta=False)
+    return bytes([STR_PLAIN]) + _U32.pack(len(lens)) + children(lens_blob) + payload
 
 
-def encode_strings_arrow(arr, zstd_post: bool = True) -> tuple[bytes, int]:
-    """Encode a pyarrow StringArray WITHOUT materializing per-row Python
-    strings (the object churn causes allocator TLB storms at high task
-    concurrency — measured 10× collapse at 32 workers).
+def utf8_buffers(arr: "pa.Array") -> tuple[memoryview, np.ndarray]:
+    """(concatenated utf-8 bytes, int32 lengths) of a StringArray: the
+    bytes are a zero-copy view of its data buffer (its ``len`` is the
+    column's raw string size); no per-row Python strings."""
+    arr = arr.cast(pa.string())
+    buf = arr.buffers()
+    n = len(arr)
+    if n == 0 or buf[2] is None:
+        return memoryview(b""), np.zeros(n, dtype=np.int32)
+    offsets = np.frombuffer(buf[1], dtype=np.int32, count=n + 1, offset=arr.offset * 4)
+    return memoryview(buf[2])[int(offsets[0]) : int(offsets[-1])], np.diff(offsets)
 
-    Selection is sample-driven per the north rule: candidates are sized on a
-    512-string sample (post-zstd when the zstd pass is on — that is the size
-    that matters), winner encodes the full column:
-      * low cardinality → STR_DICT via pyarrow dictionary_encode (C++)
-      * else STR_PLAIN straight from the Arrow offsets/data buffers
-      * FSST when the sampled trial says it beats plain after zstd
-    Returns (blob, codec_id); blob is NOT zstd-wrapped (caller wraps).
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
+def choose_string_codec(arr: "pa.Array") -> int:
+    """The codec for one string chunk, picked per the north rule:
+      * low cardinality (≤ max(16, n/4) distinct) → STR_DICT;
+      * FSST when a 512-string sample of it is < 0.9× STR_PLAIN after
+        zstd (the size that is stored);
+      * else STR_PLAIN.
+    The trial runs on slices of the Arrow payload, never on Python strings."""
     n = len(arr)
     if n == 0:
-        return _plain_from_buffers(b"", np.zeros(0, np.int32)), STR_PLAIN
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    if arr.null_count:
-        arr = arr.fill_null("")
+        return STR_PLAIN
+    if pc.count_distinct(arr).as_py() <= max(16, n // 4):
+        return STR_DICT
+    sample, lens = utf8_buffers(arr[: min(512, n)])
+    sample = bytes(sample)
+    fsst = wrap_zstd(_fsst_from_payload(sample, lens))
+    if len(fsst) < 0.9 * len(wrap_zstd(_plain_from_buffers(sample, lens))):
+        return FSST
+    return STR_PLAIN
 
-    dict_arr = pc.dictionary_encode(arr)
-    n_distinct = len(dict_arr.dictionary)
-    if n_distinct <= max(16, n // 4):
-        dict_blob = encode_strings(dict_arr.dictionary.to_pylist(), STR_PLAIN)
+
+def build_strings(arr: "pa.Array", codec_id: int) -> bytes:
+    """Encode one non-null Arrow string array with the given codec, from
+    its offsets/data buffers. STR_DICT takes its dictionary from pyarrow's
+    C++ ``dictionary_encode`` and stores it as a STR_PLAIN child."""
+    if codec_id == STR_DICT:
+        dict_arr = pc.dictionary_encode(arr)
         codes = dict_arr.indices.to_numpy(zero_copy_only=False).astype(np.int32)
-        codes_blob = _encode_ints(codes, _BITPACK)
-        blob = (
-            bytes([STR_DICT]) + _U32.pack(n) + _child(dict_blob) + _child(codes_blob)
-        )
-        return blob, STR_DICT
+        payload, lens = utf8_buffers(dict_arr.dictionary)
+        dict_blob = _plain_from_buffers(bytes(payload), lens)
+        codes_blob = encode_ints(codes, BITPACK)
+        return bytes([STR_DICT]) + _U32.pack(len(arr)) + children(dict_blob, codes_blob)
+    payload, lens = utf8_buffers(arr)
+    payload = bytes(payload)
+    if codec_id == STR_PLAIN:
+        return _plain_from_buffers(payload, lens)
+    if codec_id == FSST:
+        return _fsst_from_payload(payload, lens)
+    raise ValueError(f"unknown string codec {codec_id}")
 
-    # flat payload + lengths straight from Arrow buffers (zero python objects)
-    flat = arr.cast(pa.string())
-    buf = flat.buffers()
-    offsets = np.frombuffer(buf[1], dtype=np.int32, count=n + 1, offset=flat.offset * 4)
-    payload = bytes(
-        memoryview(buf[2])[int(offsets[0]) : int(offsets[-1])]
-    )
-    lens = np.diff(offsets).astype(np.int32)
 
-    plain_blob = _plain_from_buffers(payload, lens)
-    # sampled FSST trial (on payload slices — still zero Python strings):
-    # is FSST+zstd smaller than plain+zstd?
-    n_sample = min(512, n)
-    sample_lens = lens[:n_sample]
-    sample_payload = payload[: int(sample_lens.sum())]
-    from .ints import wrap_zstd as _wz
-
-    post = _wz if zstd_post else (lambda b: b)
-    fsst_sample = _fsst_from_payload(sample_payload, sample_lens)
-    plain_sample = _plain_from_buffers(sample_payload, sample_lens)
-    if len(post(fsst_sample)) < 0.9 * len(post(plain_sample)):
-        return _fsst_from_payload(payload, lens), FSST
-    return plain_blob, STR_PLAIN
+def encode_strings_arrow(arr) -> tuple[bytes, int]:
+    """Encode a pyarrow string array (chunked or not, NULL read as "")
+    WITHOUT materializing per-row Python strings (the object churn causes
+    allocator TLB storms at high task concurrency — measured 10× collapse
+    at 32 workers). Returns (blob, codec_id); the blob is NOT zstd-wrapped
+    (the caller wraps)."""
+    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    arr = arr.fill_null("") if arr.null_count else arr
+    codec_id = choose_string_codec(arr)
+    return build_strings(arr, codec_id), codec_id
 
 
 # ----------------------------------------------------------------- decoders
 
 
-def decode_strings(blob: bytes) -> list[str]:
-    if blob[0] == ZSTD:
-        return decode_strings(unwrap_zstd(blob))
+def decode_strings_arrow(blob: bytes) -> "pa.Array":
+    """Decode a string chunk (zstd-wrapped or not) to a pyarrow StringArray
+    — the only string parser: the utf-8 payload and offsets become Arrow
+    buffers with ZERO per-row PyUnicode objects (the encode side's measured
+    TLB-storm applies symmetrically on read-back). STR_PLAIN builds from
+    buffers; STR_DICT decodes the (small) dictionary then materializes via
+    C++ take; FSST decodes per-string payloads (the symbol scan is
+    per-string by format) but still assembles the result from one
+    concatenated buffer. A truncated blob raises ValueError."""
+    blob = unwrap_zstd(blob)
     codec_id = blob[0]
     body = memoryview(blob)[1:]
-    if codec_id == STR_PLAIN:
-        (n,) = _U32.unpack_from(body, 0)
-        (llen,) = _U32.unpack_from(body, 4)
-        lens = decode_ints(bytes(body[8 : 8 + llen]))
-        payload = bytes(body[8 + llen :])
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        return [payload[offs[i] : offs[i + 1]].decode("utf-8") for i in range(n)]
-    if codec_id == STR_DICT:
-        (n,) = _U32.unpack_from(body, 0)
-        (dlen,) = _U32.unpack_from(body, 4)
-        uniq = decode_strings(bytes(body[8 : 8 + dlen]))
-        (clen,) = _U32.unpack_from(body, 8 + dlen)
-        codes = decode_ints(bytes(body[12 + dlen : 12 + dlen + clen]))
-        uarr = np.asarray(uniq, dtype=object)
-        return list(uarr[codes])
-    if codec_id == FSST:
-        (n,) = _U32.unpack_from(body, 0)
-        n_sym = body[4]
-        (slen,) = _U32.unpack_from(body, 5)
-        sym_raw = bytes(body[9 : 9 + slen])
-        table, i = [], 0
-        for _ in range(n_sym):
-            ln = sym_raw[i]
-            table.append(sym_raw[i + 1 : i + 1 + ln])
-            i += 1 + ln
-        (ellen,) = _U32.unpack_from(body, 9 + slen)
-        enc_lens = decode_ints(bytes(body[13 + slen : 13 + slen + ellen]))
-        enc = bytes(body[13 + slen + ellen :])
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(enc_lens, out=offs[1:])
-        return [
-            _fsst_decode_payload(enc[offs[i] : offs[i + 1]], table).decode("utf-8")
-            for i in range(n)
-        ]
-    raise ValueError(f"unknown string codec {codec_id}")
-
-
-def decode_strings_arrow(blob: bytes) -> "object":
-    """Decode a string chunk directly to a pyarrow StringArray — the
-    decode-side twin of encode_strings_arrow: the utf-8 payload and offsets
-    become Arrow buffers with ZERO per-row PyUnicode objects (the encode
-    side's measured TLB-storm applies symmetrically on read-back).
-    STR_PLAIN builds from buffers; STR_DICT decodes the (small) dictionary
-    then materializes via C++ take; FSST decodes per-string payloads (the
-    symbol scan is per-string by format) but still assembles the result
-    from one concatenated buffer."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if blob[0] == ZSTD:
-        return decode_strings_arrow(unwrap_zstd(blob))
-    codec_id = blob[0]
-    body = memoryview(blob)[1:]
-
-    def _from_payload(payload: bytes, lens: np.ndarray, n: int) -> "pa.Array":
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        if offs[-1] > np.iinfo(np.int32).max:  # ≥2 GiB payload: 64-bit offsets
-            return pa.Array.from_buffers(
-                pa.large_utf8(), n,
-                [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(payload)],
-            )
-        return pa.Array.from_buffers(
-            pa.utf8(), n,
-            [None, pa.py_buffer(offs.astype(np.int32).tobytes()), pa.py_buffer(payload)],
-        )
-
     if codec_id == STR_PLAIN:
         (n,) = _U32.unpack_from(body, 0)
         (llen,) = _U32.unpack_from(body, 4)
@@ -350,11 +248,11 @@ def decode_strings_arrow(blob: bytes) -> "object":
         return _from_payload(bytes(body[8 + llen :]), lens, n)
     if codec_id == STR_DICT:
         (n,) = _U32.unpack_from(body, 0)
-        (dlen,) = _U32.unpack_from(body, 4)
-        uniq = decode_strings_arrow(bytes(body[8 : 8 + dlen]))
-        (clen,) = _U32.unpack_from(body, 8 + dlen)
-        codes = decode_ints(bytes(body[12 + dlen : 12 + dlen + clen]))
-        return pc.take(uniq, pa.array(codes, type=pa.int32()))
+        dict_blob, code_blob = read_children(body, 4, 2)
+        codes = decode_ints(code_blob)
+        if len(codes) != n:
+            raise ValueError(f"malformed STR_DICT blob: {len(codes)} codes for {n} rows")
+        return pc.take(decode_strings_arrow(dict_blob), pa.array(codes, type=pa.int32()))
     if codec_id == FSST:
         (n,) = _U32.unpack_from(body, 0)
         n_sym = body[4]
@@ -368,9 +266,33 @@ def decode_strings_arrow(blob: bytes) -> "object":
         (ellen,) = _U32.unpack_from(body, 9 + slen)
         enc_lens = decode_ints(bytes(body[13 + slen : 13 + slen + ellen]))
         enc = bytes(body[13 + slen + ellen :])
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(enc_lens, out=offs[1:])
+        offs = _offsets(enc_lens, n, len(enc))
         pieces = [_fsst_decode_payload(enc[offs[i] : offs[i + 1]], table) for i in range(n)]
         lens = np.fromiter((len(p) for p in pieces), dtype=np.int32, count=n)
         return _from_payload(b"".join(pieces), lens, n)
     raise ValueError(f"unknown string codec {codec_id}")
+
+
+def _offsets(lens: np.ndarray, n: int, total: int) -> np.ndarray:
+    """int64 offsets of ``n`` strings of ``lens`` bytes that must tile a
+    ``total``-byte payload exactly."""
+    if len(lens) != n:
+        raise ValueError(f"malformed string blob: {len(lens)} lengths for {n} rows")
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    if offs[-1] != total:
+        raise ValueError(f"truncated string blob: {total} payload bytes, {offs[-1]} declared")
+    return offs
+
+
+def _from_payload(payload: bytes, lens: np.ndarray, n: int) -> "pa.Array":
+    offs = _offsets(lens, n, len(payload))
+    if offs[-1] > np.iinfo(np.int32).max:  # ≥2 GiB payload: 64-bit offsets
+        return pa.Array.from_buffers(
+            pa.large_utf8(), n,
+            [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(payload)],
+        )
+    return pa.Array.from_buffers(
+        pa.utf8(), n,
+        [None, pa.py_buffer(offs.astype(np.int32).tobytes()), pa.py_buffer(payload)],
+    )

@@ -48,11 +48,31 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..codecs.ints import unwrap_zstd, wrap_zstd
+from ..codecs.floats import (
+    decode_floats_alp,
+    decode_floats_alprd,
+    encode_floats_alp,
+    encode_floats_alprd,
+)
+from ..codecs.ints import (
+    ALP,
+    ALPRD,
+    CODEC_NAMES,
+    ZSTD,
+    children,
+    decode_ints,
+    decode_raw,
+    encode_ints_auto,
+    raw_blob,
+    read_children,
+    unwrap_zstd,
+    wrap_zstd,
+)
 from ..codecs.strings import (
     STR_CODEC_NAMES,
     decode_strings_arrow,
     encode_strings_arrow,
+    utf8_buffers,
 )
 from .chunk import decode_chunk_lengths, decode_token_chunk, encode_token_chunk
 from .tokfilter import (
@@ -152,31 +172,23 @@ _ENC_ARROW_SCHEMA = pa.schema(
 # kinds: 1 string (string-codec blob), 2 int32 (int-codec blob),
 # 3 int64 (child(lo int32 blob) + child(hi int32 blob) — the int codecs are
 # 32-bit, so 64-bit values split into two independently-coded planes),
-# 4 float64 (zstd-wrapped raw LE bytes). Extras must be non-null, mirroring
-# the input_hint's non-null schema.
+# 5 float64 (a RAW, ALP or ALPRD blob, zstd-wrapped when smaller). Kind 4
+# was float64 behind a private flag byte; it is rejected, not guessed at.
+# Extras must be non-null, mirroring the input_hint's non-null schema.
 
-_X_STRING, _X_INT32, _X_INT64, _X_FLOAT64 = 1, 2, 3, 4
-_EXTRA_SPARK_TYPES = {
-    "string": _X_STRING,
-    "integer": _X_INT32,
-    "long": _X_INT64,
-    "double": _X_FLOAT64,
-}
+_X_STRING, _X_INT32, _X_INT64, _X_FLOAT64 = 1, 2, 3, 5
+_X_FLOAT64_FLAGGED = 4
 _U16 = struct.Struct("<H")
 
 
-def _encode_extra_array(arr: "pa.Array", zstd: bool, zstd_level: int) -> tuple[int, bytes, str]:
+def _encode_extra_array(arr: "pa.Array", zstd_level: int) -> tuple[int, bytes, str]:
     """One extra column chunk → (kind, payload, codec_name)."""
-    from ..codecs.ints import encode_ints_auto
-    from ..codecs.ints import CODEC_NAMES as _ICN
-
     if arr.null_count:
         raise ValueError("extra columns must be non-null (matches the core schema)")
-    post = (lambda b: wrap_zstd(b, zstd_level)) if zstd else (lambda b: b)
     t = arr.type
     if pa.types.is_string(t) or pa.types.is_large_string(t):
-        blob, codec = encode_strings_arrow(arr, zstd_post=zstd)
-        return _X_STRING, post(blob), STR_CODEC_NAMES[codec]
+        blob, codec = encode_strings_arrow(arr)
+        return _X_STRING, wrap_zstd(blob, zstd_level), STR_CODEC_NAMES[codec]
     # int32 path only for values that FIT int32: signed ≤32 bits or unsigned
     # ≤16 bits. uint32 would silently wrap in an int32 astype → 64-bit path.
     fits_i32 = pa.types.is_integer(t) and (
@@ -185,7 +197,7 @@ def _encode_extra_array(arr: "pa.Array", zstd: bool, zstd_level: int) -> tuple[i
     if fits_i32:
         v = arr.to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
         blob, codec = encode_ints_auto(v)
-        return _X_INT32, post(blob), _ICN[codec]
+        return _X_INT32, wrap_zstd(blob, zstd_level), CODEC_NAMES[codec]
     if pa.types.is_integer(t):  # 64-bit (and uint32): two 32-bit planes
         if t.bit_width == 64 and not pa.types.is_signed_integer(t):
             raise ValueError("uint64 extras unsupported (values may exceed int64)")
@@ -194,42 +206,27 @@ def _encode_extra_array(arr: "pa.Array", zstd: bool, zstd_level: int) -> tuple[i
         hi = (v >> 32).astype(np.int32)
         lo_blob, lo_c = encode_ints_auto(lo)
         hi_blob, hi_c = encode_ints_auto(hi)
-        payload = _child(post(lo_blob)) + _child(post(hi_blob))
-        return _X_INT64, payload, f"{_ICN[lo_c]}+{_ICN[hi_c]}"
+        payload = children(wrap_zstd(lo_blob, zstd_level), wrap_zstd(hi_blob, zstd_level))
+        return _X_INT64, payload, f"{CODEC_NAMES[lo_c]}+{CODEC_NAMES[hi_c]}"
     if pa.types.is_float64(t) or pa.types.is_float32(t):
-        # self-describing container (flag byte 0 raw / 1 zstd / 2 ALP /
-        # 3 ALPrd): raw float bytes are arbitrary, so an unwrapped
-        # incompressible stream starting with the ZSTD codec id would
-        # misparse if fed through unwrap_zstd. Both ALP modes
+        # the raw doubles (zstd-wrapped when smaller) and both ALP modes
         # (codecs/floats.py) compete on exact encoded size like every
         # other codec in the stack — decimal columns win big through the
         # int planes, high-precision columns through the front-bit
-        # dictionary, and anything else falls back.
-        from ..codecs.floats import encode_floats_alp, encode_floats_alprd
-
+        # dictionary, and anything else falls back to the raw blob.
         v = arr.cast(pa.float64()).to_numpy(zero_copy_only=False)
-        raw = v.tobytes()
-        z = wrap_zstd(raw, zstd_level if zstd else 1)
-        cands = [(len(raw) + 1, b"\x00" + raw, "f64_raw")]
-        if not (z is raw or z == raw):  # incompressible: wrap returns input
-            cands.append((len(z) + 1, b"\x01" + z, "f64_zstd"))
-        alp = encode_floats_alp(v, zstd, zstd_level)
-        if alp is not None:
-            cands.append((len(alp[0]) + 1, b"\x02" + alp[0], alp[1]))
-        alprd = encode_floats_alprd(v, zstd, zstd_level)
-        if alprd is not None:
-            cands.append((len(alprd[0]) + 1, b"\x03" + alprd[0], alprd[1]))
-        _, payload, name = min(cands, key=lambda c: c[0])
+        raw = wrap_zstd(raw_blob(v.tobytes()), zstd_level)
+        cands = [(raw, "f64_zstd" if raw[0] == ZSTD else "f64_raw")]
+        for enc in (encode_floats_alp(v, zstd_level), encode_floats_alprd(v, zstd_level)):
+            if enc is not None:
+                cands.append(enc)
+        payload, name = min(cands, key=lambda c: len(c[0]))
         return _X_FLOAT64, payload, name
     raise ValueError(f"unsupported extra column type: {t}")
 
 
-def _child(b: bytes) -> bytes:
-    return struct.pack("<I", len(b)) + b
-
-
 def _pack_extras(
-    part: "pa.RecordBatch", names: list[str], zstd: bool, zstd_level: int, meta: dict
+    part: "pa.RecordBatch", names: list[str], zstd_level: int, meta: dict
 ) -> tuple[bytes, int]:
     """(container blob, raw input byte count) for the extra columns."""
     out = [_U16.pack(len(names))]
@@ -243,10 +240,10 @@ def _pack_extras(
             )
         arr = part.column(idx)
         if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-            raw_bytes += len(_utf8_payload(arr))
+            raw_bytes += len(utf8_buffers(arr)[0])
         else:
             raw_bytes += (arr.type.bit_width // 8) * len(arr)
-        kind, payload, codec = _encode_extra_array(arr, zstd, zstd_level)
+        kind, payload, codec = _encode_extra_array(arr, zstd_level)
         meta["streams"][f"extra:{name}"] = codec
         nb = name.encode("utf-8")
         out.append(
@@ -273,81 +270,63 @@ def _unpack_extras(blob: bytes) -> list[tuple[str, int, bytes]]:
 
 def _decode_extra(kind: int, payload: bytes, n: int):
     if kind == _X_STRING:
-        return decode_strings_arrow(unwrap_zstd(payload))
+        return decode_strings_arrow(payload)
     if kind == _X_INT32:
-        from ..codecs.ints import decode_ints
-
-        return pa.array(decode_ints(unwrap_zstd(payload)), type=pa.int32())
+        return pa.array(decode_ints(payload), type=pa.int32())
     if kind == _X_INT64:
-        from ..codecs.ints import decode_ints
-
-        mv = memoryview(payload)
-        (llen,) = struct.unpack_from("<I", mv, 0)
-        lo = decode_ints(unwrap_zstd(bytes(mv[4 : 4 + llen])))
-        (hlen,) = struct.unpack_from("<I", mv, 4 + llen)
-        hi = decode_ints(unwrap_zstd(bytes(mv[8 + llen : 8 + llen + hlen])))
+        lo_blob, hi_blob = read_children(memoryview(payload), 0, 2)
+        lo, hi = decode_ints(lo_blob), decode_ints(hi_blob)
         v = (hi.astype(np.int64) << 32) | (lo.view(np.uint32).astype(np.int64))
         return pa.array(v, type=pa.int64())
     if kind == _X_FLOAT64:
-        if payload[0] == 2:
-            from ..codecs.floats import decode_floats_alp
-
-            return pa.array(decode_floats_alp(payload[1:]), type=pa.float64())
-        if payload[0] == 3:
-            from ..codecs.floats import decode_floats_alprd
-
-            return pa.array(decode_floats_alprd(payload[1:]), type=pa.float64())
-        raw = payload[1:] if payload[0] == 0 else unwrap_zstd(payload[1:])
-        return pa.array(np.frombuffer(raw, dtype=np.float64), type=pa.float64())
+        blob = unwrap_zstd(payload)
+        if blob[0] == ALP:
+            v = decode_floats_alp(blob)
+        elif blob[0] == ALPRD:
+            v = decode_floats_alprd(blob)
+        else:
+            v = np.frombuffer(decode_raw(blob), dtype=np.float64)
+        return pa.array(v, type=pa.float64())
+    if kind == _X_FLOAT64_FLAGGED:
+        raise ValueError(
+            "float64 extra column in the pre-framing layout (kind 4); re-encode the dataset"
+        )
     raise ValueError(f"unknown extra kind {kind}")
 
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
-        T.StructField("n_tok", T.IntegerType(), False),
-        T.StructField("source", T.StringType(), False),
-    ]
-)
 
-_SPARK_T_OF = {
-    "string": T.StringType(),
-    "integer": T.IntegerType(),
-    "long": T.LongType(),
-    "double": T.DoubleType(),
+# decoded columns as Arrow types: the core schema, then the extras by their
+# Spark type name; the Spark schema of a decode is derived from this list
+_ARROW_OF = {
+    "string": pa.string(), "integer": pa.int32(),
+    "long": pa.int64(), "double": pa.float64(),
 }
+
+
+def _decode_cols(extras: list[tuple[str, str]] | None = None) -> list[tuple[str, "pa.DataType"]]:
+    return [
+        ("doc_id", pa.string()),
+        ("tokens", pa.list_(pa.int32())),
+        ("n_tok", pa.int32()),
+        ("source", pa.string()),
+    ] + [(n, _ARROW_OF[t]) for n, t in (extras or [])]
 
 
 def _decoded_schema(
     extras: list[tuple[str, str]] | None = None,
     columns: list[str] | None = None,
 ) -> T.StructType:
-    fields = list(DECODED_SCHEMA.fields) + [
-        T.StructField(n, _SPARK_T_OF[t], False) for n, t in (extras or [])
-    ]
-    if columns is not None:
-        fields = [f for f in fields if f.name in set(columns)]
-    return T.StructType(fields)
+    return from_arrow_schema(pa.schema([
+        pa.field(n, t, nullable=False) for n, t in _decode_cols(extras)
+        if columns is None or n in columns
+    ]))
 
 
 def _stem(path: str) -> str:
     return os.path.splitext(os.path.basename(path))[0]
 
 
-def _utf8_payload(arr: "pa.Array") -> memoryview:
-    """Concatenated utf-8 bytes of a StringArray, a zero-copy view of its
-    buffers (its ``len`` is the column's raw string size)."""
-    arr = arr.cast(pa.string())
-    buf = arr.buffers()
-    n = len(arr)
-    if n == 0 or buf[2] is None:
-        return memoryview(b"")
-    offsets = np.frombuffer(buf[1], dtype=np.int32, count=n + 1, offset=arr.offset * 4)
-    return memoryview(buf[2])[int(offsets[0]) : int(offsets[-1])]
-
-
 def _encode_chunk_row(
-    part: pa.RecordBatch, zstd: bool, zstd_level: int = 3, extras: list[str] | None = None
+    part: pa.RecordBatch, zstd_level: int = 3, extras: list[str] | None = None
 ) -> dict:
     """Encode one Arrow batch → its chunk row (``_ENC_ARROW_SCHEMA``
     columns plus the ``fold_parts`` keys that schema drops).
@@ -369,24 +348,25 @@ def _encode_chunk_row(
         zero_copy_only=False
     )
     # invariant from input_hint: n_tok == len(tokens); enforced at encode time
-    assert np.array_equal(n_tok.astype(np.int32), lengths), "n_tok invariant violated"
-    tokens_blob, meta = encode_token_chunk(flat, lengths, zstd=zstd, zstd_level=zstd_level)
+    if not np.array_equal(n_tok.astype(np.int32), lengths):
+        raise ValueError("n_tok invariant violated: n_tok != len(tokens)")
+    tokens_blob, meta = encode_token_chunk(flat, lengths, zstd_level=zstd_level)
     # Arrow-native string encode: no per-row Python strings (object churn
     # collapses throughput at high task concurrency — see codecs.strings)
     did_arr = part.column(part.schema.get_field_index("doc_id"))
     src_arr = part.column(part.schema.get_field_index("source"))
-    did_blob, did_codec = encode_strings_arrow(did_arr, zstd_post=zstd)
-    src_blob, src_codec = encode_strings_arrow(src_arr, zstd_post=zstd)
-    if zstd:
-        did_blob, src_blob = wrap_zstd(did_blob, zstd_level), wrap_zstd(src_blob, zstd_level)
+    did_blob, did_codec = encode_strings_arrow(did_arr)
+    src_blob, src_codec = encode_strings_arrow(src_arr)
+    did_blob, src_blob = wrap_zstd(did_blob, zstd_level), wrap_zstd(src_blob, zstd_level)
     meta["streams"]["doc_id"] = STR_CODEC_NAMES[did_codec]
     meta["streams"]["source"] = STR_CODEC_NAMES[src_codec]
-    extras_blob, extra_bytes = _pack_extras(part, extras or [], zstd, zstd_level, meta)
-    did_bytes = len(_utf8_payload(did_arr))
-    src_bytes = len(_utf8_payload(src_arr))
+    extras_blob, extra_bytes = _pack_extras(part, extras or [], zstd_level, meta)
+    did_payload = utf8_buffers(did_arr)[0]
+    did_bytes = len(did_payload)
+    src_bytes = len(utf8_buffers(src_arr)[0])
     bytes_in = int(4 * len(flat) + 4 * len(lengths) + did_bytes + src_bytes + extra_bytes)
     bytes_out = len(tokens_blob) + len(did_blob) + len(src_blob) + len(extras_blob)
-    crc = zlib.crc32(flat.tobytes()) ^ zlib.crc32(_utf8_payload(did_arr))
+    crc = zlib.crc32(flat.tobytes()) ^ zlib.crc32(did_payload)
     if extras:
         crc ^= zlib.crc32(extras_blob)
     import pyarrow.compute as pc
@@ -483,7 +463,6 @@ def fold_parts(rows: list[dict]) -> dict:
 
 def _make_encode_fn(
     staging_dir: str,
-    zstd: bool,
     zstd_level: int = 3,
     key: str = "_file",
     extras: list[str] | None = None,
@@ -496,7 +475,7 @@ def _make_encode_fn(
             if batch.num_rows == 0:
                 continue
             for fname, part in _split_by_file(batch, key):
-                row = _encode_chunk_row(part, zstd, zstd_level, extras=extras)
+                row = _encode_chunk_row(part, zstd_level, extras=extras)
                 per_file.setdefault(stem_of(str(fname)), []).append(row)
         out_rows = []
         for stem, rows in per_file.items():
@@ -516,21 +495,6 @@ def _make_encode_fn(
             yield pa.RecordBatch.from_pylist(out_rows, schema=_META_ARROW_SCHEMA)
 
     return encode_batches
-
-
-_ARROW_OF = {
-    "string": pa.string(), "integer": pa.int32(),
-    "long": pa.int64(), "double": pa.float64(),
-}
-
-
-def _decode_cols(extras: list[tuple[str, str]] | None = None) -> list[tuple[str, "pa.DataType"]]:
-    return [
-        ("doc_id", pa.string()),
-        ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("source", pa.string()),
-    ] + [(n, _ARROW_OF[t]) for n, t in (extras or [])]
 
 
 _SEG_PAYLOAD_CAP = 1 << 30  # utf8-cast segment payload bound (tests shrink it)
@@ -1227,10 +1191,10 @@ def _extra_columns(schema: T.StructType) -> list[tuple[str, str]]:
         if f.name not in ("doc_id", "tokens", "n_tok", "source")
     )
     for name, t in extras:
-        if t not in _EXTRA_SPARK_TYPES:
+        if t not in _ARROW_OF:
             raise ValueError(
                 f"unsupported extra column {name!r} of type {t!r} "
-                f"(supported: {sorted(_EXTRA_SPARK_TYPES)})"
+                f"(supported: {sorted(_ARROW_OF)})"
             )
     return extras
 
@@ -1242,7 +1206,6 @@ def encode_dataset(
     spark: SparkSession,
     input_path: str | list[str],
     out_dir: str,
-    zstd: bool = True,
     zstd_level: int = 3,
     target_tasks: int | None = None,
 ) -> dict:
@@ -1293,9 +1256,7 @@ def encode_dataset(
         write_layout(out_dir, "per-file", extras=[list(e) for e in extras])
         df = spark.read.parquet(*todo).withColumn("_file", F.input_file_name())
         meta_rows = df.mapInArrow(
-            _make_encode_fn(
-                staging_dir, zstd, zstd_level, extras=[n for n, _ in extras]
-            ),
+            _make_encode_fn(staging_dir, zstd_level, extras=[n for n, _ in extras]),
             schema=META_SCHEMA,
         ).collect()
         # commit per file (a file may yield several part rows if Spark split it)

@@ -56,7 +56,6 @@ def encode_dataset_by_source(
     input_path: str | list[str],
     out_dir: str,
     n_salts: int = 8,
-    zstd: bool = True,
     zstd_level: int = 3,
 ) -> dict:
     """Encode the token table into source-partitioned, salt-balanced buckets.
@@ -117,7 +116,7 @@ def encode_dataset_by_source(
         )
         meta_rows = shuffled.mapInArrow(
             _make_encode_fn(
-                staging_dir, zstd, zstd_level, key="_bucket",
+                staging_dir, zstd_level, key="_bucket",
                 extras=[n for n, _ in extras],
             ),
             schema=META_SCHEMA,

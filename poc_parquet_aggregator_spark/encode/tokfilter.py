@@ -23,17 +23,22 @@ Parquet-bloom discipline applied to this format's own metadata:
 
 Filter modes (one byte in the header, per filter, chosen by value span):
 
-  * EXACT (mode 1): a bitmap over ``[tok_min, tok_max]`` — bit j set iff
+  * EXACT (mode 3): a bitmap over ``[tok_min, tok_max]`` — bit j set iff
     token ``tok_min + j`` occurs. Chosen when the span is ≤ 2^20 (raw
     bitmap ≤ 128 KiB before the zstd pass — a 50k-token vocab costs
     ~6 KiB raw and compresses to ~1-2 KiB against multi-MB chunk blobs).
     NO false positives and no false negatives: for real tokenizer vocabs
     (50k-256k ids) every chunk takes this mode.
-  * HASHED (mode 2): a fixed 2^15-bit one-hash bloom over a Fibonacci
+  * HASHED (mode 4): a fixed 2^15-bit one-hash bloom over a Fibonacci
     hash of the id, for arbitrary int32 token spaces where an exact
     bitmap would not fit. No false negatives; false positives only cost
     a wasted decode, never a wrong row (the exact post-decode filter is
     always applied).
+
+The bitmap after the header is a ``RAW`` blob (codecs/ints.py), zstd-
+wrapped when that is smaller. Filters written before that framing used
+modes 1 and 2 with unframed bitmaps; they raise ``ValueError`` asking for
+a re-encode rather than being guessed at.
 
 Both modes are deterministic functions of the chunk's values, so resume
 re-produces byte-identical filters (the manifest/commit invariant).
@@ -49,10 +54,11 @@ import struct
 
 import numpy as np
 
-from ..codecs.ints import unwrap_zstd, wrap_zstd
+from ..codecs.ints import decode_raw, raw_blob, wrap_zstd
 
-MODE_EXACT = 1
-MODE_HASHED = 2
+MODE_EXACT = 3
+MODE_HASHED = 4
+_OLD_MODES = (1, 2)  # unframed bitmaps: rejected, never guessed at
 
 EXACT_SPAN_LIMIT = 1 << 20  # max exact-bitmap span (128 KiB raw)
 HASHED_BITS = 1 << 15  # fallback one-hash bloom width (4 KiB raw)
@@ -72,7 +78,7 @@ def _hash_slots(ids: np.ndarray, nbits: int) -> np.ndarray:
 
 def _pack(mode: int, lo: int, hi: int, nbits: int, present: np.ndarray) -> bytes:
     bits = np.packbits(present, bitorder="little")
-    return _HDR.pack(mode, lo, hi, nbits) + wrap_zstd(bits.tobytes(), level=3)
+    return _HDR.pack(mode, lo, hi, nbits) + wrap_zstd(raw_blob(bits), level=3)
 
 
 def build_token_filter(flat: np.ndarray) -> bytes:
@@ -92,8 +98,25 @@ def build_token_filter(flat: np.ndarray) -> bytes:
 
 
 def _parse(blob: bytes) -> tuple[int, int, int, int, bytes]:
+    if len(blob) <= _HDR.size:
+        raise ValueError("truncated token filter")
     mode, lo, hi, nbits = _HDR.unpack_from(blob)
+    if mode in _OLD_MODES:
+        raise ValueError(
+            f"token filter in the pre-framing layout (mode {mode}); "
+            "re-encode the dataset"
+        )
+    if mode not in (MODE_EXACT, MODE_HASHED):
+        raise ValueError(f"unknown token filter mode {mode}")
     return mode, lo, hi, nbits, blob[_HDR.size :]
+
+
+def _bits(payload: bytes, nbits: int) -> np.ndarray:
+    """The filter's packed bitmap bytes (``nbits`` bits, little-endian)."""
+    bits = np.frombuffer(decode_raw(payload), dtype=np.uint8)
+    if len(bits) != (nbits + 7) // 8:
+        raise ValueError(f"token filter bitmap holds {len(bits)} bytes for {nbits} bits")
+    return bits
 
 
 def token_filter_bounds(blob: bytes) -> tuple[int, int]:
@@ -108,7 +131,7 @@ def token_filter_contains(blob: bytes, token: int) -> bool:
     mode, lo, hi, nbits, payload = _parse(blob)
     if token < lo or token > hi:
         return False
-    bits = np.frombuffer(unwrap_zstd(payload), dtype=np.uint8)
+    bits = _bits(payload, nbits)
     if mode == MODE_EXACT:
         j = token - lo
     else:
@@ -126,15 +149,13 @@ def token_filter_contains_any(blob: bytes, tokens) -> bool:
     ids = np.asarray([int(t) for t in tokens if lo <= t <= hi], dtype=np.int64)
     if ids.size == 0:
         return False
-    bits = np.frombuffer(unwrap_zstd(payload), dtype=np.uint8)
+    bits = _bits(payload, nbits)
     j = ids - lo if mode == MODE_EXACT else _hash_slots(ids, nbits).astype(np.int64)
     return bool(((bits[j >> 3] >> (j & 7).astype(np.uint8)) & 1).any())
 
 
-def _exact_ids(lo: int, nbits: int, payload: bytes) -> np.ndarray:
-    bits = np.frombuffer(unwrap_zstd(payload), dtype=np.uint8)
-    present = np.unpackbits(bits, count=nbits, bitorder="little").astype(np.bool_)
-    return lo + np.flatnonzero(present)
+def _present(payload: bytes, nbits: int) -> np.ndarray:
+    return np.unpackbits(_bits(payload, nbits), count=nbits, bitorder="little").astype(np.bool_)
 
 
 def merge_token_filters(blobs: list[bytes]) -> bytes:
@@ -153,25 +174,18 @@ def merge_token_filters(blobs: list[bytes]) -> bytes:
     if all(p[0] == MODE_EXACT for p in parsed) and span <= EXACT_SPAN_LIMIT:
         present = np.zeros(span, dtype=np.bool_)
         for _, b_lo, _b_hi, nbits, payload in parsed:
-            bits = np.frombuffer(unwrap_zstd(payload), dtype=np.uint8)
-            part = np.unpackbits(bits, count=nbits, bitorder="little")
-            off = b_lo - lo
-            np.logical_or(
-                present[off : off + nbits], part.astype(np.bool_),
-                out=present[off : off + nbits],
-            )
+            window = present[b_lo - lo : b_lo - lo + nbits]
+            np.logical_or(window, _present(payload, nbits), out=window)
         return _pack(MODE_EXACT, lo, hi, span, present)
     present = np.zeros(HASHED_BITS, dtype=np.bool_)
     for mode, b_lo, _b_hi, nbits, payload in parsed:
         if mode == MODE_HASHED:
-            bits = np.frombuffer(unwrap_zstd(payload), dtype=np.uint8)
-            part = np.unpackbits(bits, count=nbits, bitorder="little")
             if nbits == HASHED_BITS:
-                np.logical_or(present, part.astype(np.bool_), out=present)
+                np.logical_or(present, _present(payload, nbits), out=present)
             else:  # defensive: re-hash slots of a differently-sized bloom
                 # can't recover ids from a bloom — saturate conservatively
                 present[:] = True
         else:
-            ids = _exact_ids(b_lo, nbits, payload)
+            ids = b_lo + np.flatnonzero(_present(payload, nbits))
             present[_hash_slots(ids, HASHED_BITS)] = True
     return _pack(MODE_HASHED, lo, hi, HASHED_BITS, present)

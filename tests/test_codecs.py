@@ -7,20 +7,21 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import pyarrow as pa
+
 from poc_parquet_aggregator_spark.codecs import (
     CODEC_NAMES,
     decode_ints,
-    decode_strings,
+    decode_strings_arrow,
     encode_ints,
     encode_ints_auto,
-    encode_strings_auto,
-    estimate_sizes,
-    int_stats,
+    encode_strings_arrow,
     unwrap_zstd,
     wrap_zstd,
 )
 from poc_parquet_aggregator_spark.codecs import ints as CI
 from poc_parquet_aggregator_spark.codecs import strings as CS
+from poc_parquet_aggregator_spark.codecs.ints import estimate_sizes, int_stats
 
 ALL_INT_CODECS = [CI.PLAIN, CI.BITPACK, CI.FOR, CI.RLE, CI.DICT, CI.DELTA]
 ALL_STR_CODECS = [CS.STR_PLAIN, CS.STR_DICT, CS.FSST]
@@ -104,11 +105,92 @@ def test_int_property_roundtrip(xs):
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.text(max_size=40), min_size=0, max_size=100))
 def test_string_property_roundtrip(xs):
+    arr = pa.array(xs, type=pa.string())
     for codec in ALL_STR_CODECS:
-        assert decode_strings(CS.encode_strings(xs, codec)) == xs
-    blob, _ = encode_strings_auto(xs)
-    assert decode_strings(blob) == xs
-    assert decode_strings(wrap_zstd(blob)) == xs
+        assert decode_strings_arrow(CS.build_strings(arr, codec)).to_pylist() == xs
+    blob, _ = encode_strings_arrow(arr)
+    assert decode_strings_arrow(blob).to_pylist() == xs
+    assert decode_strings_arrow(wrap_zstd(blob)).to_pylist() == xs
+
+
+# ------------------------------------------------------------ blob framing
+
+TRUNCATE_INPUT = np.repeat(
+    np.random.default_rng(5).integers(0, 3000, 1250), 4
+).astype(np.int32)  # 5000 ints with runs, non-negative: every codec applies
+
+
+@pytest.mark.parametrize("codec", ALL_INT_CODECS)
+def test_truncated_int_blob_raises(codec):
+    blob = encode_ints(TRUNCATE_INPUT, codec)
+    assert np.array_equal(decode_ints(blob), TRUNCATE_INPUT)
+    for cut in (blob[:-1], blob[: len(blob) // 2]):
+        with pytest.raises(ValueError):
+            decode_ints(cut)
+
+
+def test_wrap_zstd_accepts_only_registered_blobs():
+    compressible = bytes(range(256)) * 8
+    for first in range(256):
+        blob = bytes([first]) + compressible
+        if first in CI.BLOB_IDS and first != CI.ZSTD:
+            assert unwrap_zstd(wrap_zstd(blob)) == blob
+        else:
+            with pytest.raises(ValueError):
+                wrap_zstd(blob)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=255),
+    st.binary(max_size=600),
+    st.integers(min_value=1, max_value=40),
+    st.sampled_from([1, 3, 15]),
+)
+def test_raw_blob_framing_property(first, body, repeat, level):
+    """RAW blobs carry arbitrary bytes, every first byte included; wrapped
+    or not they round-trip exactly, and a truncated zstd frame raises."""
+    for data in (bytes([first]) + body, bytes([first]) + body * repeat):
+        z = wrap_zstd(CI.raw_blob(data), level)
+        assert z[0] in (CI.RAW, CI.ZSTD)
+        assert CI.decode_raw(z) == data
+        if z[0] == CI.ZSTD:
+            for cut in (z[:-1], z[: len(z) // 2]):
+                with pytest.raises(ValueError):
+                    CI.decode_raw(cut)
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=255),
+    st.binary(min_size=0, max_size=400),
+    st.integers(min_value=1, max_value=20),
+)
+def test_float_extras_arbitrary_bytes_property(first, body, repeat):
+    """Float extras whose doubles are arbitrary bit patterns (any first
+    byte, incompressible or repetitive) round-trip bit-exactly."""
+    from poc_parquet_aggregator_spark.encode.pipeline import (
+        _decode_extra,
+        _encode_extra_array,
+    )
+
+    raw = bytes([first]) + body * repeat
+    raw = raw[: len(raw) // 8 * 8] or bytes([first]) * 8
+    v = np.frombuffer(raw, dtype=np.float64)
+    kind, payload, _ = _encode_extra_array(pa.array(v, type=pa.float64()), 3)
+    out = _decode_extra(kind, payload, len(v)).to_numpy(zero_copy_only=False)
+    assert out.view(np.int64).tolist() == v.view(np.int64).tolist()
+
+
+def test_old_float_extras_layout_rejected():
+    """Float extras from before the blob framing (kind 4: a private flag
+    byte in front of raw/zstd/ALP bytes) must fail loudly, never decode."""
+    from poc_parquet_aggregator_spark.encode.pipeline import _decode_extra
+
+    raw = np.arange(16, dtype=np.float64).tobytes()
+    for old in (b"\x00" + raw, b"\x01" + wrap_zstd(CI.raw_blob(raw))):
+        with pytest.raises(ValueError, match="re-encode"):
+            _decode_extra(4, old, 16)
 
 
 def test_selector_picks_the_right_regime():
@@ -123,15 +205,15 @@ def test_selector_picks_the_right_regime():
 
 def test_fsst_compresses_shared_prefixes():
     docs = [f"doc-{i:012d}" for i in range(4000)]
-    blob = CS.encode_strings(docs, CS.FSST)
+    blob = CS.build_strings(pa.array(docs, type=pa.string()), CS.FSST)
     raw = sum(len(s) for s in docs)
     assert len(blob) < raw
-    assert decode_strings(blob) == docs
+    assert decode_strings_arrow(blob).to_pylist() == docs
 
 
 def test_str_dict_beats_plain_on_categoricals():
     src = ["srcA"] * 9000 + ["srcB"] * 1000
-    blob, codec = encode_strings_auto(src)
+    blob, codec = encode_strings_arrow(pa.array(src, type=pa.string()))
     assert codec == CS.STR_DICT
     assert len(blob) < 0.05 * sum(len(s) for s in src)
 
@@ -142,8 +224,6 @@ def test_arrow_fsst_branch_from_buffers():
     including multi-chunk and offset-sliced inputs."""
     import random
 
-    import pyarrow as pa
-
     random.seed(7)
     frags = ["".join(random.choice("abcdefghijklmnop") for _ in range(8)) for _ in range(40)]
     vals = ["".join(random.choice(frags) for _ in range(6)) + str(i % 7) for i in range(8000)]
@@ -151,15 +231,15 @@ def test_arrow_fsst_branch_from_buffers():
     arr = pa.array(vals, type=pa.string())
     blob, codec = CS.encode_strings_arrow(arr)
     assert codec == CS.FSST
-    assert decode_strings(blob) == vals
+    assert decode_strings_arrow(blob).to_pylist() == vals
     # sliced array (nonzero offset into the buffers) must encode the slice only
     sl = arr.slice(100, 5000)
     blob2, _ = CS.encode_strings_arrow(sl)
-    assert decode_strings(blob2) == vals[100:5100]
+    assert decode_strings_arrow(blob2).to_pylist() == vals[100:5100]
     # chunked input
     ch = pa.chunked_array([arr.slice(0, 3000), arr.slice(3000)])
     blob3, codec3 = CS.encode_strings_arrow(ch)
-    assert decode_strings(blob3) == vals
+    assert decode_strings_arrow(blob3).to_pylist() == vals
 
 
 @settings(max_examples=60, deadline=None)
@@ -171,10 +251,7 @@ def test_arrow_fsst_branch_from_buffers():
 )
 def test_extras_container_property(ss, i32s, i64s, f64s):
     """Extra-column container: every supported type round-trips exactly
-    (including NaN/inf doubles and int64 extremes) through both zstd
-    settings."""
-    import pyarrow as pa
-
+    (including NaN/inf doubles and int64 extremes)."""
     from poc_parquet_aggregator_spark.encode.pipeline import (
         _decode_extra,
         _encode_extra_array,
@@ -187,15 +264,14 @@ def test_extras_container_property(ss, i32s, i64s, f64s):
         pa.array(np.array(f64s, dtype=np.float64), type=pa.float64()),
     ]
     for arr in arrays:
-        for zstd in (False, True):
-            kind, payload, _codec = _encode_extra_array(arr, zstd, 3)
-            out = _decode_extra(kind, payload, len(arr))
-            a = arr.to_pandas().to_numpy()
-            b = out.to_pandas().to_numpy()
-            if arr.type == pa.float64():
-                assert np.array_equal(a, b, equal_nan=True)
-            else:
-                assert list(out) == list(arr)
+        kind, payload, _codec = _encode_extra_array(arr, 3)
+        out = _decode_extra(kind, payload, len(arr))
+        a = arr.to_pandas().to_numpy()
+        b = out.to_pandas().to_numpy()
+        if arr.type == pa.float64():
+            assert np.array_equal(a, b, equal_nan=True)
+        else:
+            assert list(out) == list(arr)
 
 
 # ----------------------------------------------------------- ALP float codec
@@ -214,7 +290,7 @@ class TestAlpFloats:
             encode_floats_alp,
         )
 
-        enc = encode_floats_alp(v, True, 3)
+        enc = encode_floats_alp(v, 3)
         if enc is None:
             return None, None
         out = decode_floats_alp(enc[0])
@@ -229,7 +305,7 @@ class TestAlpFloats:
         # 3-decimal values carry ~10 bits each; the bit-packed planes land
         # near that floor (~10.1 bits/val here) where zstd over the raw
         # bit patterns pays ~19.5 — ALP halves the compressed size
-        assert len(blob) < len(CI.wrap_zstd(v.tobytes(), 3)) * 0.6
+        assert len(blob) < len(CI.wrap_zstd(CI.raw_blob(v.tobytes()), 3)) * 0.6
         assert len(blob) < len(v) * 11 / 8 + 64  # near the 10-bit floor
 
     def test_round_multiples_pick_negative_scale(self):
@@ -258,12 +334,10 @@ class TestAlpFloats:
         v = rng.uniform(0, 1, 2048)  # full 52-bit mantissas
         from poc_parquet_aggregator_spark.codecs.floats import encode_floats_alp
 
-        enc = encode_floats_alp(v, True, 3)
+        enc = encode_floats_alp(v, 3)
         assert enc is None  # 0 sample hits -> fast-path skip
 
     def test_extra_container_selects_alp_only_when_smaller(self):
-        import pyarrow as pa
-
         from poc_parquet_aggregator_spark.encode.pipeline import (
             _X_FLOAT64,
             _decode_extra,
@@ -278,7 +352,7 @@ class TestAlpFloats:
         }
         for label, v in cases.items():
             arr = pa.array(v, type=pa.float64())
-            kind, payload, codec = _encode_extra_array(arr, True, 3)
+            kind, payload, codec = _encode_extra_array(arr, 3)
             assert kind == _X_FLOAT64
             out = _decode_extra(kind, payload, len(arr)).to_numpy(zero_copy_only=False)
             assert out.view(np.int64).tolist() == v.view(np.int64).tolist(), label
@@ -322,7 +396,7 @@ class TestAlprdFloats:
             encode_floats_alprd,
         )
 
-        enc = encode_floats_alprd(v, True, 3)
+        enc = encode_floats_alprd(v, 3)
         assert enc is not None
         out = decode_floats_alprd(enc[0])
         assert out.view(np.int64).tolist() == v.view(np.int64).tolist()
@@ -335,7 +409,7 @@ class TestAlprdFloats:
         assert name.startswith("f64_alprd")
         # ~(3 + 52) bits/val + tiny exceptions, vs zstd's ~60 on the raw
         # bit patterns — the dictionary removes the correlated front bits
-        assert len(blob) < len(CI.wrap_zstd(v.tobytes(), 3))
+        assert len(blob) < len(CI.wrap_zstd(CI.raw_blob(v.tobytes()), 3))
         assert len(blob) < len(v) * 56 / 8 + 128
 
     def test_concentrated_range_packs_harder(self):

@@ -467,8 +467,8 @@ def test_column_pruned_decode(spark, token_dir, tmp_path):
 
 
 def test_extra_float_container_incompressible():
-    """Incompressible float64 extras take the raw-flag container; a payload
-    whose first byte collides with the ZSTD codec id must NOT be misparsed
+    """Incompressible float64 extras take the RAW blob; raw doubles whose
+    first byte collides with the ZSTD codec id must NOT be misparsed
     (regression: unwrap_zstd on unwrapped raw bytes)."""
     import numpy as np
     import pyarrow as pa
@@ -485,13 +485,13 @@ def test_extra_float_container_incompressible():
     vals = np.frombuffer(raw, dtype=np.float64)
     arr = pa.array(vals, type=pa.float64())
     for lvl in (1, 15):
-        kind, payload, codec = _encode_extra_array(arr, True, lvl)
+        kind, payload, codec = _encode_extra_array(arr, lvl)
         out = _decode_extra(kind, payload, len(vals)).to_numpy(zero_copy_only=False)
         assert np.array_equal(out, vals, equal_nan=True), codec
-    # compressible doubles never take the raw flag (zstd or ALP, whichever
+    # compressible doubles never take the RAW blob (zstd or ALP, whichever
     # is byte-smaller — all-zeros is decimal-exact so ALP competes too)
     smooth = pa.array(np.zeros(4096), type=pa.float64())
-    kind, payload, codec = _encode_extra_array(smooth, True, 3)
+    kind, payload, codec = _encode_extra_array(smooth, 3)
     assert codec != "f64_raw"
     out = _decode_extra(kind, payload, 4096).to_numpy(zero_copy_only=False)
     assert np.array_equal(out, np.zeros(4096))

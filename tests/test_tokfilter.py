@@ -31,6 +31,8 @@ from poc_parquet_aggregator_spark.encode.tokfilter import (
     EXACT_SPAN_LIMIT,
     MODE_EXACT,
     MODE_HASHED,
+    _HDR,
+    _pack,
     _parse,
     build_token_filter,
     merge_token_filters,
@@ -163,6 +165,72 @@ def test_mode_switch_at_span_limit():
     assert _parse(build_token_filter(just_fits))[0] == MODE_EXACT
     overflow = np.asarray([lo, lo + EXACT_SPAN_LIMIT], dtype=np.int32)
     assert _parse(build_token_filter(overflow))[0] == MODE_HASHED
+
+
+def _ids_of_bitmap(lo: int, bitmap: bytes) -> np.ndarray:
+    present = np.unpackbits(np.frombuffer(bitmap, dtype=np.uint8), bitorder="little")
+    return lo + np.flatnonzero(present)
+
+
+def test_bitmap_starting_with_zstd_id_is_exact():
+    """Regression: an exact filter whose packed bitmap starts with 0x05 (the
+    ZSTD codec id) and does not compress was stored unframed and misread
+    as a zstd frame, so every probe and merge raised."""
+    rng = np.random.default_rng(21)
+    bitmap = bytes([0x05]) + rng.integers(0, 256, 4000, dtype=np.uint8).tobytes()
+    ids = _ids_of_bitmap(1000, bitmap).astype(np.int32)
+    f = build_token_filter(ids)
+    assert _parse(f)[0] == MODE_EXACT
+    s = set(ids.tolist())
+    probes = range(990, int(ids.max()) + 10)
+    assert [token_filter_contains(f, t) for t in probes] == [t in s for t in probes]
+    # 0x05 sets bits 0 and 2: ids 1000 and 1002 are in, 999/1001/1003 out
+    assert token_filter_contains_any(f, [999, 1001, 1002])
+    assert not token_filter_contains_any(f, [999, 1001, 1003])
+    other = np.asarray([5, 70_000], dtype=np.int32)
+    m = merge_token_filters([f, build_token_filter(other)])
+    assert _parse(m)[0] == MODE_EXACT
+    union = s | {5, 70_000}
+    for t in list(range(0, 1100)) + [int(ids.max()), 70_000, 70_001]:
+        assert token_filter_contains(m, t) == (t in union)
+
+
+def test_old_filter_layout_rejected():
+    """Filters from before the blob framing (modes 1/2, unframed bitmap)
+    must fail loudly with a re-encode hint, never be guessed at."""
+    bits = np.packbits(np.ones(64, dtype=np.bool_), bitorder="little").tobytes()
+    for mode in (1, 2):
+        old = _HDR.pack(mode, 0, 63, 64) + bits
+        with pytest.raises(ValueError, match="re-encode"):
+            token_filter_contains(old, 3)
+        with pytest.raises(ValueError, match="re-encode"):
+            merge_token_filters([build_token_filter(np.arange(4, dtype=np.int32)), old])
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=255),
+    st.binary(max_size=300),
+    st.integers(min_value=1, max_value=30),
+    st.integers(min_value=-(2**20), max_value=2**20),
+)
+def test_filter_payload_arbitrary_bitmaps(first, body, repeat, lo):
+    """Exact-mode bitmaps take arbitrary bytes (every first byte, random
+    or repetitive): probes, ANY-probes and merges stay exact; a truncated
+    filter raises."""
+    bitmap = bytes([first]) + body * repeat
+    nbits = 8 * len(bitmap)
+    present = np.unpackbits(np.frombuffer(bitmap, dtype=np.uint8), bitorder="little")
+    f = _pack(MODE_EXACT, lo, lo + nbits - 1, nbits, present.astype(np.bool_))
+    s = set(_ids_of_bitmap(lo, bitmap).tolist())
+    probes = range(lo - 2, lo + min(nbits, 64) + 2)
+    assert [token_filter_contains(f, t) for t in probes] == [t in s for t in probes]
+    assert token_filter_contains_any(f, list(probes)) == bool(s & set(probes))
+    m = merge_token_filters([f, build_token_filter(np.asarray([lo - 5], dtype=np.int32))])
+    for t in list(probes) + [lo - 5]:
+        assert token_filter_contains(m, t) == (t in s or t == lo - 5)
+    with pytest.raises(ValueError):
+        token_filter_contains(f[:-1], lo)
 
 
 # ---------------------------------------------------------- end to end
