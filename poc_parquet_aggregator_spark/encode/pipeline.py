@@ -37,11 +37,12 @@ import time
 import uuid
 import zlib
 from collections.abc import Iterator
-from dataclasses import dataclass
-from functools import reduce
+from dataclasses import dataclass, replace
+from functools import partial, reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -252,19 +253,19 @@ def _pack_extras(
     return b"".join(out), raw_bytes
 
 
-def _unpack_extras(blob: bytes) -> list[tuple[str, int, bytes]]:
+def _unpack_extras(blob: bytes) -> dict[str, tuple[int, bytes]]:
+    """The extras container → {name: (kind, payload)}."""
     mv = memoryview(blob)
     (n,) = _U16.unpack_from(mv, 0)
     pos = 2
-    out = []
+    out = {}
     for _ in range(n):
         ln = mv[pos]
         name = bytes(mv[pos + 1 : pos + 1 + ln]).decode("utf-8")
         kind = mv[pos + 1 + ln]
         (plen,) = struct.unpack_from("<I", mv, pos + 2 + ln)
-        payload = bytes(mv[pos + 6 + ln : pos + 6 + ln + plen])
+        out[name] = (kind, bytes(mv[pos + 6 + ln : pos + 6 + ln + plen]))
         pos += 6 + ln + plen
-        out.append((name, kind, payload))
     return out
 
 
@@ -301,24 +302,22 @@ _ARROW_OF = {
     "long": pa.int64(), "double": pa.float64(),
 }
 
-
-def _decode_cols(extras: list[tuple[str, str]] | None = None) -> list[tuple[str, "pa.DataType"]]:
-    return [
-        ("doc_id", pa.string()),
-        ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("source", pa.string()),
-    ] + [(n, _ARROW_OF[t]) for n, t in (extras or [])]
+# decoded column → the chunk-row blob it is parsed from (every extra
+# column lives in ``extras_blob``): the one table behind both the scan's
+# select and what the decode kernel parses
+_BLOB_OF = {"tokens": "tokens_blob", "n_tok": "tokens_blob",
+            "doc_id": "doc_id_blob", "source": "source_blob"}
 
 
-def _decoded_schema(
-    extras: list[tuple[str, str]] | None = None,
-    columns: list[str] | None = None,
-) -> T.StructType:
-    return from_arrow_schema(pa.schema([
-        pa.field(n, t, nullable=False) for n, t in _decode_cols(extras)
-        if columns is None or n in columns
-    ]))
+def _decoded_arrow_schema(
+    extras: list[tuple[str, str]], columns: list[str] | None = None
+) -> pa.Schema:
+    """The decoded columns (core, then extras), restricted to ``columns``."""
+    cols = [("doc_id", pa.string()), ("tokens", pa.list_(pa.int32())),
+            ("n_tok", pa.int32()), ("source", pa.string())]
+    cols += [(n, _ARROW_OF[t]) for n, t in extras]
+    return pa.schema([pa.field(n, t, nullable=False)
+                      for n, t in cols if columns is None or n in columns])
 
 
 def _stem(path: str) -> str:
@@ -369,8 +368,6 @@ def _encode_chunk_row(
     crc = zlib.crc32(flat.tobytes()) ^ zlib.crc32(did_payload)
     if extras:
         crc ^= zlib.crc32(extras_blob)
-    import pyarrow.compute as pc
-
     mm = pc.min_max(did_arr).as_py() if len(did_arr) else {"min": "", "max": ""}
     # token-membership filter + value zone (tokfilter.py): prunes
     # token-content reads at the row-group (zones) and decode (bitmap)
@@ -570,84 +567,80 @@ def _token_id_list(contains_token) -> list[int]:
     return ids
 
 
-def _make_decode_fn(
-    extras: list[tuple[str, str]] | None = None,
-    columns: list[str] | None = None,
-    contains_token: int | list[int] | None = None,
-):
-    """Decode kernel; ``extras`` = [(name, spark_type_name)] appended after
-    the core columns (must match what the encode job recorded in layout).
-    ``columns`` projects the decode itself: blobs of unselected columns are
-    never parsed (n_tok without tokens reads only the lengths stream —
-    decode_chunk_lengths). ``contains_token`` (id or ANY-match id list)
-    skips chunks whose membership bitmap proves every id absent BEFORE any
-    blob is parsed (tokfilter.py)."""
-    extras = extras or []
-    all_cols = _decode_cols(extras)
-    sel = [c for c, _ in all_cols] if columns is None else list(columns)
-    schema = pa.schema([pa.field(n, t) for n, t in all_cols if n in sel])
-    want = set(sel)
-    want_extras = [(n, t) for n, t in extras if n in want]
-    tok_ids = None if contains_token is None else _token_id_list(contains_token)
-    tok_ids_arr = None if tok_ids is None else np.asarray(tok_ids, dtype=np.int32)
+def _decode_column(row: dict, name: str, got: dict, via_tokens: bool) -> "pa.Array":
+    """Column ``name`` of one chunk row, parsed from its blob at most once
+    (``got`` caches per row). ``n_tok`` comes from the full token decode
+    when ``via_tokens``, else from the lengths stream alone
+    (decode_chunk_lengths)."""
+    if name in got:
+        return got[name]
+    blob = bytes(row[_BLOB_OF.get(name, "extras_blob")])
+    if name == "tokens" or (name == "n_tok" and via_tokens):
+        flat, lengths = decode_token_chunk(blob)
+        offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+        np.cumsum(lengths, out=offsets[1:])
+        got["tokens"] = pa.ListArray.from_arrays(  # zero-copy
+            pa.array(offsets, type=pa.int32()), pa.array(flat, type=pa.int32())
+        )
+        got["n_tok"] = pa.array(lengths, type=pa.int32())
+    elif name == "n_tok":
+        got["n_tok"] = pa.array(decode_chunk_lengths(blob), type=pa.int32())
+    elif name in _BLOB_OF:
+        got[name] = decode_strings_arrow(blob)
+    else:  # an extra: unpack the shared container once per row
+        if "extras_blob" not in got:
+            got["extras_blob"] = _unpack_extras(blob)
+        got[name] = _decode_extra(*got["extras_blob"][name], 0)
+    return got[name]
+
+
+def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list[str]):
+    """Decode kernel: chunk rows in, the read's exact rows of ``columns``
+    out. ``extras`` = [(name, spark_type_name)] as the encode job recorded
+    in the layout. Per chunk: the membership bitmap skips the chunk when it
+    proves every ``plan.tok_ids`` absent, before any blob is parsed
+    (tokfilter.py); then the columns ``plan.rows`` test are decoded and
+    their masks ANDed, and a chunk with no surviving row stops there; then
+    the remaining output columns are decoded and filtered. Blobs no test
+    or output column needs are never parsed."""
+    schema = _decoded_arrow_schema(extras, columns)
+    via_tokens = "tokens" in {*columns, *(c for c, _ in plan.rows)}
 
     def decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            d = batch.to_pylist()  # a few chunk rows per batch — not hot
-            for row in d:
-                if tok_ids is not None:
-                    filt = row.get("tok_filter")
-                    # NULL filter (pre-upgrade chunk) → decode conservatively
-                    if filt is not None and not token_filter_contains_any(
-                        bytes(filt), tok_ids
-                    ):
-                        continue
-                out: dict[str, pa.Array] = {}
-                if "tokens" in want:
-                    flat, lengths = decode_token_chunk(bytes(row["tokens_blob"]))
-                    offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
-                    np.cumsum(lengths, out=offsets[1:])
-                    if tok_ids is not None:
-                        # per-doc membership via one cumsum (empty-doc-safe,
-                        # unlike reduceat at repeated offsets): if NO doc in
-                        # the chunk holds any wanted id, skip the string
-                        # decodes and emit nothing — for a rare-token read
-                        # most bitmap-surviving chunks end here
-                        hit = (
-                            flat == tok_ids_arr[0]
-                            if len(tok_ids) == 1
-                            else np.isin(flat, tok_ids_arr)
-                        )
-                        cs = np.zeros(len(flat) + 1, dtype=np.int64)
-                        np.cumsum(hit, out=cs[1:])
-                        doc_hit = cs[offsets[1:]] > cs[offsets[:-1]]
-                        if not doc_hit.any():
-                            continue
-                    out["tokens"] = pa.ListArray.from_arrays(  # zero-copy
-                        pa.array(offsets, type=pa.int32()),
-                        pa.array(flat, type=pa.int32()),
-                    )
-                    out["n_tok"] = pa.array(lengths, type=pa.int32())
-                elif "n_tok" in want:
-                    lengths = decode_chunk_lengths(bytes(row["tokens_blob"]))
-                    out["n_tok"] = pa.array(lengths, type=pa.int32())
-                if "doc_id" in want:
-                    out["doc_id"] = decode_strings_arrow(bytes(row["doc_id_blob"]))
-                if "source" in want:
-                    out["source"] = decode_strings_arrow(bytes(row["source_blob"]))
-                if want_extras:
-                    by_name = {
-                        name: (kind, payload)
-                        for name, kind, payload in _unpack_extras(
-                            bytes(row["extras_blob"])
-                        )
-                    }
-                    for name, _t in want_extras:
-                        kind, payload = by_name[name]
-                        out[name] = _decode_extra(kind, payload, 0)
-                yield from _emit_record_batches(out, schema)
+            for row in batch.to_pylist():  # a few chunk rows per batch — not hot
+                # a NULL filter (pre-upgrade chunk) is decoded conservatively
+                filt = row.get("tok_filter") if plan.tok_ids is not None else None
+                if filt is not None and not token_filter_contains_any(bytes(filt), plan.tok_ids):
+                    continue
+                got: dict[str, pa.Array] = {}
+                keep = None
+                for name, test in plan.rows:
+                    hit = test(_decode_column(row, name, got, via_tokens))
+                    keep = hit if keep is None else keep & hit
+                    if not keep.any():
+                        break
+                else:  # some row survives every test
+                    out = {c: _decode_column(row, c, got, via_tokens) for c in schema.names}
+                    if keep is not None and not keep.all():
+                        out = {c: a.filter(pa.array(keep)) for c, a in out.items()}
+                    yield from _emit_record_batches(out, schema)
 
     return decode_batches
+
+
+def _decode(
+    enc: DataFrame, plan: ReadPlan, extras: list[tuple[str, str]], columns: list[str]
+) -> DataFrame:
+    """The one decode call: scan only the blobs the kernel parses (plus the
+    chunk bitmaps of a token read) and map them to the read's rows."""
+    blobs = {_BLOB_OF.get(c, "extras_blob") for c in [*columns, *(c for c, _ in plan.rows)]}
+    if plan.tok_ids is not None and "tok_filter" in enc.columns:
+        blobs.add("tok_filter")
+    return enc.select(*sorted(blobs)).mapInArrow(
+        _make_decode_fn(plan, extras, columns),
+        schema=from_arrow_schema(_decoded_arrow_schema(extras, columns)),
+    )
 
 
 # ----------------------------------------------------------------- manifest
@@ -848,15 +841,39 @@ class _Zone:
         return lo.isNull() | hi.isNull() | meets
 
 
+def _is_in(values: list, arr: "pa.Array") -> np.ndarray:
+    return pc.is_in(arr, value_set=pa.array(values)).to_numpy(zero_copy_only=False)
+
+
+def _between(lo, hi, arr: "pa.Array") -> np.ndarray:  # closed interval
+    inside = pc.and_(pc.greater_equal(arr, lo), pc.less_equal(arr, hi))
+    return inside.to_numpy(zero_copy_only=False)
+
+
+def _has_any(ids: list[int], tokens: "pa.ListArray") -> np.ndarray:
+    """Per-doc ANY-match of ``ids`` via one cumsum over the token hit mask
+    (empty-doc-safe, unlike reduceat at repeated offsets)."""
+    flat = tokens.values.to_numpy()
+    offsets = tokens.offsets.to_numpy()
+    hit = flat == ids[0] if len(ids) == 1 else np.isin(flat, ids)
+    cs = np.zeros(len(flat) + 1, dtype=np.int64)
+    np.cumsum(hit, out=cs[1:])
+    return cs[offsets[1:]] > cs[offsets[:-1]]
+
+
 @dataclass(frozen=True)
 class ReadPlan:
-    """A read's zone predicates (ANDed) and token ids (sidecar probe).
-    ``stems`` (kept files) and ``funnel`` (files per pruning stage) are
-    set when the driver pruned the files; None on the join path."""
+    """A read's zone predicates (ANDed), token ids (sidecar probe, chunk
+    bitmap skip) and exact row tests ``rows``: (decoded column, test)
+    pairs, each test mapping that column's Arrow array to a numpy bool
+    mask, which the decode kernel ANDs. ``stems`` (kept files) and
+    ``funnel`` (files per pruning stage) are set when the driver pruned
+    the files; None on the join path."""
 
     out_dir: str
     zones: tuple
     tok_ids: list[int] | None
+    rows: tuple = ()
     stems: list[str] | None = None
     funnel: dict | None = None
 
@@ -906,26 +923,38 @@ def plan_read(
     doc_ids: list[str] | None = None,
     n_tok_range: tuple[int, int] | None = None,
     tok_ids: int | list[int] | None = None,
+    sources: list[str] | None = None,
 ) -> ReadPlan:
-    """Build a selective read's zone predicates once, and prune files on
-    the driver while the manifest is at most MANIFEST_JOIN_BYTES. Above
-    that the keep-list itself is the scale problem (a driver loop over
-    ~40M records, a multi-GB In-expression) and ``read_decoded`` renders
-    the same predicates over ``manifest_df`` instead (``_keep_stems_df``)."""
-    zones = []
+    """Build a selective read's zone predicates and exact row tests once,
+    and prune files on the driver while the manifest is at most
+    MANIFEST_JOIN_BYTES. Above that the keep-list itself is the scale
+    problem (a driver loop over ~40M records, a multi-GB In-expression)
+    and ``read_decoded`` renders the same predicates over ``manifest_df``
+    instead (``_keep_stems_df``). An empty ``doc_ids`` or ``sources`` list
+    raises, like an empty token list: it names no row."""
+    for name, arg in (("doc_ids", doc_ids), ("sources", sources)):
+        if arg is not None and not len(arg):
+            raise ValueError(f"{name} list must be non-empty")
+    zones, rows = [], []
+    if sources is not None:
+        rows.append(("source", partial(_is_in, sorted(set(sources)))))
     if doc_id_range:
         zones.append(_Zone("doc_id", (tuple(doc_id_range),)))
-    if doc_ids:  # one span per id; past a cap, the ids' overall range
+        rows.append(("doc_id", partial(_between, *doc_id_range)))
+    if doc_ids is not None:  # one span per id; past a cap, the ids' overall range
         ids = sorted(set(doc_ids))
         zones.append(_Zone("doc_id", tuple(
             [(i, i) for i in ids] if len(ids) <= 256 else [(ids[0], ids[-1])]
         )))
+        rows.append(("doc_id", partial(_is_in, ids)))
     if n_tok_range:
         zones.append(_Zone("n_tok", (tuple(n_tok_range),)))
+        rows.append(("n_tok", partial(_between, *n_tok_range)))
     tids = None if tok_ids is None else _token_id_list(tok_ids)
     if tids is not None:  # ANY-match: per-id spans OR'd
         zones.append(_Zone("tok", tuple((t, t) for t in tids)))
-    plan = ReadPlan(out_dir, tuple(zones), tids)
+        rows.append(("tokens", partial(_has_any, tids)))
+    plan = ReadPlan(out_dir, tuple(zones), tids, tuple(rows))
     # manifest bytes, segments AND loose backlog; the stat() sweep stops
     # at the threshold (over millions of loose JSONs it is itself slow)
     segs, loose = _manifest_paths(out_dir)
@@ -936,7 +965,8 @@ def plan_read(
             break
     if not zones or man_bytes > MANIFEST_JOIN_BYTES:
         return plan
-    return ReadPlan(out_dir, plan.zones, tids, *_keep_list(plan))
+    stems, funnel = _keep_list(plan)
+    return replace(plan, stems=stems, funnel=funnel)
 
 
 def _keep_stems_df(spark: SparkSession, plan: ReadPlan) -> DataFrame:
@@ -1294,40 +1324,30 @@ def read_decoded(
 ) -> DataFrame:
     """Read the encoded table back as (doc_id, tokens, n_tok, source).
 
-    Selective decode — the point of a columnar format at 100 TB:
-      * ``sources``: chunk-level source zones (``src_set`` — the distinct
-        sources per chunk) prune chunks on ANY layout; with by-source
-        layout (encode_dataset_by_source) the
-        `file_stem` partition column starts with the source name, so the
-        filter prunes whole partition directories before any IO. The prune
-        is applied ONLY when the manifest's layout record says the stems
-        carry the source prefix — on the default per-file layout (stems like
-        'tokens-000000000000') it would silently drop every row, so there
-        the post-decode source filter alone applies;
+    Selective decode — the point of a columnar format at 100 TB. Every
+    filter prunes files and chunks before any blob is read; the decode
+    kernel then returns exactly the matching rows of ``columns`` (an
+    empty list raises), parsing only the blobs its row tests and output
+    columns need:
+      * ``sources``: chunk source zones (``src_set``) on ANY layout; on
+        the by-source layout (encode_dataset_by_source, per the
+        manifest's layout record) also whole bucket dirs by their
+        ``<source>_s`` stem prefix;
       * ``doc_id_range``: chunk zone maps (doc_id_min/max) skip chunks at
         the parquet scan (row-group stats) — blobs of skipped chunks are
-        never read, let alone decoded. An exact row filter is applied
-        after decode.
+        never read, let alone decoded;
       * ``n_tok_range``: sequence-LENGTH zone maps (n_tok_min/max per
-        chunk) — the training-pipeline read pattern (length-bucketed
-        sampling, curriculum by length) prunes chunks the same way; the
-        exact per-row filter then needs only the lengths stream, not the
-        token values. Encodes that predate the length zone map simply
-        skip the chunk prune (exact filter still applies).
-      * ``contains_token``: docs whose token array CONTAINS the id — the
-        contamination-audit / special-token read. Also accepts a LIST of
-        ids with ANY-match semantics (docs containing at least one — the
-        banned-id-set audit shape); pruning is per-id OR'd, so absent
-        members of the set cost nothing. Prunes three times
-        before any token blob is parsed: manifest file zones + the
-        ``_tokfilters`` sidecar bitmaps (driver-side, no footer opened),
-        chunk ``tok_min``/``tok_max`` zones (parquet row-group stats,
-        JVM-side), and the per-chunk membership bitmap (tested in the
-        decode kernel before the blob is decoded). The exact per-doc
-        filter is a JVM ``array_contains`` after decode. Encodes that
-        predate the filter columns are conservatively kept at every
-        level. See encode/tokfilter.py for filter semantics (exact
-        bitmap for vocab-sized spans, no-false-negative bloom beyond).
+        chunk) — the length-bucketed training read; its row test reads
+        only the lengths stream, not the token values;
+      * ``contains_token``: docs whose token array CONTAINS the id, or
+        ANY id of a list (the banned-id-set audit); absent members of the
+        set cost nothing. Prunes by manifest file zones + ``_tokfilters``
+        sidecars (driver-side), chunk ``tok_min``/``tok_max`` zones
+        (row-group stats) and the per-chunk membership bitmap (in the
+        kernel, before the token blob is parsed); the kernel's per-doc
+        hit mask is the exact test. See encode/tokfilter.py.
+    Encodes that predate a zone or filter column are conservatively kept
+    at every level; the row tests stay exact.
 
     CONTRACT BOUND for ``doc_ids``: the list is a plain Python argument,
     so it lives in driver memory and is folded into zone-map OR-predicates
@@ -1347,7 +1367,11 @@ def read_decoded(
     tests/test_manifest_join.py). The same predicates then prune chunks
     at the scan (parquet row-group stats on the chunk zone columns).
     """
-    plan = plan_read(out_dir, doc_id_range, doc_ids, n_tok_range, contains_token)
+    if columns is not None and not len(columns):
+        raise ValueError("columns list must be non-empty")
+    plan = plan_read(
+        out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
+    )
     enc = spark.read.parquet(os.path.join(out_dir, "data"))
     if plan.zones:
         # manifest-level file pruning: a pruned file never opens a parquet
@@ -1357,8 +1381,10 @@ def read_decoded(
         else:
             enc = enc.filter(F.col("file_stem").isin(plan.stems))
     if sources and read_layout(out_dir) == "by-source":
+        # bucket stems are source + "_s" + salt: the separator keeps "a"
+        # from matching the buckets of source "ab"
         enc = enc.filter(
-            reduce(operator.or_, [F.col("file_stem").startswith(s) for s in sources])
+            reduce(operator.or_, [F.col("file_stem").startswith(f"{s}_s") for s in sources])
         )
     if sources and "src_set" in enc.columns:
         # chunk-level source zone (works on ANY layout, incl. per-file):
@@ -1368,7 +1394,7 @@ def read_decoded(
         # appended via resume) the old chunks read the column as NULL, and
         # arrays_overlap(NULL, …) is NULL → a bare filter would silently
         # drop every pre-upgrade chunk (r3 ADVICE). NULL zones are
-        # conservatively kept; the post-decode filter stays exact.
+        # conservatively kept; the kernel's row test stays exact.
         enc = enc.filter(
             F.col("src_set").isNull()
             | F.arrays_overlap(
@@ -1381,68 +1407,13 @@ def read_decoded(
     if chunk_zones is not None:
         enc = enc.filter(chunk_zones)
     extras = read_extras(out_dir)
-    all_names = [f.name for f in _decoded_schema(extras).fields]
-    if columns is None:
-        sel = all_names
-    else:
-        unknown = set(columns) - set(all_names)
+    names = _decoded_arrow_schema(extras).names
+    if columns is not None:
+        unknown = set(columns) - set(names)
         if unknown:
             raise ValueError(f"unknown columns: {sorted(unknown)}")
-        sel = [c for c in all_names if c in set(columns)]
-    # filters applied post-decode need their columns decoded; drop them after
-    need = set(sel)
-    if sources:
-        need.add("source")
-    if doc_id_range or doc_ids:
-        need.add("doc_id")
-    if n_tok_range:
-        need.add("n_tok")
-    if contains_token is not None:
-        need.add("tokens")  # the exact per-doc filter reads the values
-    dec_cols = [c for c in all_names if c in need]
-    # prune the PARQUET SCAN to only the blobs the projection decodes —
-    # unselected blob columns are never read off disk, let alone parsed
-    blob_need = []
-    if {"tokens", "n_tok"} & need:
-        blob_need.append("tokens_blob")
-    if "doc_id" in need:
-        blob_need.append("doc_id_blob")
-    if "source" in need:
-        blob_need.append("source_blob")
-    if any(n in need for n, _t in extras):
-        blob_need.append("extras_blob")
-    if contains_token is not None and "tok_filter" in enc.columns:
-        # ship the (KB-sized) chunk bitmap so the decode kernel can skip
-        # whole chunks before parsing their (MB-sized) token blobs
-        blob_need.append("tok_filter")
-    enc = enc.select(*blob_need)
-    dec = enc.mapInArrow(
-        _make_decode_fn(extras, columns=dec_cols, contains_token=contains_token),
-        schema=_decoded_schema(extras, columns=dec_cols),
-    )
-    if sources:
-        dec = dec.filter(F.col("source").isin(sources))
-    if doc_id_range:
-        dec = dec.filter(
-            (F.col("doc_id") >= doc_id_range[0]) & (F.col("doc_id") <= doc_id_range[1])
-        )
-    if doc_ids:
-        dec = dec.filter(F.col("doc_id").isin(list(set(doc_ids))))
-    if n_tok_range:
-        dec = dec.filter(
-            (F.col("n_tok") >= n_tok_range[0]) & (F.col("n_tok") <= n_tok_range[1])
-        )
-    if contains_token is not None:
-        tids = plan.tok_ids
-        if len(tids) == 1:
-            dec = dec.filter(F.array_contains(F.col("tokens"), F.lit(tids[0])))
-        else:
-            dec = dec.filter(
-                F.arrays_overlap(F.col("tokens"), F.array(*[F.lit(t) for t in tids]))
-            )
-    if sel != dec_cols:
-        dec = dec.select(*sel)
-    return dec
+        names = [c for c in names if c in columns]
+    return _decode(enc, plan, extras, names)
 
 
 def token_read_stats(out_dir: str, token: int | list[int]) -> dict:
@@ -1470,21 +1441,16 @@ def decode_verify(
     (by-source stems don't map back to input files); at least one file is
     always verified."""
     files = _input_files(input_path)
+    enc = spark.read.parquet(os.path.join(out_dir, "data"))
     if fraction < 1.0:
         if read_layout(out_dir) == "by-source":
             raise ValueError("sampled verify requires the per-file layout")
         cut = int(fraction * 1000)
         sampled = [f for f in files if zlib.crc32(_stem(f).encode()) % 1000 < cut]
         files = sampled or files[:1]
-        stems = [_stem(f) for f in files]
-        extras = read_extras(out_dir)
-        dec = (
-            spark.read.parquet(os.path.join(out_dir, "data"))
-            .filter(F.col("file_stem").isin(stems))
-            .mapInArrow(_make_decode_fn(extras), schema=_decoded_schema(extras))
-        )
-    else:
-        dec = read_decoded(spark, out_dir)
+        enc = enc.filter(F.col("file_stem").isin([_stem(f) for f in files]))
+    extras = read_extras(out_dir)
+    dec = _decode(enc, ReadPlan(out_dir, (), None), extras, _decoded_arrow_schema(extras).names)
     src = spark.read.parquet(*files)
     joined = src.alias("s").join(dec.alias("d"), "doc_id", "full_outer")
     same = (
@@ -1492,7 +1458,7 @@ def decode_verify(
         & (F.col("s.n_tok") == F.col("d.n_tok"))
         & (F.col("s.source") == F.col("d.source"))
     )
-    for name, t in read_extras(out_dir):
+    for name, t in extras:
         a, b = F.col(f"s.{name}"), F.col(f"d.{name}")
         eq = a == b
         if t == "double":  # NaN round-trips bit-identically but NaN != NaN

@@ -1,0 +1,143 @@
+"""The decode kernel alone returns a read's exact rows: ``_make_decode_fn``
+run in-process over every chunk row of an encoded dir (no file or chunk
+pruning in front of it) equals ``read_decoded`` for every read kind. This
+is the contract a runner other than Spark's ``mapInArrow`` relies on.
+Also the read-argument contracts: empty id, source and column lists
+raise, and a by-source read prunes bucket dirs by the exact
+``<source>_s`` stem prefix."""
+
+from __future__ import annotations
+
+import glob
+import os
+import re
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from poc_parquet_aggregator_spark.encode import (
+    encode_dataset,
+    encode_dataset_by_source,
+    plan_read,
+    read_decoded,
+)
+from poc_parquet_aggregator_spark.encode.pipeline import (
+    _decoded_arrow_schema,
+    _make_decode_fn,
+    read_extras,
+)
+from poc_parquet_aggregator_spark.plans import get_spark
+from poc_parquet_aggregator_spark.sources import generate_token_table
+
+N_DOCS = 4000
+DOCS_PER_FILE = 1000
+
+
+@pytest.fixture(scope="module")
+def spark():
+    return get_spark(
+        "read_kernel_tests", cores=4, extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
+
+
+@pytest.fixture(scope="module")
+def table():
+    """The token table plus one int32 extra column, so the kernel's
+    extras path is exercised too."""
+    base = generate_token_table(N_DOCS, seed=11)
+    return base.append_column("lang", pa.array(np.arange(N_DOCS, dtype=np.int32) % 7))
+
+
+@pytest.fixture(scope="module")
+def enc_dir(spark, table, tmp_path_factory):
+    src = tmp_path_factory.mktemp("tokens")
+    for start in range(0, N_DOCS, DOCS_PER_FILE):
+        pq.write_table(
+            table.slice(start, DOCS_PER_FILE), str(src / f"tokens-{start:012d}.parquet")
+        )
+    out = str(tmp_path_factory.mktemp("enc") / "out")
+    encode_dataset(spark, str(src), out)
+    return out
+
+
+def _read_kinds(table) -> dict[str, dict]:
+    ids = table.column("doc_id").to_pylist()
+    tokens = table.column("tokens").combine_chunks()
+    flat = tokens.flatten().to_numpy().astype(np.int64)
+    doc = pc.list_parent_indices(tokens).to_numpy().astype(np.int64)
+    top = int(flat.max()) + 1
+    doc_freq = np.bincount(np.unique(doc * top + flat) % top, minlength=top)
+    held = np.flatnonzero(doc_freq)
+    rare = held[np.lexsort((held, doc_freq[held]))][:2].tolist()
+    return {
+        "sources": {"sources": ["src03", "src07"]},
+        # the tail of file 0, all of file 1 and the head of file 2
+        "range": {"doc_id_range": (ids[900], ids[2100])},
+        "points": {"doc_ids": [ids[5], ids[1500], ids[N_DOCS - 1], "doc-absent"]},
+        "n_tok": {"n_tok_range": (100, 140)},
+        "token": {"contains_token": rare[0]},
+        "token_list": {"contains_token": [*rare, top]},
+        "projection": {"columns": ["doc_id", "lang"]},
+    }
+
+
+def _rows(tbl) -> list[tuple]:
+    return sorted(tuple(r.values()) for r in tbl.to_pylist())
+
+
+def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
+    chunks = pa.concat_tables([
+        pq.read_table(p)
+        for p in sorted(glob.glob(os.path.join(enc_dir, "data", "file_stem=*", "*.parquet")))
+    ])
+    extras = read_extras(enc_dir)
+    states: dict[str, set] = {}
+    for kind, kw in _read_kinds(table).items():
+        plan = plan_read(
+            enc_dir,
+            **{"tok_ids" if k == "contains_token" else k: v for k, v in kw.items() if k != "columns"},
+        )
+        columns = kw.get("columns") or _decoded_arrow_schema(extras).names
+        fn = _make_decode_fn(plan, extras, columns)
+        got, states[kind] = [], set()
+        for i in range(chunks.num_rows):
+            chunk = chunks.slice(i, 1)
+            out = [b for b in fn(iter(chunk.to_batches())) if b.num_rows]
+            n_out, n_docs = sum(b.num_rows for b in out), chunk.column("n_docs")[0].as_py()
+            states[kind].add("none" if n_out == 0 else "all" if n_out == n_docs else "part")
+            got += out
+        want = read_decoded(spark, enc_dir, **kw).toArrow()
+        assert want.column_names == columns, kind
+        assert _rows(pa.Table.from_batches(got, want.schema)) == _rows(want), kind
+        assert want.num_rows, kind
+    assert states["range"] == {"none", "part", "all"}, states
+    assert states["projection"] == {"all"}, states
+
+
+@pytest.mark.parametrize("arg", ["doc_ids", "sources", "columns"])
+def test_empty_list_arguments_raise(spark, enc_dir, arg):
+    with pytest.raises(ValueError, match=f"{arg} list must be non-empty"):
+        read_decoded(spark, enc_dir, **{arg: []})
+
+
+def test_by_source_prefix_matches_whole_source(spark, tmp_path):
+    """Source ``a`` must not keep the buckets of source ``ab``."""
+    base = generate_token_table(1200, seed=13)
+    source = np.where(np.arange(base.num_rows) % 3 == 0, "a", "ab")
+    tbl = base.set_column(
+        base.schema.get_field_index("source"), "source", pa.array(source, pa.string())
+    )
+    src = tmp_path / "tokens"
+    src.mkdir()
+    pq.write_table(tbl.slice(0, 600), str(src / "tokens-000000000000.parquet"))
+    pq.write_table(tbl.slice(600), str(src / "tokens-000000000600.parquet"))
+    out = str(tmp_path / "enc")
+    encode_dataset_by_source(spark, str(src), out, n_salts=2)
+    df = read_decoded(spark, out, sources=["a"], columns=["doc_id", "source"])
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"StartsWith\(file_stem#\d+, a_s\)", plan), plan
+    want = [(d, "a") for d, s in zip(tbl.column("doc_id").to_pylist(), source) if s == "a"]
+    assert _rows(df.toArrow()) == sorted(want)
