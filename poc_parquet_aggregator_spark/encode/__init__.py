@@ -4,7 +4,6 @@ from .pipeline import (
     compact_manifest,
     decode_verify,
     encode_dataset,
-    manifest_df,
     plan_read,
     read_decoded,
     read_manifest,
@@ -23,7 +22,6 @@ __all__ = [
     "encode_dataset",
     "encode_dataset_by_source",
     "decode_verify",
-    "manifest_df",
     "plan_read",
     "read_decoded",
     "read_manifest",

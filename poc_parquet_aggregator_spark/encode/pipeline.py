@@ -34,6 +34,7 @@ import os
 import shutil
 import struct
 import time
+import urllib.parse
 import uuid
 import zlib
 from collections.abc import Iterator
@@ -324,6 +325,20 @@ def _stem(path: str) -> str:
     return os.path.splitext(os.path.basename(path))[0]
 
 
+def _local_path(uri: str) -> str:
+    """The local path an ``input_file_name()`` URI names: Spark
+    percent-encodes it (``tok en.parquet`` arrives as ``tok%20en``)."""
+    return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+
+
+def _check_stem(stem: str) -> None:
+    """A commit stem names the ``file_stem=<stem>`` data dir, whose value
+    Spark's partition discovery percent-decodes: a ``%`` in it would read
+    back as another stem, and pruned reads would silently miss its rows."""
+    if "%" in stem:
+        raise ValueError(f"commit stem {stem!r} contains '%'; rename the input")
+
+
 def _encode_chunk_row(
     part: pa.RecordBatch, zstd_level: int = 3, extras: list[str] | None = None
 ) -> dict:
@@ -464,7 +479,7 @@ def _make_encode_fn(
     key: str = "_file",
     extras: list[str] | None = None,
 ):
-    stem_of = _stem if key == "_file" else (lambda s: s)
+    stem_of = (lambda f: _stem(_local_path(f))) if key == "_file" else (lambda s: s)
 
     def encode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         per_file: dict[str, list[dict]] = {}
@@ -664,8 +679,8 @@ def _atomic_write(path: str, data: str | bytes) -> None:
 def _manifest_paths(out_dir: str) -> tuple[list[str], list[str]]:
     """(segments ascending, loose per-file JSONs) — the ONE listing whose
     rules (segment glob order, underscore exclusion for job-level
-    summaries) every manifest reader shares; read_manifest, the
-    compactors, and manifest_df must agree on it byte for byte."""
+    summaries) every manifest reader shares; read_manifest and the
+    compactors must agree on it byte for byte."""
     mdir = _manifest_dir(out_dir)
     segs = sorted(glob.glob(os.path.join(mdir, "_compacted-*.jsonl")))
     loose = [
@@ -691,133 +706,6 @@ def read_manifest(out_dir: str) -> dict[str, dict]:
             rec = json.load(f)
         records[rec["file_stem"]] = rec
     return records
-
-
-# driver-vs-join manifest pruning switch: below this many bytes of
-# manifest segments the keep-list loop + In-filter is cheapest (one small
-# file read, no extra Spark jobs); above it the list itself is the scale
-# problem (a multi-GB In-expression and a driver loop over 40M records at
-# the 10^12-sequence target) and pruning moves into the cluster as a
-# filter-manifest semi-join
-MANIFEST_JOIN_BYTES = 64 * 1024 * 1024
-
-# segment byte-range split size for the distributed manifest parse
-# (module-level so tests can shrink it to force many splits on small files)
-MANIFEST_SPLIT_BYTES = 32 * 1024 * 1024
-
-# only the fields pruning needs — an explicit schema so spark.read.json
-# never has to infer across records with absent/null bounds
-_MANIFEST_PRUNE_SCHEMA = (
-    "file_stem string, doc_id_min string, doc_id_max string, "
-    "n_tok_min bigint, n_tok_max bigint, "
-    "tok_min bigint, tok_max bigint, tok_filter boolean"
-)
-
-
-def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The manifest as a DataFrame — the cluster-scale form of
-    ``read_manifest``. At the 10^12-sequence target (~40M committed
-    records) the manifest is itself a dataset: only the PATH list is
-    driver-side (segments + loose files — the same listing read_manifest
-    does); the record BYTES are parsed by executors, one task per file
-    (``spark.read.json`` can't be used here — Spark's file index silently
-    ignores ``_``-prefixed paths, which is exactly why the segments carry
-    that prefix: the DATA scan must never pick them up). The
-    loose-overrides-segment / later-segment-overrides-earlier precedence
-    of ``read_manifest`` is reproduced with a per-stem max-precedence
-    window (loose = "1", segments = "0:" + their zero-padded basename, so
-    lexical order IS precedence order). The window is one shuffle over
-    metadata-sized rows — the same cost class as Iceberg's distributed
-    manifest-list planning."""
-    import pandas as pd
-
-    segs, loose = _manifest_paths(out_dir)
-    # segments are split by BYTE RANGE (~32 MB, aligned to line boundaries
-    # by the reader) so even the post-compaction shape — ONE segment
-    # holding every record — parses in parallel with bounded task memory,
-    # the text-input-split discipline. Loose JSONs are whole-file splits.
-    split_bytes = MANIFEST_SPLIT_BYTES
-    splits: list[tuple[str, int, int, str]] = []
-    for p in segs:
-        size = os.path.getsize(p)
-        prio = "0:" + os.path.basename(p)
-        for start in range(0, max(size, 1), split_bytes):
-            splits.append((p, start, min(start + split_bytes, size), prio))
-    splits += [(p, 0, -1, "1") for p in loose]
-    if not splits:
-        return spark.createDataFrame([], _MANIFEST_PRUNE_SCHEMA)
-    fields = [f.split()[0] for f in _MANIFEST_PRUNE_SCHEMA.split(", ")]
-
-    def parse(batches) -> Iterator[pd.DataFrame]:
-        def emit(recs: list[dict], prio: str, ords: list[int]) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    **{k: [r.get(k) for r in recs] for k in fields},
-                    "_prio": prio,
-                    "_ord": ords,
-                }
-            )
-
-        for b in batches:
-            for path, start, end, prio in zip(
-                b["path"], b["start"], b["end"], b["_prio"]
-            ):
-                if end < 0:  # loose per-file JSON: one record
-                    with open(path) as fh:
-                        yield emit([json.load(fh)], prio, [0])
-                    continue
-                # JSONL byte-range split: seek, drop the partial line the
-                # PREVIOUS split will finish, stream until past `end`
-                # (records are streamed in bounded chunks, never the
-                # whole segment at once). _ord = the record's line-start
-                # byte offset: a duplicate stem WITHIN one segment (equal
-                # _prio) must resolve later-line-wins exactly like
-                # read_manifest — an untied row_number was
-                # nondeterministic there (r6 ADVICE)
-                with open(path, "rb") as fh:
-                    fh.seek(start)
-                    if start:
-                        fh.readline()
-                    recs: list[dict] = []
-                    ords: list[int] = []
-                    while True:
-                        pos = fh.tell()
-                        if pos > end:
-                            break
-                        line = fh.readline()
-                        if not line:
-                            break
-                        if line.strip():
-                            recs.append(json.loads(line))
-                            ords.append(pos)
-                        if len(recs) >= 65_536:
-                            yield emit(recs, prio, ords)
-                            recs, ords = [], []
-                    if recs:
-                        yield emit(recs, prio, ords)
-
-    # one task per split up to ~4x core count — a backlog of loose JSONs
-    # (many tiny files) batches into a bounded task count
-    n_tasks = min(len(splits), spark.sparkContext.defaultParallelism * 4)
-    man = (
-        spark.createDataFrame(
-            splits, "path string, start bigint, end bigint, _prio string"
-        )
-        .repartition(n_tasks)
-        .mapInPandas(
-            parse, schema=_MANIFEST_PRUNE_SCHEMA + ", _prio string, _ord bigint"
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("file_stem").orderBy(
-        F.col("_prio").desc(), F.col("_ord").desc()
-    )
-    return (
-        man.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_prio", "_ord")
-    )
 
 
 @dataclass(frozen=True)
@@ -867,8 +755,8 @@ class ReadPlan:
     bitmap skip) and exact row tests ``rows``: (decoded column, test)
     pairs, each test mapping that column's Arrow array to a numpy bool
     mask, which the decode kernel ANDs. ``stems`` (kept files) and
-    ``funnel`` (files per pruning stage) are set when the driver pruned
-    the files; None on the join path."""
+    ``funnel`` (files per pruning stage) are set for every read with a
+    zone; None for a read without one (nothing to prune)."""
 
     out_dir: str
     zones: tuple
@@ -877,11 +765,11 @@ class ReadPlan:
     stems: list[str] | None = None
     funnel: dict | None = None
 
-    def column(self, columns: list[str] | None = None):
-        """The zones ANDed as one Column (None if none applies); given a
-        frame's ``columns``, only zones whose bounds it has."""
+    def column(self, columns: list[str]):
+        """The zones whose bounds a frame with ``columns`` has, ANDed as
+        one Column (None if none applies)."""
         cols = [z.column() for z in self.zones
-                if columns is None or {f"{z.col}_min", f"{z.col}_max"} <= set(columns)]
+                if {f"{z.col}_min", f"{z.col}_max"} <= set(columns)]
         return reduce(operator.and_, cols) if cols else None
 
 
@@ -926,12 +814,10 @@ def plan_read(
     sources: list[str] | None = None,
 ) -> ReadPlan:
     """Build a selective read's zone predicates and exact row tests once,
-    and prune files on the driver while the manifest is at most
-    MANIFEST_JOIN_BYTES. Above that the keep-list itself is the scale
-    problem (a driver loop over ~40M records, a multi-GB In-expression)
-    and ``read_decoded`` renders the same predicates over ``manifest_df``
-    instead (``_keep_stems_df``). An empty ``doc_ids`` or ``sources`` list
-    raises, like an empty token list: it names no row."""
+    and prune files on the driver: one ``read_manifest``, each record
+    tested against the zones, then the token reads' sidecar probe. An
+    empty ``doc_ids`` or ``sources`` list raises, like an empty token
+    list: it names no row."""
     for name, arg in (("doc_ids", doc_ids), ("sources", sources)):
         if arg is not None and not len(arg):
             raise ValueError(f"{name} list must be non-empty")
@@ -955,48 +841,10 @@ def plan_read(
         zones.append(_Zone("tok", tuple((t, t) for t in tids)))
         rows.append(("tokens", partial(_has_any, tids)))
     plan = ReadPlan(out_dir, tuple(zones), tids, tuple(rows))
-    # manifest bytes, segments AND loose backlog; the stat() sweep stops
-    # at the threshold (over millions of loose JSONs it is itself slow)
-    segs, loose = _manifest_paths(out_dir)
-    man_bytes = 0
-    for p in (*segs, *loose):
-        man_bytes += os.path.getsize(p)
-        if man_bytes > MANIFEST_JOIN_BYTES:
-            break
-    if not zones or man_bytes > MANIFEST_JOIN_BYTES:
+    if not zones:
         return plan
     stems, funnel = _keep_list(plan)
     return replace(plan, stems=stems, funnel=funnel)
-
-
-def _keep_stems_df(spark: SparkSession, plan: ReadPlan) -> DataFrame:
-    """The join path's surviving stems: ``manifest_df`` filtered by the
-    plan's zone Column, then each token read's sidecar probed where the
-    task runs (on a cluster, one small object-store read per FILE)."""
-    man = manifest_df(spark, plan.out_dir).filter(plan.column())
-    if plan.tok_ids is None:
-        return man.select("file_stem")
-    out_dir, tok_ids = plan.out_dir, plan.tok_ids
-
-    def probe(batches):
-        def val(v):  # a null reaches pandas as None, NaN or pd.NA
-            try:
-                return v if v == v else None
-            except TypeError:  # bool(pd.NA)
-                return None
-
-        for pdf in batches:
-            keep = [
-                _sidecar_keeps(out_dir, stem, val(flag), val(lo), val(hi), tok_ids)
-                for stem, flag, lo, hi in zip(
-                    pdf["file_stem"], pdf["tok_filter"], pdf["tok_min"], pdf["tok_max"]
-                )
-            ]
-            yield pdf.loc[keep, ["file_stem"]]
-
-    return man.select("file_stem", "tok_filter", "tok_min", "tok_max").mapInPandas(
-        probe, schema="file_stem string"
-    )
 
 
 def compact_manifest(out_dir: str) -> dict:
@@ -1167,6 +1015,7 @@ def _commit_parts(out_dir: str, staging_dir: str, stem: str, rows: list, **field
     to the sidecar first, then the encoded-chunk dir is renamed into
     place, then the record. A crash between the renames leaves data
     without a record → the stem re-encodes next run (idempotent)."""
+    _check_stem(stem)
     rec = fold_parts([{**r.asDict(), "codecs": json.loads(r["codecs_json"])} for r in rows])
     tok_filter = rec.pop("tok_filter")
     rec.update(file_stem=stem, n_parts=len(rows), committed_at=time.time(), **fields)
@@ -1237,15 +1086,9 @@ def encode_dataset(
     input_path: str | list[str],
     out_dir: str,
     zstd_level: int = 3,
-    target_tasks: int | None = None,
 ) -> dict:
     """Encode all input parquet files, skipping files already committed with
-    a matching input snapshot. Returns job metrics.
-
-    ``target_tasks`` overrides the default ≥2-wave split sizing — pass a
-    multiple of the core count to eliminate the partial last wave (a 19-task
-    job on 8 cores idles 5 cores for the final third; benchmarks that
-    measure scaling ratios care, production throughput mostly doesn't)."""
+    a matching input snapshot. Returns job metrics."""
     t0 = time.time()
     files = _input_files(input_path)
     # commits are keyed by basename stem: same-named files from different
@@ -1254,6 +1097,8 @@ def encode_dataset(
     if len(set(stems)) != len(stems):
         dupes = sorted({s for s in stems if stems.count(s) > 1})
         raise ValueError(f"duplicate input file stems (commit key collision): {dupes}")
+    for stem in stems:
+        _check_stem(stem)
     done = read_manifest(out_dir)
     todo = [
         f for f in files if _stem(f) not in done or not _snapshot_matches(done[_stem(f)], f)
@@ -1275,8 +1120,7 @@ def encode_dataset(
         # would coalesce many small files into a handful of tasks and leave
         # most cores idle. Target ≥2 waves of parallelism.
         total_bytes = sum(os.stat(f).st_size for f in todo)
-        par = spark.sparkContext.defaultParallelism
-        n_tasks = target_tasks if target_tasks else 2 * par
+        n_tasks = 2 * spark.sparkContext.defaultParallelism
         split = max(total_bytes // n_tasks + 1, 1 << 20)
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
         spark.conf.set("spark.sql.files.openCostInBytes", "0")
@@ -1359,12 +1203,8 @@ def read_decoded(
     (the manifest's per-file bounds still prune files for any range the
     optimizer can see).
 
-    File-level pruning comes from ``plan_read``: a driver keep-list (an
-    In-filter on file_stem) while the manifest is small, the same zone
-    predicates over ``manifest_df`` plus an executor-side sidecar probe,
-    left-semi-joined on the surviving stems, once its bytes exceed
-    MANIFEST_JOIN_BYTES. Both paths produce identical rows (asserted in
-    tests/test_manifest_join.py). The same predicates then prune chunks
+    File-level pruning comes from ``plan_read``'s driver keep-list (an
+    In-filter on file_stem). The same zone predicates then prune chunks
     at the scan (parquet row-group stats on the chunk zone columns).
     """
     if columns is not None and not len(columns):
@@ -1373,13 +1213,10 @@ def read_decoded(
         out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
     )
     enc = spark.read.parquet(os.path.join(out_dir, "data"))
-    if plan.zones:
+    if plan.stems is not None:
         # manifest-level file pruning: a pruned file never opens a parquet
         # footer (the Iceberg data-file-stats analogy of this manifest)
-        if plan.stems is None:
-            enc = enc.join(_keep_stems_df(spark, plan), "file_stem", "left_semi")
-        else:
-            enc = enc.filter(F.col("file_stem").isin(plan.stems))
+        enc = enc.filter(F.col("file_stem").isin(plan.stems))
     if sources and read_layout(out_dir) == "by-source":
         # bucket stems are source + "_s" + salt: the separator keeps "a"
         # from matching the buckets of source "ab"
@@ -1420,8 +1257,7 @@ def token_read_stats(out_dir: str, token: int | list[int]) -> dict:
     """Driver-side pruning funnel of a ``contains_token`` read (a single
     id or an ANY-match id list): ``plan_read``'s funnel, so tests and
     benchmarks can assert HOW MUCH a content read skips."""
-    plan = plan_read(out_dir, tok_ids=token)
-    return plan.funnel if plan.funnel is not None else _keep_list(plan)[1]
+    return plan_read(out_dir, tok_ids=token).funnel
 
 
 def decode_verify(

@@ -5,10 +5,8 @@ from .labels import (
     parse_labels,
 )
 from .scalars import (
-    clip01,
     days_in_month,
     effective_usage,
-    hours_in_month,
     strip_utc_suffix,
     to_usage_date,
 )
@@ -22,6 +20,4 @@ __all__ = [
     "strip_utc_suffix",
     "to_usage_date",
     "days_in_month",
-    "hours_in_month",
-    "clip01",
 ]

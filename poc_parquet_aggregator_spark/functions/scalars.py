@@ -27,12 +27,3 @@ def effective_usage(effective: Column, usage: Column, request: Column) -> Column
 def days_in_month(c: Column) -> Column:
     """F8: calendar.monthrange → dayofmonth(last_day(c))."""
     return F.dayofmonth(F.last_day(c))
-
-
-def hours_in_month(c: Column) -> Column:
-    return days_in_month(c) * F.lit(24)
-
-
-def clip01(c: Column) -> Column:
-    """F10: ratio clipped to [0, 1] (cost_attributor.py:388,427)."""
-    return F.least(F.greatest(c, F.lit(0.0)), F.lit(1.0))

@@ -83,7 +83,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``, where
     ``component`` is the MIN node id of its connected component (component
@@ -96,8 +95,7 @@ def connected_components(
     exact edge-set comparison, so the loop exits as early as the data
     allows — 3-6 rounds on real dedup graphs).  Raises RuntimeError if
     the bound is hit, rather than returning a silently-unfinished
-    clustering.  ``stats_out``, if given, receives {"rounds": k,
-    "star_edges": m} for bench/ops introspection.
+    clustering.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -113,8 +111,6 @@ def connected_components(
         .distinct()
     )
     if e.isEmpty():
-        if stats_out is not None:
-            stats_out.update({"rounds": 0, "star_edges": 0})
         return nodes.select("node", F.col("node").alias("component"))
 
     # exact convergence check per round: both frames are distinct edge
@@ -125,7 +121,7 @@ def connected_components(
     # the count equality, so the common non-converged round costs exactly
     # one action over the checkpointed frame.
     n_prev = e.count()
-    for rounds in range(1, max_iter + 1):
+    for _ in range(max_iter):
         e2 = _small_star(_large_star(e)).localCheckpoint()
         n2 = e2.count()
         if n2 == n_prev and e2.subtract(e).isEmpty():
@@ -136,8 +132,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} star rounds"
         )
-    if stats_out is not None:
-        stats_out.update({"rounds": rounds, "star_edges": n2})
 
     # e is now a star graph: (member, rep) for every non-rep member
     mapped = e.select(F.col("u").alias("node"), F.col("v").alias("component"))

@@ -142,12 +142,9 @@ def _capped_shingles(d: DataFrame) -> DataFrame:
     )
 
 
-# Bounded persisted-frame memo (extracted to operators/cache.py in round 4;
-# re-exported here because bench.py and tests import purge_frame_memo from
-# this module). The capped-shingle frame feeds both jaccard and minhash —
-# r2 VERDICT #3.
+# Bounded persisted-frame memo (operators/cache.py). The capped-shingle
+# frame feeds both jaccard and minhash — r2 VERDICT #3.
 from .cache import memo_frame as _memo_frame  # noqa: E402
-from .cache import purge_frame_memo  # noqa: E402,F401
 
 
 def _capped_shingles_cached(spark: SparkSession, sf: str) -> DataFrame:
@@ -252,8 +249,7 @@ _BAND_SIZE = 2  # 4 bands of 2 → candidates sharing any band
 
 def _minhash_banded(doc_sets: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) LSH band rows from the per-doc shingle sets
-    (shared by the query and dedup_scale_stats so the measured bucket
-    distribution is the exact frame the query joins on).
+    (the decontamination pass's MinHash bands).
 
     8 signatures from TWO md5 evaluations per shingle, not eight: md5's
     32 hex chars split into four independent 8-hex (32-bit) min-hash
@@ -594,8 +590,7 @@ def _simhash_keyed(sigs: DataFrame) -> DataFrame:
     pass (explode, not a 4-way union that would recompute the signature
     aggregation 4 times — seen in .explain). ``rest`` carries the 45
     signature bits outside the slot, packed contiguously — the sub-key
-    source for over-cap buckets. Shared by the query and
-    dedup_scale_stats."""
+    source for over-cap buckets."""
     slots = []
     for i in range(_SIM_SLOTS):
         key = F.shiftrightunsigned(F.col("simhash"), i * _SLOT_BITS).bitwiseAND(
@@ -663,8 +658,7 @@ def _simhash_blocked(
         level above);
       * ``final_sized`` — the deepest re-blocked frame, each row carrying
         its bucket size ``n_sub`` (the query filters n_sub ≤ cap before
-        joining; dedup_scale_stats reads n_sub raw so the only refused
-        work left — final-level overflow — is visible).
+        joining).
 
     Plan shape: each level is ONE shuffle on its key set feeding a count
     window — the same single-pass pattern as _capped_shingles — and the
@@ -963,31 +957,9 @@ from .similarity import _dot as _vdot  # noqa: E402
 from .similarity import _emb as _embedding_vectors  # noqa: E402
 
 
-def adaptive_lsh_bits(n_vectors: int, target_bucket: int = 64) -> int:
-    """Bits per band sized to the corpus: E[bucket] = n / 2^bits ≈ target.
-    The r3 fixed 6-bit choice is right at gate scale (≤10k vectors) but at
-    100k vectors the expected bucket (~1562) already exceeds _MAX_BUCKET —
-    measured in the round-4 dedup_scale run: 4573-row max buckets and
-    4.8e8 candidate pairs refused by the cap. Band key bits must grow with
-    log2(n); at 10^12 vectors this says ~34 bits (and the hyperplane count
-    stays tiny: bands × bits ≤ a few hundred dot products per vector).
-    The clamp at 56 protects the BIGINT key fold (review finding: an
-    earlier 16-bit clamp silently reintroduced the over-cap failure above
-    ~4M vectors), and each vector must supply bands × bits hyperplanes —
-    embedding dim is not a bound (hyperplanes are corpus vectors, one sign
-    bit per plane)."""
-    import math
-
-    return max(_LSH_BITS, min(56, math.ceil(math.log2(max(n_vectors, 2) / target_bucket))))
-
-
-def _embedding_banded(
-    spark: SparkSession, sf: str, bits: int = _LSH_BITS
-) -> DataFrame:
-    """(vec_id, v, band, key) random-hyperplane LSH band rows (shared by
-    the gate query — pinned at the oracle's 6 bits — and the scale path,
-    which passes ``adaptive_lsh_bits``)."""
-    n_planes = _LSH_BANDS * bits
+def _embedding_banded(spark: SparkSession, sf: str) -> DataFrame:
+    """(vec_id, v, band, key) random-hyperplane LSH band rows, _LSH_BITS
+    sign-bits per band (the oracle's key fold)."""
     e2 = _embedding_vectors(spark, sf)
     # broadcast single-row hyperplane frame; array_sort(collect_list) pins
     # plane order (collect_list alone is partition-order-dependent)
@@ -999,7 +971,7 @@ def _embedding_banded(
     # dims); the key is a groupBy key so it survives the
     # aggregate un-folded
     planes = (
-        e2.filter(F.col("vec_id") < n_planes)
+        e2.filter(F.col("vec_id") < _N_PLANES)
         .groupBy((F.col("vec_id") * 0).alias("_k"))
         .agg(F.array_sort(F.collect_list(F.struct("vec_id", "v"))).alias("planes"))
     )
@@ -1015,9 +987,7 @@ def _embedding_banded(
             F.struct(
                 F.lit(b).alias("band"),
                 F.aggregate(
-                    F.slice("bits", b * bits + 1, bits),
-                    # BIGINT accumulator: adaptive bits can exceed 31 at
-                    # large n, where an int fold would overflow the key
+                    F.slice("bits", b * _LSH_BITS + 1, _LSH_BITS),
                     F.lit(0).cast("long"),
                     lambda acc, x: acc * 2 + x,
                 ).alias("key"),
@@ -1030,30 +1000,22 @@ def _embedding_banded(
     ).select("vec_id", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
-def embedding_near_dup(
-    spark: SparkSession,
-    sf: str,
-    bits: int = _LSH_BITS,
-    broadcast_vectors: bool | None = None,
-) -> DataFrame:
+def embedding_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup via random-hyperplane LSH: bands×bits sign-bits
     per vector (vs the broadcast hyperplane set), folded into band keys in
     plane order (codegen'd aggregate — no shuffle for signatures), banded
     bucket self-join with the _MAX_BUCKET cap, then exact-cosine
     verification of candidates only. Shuffles are key-partitioned (band
-    key / vec_id) — never all-pairs. ``bits`` is the scale knob
-    (adaptive_lsh_bits); the gate query pins the oracle's 6."""
+    key / vec_id) — never all-pairs."""
     # banded ids are memo-persisted (round 7): the ok-aggregation and both
     # self-join sides otherwise each re-run the 30-plane sign-bit pipeline
     # (bands×bits interpreted HOF dots per vector, profiled 3× per query);
     # the persisted frame is id+key only — a few MB even at the 100k tier
     banded_ids = _memo_frame(
-        f"emb_banded_{bits}",
+        "emb_banded",
         spark,
         sf,
-        lambda: _embedding_banded(spark, sf, bits=bits).select(
-            "vec_id", "band", "key"
-        ),
+        lambda: _embedding_banded(spark, sf).select("vec_id", "band", "key"),
     )
     ok = (
         banded_ids.groupBy("band", "key")
@@ -1108,8 +1070,8 @@ def embedding_near_dup(
     # forced shuffle joins keyed on vec_id — the asymmetry stands either
     # way (the vector payload moves per candidate row exactly once, and
     # the threshold filter shrinks the frame before the final distinct).
-    # A forced broadcast would OOM the driver on the multi-million-vector
-    # corpora this operator's ``bits`` knob exists for. The cutoff is
+    # A forced broadcast would OOM the driver on multi-million-vector
+    # corpora. The cutoff is
     # BYTE-derived: rows × dim × 8 B raw payload vs a 256 MB budget
     # (≈ 500k vectors at 64 dims). Round-7 measurement moved the budget
     # up from r5's conservative 48 MB: at the 100k tier (51 MB raw,
@@ -1122,18 +1084,16 @@ def embedding_near_dup(
     # hint below stands (the price is real but bounded and the driver
     # survives). Cost of deciding: parquet count() is metadata-only and
     # the dim probe reads one row — both trivial next to the bucket join
-    # this guards; hot-path callers pass ``broadcast_vectors`` and skip
-    # both jobs.
-    if broadcast_vectors is None:
-        row0 = (
-            spark.read.parquet(f"{sf}/embeddings.parquet")
-            .select(F.size("embedding").alias("d"))
-            .first()
-        )
-        dim = row0["d"] if row0 else 0
-        broadcast_vectors = n_vec * dim * 8 <= 256 * 1024 * 1024
-    attach = F.broadcast if broadcast_vectors else (lambda df: df)
-    if not broadcast_vectors:
+    # this guards.
+    row0 = (
+        spark.read.parquet(f"{sf}/embeddings.parquet")
+        .select(F.size("embedding").alias("d"))
+        .first()
+    )
+    dim = row0["d"] if row0 else 0
+    vectors_fit = n_vec * dim * 8 <= 256 * 1024 * 1024
+    attach = F.broadcast if vectors_fit else (lambda df: df)
+    if not vectors_fit:
         # past broadcast comfort the attach joins MUST shuffle by vec id:
         # the candidate side's static estimate descends from the cached
         # band frame's few-MB stats, so without the hint the planner
@@ -1172,8 +1132,8 @@ def embedding_near_dup(
 
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
-    """Gate form of embedding_near_dup, pinned at the oracle's 6-bit bands
-    (the SQL below hardcodes the 30-plane key fold)."""
+    """Gate form of embedding_near_dup (the oracle SQL below hardcodes
+    the same 30-plane key fold)."""
     return embedding_near_dup(spark, sf)
 
 
@@ -1225,108 +1185,3 @@ ORACLES = {
     "dedup_simhash": ORACLE_SIMHASH,
     "dedup_embedding_cosine": ORACLE_EMB_COSINE,
 }
-
-
-# ─────────────── empirical scale evidence (round 4, VERDICT r3 #7) ──────────
-
-
-def dedup_scale_stats(spark: SparkSession, sf: str) -> dict:
-    """Measured bucket distributions of the three LSH families on a corpus
-    — the bucketed-not-all-pairs claim evidenced with NUMBERS, not just
-    plan shape. For each family the stats aggregate the EXACT band/bucket
-    frame its query self-joins on (shared builders, no drift):
-
-      * n_buckets / max_bucket / max_bucket_share — how concentrated the
-        worst key is (share = max bucket / items in that band family);
-      * candidate_pairs — Σ n·(n−1)/2 over surviving (≤ cap) buckets: the
-        pairs EMITTED by the bucket self-join (pre-``distinct()`` — a pair
-        sharing k buckets counts k times here; the verify stage scores it
-        once), computed from bucket sizes WITHOUT materializing pairs;
-      * pairs_dropped_by_cap — the quadratic work the _MAX_BUCKET guard
-        refused (0 on healthy corpora; >0 is the guard doing its job).
-
-    SimHash reports its post-collapse CASCADED blocking (5 levels since
-    round 6): the pairwise stage runs over DISTINCT signatures
-    (identical-signature cliques already emitted as linear star edges), so
-    the stats cover the union of one bucket family per cascade level
-    (len(_CASCADE_SPANS) + 1 with the final sized level) its query joins
-    on — plus the collapse numbers (n_docs / n_distinct_sigs /
-    max_exact_clique) that show WHY the pairwise stage stays small.
-    """
-    def size_stats(sizes: DataFrame) -> dict:
-        pairs = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
-        row = sizes.agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("n").alias("n_items"),
-            F.max("n").alias("max_bucket"),
-            F.sum(F.when(F.col("n") <= _MAX_BUCKET, pairs).otherwise(0)).alias(
-                "candidate_pairs"
-            ),
-            F.sum(F.when(F.col("n") > _MAX_BUCKET, pairs).otherwise(0)).alias(
-                "pairs_dropped_by_cap"
-            ),
-        ).collect()[0]
-        d = row.asDict()
-        d["max_bucket_share"] = round(d["max_bucket"] / max(d["n_items"], 1), 6)
-        d["candidate_pairs"] = int(d["candidate_pairs"] or 0)
-        d["pairs_dropped_by_cap"] = int(d["pairs_dropped_by_cap"] or 0)
-        return d
-
-    def bucket_stats(frame: DataFrame, keys: list[str]) -> dict:
-        return size_stats(frame.groupBy(*keys).agg(F.count("*").alias("n")))
-
-    # minhash stats come from the QUERY's own builders since round 7
-    # (sigs frame → long-keyed band rows) so the shared-builder contract
-    # — "the measured bucket distribution is the exact frame the query
-    # joins on" — keeps holding after the sigs restructure; the (band,
-    # k1, k2) buckets partition docs identically to the former
-    # (band, band_key-string) form (fixed-width hex concat ⟺ value pair)
-    sigs = _memo_frame(
-        "minhash_sigs",
-        spark,
-        sf,
-        lambda: _minhash_sigs(_capped_shingles(_docs(spark, sf))),
-    )
-    n_vec = spark.read.parquet(f"{sf}/embeddings.parquet").count()
-    bits = adaptive_lsh_bits(n_vec)
-    sim_tagged = _simhash_tagged(spark, sf)
-    clique_row = (
-        sim_tagged.groupBy("simhash")
-        .agg(F.count("*").alias("k"))
-        .agg(
-            F.sum("k").alias("n_docs"),
-            F.count("*").alias("n_distinct_sigs"),
-            F.max("k").alias("max_exact_clique"),
-        )
-        .collect()[0]
-    )
-    sim_reps, _ = _simhash_reps(sim_tagged)
-    sim_capped, sim_final, sim_final_keys = _simhash_blocked(sim_reps)
-    sim_sizes = reduce(
-        DataFrame.unionByName,
-        [
-            f.groupBy(*keys).agg(F.count("*").alias("n")).select("n")
-            for f, keys in sim_capped
-        ]
-        + [
-            sim_final.groupBy(*sim_final_keys)
-            .agg(F.count("*").alias("n"))
-            .select("n")
-        ],
-    )
-    sim_stats = size_stats(sim_sizes)
-    sim_stats.update({k: int(v) for k, v in clique_row.asDict().items()})
-    out = {
-        "minhash": bucket_stats(
-            _minhash_banded_from_sigs(sigs), ["band", "k1", "k2"]
-        ),
-        "simhash": sim_stats,
-        # the SCALE configuration: band-key bits sized to the corpus (the
-        # gate query pins 6 bits for oracle parity; see adaptive_lsh_bits)
-        "embedding_lsh": bucket_stats(
-            _embedding_banded(spark, sf, bits=bits), ["band", "key"]
-        ),
-    }
-    out["embedding_lsh"]["bits_per_band"] = bits
-    out["embedding_lsh"]["n_vectors"] = n_vec
-    return out

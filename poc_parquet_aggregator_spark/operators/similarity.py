@@ -226,7 +226,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     its nearest of 8 k-means centroids; each query MULTI-PROBES its
     _N_PROBE nearest buckets (nprobe is the standard recall knob). Recall <
     exact by design — the oracle recomputes the same algorithm, not exact
-    kNN; bench.py reports measured recall@5 vs ann_topk_bruteforce."""
+    kNN (``ann_topk_bruteforce`` is the exact baseline)."""
     e = _emb(spark, sf)
     # materialize the trained quantizer once: 8 rows × 64 doubles is a
     # driver-side DIMENSION (the production analog is loading centroids
@@ -308,150 +308,6 @@ ranked AS (
   FROM pairs)
 SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
 """
-
-
-# ──────────────── IVF at the dedup_scale tier (bench evidence) ───────────────
-#
-# The gate query above pins nlist=8 for oracle parity. The SCALE
-# configuration (VERDICT r5 #5) runs nlist ≈ √n — at 100k vectors that is
-# ~316 centroids, where per-row interpreted HOF dots against every
-# centroid stop being reasonable (31.6M 64-dim fold evaluations for one
-# assignment pass). The scale path therefore assigns via an Arrow-batched
-# numpy kernel: ONE (rows×64)·(64×nlist) GEMM per batch replaces nlist
-# interpreted dots per row — the production IVF shape (BLAS assignment,
-# centroid matrix broadcast once). Candidate scoring after the bucket
-# join stays the engine's exact HOF cosine (the candidate set is tiny:
-# nprobe·n/nlist per query), so recall@5 measured against
-# q_ann_topk_bruteforce compares like with like. Centroids are the first
-# nlist corpus vectors, untrained — the published recall curve
-# (ann_ivf_recall_curve) shows Lloyd iterations blur partitions on these
-# near-orthogonal synthetics; on a clustered production corpus the
-# training knob goes up, not away. Bench-only: not oracle-paired (the
-# GEMM's fused-multiply ordering differs from the HOF fold's, which only
-# affects which bucket near-tie vectors land in — the gate query keeps
-# the bit-exact oracle-checked path).
-
-
-def _fast_assign(e: DataFrame, cents, nprobe: int) -> DataFrame:
-    """(vec_id, centroid_id, rn ≤ min(nprobe, nlist)) via per-batch GEMM;
-    ties broken by centroid_id ascending (stable argsort on the negated
-    similarities, matching the engine's ORDER BY csim DESC, centroid_id).
-    nprobe is clamped to the centroid count — there are only nlist
-    centroids to probe (an unclamped slice built nprobe-sized index
-    columns against nlist-wide rows and crashed the kernel whenever
-    nlist < nprobe; review finding r6)."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(cents, dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-    p = min(nprobe, len(C))
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            sims = Vn @ Cn.T
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :p]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                    "centroid_id": top.reshape(-1).astype(np.int64),
-                    "rn": np.tile(np.arange(1, p + 1), n),
-                }
-            )
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("rn", T.IntegerType()),
-        ]
-    )
-    return e.select("vec_id", "v").mapInPandas(kern, schema=schema)
-
-
-def _centroids(e: DataFrame, nlist: int) -> list:
-    """The scale tier's centroid contract in ONE place (recall numbers and
-    bucket-balance evidence must measure the same quantizer): first nlist
-    corpus vectors, untrained — the published ann_ivf_recall_curve shows
-    Lloyd iterations blur partitions on these near-orthogonal synthetics."""
-    return [
-        r["v"]
-        for r in e.filter(F.col("vec_id") < nlist)
-        .select("vec_id", "v")
-        .sort("vec_id")
-        .collect()
-    ]
-
-
-def ann_ivf_scale(
-    spark: SparkSession, sf: str, nlist: int, nprobe: int = 2, k: int = 5
-) -> DataFrame:
-    """Scale-tier IVF top-k (see the block comment above): GEMM
-    assignment, bucket join against broadcast multi-probed queries, exact
-    HOF cosine on the surviving candidates.
-
-    The corpus and query sides run SEPARATE assignment kernels: filters do
-    not push through the opaque mapInPandas, so deriving the query probes
-    from the full-corpus assign frame re-ran the whole GEMM pass per
-    action (review finding r6).  The corpus side assigns at nprobe=1 (one
-    home bucket per vector); the query side assigns only the _N_QUERIES
-    pre-filtered rows at full nprobe — trivial work instead of a second
-    corpus-wide pass, no persist needed."""
-    from .dedup import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    e = _emb(spark, sf)
-    cents = _centroids(e, nlist)
-    assigned = _fast_assign(e, cents, 1).drop("rn")
-    corpus_b = assigned.join(e, "vec_id")
-    q_b = (
-        _fast_assign(e.filter(F.col("vec_id") < _N_QUERIES), cents, nprobe)
-        .drop("rn")
-        .join(e, "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nq"),
-            F.col("centroid_id").alias("qc"),
-        )
-    )
-    bucket_pairs = corpus_b.join(
-        F.broadcast(q_b),
-        (F.col("centroid_id") == F.col("qc")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    scored = bucket_pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def ann_scale_bucket_sizes(spark: SparkSession, sf: str, nlist: int) -> DataFrame:
-    """(n) bucket sizes of the scale-tier assignment — the balance
-    evidence for the bench's ann_scale section."""
-    from .dedup import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    e = _emb(spark, sf)
-    return (
-        _fast_assign(e, _centroids(e, nlist), 1)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .select("n")
-    )
 
 
 QUERIES = {

@@ -16,7 +16,7 @@ import os
 from pyspark.sql import SparkSession
 
 # At 100 TB on a 1000-executor cluster these come from spark-submit conf;
-# the values here are the local[N] test/bench defaults. Keys chosen so the
+# the values here are the local[N] test/benchmark defaults. Keys chosen so the
 # same code runs unchanged under a real cluster manager.
 _BASE_CONF = {
     "spark.sql.adaptive.enabled": "true",
@@ -57,9 +57,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` controls local[N] parallelism — the bench harness uses this to
-    evidence the two-cluster-size scaling criterion (local[8] vs local[32]).
-    The default is ``SPARK_GRAFT_CPUS``, else the CPUs this process may run
+    ``cores`` controls local[N] parallelism. The default is ``SPARK_GRAFT_CPUS``, else the CPUs this process may run
     on.
     """
     if cores is None:

@@ -1,5 +1,6 @@
-"""Deterministic document/embedding corpus generator for the dedup-at-scale
-evidence runs (BENCH dedup_scale section, VERDICT r3 #7).
+"""Deterministic document/embedding corpus generator with planted
+near-duplicates, for dedup tests beyond the driver's sf tables (VERDICT
+r3 #7).
 
 The driver's sf tables top out at ~5k documents — enough for correctness,
 not for demonstrating that the LSH bucket caps and candidate counts behave

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..encode.pipeline import encode_dataset
+from ..encode.pipeline import _local_path, encode_dataset
 
 
 def encode_stream(
@@ -68,7 +68,7 @@ def encode_stream(
             r["f"]
             for r in batch_df.select(F.input_file_name().alias("f")).distinct().collect()
         ]
-        local = sorted(f.removeprefix("file://") for f in files)
+        local = sorted(_local_path(f) for f in files)
         if not local:
             return
         encode_dataset(spark, local, out_dir, zstd_level=zstd_level)

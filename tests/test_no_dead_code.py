@@ -1,0 +1,54 @@
+"""Every top-level function and class of the engine is used somewhere.
+
+A use is a ``Name``, an attribute or a ``from … import`` alias in the
+engine, ``tests/``, ``scripts/``, ``perfbench/`` or ``__spark_entry__.py``,
+outside the definition itself. A re-export in an ``__init__.py``, a
+string (``__all__``, docs) or a comment is not a use. Matching is by
+name only, so a same-named use elsewhere keeps a definition alive: the
+check can miss dead code, but it never flags live code.
+"""
+
+from __future__ import annotations
+
+import ast
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+ENGINE = ROOT / "poc_parquet_aggregator_spark"
+SCOPE = [ENGINE, ROOT / "tests", ROOT / "scripts", ROOT / "perfbench", ROOT / "__spark_entry__.py"]
+
+
+def _sources() -> list[Path]:
+    files = []
+    for p in SCOPE:
+        files += [p] if p.is_file() else sorted(p.rglob("*.py")) if p.is_dir() else []
+    return files
+
+
+def _uses(tree: ast.AST, reexports_count: bool = True) -> Counter:
+    uses = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            uses[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            uses[node.attr] += 1
+        elif isinstance(node, ast.ImportFrom) and reexports_count:
+            uses.update(a.name for a in node.names)
+    return uses
+
+
+def test_every_engine_definition_is_used():
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in _sources()}
+    uses = Counter()
+    for p, tree in trees.items():
+        uses += _uses(tree, reexports_count=p.name != "__init__.py")
+    unused = []
+    for p, tree in trees.items():
+        if ENGINE not in p.parents:
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if uses[node.name] - _uses(node)[node.name] <= 0:
+                    unused.append(f"{p.relative_to(ROOT)}:{node.lineno} {node.name}")
+    assert not unused, "defined but never used:\n" + "\n".join(unused)

@@ -142,48 +142,6 @@ def test_simhash_cascade_schedule_invariants():
         assert min(widths) >= 0
 
 
-def test_ann_ivf_scale_path(spark):
-    """The scale-tier IVF (GEMM assignment, nlist ≈ √n): every query gets
-    exactly k ranked neighbors from its probed buckets; the assignment
-    partitions the whole corpus (bucket sizes sum to n, every centroid id
-    in range); and at a generous nprobe the result converges to the exact
-    brute-force top-k (on a 500-vector corpus, probing 8 of 22 buckets
-    must recover the exact set's overlap measured by recall ≥ 0.8)."""
-    from pyspark.sql import functions as F
-
-    from poc_parquet_aggregator_spark.operators.similarity import (
-        ann_ivf_scale,
-        ann_scale_bucket_sizes,
-        q_ann_topk_bruteforce,
-    )
-
-    nlist = 22
-    rows = ann_ivf_scale(spark, SF_DIR, nlist=nlist, nprobe=8).collect()
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r["query_id"], []).append(r["rank"])
-    assert set(per_q) == {0, 1, 2, 3, 4}
-    for ranks in per_q.values():
-        assert sorted(ranks) == [1, 2, 3, 4, 5]
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in q_ann_topk_bruteforce(spark, SF_DIR).collect()
-        if r["rank"] <= 5
-    }
-    ivf = {(r["query_id"], r["neighbor_id"]) for r in rows}
-    assert len(exact & ivf) / len(exact) >= 0.8
-    sizes = ann_scale_bucket_sizes(spark, SF_DIR, nlist).collect()
-    n_vec = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
-    assert sum(r["n"] for r in sizes) == n_vec
-    assert len(sizes) <= nlist
-    # nlist < nprobe: the probe count clamps to the centroid count (the
-    # unclamped kernel crashed on mismatched column lengths); probing all
-    # 4 of 4 buckets IS brute force, so recall must be exact
-    rows4 = ann_ivf_scale(spark, SF_DIR, nlist=4, nprobe=8).collect()
-    ivf4 = {(r["query_id"], r["neighbor_id"]) for r in rows4}
-    assert exact <= ivf4
-
-
 def _make_bmp(w: int, h: int, px: bytes) -> bytes:
     """Independent struct-based 24bpp BMP builder (test-side reference
     implementation — not the engine's SQL builder)."""
@@ -523,47 +481,6 @@ def test_doc_corpus_deterministic(tmp_path):
     assert ea.equals(eb)
     texts = ta.column("text").to_pylist()
     assert len(texts) == 500 and len(set(texts)) < 500  # exact copies planted
-
-
-def test_adaptive_lsh_bits_monotone():
-    from poc_parquet_aggregator_spark.operators.dedup import (
-        _LSH_BITS,
-        adaptive_lsh_bits,
-    )
-
-    assert adaptive_lsh_bits(1_000) == _LSH_BITS  # gate scale keeps 6
-    assert adaptive_lsh_bits(100_000) > _LSH_BITS
-    bits = [adaptive_lsh_bits(n) for n in (1e3, 1e4, 1e5, 1e6, 1e9, 1e12)]
-    assert bits == sorted(bits) and bits[-1] <= 56  # BIGINT key fold bound
-    assert adaptive_lsh_bits(10**12) == 34  # the 10^12-target from the doc
-
-
-def test_dedup_scale_stats_counts(spark):
-    """Bucket stats computed from bucket sizes must equal the materialized
-    candidate-pair count of the same frame (tiny corpus cross-check)."""
-    from pyspark.sql import functions as F
-
-    from poc_parquet_aggregator_spark.operators.dedup import (
-        _embedding_banded,
-        dedup_scale_stats,
-    )
-
-    stats = dedup_scale_stats(spark, SF_DIR)
-    banded = _embedding_banded(spark, SF_DIR, bits=stats["embedding_lsh"]["bits_per_band"])
-    a, b = banded.alias("a"), banded.alias("b")
-    n_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .count()
-    )
-    assert stats["embedding_lsh"]["candidate_pairs"] == n_pairs
-    assert stats["embedding_lsh"]["pairs_dropped_by_cap"] == 0
-    for fam in ("minhash", "simhash"):
-        assert stats[fam]["n_items"] > 0 and stats[fam]["max_bucket"] >= 1
 
 
 def _simhash_scheme_pairs(ids, sigs, spans, deeper_spans, slot_bits, cap):

@@ -250,6 +250,28 @@ def test_manifest_compaction(spark, token_dir, tmp_path):
     assert stem in before
 
 
+def test_read_manifest_precedence(tmp_path):
+    """Duplicate records of one stem resolve the same way everywhere (the
+    crash-window shapes the compactors' idempotent merge allows): a loose
+    JSON overrides every segment, a later segment overrides an earlier
+    one, and within one segment the later line wins. ``_``-prefixed
+    JSONs are job records, not file records."""
+    mdir = tmp_path / "_manifest"
+    mdir.mkdir()
+
+    def segment(idx, recs):
+        lines = "".join(json.dumps(r) + "\n" for r in recs)
+        (mdir / f"_compacted-{idx:06d}.jsonl").write_text(lines)
+
+    segment(0, [{"file_stem": s, "v": "seg0"} for s in ("a", "b", "c")]
+            + [{"file_stem": "c", "v": "seg0-later-line"}])
+    segment(1, [{"file_stem": s, "v": "seg1"} for s in ("a", "b")])
+    (mdir / "b.json").write_text(json.dumps({"file_stem": "b", "v": "loose"}))
+    (mdir / "_layout.json").write_text(json.dumps({"layout": "per-file"}))
+    got = {s: r["v"] for s, r in read_manifest(str(tmp_path)).items()}
+    assert got == {"a": "seg1", "b": "loose", "c": "seg0-later-line"}
+
+
 def test_perfile_layout_source_filter_not_pruned(spark, token_dir, tmp_path):
     """On the default per-file layout the file_stem prefix prune must NOT
     apply (stems are 'tokens-...', not source names) — the sources filter
@@ -695,7 +717,7 @@ def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path):
     out = str(tmp_path / "enc")
     # tiny splits force Spark to cut each input file into several tasks →
     # several parts per stem
-    encode_dataset(spark, token_dir, out, target_tasks=12)
+    encode_dataset(spark, token_dir, out)
     stems = sorted(g.glob(out + "/data/file_stem=*"))
     n_parts_before = [len(g.glob(s + "/*.parquet")) for s in stems]
     assert max(n_parts_before) > 1, n_parts_before
@@ -964,17 +986,15 @@ def test_length_bucketed_pack_over_encoded(spark, token_dir, tmp_path):
     assert a == b
 
 
-def test_empty_doc_id_keeps_file_bounds(spark, tmp_path, monkeypatch):
+def test_empty_doc_id_keeps_file_bounds(spark, tmp_path):
     """An input file whose smallest doc_id is "" and that Spark splits into
     several parts: the file record must keep "" as its lower bound. A fold
     that dropped falsy bounds recorded the NEXT part's minimum, so range
-    and point reads pruned the file and returned no rows — on both the
-    driver keep-list and the join prune path."""
+    and point reads pruned the file and returned no rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    import poc_parquet_aggregator_spark.encode.pipeline as pl
     from poc_parquet_aggregator_spark.encode import read_decoded
 
     src = str(tmp_path / "tokens")
@@ -989,7 +1009,7 @@ def test_empty_doc_id_keeps_file_bounds(spark, tmp_path, monkeypatch):
     )
     pq.write_table(tbl, path, row_group_size=1600)  # splittable input
     out = str(tmp_path / "enc")
-    encode_dataset(spark, src, out, target_tasks=16)
+    encode_dataset(spark, src, out)
     (rec,) = read_manifest(out).values()
     assert rec["n_parts"] >= 2
 
@@ -1002,16 +1022,12 @@ def test_empty_doc_id_keeps_file_bounds(spark, tmp_path, monkeypatch):
     point = "doc-000000000150"
     want_point = truth(pc.equal(tbl["doc_id"], point))
     assert len(want_range) == 100 and len(want_point) == 1
-    for join_bytes in (pl.MANIFEST_JOIN_BYTES, -1):  # driver, then join path
-        monkeypatch.setattr(pl, "MANIFEST_JOIN_BYTES", join_bytes)
-        for kwargs, want in (
-            ({"doc_id_range": (lo, hi)}, want_range),
-            ({"doc_ids": [point]}, want_point),
-        ):
-            got = read_decoded(spark, out, columns=["doc_id", "n_tok"], **kwargs)
-            assert [tuple(r) for r in got.orderBy("doc_id").collect()] == want, (
-                join_bytes, kwargs,
-            )
+    for kwargs, want in (
+        ({"doc_id_range": (lo, hi)}, want_range),
+        ({"doc_ids": [point]}, want_point),
+    ):
+        got = read_decoded(spark, out, columns=["doc_id", "n_tok"], **kwargs)
+        assert [tuple(r) for r in got.orderBy("doc_id").collect()] == want, kwargs
     assert rec["doc_id_min"] == ""
 
 

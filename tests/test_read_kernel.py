@@ -2,6 +2,8 @@
 run in-process over every chunk row of an encoded dir (no file or chunk
 pruning in front of it) equals ``read_decoded`` for every read kind. This
 is the contract a runner other than Spark's ``mapInArrow`` relies on.
+Every read kind, pruned, returns the rows pyarrow computes from the input
+table, on both layouts and for input file names Spark percent-encodes.
 Also the read-argument contracts: empty id, source and column lists
 raise, and a by-source read prunes bucket dirs by the exact
 ``<source>_s`` stem prefix."""
@@ -51,15 +53,32 @@ def table():
     return base.append_column("lang", pa.array(np.arange(N_DOCS, dtype=np.int32) % 7))
 
 
-@pytest.fixture(scope="module")
-def enc_dir(spark, table, tmp_path_factory):
-    src = tmp_path_factory.mktemp("tokens")
+def _write_files(table, src, name="tokens"):
+    os.makedirs(src, exist_ok=True)
     for start in range(0, N_DOCS, DOCS_PER_FILE):
         pq.write_table(
-            table.slice(start, DOCS_PER_FILE), str(src / f"tokens-{start:012d}.parquet")
+            table.slice(start, DOCS_PER_FILE), os.path.join(src, f"{name}-{start:012d}.parquet")
         )
+
+
+@pytest.fixture(scope="module")
+def src_dir(table, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("tokens"))
+    _write_files(table, src)
+    return src
+
+
+@pytest.fixture(scope="module")
+def enc_dir(spark, src_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc") / "out")
-    encode_dataset(spark, str(src), out)
+    encode_dataset(spark, src_dir, out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def salted_dir(spark, src_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("enc_salted") / "out")
+    encode_dataset_by_source(spark, src_dir, out, n_salts=2)
     return out
 
 
@@ -84,8 +103,59 @@ def _read_kinds(table) -> dict[str, dict]:
     }
 
 
+def _all_read_kinds(table) -> dict[str, dict]:
+    """``_read_kinds`` plus a token no document holds and all three file
+    zones (doc_id, n_tok, token) at once."""
+    kinds = _read_kinds(table)
+    ids = table.column("doc_id").to_pylist()
+    absent = kinds["token_list"]["contains_token"][-1]
+    common = int(np.bincount(table.column("tokens").combine_chunks().flatten().to_numpy()).argmax())
+    return {
+        **kinds,
+        "absent": {"contains_token": absent},
+        "combined": {
+            "doc_id_range": (ids[500], ids[3500]),
+            "n_tok_range": (60, 200),
+            "contains_token": [kinds["token"]["contains_token"], common],
+        },
+    }
+
+
+def _truth(table, kw) -> "pa.Table":
+    """The rows and columns a read returns, computed with pyarrow alone."""
+    mask = np.ones(table.num_rows, dtype=bool)
+    if "sources" in kw:
+        mask &= pc.is_in(table["source"], pa.array(kw["sources"])).to_numpy()
+    if "doc_id_range" in kw:
+        lo, hi = kw["doc_id_range"]
+        mask &= pc.and_(pc.greater_equal(table["doc_id"], lo),
+                        pc.less_equal(table["doc_id"], hi)).to_numpy()
+    if "doc_ids" in kw:
+        mask &= pc.is_in(table["doc_id"], pa.array(kw["doc_ids"])).to_numpy()
+    if "n_tok_range" in kw:
+        lo, hi = kw["n_tok_range"]
+        mask &= pc.and_(pc.greater_equal(table["n_tok"], lo),
+                        pc.less_equal(table["n_tok"], hi)).to_numpy()
+    if "contains_token" in kw:
+        ids = np.atleast_1d(kw["contains_token"])
+        tokens = table.column("tokens").combine_chunks()
+        doc = pc.list_parent_indices(tokens).to_numpy()
+        hit = np.isin(tokens.flatten().to_numpy(), ids)
+        mask &= np.bincount(doc[hit], minlength=table.num_rows) > 0
+    return table.filter(pa.array(mask)).select(kw.get("columns") or table.column_names)
+
+
 def _rows(tbl) -> list[tuple]:
     return sorted(tuple(r.values()) for r in tbl.to_pylist())
+
+
+def _assert_reads_match_truth(spark, table, out):
+    for kind, kw in _all_read_kinds(table).items():
+        want = _truth(table, kw)
+        got = read_decoded(spark, out, **kw).toArrow()
+        assert got.column_names == want.column_names, kind
+        assert _rows(got) == _rows(want), kind
+        assert want.num_rows or kind == "absent", kind
 
 
 def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
@@ -115,6 +185,49 @@ def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
         assert want.num_rows, kind
     assert states["range"] == {"none", "part", "all"}, states
     assert states["projection"] == {"all"}, states
+
+
+@pytest.mark.parametrize("layout", ["per-file", "by-source"])
+def test_reads_match_pyarrow_truth(spark, table, enc_dir, salted_dir, layout):
+    """Every read kind, file- and chunk-pruned, on both layouts. A read
+    with a zone carries the driver keep-list and its funnel."""
+    out = enc_dir if layout == "per-file" else salted_dir
+    _assert_reads_match_truth(spark, table, out)
+    kinds = _all_read_kinds(table)
+    for kind, kw in kinds.items():
+        plan = plan_read(out, **{"tok_ids" if k == "contains_token" else k: v
+                                 for k, v in kw.items() if k != "columns"})
+        assert (plan.stems is None) == (plan.funnel is None) == (not plan.zones), kind
+    assert plan_read(out, tok_ids=kinds["absent"]["contains_token"]).stems == []
+
+
+def test_percent_encoded_input_file_names(spark, table, tmp_path):
+    """``input_file_name()`` percent-encodes a file's URI: a space in an
+    input name must still map to its file, through the batch encode and
+    the stream. A ``%`` in a commit stem would be decoded again by
+    Spark's partition discovery, so it raises instead."""
+    from poc_parquet_aggregator_spark.streaming import encode_stream
+
+    src = str(tmp_path / "src")
+    _write_files(table, src, name="tok en")
+    for encode in (encode_dataset, encode_stream):
+        out = str(tmp_path / encode.__name__)
+        encode(spark, src, out)
+        _assert_reads_match_truth(spark, table, out)
+
+    pct = str(tmp_path / "pct")
+    os.makedirs(pct)
+    pq.write_table(table.slice(0, 400), os.path.join(pct, "x%41.parquet"))
+    with pytest.raises(ValueError, match="%"):
+        encode_dataset(spark, pct, str(tmp_path / "pct_out"))
+    by_src = table.slice(0, 400)
+    by_src = by_src.set_column(
+        by_src.schema.get_field_index("source"), "source",
+        pa.array(["a%41"] * by_src.num_rows, pa.string()),
+    )
+    pq.write_table(by_src, os.path.join(pct, "x%41.parquet"))
+    with pytest.raises(ValueError, match="%"):
+        encode_dataset_by_source(spark, pct, str(tmp_path / "pct_salted"), n_salts=1)
 
 
 @pytest.mark.parametrize("arg", ["doc_ids", "sources", "columns"])

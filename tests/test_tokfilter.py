@@ -19,7 +19,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-import poc_parquet_aggregator_spark.encode.pipeline as pl
 from poc_parquet_aggregator_spark.encode import (
     encode_dataset,
     encode_dataset_by_source,
@@ -381,12 +380,11 @@ def test_contains_token_set_any_semantics(spark, token_dir, enc_dir):
     assert one == read_decoded(spark, enc_dir, contains_token=rare).count()
 
 
-def test_pre_upgrade_encode_still_reads_exactly(spark, token_dir, tmp_path, monkeypatch):
+def test_pre_upgrade_encode_still_reads_exactly(spark, token_dir, tmp_path):
     """Strip one committed file down to the pre-filter format (no tok_*
     chunk columns, no manifest bounds, no sidecar): the conservative-keep
-    rules must decode it and the result must stay exact, and both
-    renderings of the plan's zone predicates (the driver record test and
-    the Column over manifest_df) must keep the NULL-bound record."""
+    rules must decode it and the result must stay exact, and the plan's
+    driver keep-list must keep the NULL-bound record."""
     out = str(tmp_path / "enc_mixed")
     encode_dataset(spark, token_dir, out)
     stem_dir = sorted(glob.glob(os.path.join(out, "data", "file_stem=*")))[0]
@@ -425,7 +423,4 @@ def test_pre_upgrade_encode_still_reads_exactly(spark, token_dir, tmp_path, monk
     ]
     assert got == _expected_ids(spark, token_dir, only_here) and got
     assert stem in plan_read(out, tok_ids=only_here).stems
-    monkeypatch.setattr(pl, "MANIFEST_JOIN_BYTES", -1)
-    join_plan = plan_read(out, tok_ids=only_here)
-    assert stem in {r[0] for r in pl._keep_stems_df(spark, join_plan).collect()}
     shutil.rmtree(out)
