@@ -250,28 +250,6 @@ def test_manifest_compaction(spark, token_dir, tmp_path):
     assert stem in before
 
 
-def test_read_manifest_precedence(tmp_path):
-    """Duplicate records of one stem resolve the same way everywhere (the
-    crash-window shapes the compactors' idempotent merge allows): a loose
-    JSON overrides every segment, a later segment overrides an earlier
-    one, and within one segment the later line wins. ``_``-prefixed
-    JSONs are job records, not file records."""
-    mdir = tmp_path / "_manifest"
-    mdir.mkdir()
-
-    def segment(idx, recs):
-        lines = "".join(json.dumps(r) + "\n" for r in recs)
-        (mdir / f"_compacted-{idx:06d}.jsonl").write_text(lines)
-
-    segment(0, [{"file_stem": s, "v": "seg0"} for s in ("a", "b", "c")]
-            + [{"file_stem": "c", "v": "seg0-later-line"}])
-    segment(1, [{"file_stem": s, "v": "seg1"} for s in ("a", "b")])
-    (mdir / "b.json").write_text(json.dumps({"file_stem": "b", "v": "loose"}))
-    (mdir / "_layout.json").write_text(json.dumps({"layout": "per-file"}))
-    got = {s: r["v"] for s, r in read_manifest(str(tmp_path)).items()}
-    assert got == {"a": "seg1", "b": "loose", "c": "seg0-later-line"}
-
-
 def test_perfile_layout_source_filter_not_pruned(spark, token_dir, tmp_path):
     """On the default per-file layout the file_stem prefix prune must NOT
     apply (stems are 'tokens-...', not source names) — the sources filter
