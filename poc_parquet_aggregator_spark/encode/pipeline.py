@@ -6,18 +6,22 @@ Shape mirrors the reference's chunked streaming + incremental-write design
 
   * the "chunk" is an Arrow batch inside ``mapInArrow`` (vectorized, no
     per-row Python — BASELINE.json input_hint);
-  * encoded blobs are written TASK-LOCALLY with pyarrow into a staging dir
-    — they never cross the Arrow boundary back to the JVM (multi-MB binary
-    cells are poison for the JVM parquet writer's dictionary/page machinery,
-    and round-tripping them doubles memory traffic). Tasks yield only tiny
-    per-file metadata rows. This is the standard object-store sink shape:
+  * encoded blobs are written TASK-LOCALLY with pyarrow, straight into
+    fresh part files ``data/<stem>/part-<uuid>.parquet`` — they never
+    cross the Arrow boundary back to the JVM (multi-MB binary cells are
+    poison for the JVM parquet writer's dictionary/page machinery, and
+    round-tripping them doubles memory traffic). Tasks yield only tiny
+    per-part metadata rows. This is the standard object-store sink shape:
     task-local data write + driver-side commit protocol;
-  * the resume unit is the INPUT FILE: the driver commits each completed
-    file by an atomic directory rename plus an atomically-renamed manifest
-    JSON (input snapshot, per-stream codecs, checksum, bytes in/out) — the
-    Spark-native form of the reference's per-chunk incremental DB writes
-    with exact resume. At cluster scale the same protocol is an Iceberg
-    snapshot commit; local FS rename stands in for it here.
+  * the resume unit is the INPUT FILE, and its manifest record is the one
+    commit step: the driver writes the merged token filter to a fresh
+    sidecar name, then atomically writes the record (input snapshot,
+    per-stream codecs, checksum, bytes in/out, and the ``parts`` and
+    ``tok_filter`` files it names), then deletes the stem's files the
+    record does not name. The files the records name are the table:
+    reads scan exactly those (``plan_read``), never a directory listing.
+    At cluster scale the same protocol is an Iceberg snapshot commit (a
+    manifest listing its data files).
 
 Correctness: ``decode_verify`` decodes every partition and asserts
 bit-identical token-array equality against the source via a full outer join
@@ -31,14 +35,14 @@ import glob
 import json
 import operator
 import os
-import shutil
+import re
 import struct
 import time
 import urllib.parse
 import uuid
 import zlib
 from collections.abc import Iterator
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from functools import partial, reduce
 
 import numpy as np
@@ -100,8 +104,8 @@ _META_ARROW_SCHEMA = pa.schema(
         pa.field("n_tok_min", pa.int64()),
         pa.field("n_tok_max", pa.int64()),
         # token VALUE bounds + membership filter (OR of the part's chunk
-        # filters); the commit merges parts per stem into the file's
-        # _tokfilters sidecar (see encode/tokfilter.py)
+        # filters); the commit merges parts per stem into the sidecar its
+        # record names (see encode/tokfilter.py)
         pa.field("tok_min", pa.int64()),
         pa.field("tok_max", pa.int64()),
         pa.field("tok_filter", pa.large_binary()),
@@ -163,6 +167,9 @@ _ENC_ARROW_SCHEMA = pa.schema(
         pa.field("meta_json", pa.string()),
     ]
 )
+# every read scans part files with this declared schema: no inference, and
+# a file that predates a column reads it as NULL
+_ENC_SCHEMA = from_arrow_schema(_ENC_ARROW_SCHEMA)
 
 # ---------------- extra metadata columns (beyond the core 4-column schema)
 #
@@ -331,12 +338,23 @@ def _local_path(uri: str) -> str:
     return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
 
 
-def _check_stem(stem: str) -> None:
-    """A commit stem names the ``file_stem=<stem>`` data dir, whose value
-    Spark's partition discovery percent-decodes: a ``%`` in it would read
-    back as another stem, and pruned reads would silently miss its rows."""
-    if "%" in stem:
-        raise ValueError(f"commit stem {stem!r} contains '%'; rename the input")
+def _stem_dir(stem: str) -> str:
+    """``stem``'s data dir, relative to the output dir like every file
+    name a record holds: the one place the layout lives. Writers give
+    each file a fresh uuid name in it."""
+    return os.path.join("data", stem)
+
+
+def _write_part(out_dir: str, stem: str, tbl: pa.Table) -> str:
+    """Write chunk rows as a fresh part file of ``stem``; returns its name.
+    Blobs are already codec/zstd-compressed → plain pages, no dict."""
+    name = os.path.join(_stem_dir(stem), f"part-{uuid.uuid4().hex}.parquet")
+    path = os.path.join(out_dir, name)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(
+        tbl, path, compression="none", use_dictionary=False, write_statistics=_STATS_COLS
+    )
+    return name
 
 
 def _encode_chunk_row(
@@ -474,7 +492,7 @@ def fold_parts(rows: list[dict]) -> dict:
 
 
 def _make_encode_fn(
-    staging_dir: str,
+    out_dir: str,
     zstd_level: int = 3,
     key: str = "_file",
     extras: list[str] | None = None,
@@ -492,14 +510,7 @@ def _make_encode_fn(
         out_rows = []
         for stem, rows in per_file.items():
             tbl = pa.Table.from_pylist(rows, schema=_ENC_ARROW_SCHEMA)
-            part_dir = os.path.join(staging_dir, f"file_stem={stem}")
-            os.makedirs(part_dir, exist_ok=True)
-            # blobs are already codec/zstd-compressed → plain pages, no dict
-            part_path = os.path.join(part_dir, f"part-{uuid.uuid4().hex}.parquet")
-            pq.write_table(
-                tbl, part_path, compression="none", use_dictionary=False,
-                write_statistics=_STATS_COLS,
-            )
+            part_path = _write_part(out_dir, stem, tbl)
             part = fold_parts(rows)
             part["codecs_json"] = json.dumps(part.pop("codecs"), sort_keys=True)
             out_rows.append({"file_stem": stem, "part_path": part_path, **part})
@@ -650,7 +661,7 @@ def _decode(
     """The one decode call: scan only the blobs the kernel parses (plus the
     chunk bitmaps of a token read) and map them to the read's rows."""
     blobs = {_BLOB_OF.get(c, "extras_blob") for c in [*columns, *(c for c, _ in plan.rows)]}
-    if plan.tok_ids is not None and "tok_filter" in enc.columns:
+    if plan.tok_ids is not None:
         blobs.add("tok_filter")
     return enc.select(*sorted(blobs)).mapInArrow(
         _make_decode_fn(plan, extras, columns),
@@ -754,55 +765,74 @@ class ReadPlan:
     """A read's zone predicates (ANDed), token ids (sidecar probe, chunk
     bitmap skip) and exact row tests ``rows``: (decoded column, test)
     pairs, each test mapping that column's Arrow array to a numpy bool
-    mask, which the decode kernel ANDs. ``stems`` (kept files) and
-    ``funnel`` (files per pruning stage) are set for every read with a
-    zone; None for a read without one (nothing to prune)."""
+    mask, which the decode kernel ANDs. ``stems`` maps every kept file's
+    stem to the part files its record names (the files the read scans);
+    ``funnel`` counts files per pruning stage."""
 
-    out_dir: str
     zones: tuple
     tok_ids: list[int] | None
-    rows: tuple = ()
-    stems: list[str] | None = None
-    funnel: dict | None = None
-
-    def column(self, columns: list[str]):
-        """The zones whose bounds a frame with ``columns`` has, ANDed as
-        one Column (None if none applies)."""
-        cols = [z.column() for z in self.zones
-                if {f"{z.col}_min", f"{z.col}_max"} <= set(columns)]
-        return reduce(operator.and_, cols) if cols else None
+    rows: tuple
+    stems: dict[str, list[str]]
+    funnel: dict
 
 
-def _sidecar_keeps(out_dir: str, stem: str, has_filter, lo, hi, tok_ids: list[int]) -> bool:
-    """May the file's ``_tokfilters`` sidecar hold one of the ids inside
-    its token zone [lo, hi]? Out-of-zone ids are not probed (a hashed-mode
-    false positive on one must not keep the file); a file without a
-    filter flag or sidecar is kept."""
-    if not has_filter:
+def _part_files(out_dir: str, rec: dict) -> list[str]:
+    """The part files a committed record names: exactly its stem's rows."""
+    if "parts" not in rec:
+        raise ValueError(
+            f"manifest record {rec['file_stem']!r} predates records that name "
+            "their part files; re-encode the dataset"
+        )
+    return [os.path.join(out_dir, p) for p in rec["parts"]]
+
+
+def _scan(spark: SparkSession, parts) -> DataFrame:
+    """The chunk rows of exactly the files in ``parts`` (one list per
+    record), read with the declared chunk schema: no directory listing or
+    partition discovery, and a named file that is gone fails the read.
+    Glob metacharacters are escaped: the paths are literal."""
+    files = [re.sub(r"([\[\]{}*?\\])", r"\\\1", f) for fs in parts for f in fs]
+    return spark.read.schema(_ENC_SCHEMA).parquet(*files)
+
+
+def _sidecar_keeps(out_dir: str, rec: dict, tok_ids: list[int]) -> bool:
+    """May the record's token-filter sidecar hold one of the ids inside
+    its token zone? Out-of-zone ids are not probed (a hashed-mode false
+    positive on one must not keep the file); a record without a sidecar
+    is kept."""
+    if "tok_filter" not in rec:
         return True
+    lo, hi = rec.get("tok_min"), rec.get("tok_max")
     cand = tok_ids if lo is None or hi is None else [t for t in tok_ids if lo <= t <= hi]
-    sidecar = read_token_sidecar(out_dir, stem)
-    return sidecar is None or token_filter_contains_any(sidecar, cand)
+    with open(os.path.join(out_dir, rec["tok_filter"]), "rb") as f:
+        return token_filter_contains_any(f.read(), cand)
 
 
-def _keep_list(plan: ReadPlan) -> tuple[list[str], dict]:
-    """Driver keep-list over ``read_manifest``: (kept stems, funnel)."""
-    stems, zone_pruned = [], 0
-    records = read_manifest(plan.out_dir)
+def _keep_list(
+    out_dir: str, zones: tuple, tok_ids: list[int] | None, sources: set[str] | None
+) -> tuple[dict[str, list[str]], dict]:
+    """Driver keep-list over ``read_manifest``: (kept stem → its part
+    files, funnel). Each record is tested against the zones, then a
+    by-source bucket record by its ``source``, then a token read's
+    sidecar probe."""
+    stems, zone_pruned, source_pruned = {}, 0, 0
+    records = read_manifest(out_dir)
     for stem, rec in records.items():
-        if not all(z.keeps(rec) for z in plan.zones):
+        files = _part_files(out_dir, rec)
+        if not all(z.keeps(rec) for z in zones):
             zone_pruned += 1
-        elif plan.tok_ids is None or _sidecar_keeps(
-            plan.out_dir, stem, rec.get("tok_filter"), rec.get("tok_min"),
-            rec.get("tok_max"), plan.tok_ids,
-        ):
-            stems.append(stem)
+        elif sources is not None and "source" in rec and rec["source"] not in sources:
+            source_pruned += 1
+        elif tok_ids is None or _sidecar_keeps(out_dir, rec, tok_ids):
+            stems[stem] = files
     return stems, {
         "files_total": len(records),
         "files_zone_pruned": zone_pruned,
-        "files_filter_pruned": len(records) - zone_pruned - len(stems),
+        "files_source_pruned": source_pruned,
+        "files_filter_pruned": len(records) - zone_pruned - source_pruned - len(stems),
         "files_kept": len(stems),
     }
+
 
 
 def plan_read(
@@ -813,11 +843,12 @@ def plan_read(
     tok_ids: int | list[int] | None = None,
     sources: list[str] | None = None,
 ) -> ReadPlan:
-    """Build a selective read's zone predicates and exact row tests once,
-    and prune files on the driver: one ``read_manifest``, each record
-    tested against the zones, then the token reads' sidecar probe. An
-    empty ``doc_ids`` or ``sources`` list raises, like an empty token
-    list: it names no row."""
+    """Build a read's zone predicates and exact row tests once, and pick
+    its files on the driver: one ``read_manifest``, each record tested
+    against the zones, then a by-source bucket by its source, then the
+    token reads' sidecar probe. A read without a filter keeps every
+    record. An empty ``doc_ids`` or ``sources`` list raises, like an
+    empty token list: it names no row."""
     for name, arg in (("doc_ids", doc_ids), ("sources", sources)):
         if arg is not None and not len(arg):
             raise ValueError(f"{name} list must be non-empty")
@@ -840,11 +871,10 @@ def plan_read(
     if tids is not None:  # ANY-match: per-id spans OR'd
         zones.append(_Zone("tok", tuple((t, t) for t in tids)))
         rows.append(("tokens", partial(_has_any, tids)))
-    plan = ReadPlan(out_dir, tuple(zones), tids, tuple(rows))
-    if not zones:
-        return plan
-    stems, funnel = _keep_list(plan)
-    return replace(plan, stems=stems, funnel=funnel)
+    stems, funnel = _keep_list(
+        out_dir, tuple(zones), tids, None if sources is None else set(sources)
+    )
+    return ReadPlan(tuple(zones), tids, tuple(rows), stems, funnel)
 
 
 def compact_manifest(out_dir: str) -> dict:
@@ -874,11 +904,9 @@ def compact_manifest(out_dir: str) -> dict:
         else 0
     )
     seg = os.path.join(mdir, f"_compacted-{next_idx:06d}.jsonl")
-    tmp = seg + ".tmp"
-    with open(tmp, "w") as f:
-        for stem in sorted(records):
-            f.write(json.dumps(records[stem], sort_keys=True) + "\n")
-    os.rename(tmp, seg)
+    _atomic_write(
+        seg, "".join(json.dumps(records[s], sort_keys=True) + "\n" for s in sorted(records))
+    )
     for p in loose + old_segments:
         os.unlink(p)
     return {"records": len(records), "absorbed": len(loose), "segments": 1}
@@ -893,56 +921,20 @@ def compact_encoded(out_dir: str, max_parts: int = 1) -> dict:
     compaction is a driver-side pyarrow concat — NO re-encode, checksums
     unchanged.
 
-    Crash safety (dir-swap protocol): the merged dir is staged under a
-    hidden name (Spark's file index ignores dot/underscore paths), then
-    ``stem → .old`` and ``.staged → stem`` renames swap it in. A crash
-    between the two renames leaves ``.compact-old-<stem>`` without a live
-    stem dir; the ROLLBACK SWEEP at the start of every compact_encoded run
-    restores it (same recovery-on-next-maintenance model as the manifest
-    compactor). The per-stem manifest record is re-written (loose JSON
-    overrides any compacted segment) with the new part count.
+    The merged part is written under a fresh name and committed like an
+    encode (``_commit``): the record naming it is the switch, and the old
+    parts are deleted after it. A crash at any point leaves either the
+    old record with its parts or the new record with the merged part.
     """
-    data_dir = os.path.join(out_dir, "data")
-    # rollback sweep: restore any stem whose swap was interrupted
-    rolled_back = 0
-    for old in glob.glob(os.path.join(data_dir, ".compact-old-*")):
-        stem = os.path.basename(old)[len(".compact-old-") :]
-        live = os.path.join(data_dir, f"file_stem={stem}")
-        if not os.path.exists(live):
-            os.rename(old, live)
-            rolled_back += 1
-        else:
-            shutil.rmtree(old)
-    for stale in glob.glob(os.path.join(data_dir, ".compact-staged-*")):
-        shutil.rmtree(stale)
-
-    records = read_manifest(out_dir)
-    mdir = _manifest_dir(out_dir)
     compacted = 0
-    for stem_dir in sorted(glob.glob(os.path.join(data_dir, "file_stem=*"))):
-        stem = os.path.basename(stem_dir).split("=", 1)[1]
-        parts = sorted(glob.glob(os.path.join(stem_dir, "*.parquet")))
+    for stem, rec in sorted(read_manifest(out_dir).items()):
+        parts = _part_files(out_dir, rec)
         if len(parts) <= max_parts:
             continue
-        tbl = pa.concat_tables([pq.read_table(p) for p in parts])
-        staged = os.path.join(data_dir, f".compact-staged-{stem}")
-        os.makedirs(staged, exist_ok=True)
-        pq.write_table(
-            tbl,
-            os.path.join(staged, f"part-{uuid.uuid4().hex}.parquet"),
-            compression="none",
-            use_dictionary=False,
-            write_statistics=[c for c in _STATS_COLS if c in tbl.schema.names],
-        )
-        old = os.path.join(data_dir, f".compact-old-{stem}")
-        os.rename(stem_dir, old)
-        os.rename(staged, stem_dir)
-        shutil.rmtree(old)
-        if stem in records:
-            rec = {**records[stem], "n_parts": 1, "compacted_at": time.time()}
-            _atomic_write(os.path.join(mdir, f"{stem}.json"), json.dumps(rec, sort_keys=True))
+        part = _write_part(out_dir, stem, pa.concat_tables([pq.read_table(p) for p in parts]))
+        _commit(out_dir, {**rec, "parts": [part], "n_parts": 1, "compacted_at": time.time()})
         compacted += 1
-    return {"stems_compacted": compacted, "rolled_back": rolled_back}
+    return {"stems_compacted": compacted}
 
 
 def _snapshot(path: str) -> dict:
@@ -964,8 +956,7 @@ _LAYOUT_FILE = "_layout.json"
 def write_layout(out_dir: str, layout: str, extras: list[list[str]] | None = None) -> None:
     """Record the physical layout (per-file | by-source) and the extra
     metadata columns [(name, spark_type)] in the manifest dir; read_decoded
-    uses the layout to decide whether file_stem carries the source prefix
-    and the extras list to assemble the decoded schema (atomic rename, same
+    uses the extras list to assemble the decoded schema (atomic rename, same
     protocol as every other manifest write)."""
     _atomic_write(
         os.path.join(_manifest_dir(out_dir), _LAYOUT_FILE),
@@ -989,45 +980,39 @@ def read_extras(out_dir: str) -> list[tuple[str, str]]:
     return [tuple(e) for e in _read_layout_record(out_dir).get("extras", [])]
 
 
-def _tokfilter_path(out_dir: str, stem: str) -> str:
-    return os.path.join(out_dir, "_tokfilters", f"{stem}.bin")
+def _commit(out_dir: str, rec: dict) -> None:
+    """The one commit step. The record's atomic write makes the files it
+    names (``parts``, the ``tok_filter`` sidecar) its stem's data; the
+    stem's other files (the previous commit's, a crashed run's) are
+    deleted after it. A crash before the write leaves the old record and
+    every file it names; a crash after it only leaves unnamed files."""
+    stem = rec["file_stem"]
+    _atomic_write(
+        os.path.join(_manifest_dir(out_dir), f"{stem}.json"), json.dumps(rec, sort_keys=True)
+    )
+    named = {*rec["parts"], rec.get("tok_filter")}
+    stem_dir = _stem_dir(stem)
+    path = os.path.join(out_dir, stem_dir)
+    for name in sorted(os.listdir(path)) if os.path.isdir(path) else []:
+        if os.path.join(stem_dir, name) not in named:
+            os.remove(os.path.join(path, name))
 
 
-def write_token_sidecar(out_dir: str, stem: str, blob: bytes) -> None:
-    """File-level token-membership filter, kept OUT of the manifest JSON
-    (listing cost) in a puffin-style sidecar. Written BEFORE the manifest
-    rename: a committed record implies its sidecar is in place, and a
-    crash in between re-encodes the file (idempotent, like the data dir)."""
-    _atomic_write(_tokfilter_path(out_dir, stem), bytes(blob))
-
-
-def read_token_sidecar(out_dir: str, stem: str) -> bytes | None:
-    p = _tokfilter_path(out_dir, stem)
-    if not os.path.exists(p):
-        return None
-    with open(p, "rb") as f:
-        return f.read()
-
-
-def _commit_parts(out_dir: str, staging_dir: str, stem: str, rows: list, **fields) -> None:
-    """Atomic per-stem commit. The part rows (META_SCHEMA) fold into the
-    manifest record, plus the caller's ``fields``; the merged filter goes
-    to the sidecar first, then the encoded-chunk dir is renamed into
-    place, then the record. A crash between the renames leaves data
-    without a record → the stem re-encodes next run (idempotent)."""
-    _check_stem(stem)
+def _commit_parts(out_dir: str, stem: str, rows: list, **fields) -> None:
+    """Commit the part rows (META_SCHEMA) the encode tasks wrote for one
+    stem: they fold into the manifest record, plus the caller's
+    ``fields``; the merged token filter goes to a fresh sidecar name the
+    record names, and ``_commit`` writes the record."""
     rec = fold_parts([{**r.asDict(), "codecs": json.loads(r["codecs_json"])} for r in rows])
     tok_filter = rec.pop("tok_filter")
-    rec.update(file_stem=stem, n_parts=len(rows), committed_at=time.time(), **fields)
+    rec.update({
+        "file_stem": stem, "parts": sorted(r["part_path"] for r in rows),
+        "n_parts": len(rows), "committed_at": time.time(), **fields,
+    })
     if tok_filter is not None:
-        write_token_sidecar(out_dir, stem, tok_filter)
-        rec["tok_filter"] = True
-    dst = os.path.join(out_dir, "data", f"file_stem={stem}")
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    if os.path.exists(dst):
-        shutil.rmtree(dst)
-    os.rename(os.path.join(staging_dir, f"file_stem={stem}"), dst)
-    _atomic_write(os.path.join(_manifest_dir(out_dir), f"{stem}.json"), json.dumps(rec, sort_keys=True))
+        rec["tok_filter"] = os.path.join(_stem_dir(stem), f"tokfilter-{uuid.uuid4().hex}.bin")
+        _atomic_write(os.path.join(out_dir, rec["tok_filter"]), bytes(tok_filter))
+    _commit(out_dir, rec)
 
 
 def _job_metrics(metrics: dict, out_dir: str, files: list[str], t0: float) -> dict:
@@ -1038,8 +1023,7 @@ def _job_metrics(metrics: dict, out_dir: str, files: list[str], t0: float) -> di
         metrics[k] = sum(r[k] for r in manifest.values())
     metrics["input_parquet_bytes"] = sum(os.stat(f).st_size for f in files)
     metrics["encoded_parquet_bytes"] = sum(
-        os.stat(p).st_size
-        for p in glob.glob(os.path.join(out_dir, "data", "**", "*.parquet"), recursive=True)
+        os.stat(p).st_size for r in manifest.values() for p in _part_files(out_dir, r)
     )
     metrics["ratio_vs_parquet_zstd"] = (
         metrics["encoded_parquet_bytes"] / metrics["input_parquet_bytes"]
@@ -1097,8 +1081,6 @@ def encode_dataset(
     if len(set(stems)) != len(stems):
         dupes = sorted({s for s in stems if stems.count(s) > 1})
         raise ValueError(f"duplicate input file stems (commit key collision): {dupes}")
-    for stem in stems:
-        _check_stem(stem)
     done = read_manifest(out_dir)
     todo = [
         f for f in files if _stem(f) not in done or not _snapshot_matches(done[_stem(f)], f)
@@ -1108,11 +1090,7 @@ def encode_dataset(
         "files_skipped": len(files) - len(todo),
         "files_encoded": len(todo),
     }
-    staging_dir = os.path.join(out_dir, "_staging")
     if todo:
-        if os.path.exists(staging_dir):
-            shutil.rmtree(staging_dir)
-        os.makedirs(staging_dir, exist_ok=True)
         # extra metadata columns beyond the core schema: encoded per type,
         # recorded in the layout so decode reassembles them
         extras = _extra_columns(spark.read.parquet(todo[0]).schema)
@@ -1130,27 +1108,18 @@ def encode_dataset(
         write_layout(out_dir, "per-file", extras=[list(e) for e in extras])
         df = spark.read.parquet(*todo).withColumn("_file", F.input_file_name())
         meta_rows = df.mapInArrow(
-            _make_encode_fn(staging_dir, zstd_level, extras=[n for n, _ in extras]),
+            _make_encode_fn(out_dir, zstd_level, extras=[n for n, _ in extras]),
             schema=META_SCHEMA,
         ).collect()
-        # commit per file (a file may yield several part rows if Spark split it)
-        by_stem: dict[str, list] = {}
-        for r in meta_rows:
-            by_stem.setdefault(r["file_stem"], []).append(r)
+        # commit per file (a file may yield several part rows if Spark split
+        # it); an empty input file yields none and commits a zero record,
+        # so resume doesn't rescan it forever
         path_of = {_stem(f): f for f in todo}
-        # empty input files yield no chunk rows — commit a zero record so
-        # resume doesn't rescan them forever
-        for stem in path_of:
-            if stem not in by_stem:
-                os.makedirs(
-                    os.path.join(staging_dir, f"file_stem={stem}"), exist_ok=True
-                )
-                by_stem[stem] = []
+        by_stem: dict[str, list] = {stem: [] for stem in path_of}
+        for r in meta_rows:
+            by_stem[r["file_stem"]].append(r)
         for stem, rows in by_stem.items():
-            _commit_parts(
-                out_dir, staging_dir, stem, rows, snapshot=_snapshot(path_of[stem])
-            )
-        shutil.rmtree(staging_dir, ignore_errors=True)
+            _commit_parts(out_dir, stem, rows, snapshot=_snapshot(path_of[stem]))
 
     _job_metrics(metrics, out_dir, files, t0)
     return metrics
@@ -1174,9 +1143,8 @@ def read_decoded(
     empty list raises), parsing only the blobs its row tests and output
     columns need:
       * ``sources``: chunk source zones (``src_set``) on ANY layout; on
-        the by-source layout (encode_dataset_by_source, per the
-        manifest's layout record) also whole bucket dirs by their
-        ``<source>_s`` stem prefix;
+        the by-source layout (encode_dataset_by_source) also whole
+        buckets by the ``source`` their manifest record carries;
       * ``doc_id_range``: chunk zone maps (doc_id_min/max) skip chunks at
         the parquet scan (row-group stats) — blobs of skipped chunks are
         never read, let alone decoded;
@@ -1185,11 +1153,12 @@ def read_decoded(
         only the lengths stream, not the token values;
       * ``contains_token``: docs whose token array CONTAINS the id, or
         ANY id of a list (the banned-id-set audit); absent members of the
-        set cost nothing. Prunes by manifest file zones + ``_tokfilters``
-        sidecars (driver-side), chunk ``tok_min``/``tok_max`` zones
-        (row-group stats) and the per-chunk membership bitmap (in the
-        kernel, before the token blob is parsed); the kernel's per-doc
-        hit mask is the exact test. See encode/tokfilter.py.
+        set cost nothing. Prunes by manifest file zones + the token-filter
+        sidecars the records name (driver-side), chunk
+        ``tok_min``/``tok_max`` zones (row-group stats) and the per-chunk
+        membership bitmap (in the kernel, before the token blob is
+        parsed); the kernel's per-doc hit mask is the exact test. See
+        encode/tokfilter.py.
     Encodes that predate a zone or filter column are conservatively kept
     at every level; the row tests stay exact.
 
@@ -1203,8 +1172,10 @@ def read_decoded(
     (the manifest's per-file bounds still prune files for any range the
     optimizer can see).
 
-    File-level pruning comes from ``plan_read``'s driver keep-list (an
-    In-filter on file_stem). The same zone predicates then prune chunks
+    File-level pruning comes from ``plan_read``'s driver keep-list: the
+    scan reads exactly the part files the kept records name, so a pruned
+    file never opens a parquet footer (the Iceberg data-file-stats
+    analogy of this manifest). The same zone predicates then prune chunks
     at the scan (parquet row-group stats on the chunk zone columns).
     """
     if columns is not None and not len(columns):
@@ -1212,18 +1183,8 @@ def read_decoded(
     plan = plan_read(
         out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
     )
-    enc = spark.read.parquet(os.path.join(out_dir, "data"))
-    if plan.stems is not None:
-        # manifest-level file pruning: a pruned file never opens a parquet
-        # footer (the Iceberg data-file-stats analogy of this manifest)
-        enc = enc.filter(F.col("file_stem").isin(plan.stems))
-    if sources and read_layout(out_dir) == "by-source":
-        # bucket stems are source + "_s" + salt: the separator keeps "a"
-        # from matching the buckets of source "ab"
-        enc = enc.filter(
-            reduce(operator.or_, [F.col("file_stem").startswith(f"{s}_s") for s in sources])
-        )
-    if sources and "src_set" in enc.columns:
+    enc = _scan(spark, plan.stems.values())
+    if sources:
         # chunk-level source zone (works on ANY layout, incl. per-file):
         # a chunk survives only if it contains one of the wanted sources —
         # pruned chunks never decode their blobs. NULL-TOLERANT: on a mixed
@@ -1240,9 +1201,8 @@ def read_decoded(
         )
     # chunk-level zones: row-group stats evaluate these at the scan, so
     # pruned chunks never read their blob bytes
-    chunk_zones = plan.column(enc.columns)
-    if chunk_zones is not None:
-        enc = enc.filter(chunk_zones)
+    if plan.zones:
+        enc = enc.filter(reduce(operator.and_, [z.column() for z in plan.zones]))
     extras = read_extras(out_dir)
     names = _decoded_arrow_schema(extras).names
     if columns is not None:
@@ -1272,21 +1232,22 @@ def decode_verify(
     ``fraction`` < 1 verifies a deterministic FILE-level sample (stems with
     crc32(stem) below the fraction cut): at the 100 TB target a full decode
     per run is its own 100 TB read, so routine verification samples files —
-    the encoded side prunes to the sampled ``file_stem`` partitions before
-    any IO — while small-scale gates keep fraction=1. Per-file layout only
-    (by-source stems don't map back to input files); at least one file is
-    always verified."""
+    the encoded side scans only the sampled files' parts — while
+    small-scale gates keep fraction=1. Per-file layout only (by-source
+    stems don't map back to input files); at least one file is always
+    verified."""
     files = _input_files(input_path)
-    enc = spark.read.parquet(os.path.join(out_dir, "data"))
+    plan = plan_read(out_dir)
+    parts = plan.stems.values()
     if fraction < 1.0:
         if read_layout(out_dir) == "by-source":
             raise ValueError("sampled verify requires the per-file layout")
         cut = int(fraction * 1000)
         sampled = [f for f in files if zlib.crc32(_stem(f).encode()) % 1000 < cut]
         files = sampled or files[:1]
-        enc = enc.filter(F.col("file_stem").isin([_stem(f) for f in files]))
+        parts = [plan.stems[s] for s in map(_stem, files) if s in plan.stems]
     extras = read_extras(out_dir)
-    dec = _decode(enc, ReadPlan(out_dir, (), None), extras, _decoded_arrow_schema(extras).names)
+    dec = _decode(_scan(spark, parts), plan, extras, _decoded_arrow_schema(extras).names)
     src = spark.read.parquet(*files)
     joined = src.alias("s").join(dec.alias("d"), "doc_id", "full_outer")
     same = (

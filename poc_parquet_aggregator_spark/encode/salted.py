@@ -10,7 +10,7 @@ Plan shape:
     salt   = crc32(doc_id) % n_salts          (deterministic → stable resume)
     bucket = source || "_s" || salt
     df.repartition(n_buckets, "bucket") → mapInArrow encode → per-bucket
-    commit (same atomic rename + manifest protocol as the per-file job)
+    commit (the same manifest-record commit as the per-file job)
 
 n_salts bounds the largest bucket at ~60%/n_salts of the data; AQE's
 skew-join handling does not apply here (no join), so the salt IS the
@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import zlib
 
@@ -62,6 +61,8 @@ def encode_dataset_by_source(
 
     Resume unit = (source, salt) bucket; the input snapshot covers the whole
     input set (a changed input invalidates all buckets — coarse but exact).
+    Bucket records carry ``n_salts``: resuming them with another value
+    raises, since its buckets would split the rows differently.
     """
     t0 = time.time()
     files = _input_files(input_path)
@@ -71,7 +72,13 @@ def encode_dataset_by_source(
         for stem, rec in read_manifest(out_dir).items()
         if rec.get("snapshot") == snapshot
     }
-    staging_dir = os.path.join(out_dir, "_staging")
+    for stem, rec in done.items():
+        if (committed := rec.get("n_salts")) != n_salts:
+            raise ValueError(
+                f"bucket {stem!r} was committed with n_salts={committed}; resuming "
+                f"it with n_salts={n_salts} would lose rows — pass "
+                f"n_salts={committed} or encode into a fresh out_dir"
+            )
 
     # the bucket universe is data-dependent: a complete prior run records it
     # in a job summary, so "all buckets committed" is decidable on resume
@@ -81,7 +88,7 @@ def encode_dataset_by_source(
     if os.path.exists(job_path):
         with open(job_path) as f:
             job = json.load(f)
-        if job.get("snapshot") == snapshot and job.get("n_salts") == n_salts:
+        if job.get("snapshot") == snapshot:
             expected = job["buckets"]
     metrics = {"buckets_skipped": len(done)}
 
@@ -101,9 +108,6 @@ def encode_dataset_by_source(
         todo_df = df
 
     if todo_df is not None:
-        if os.path.exists(staging_dir):
-            shutil.rmtree(staging_dir)
-        os.makedirs(staging_dir, exist_ok=True)
         # the explicit salted repartition: one shuffle, buckets ≈ balanced.
         # sortWithinPartitions keeps each bucket contiguous (interleaved
         # buckets fragment encode chunks → per-chunk overhead ruins the
@@ -116,7 +120,7 @@ def encode_dataset_by_source(
         )
         meta_rows = shuffled.mapInArrow(
             _make_encode_fn(
-                staging_dir, zstd_level, key="_bucket",
+                out_dir, zstd_level, key="_bucket",
                 extras=[n for n, _ in extras],
             ),
             schema=META_SCHEMA,
@@ -127,10 +131,9 @@ def encode_dataset_by_source(
         for stem, rows in by_bucket.items():
             source, salt = stem.rsplit("_s", 1)
             _commit_parts(
-                out_dir, staging_dir, stem, rows,
-                source=source, salt=int(salt), snapshot=snapshot,
+                out_dir, stem, rows,
+                source=source, salt=int(salt), n_salts=n_salts, snapshot=snapshot,
             )
-        shutil.rmtree(staging_dir, ignore_errors=True)
         # job summary: the complete bucket universe for this snapshot
         all_buckets = sorted(set(done) | set(by_bucket))
         _atomic_write(

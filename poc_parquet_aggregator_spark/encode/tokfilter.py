@@ -12,14 +12,14 @@ Parquet-bloom discipline applied to this format's own metadata:
     ``tok_max``. The zones prune at the parquet scan via row-group stats
     (JVM-side, before any blob IO); the filter prunes the DECODE of
     chunks whose token range overlaps but which don't contain the id.
-  * per FILE: the OR of the chunk filters lands in a sidecar
-    ``_tokfilters/<stem>.bin`` (written under the same atomic commit as
-    the manifest record, which carries the file-level ``tok_min`` /
-    ``tok_max``). A token read prunes whole files driver-side before any
-    parquet footer is opened — the manifest-level analog of the doc_id /
-    n_tok bounds, kept OUT of the manifest JSON so listing cost doesn't
-    grow by kilobytes per file (Iceberg keeps blooms in puffin sidecars
-    for the same reason).
+  * per FILE: the OR of the chunk filters lands in a sidecar file
+    ``data/<stem>/tokfilter-<uuid>.bin``, written under a fresh name
+    before the manifest record that names it (in ``tok_filter``, next to
+    the file-level ``tok_min`` / ``tok_max``) commits it. A token read
+    prunes whole files driver-side before any parquet footer is opened —
+    the manifest-level analog of the doc_id / n_tok bounds, kept OUT of
+    the manifest JSON so listing cost doesn't grow by kilobytes per file
+    (Iceberg keeps blooms in puffin sidecars for the same reason).
 
 Filter modes (one byte in the header, per filter, chosen by value span):
 

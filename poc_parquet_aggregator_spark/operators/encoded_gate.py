@@ -85,14 +85,14 @@ def _remap_mapping() -> "np.ndarray":
 
 
 # by-source branch reads only these sources: exercises the salted layout's
-# directory-level pruning + chunk src_set zones under the cross-engine gate
+# bucket-record pruning + chunk src_set zones under the cross-engine gate
 _SRC_FILTER = ["src0", "src19", "src7"]
 _POINT_MOD = 29  # point-lookup branch: every 29th doc id
 _LEN_RANGE = (20, 40)  # length-bucket branch: docs with 20-40 tokens
 # token-membership branch: docs CONTAINING this id (= md5('scan')[:4] —
 # 'scan' is in the documents generator's vocabulary, so the branch is
 # non-trivial; any id would stay oracle-consistent). Exercises the
-# _tokfilters sidecar + chunk tok zones + bitmap decode-skip
+# token-filter sidecars + chunk tok zones + bitmap decode-skip
 # (encode/tokfilter.py) under the cross-engine check.
 _MEMBER_TOKEN = 21422
 
@@ -122,7 +122,7 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
     (``encode_dataset_by_source``), and Structured Streaming
     (``encode_stream``: AvailableNow + foreachBatch into the same commit
     protocol) — read each back through ``read_decoded`` (the by-source
-    branch with a source filter, so partition-directory pruning and chunk
+    branch with a source filter, so bucket-record pruning and chunk
     src_set zones sit on the checked path), remap the vocab, and roll up
     per source. The oracle never sees the encoded dirs — any bit
     divergence anywhere in any encode path, the decode kernels, the
@@ -213,8 +213,8 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
         encode_stream(spark, in_dir, out_stream)
         # run BOTH maintenance passes on the per-file table before reading
         # it back: manifest compaction (loose JSONs → JSONL segment) and
-        # small-file compaction (multi-part stems → one part, crash-safe
-        # dir swap). Every per-file-branch row in the gate thereby also
+        # small-file compaction (multi-part stems → one part, committed
+        # through the manifest record). Every per-file-branch row in the gate thereby also
         # certifies that maintenance preserves the table bit-exactly.
         from ..encode import compact_encoded, compact_manifest
 
@@ -268,8 +268,8 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
         read_decoded(spark, out_file, n_tok_range=_LEN_RANGE), "length-bucket"
     )
     # the same selective patterns over the SALTED layout (r4 VERDICT #6):
-    # zone-map point lookups composed with source-directory pruning, and
-    # the length-bucket read across salted partition dirs — so zone maps
+    # zone-map point lookups composed with bucket-record pruning, and
+    # the length-bucket read across salted buckets — so zone maps
     # under salting sit on the checked path too
     points_salted = rollup(
         read_decoded(spark, out_src, sources=list(_SRC_FILTER), doc_ids=ids),

@@ -4,12 +4,19 @@ checks between two builds of the encoder on the same input.
 Usage: python scripts/encode_digest.py OUT_DIR
 
 Prints one sha256 per blob column of the data files (tokens_blob,
-doc_id_blob, source_blob, extras_blob, tok_filter), one over the
-``_tokfilters`` sidecars, and one over the manifest records with
-``committed_at`` removed. Part files carry random names and a stem may
-have several, so each digest is taken over the sorted (stem, value
-digest) pairs: it is independent of file order and still changes when
-any single value does.
+doc_id_blob, source_blob, extras_blob, tok_filter), one over the token
+filter sidecars, and one over the manifest records. Part files carry
+random names and a stem may have several, so each digest is taken over
+the sorted (stem, value digest) pairs: it is independent of file order
+and still changes when any single value does.
+
+Files are found through the manifest records (``parts``, ``tok_filter``).
+Records without ``parts`` come from builds whose data lived in
+``data/file_stem=<stem>/`` with sidecars in ``_tokfilters/<stem>.bin``;
+those are found there, so the output of both builds can be compared.
+The manifest digest drops what names files or times rather than content:
+``committed_at``, ``compacted_at`` and ``parts``, and it reduces
+``tok_filter`` to "has a filter".
 """
 
 from __future__ import annotations
@@ -40,24 +47,41 @@ def _value_digest(v) -> bytes:
     return b"null" if v is None else hashlib.sha256(v).digest()
 
 
+def _files(out_dir: str, stem: str, rec: dict) -> tuple[list[str], str | None]:
+    """(part files, sidecar file or None) of one record."""
+    if "parts" in rec:
+        sidecar = rec.get("tok_filter")
+        return (
+            [os.path.join(out_dir, p) for p in rec["parts"]],
+            os.path.join(out_dir, sidecar) if sidecar else None,
+        )
+    stem_dir = glob.escape(os.path.join(out_dir, "data", f"file_stem={stem}"))
+    sidecar = os.path.join(out_dir, "_tokfilters", f"{stem}.bin")
+    return (
+        glob.glob(os.path.join(stem_dir, "*.parquet")),
+        sidecar if os.path.exists(sidecar) else None,
+    )
+
+
 def encode_digest(out_dir: str) -> dict[str, str]:
     pairs: dict[str, list] = {c: [] for c in BLOB_COLUMNS}
-    for path in glob.glob(os.path.join(out_dir, "data", "file_stem=*", "*.parquet")):
-        stem = os.path.basename(os.path.dirname(path)).split("=", 1)[1]
-        tbl = pq.read_table(path)
-        for col in BLOB_COLUMNS:
-            values = tbl.column(col).to_pylist() if col in tbl.column_names else [None]
-            pairs[col] += [(stem, _value_digest(v)) for v in values]
-    out = {col: _digest(p) for col, p in pairs.items()}
-    sidecars = []
-    for path in glob.glob(os.path.join(out_dir, "_tokfilters", "*.bin")):
-        with open(path, "rb") as f:
-            sidecars.append((os.path.basename(path), _value_digest(f.read())))
-    out["_tokfilters"] = _digest(sidecars)
-    records = []
+    sidecars, records = [], []
     for stem, rec in read_manifest(out_dir).items():
-        rec = {k: v for k, v in rec.items() if k != "committed_at"}
+        parts, sidecar = _files(out_dir, stem, rec)
+        for path in parts:
+            tbl = pq.read_table(path)
+            for col in BLOB_COLUMNS:
+                values = tbl.column(col).to_pylist() if col in tbl.column_names else [None]
+                pairs[col] += [(stem, _value_digest(v)) for v in values]
+        if sidecar is not None:
+            with open(sidecar, "rb") as f:
+                sidecars.append((f"{stem}.bin", _value_digest(f.read())))
+        rec = {k: v for k, v in rec.items() if k not in ("committed_at", "compacted_at", "parts")}
+        if "tok_filter" in rec:
+            rec["tok_filter"] = True
         records.append((stem, _value_digest(json.dumps(rec, sort_keys=True).encode())))
+    out = {col: _digest(p) for col, p in pairs.items()}
+    out["sidecars"] = _digest(sidecars)
     out["manifest"] = _digest(records)
     return out
 

@@ -1,0 +1,205 @@
+"""The manifest record is the one commit step. Encode tasks write fresh
+part files, the driver writes a fresh token-filter sidecar, then the
+record that names them, then deletes the stem's files the record does not
+name; ``compact_encoded`` commits its merged part the same way.
+
+A crash at every write or delete of that sequence leaves a table whose
+full read and token read both answer as the old version or both as the
+new one (or raise), never a mix or a subset, and a clean rerun ends in
+the bytes of an uninterrupted run (``scripts/encode_digest.py``). A named
+file that is gone fails the read instead of dropping its rows, and a
+by-source resume with another ``n_salts`` raises instead of skipping
+buckets."""
+
+from __future__ import annotations
+
+import importlib.util
+import itertools
+import os
+import shutil
+
+import numpy as np
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from poc_parquet_aggregator_spark.encode import (
+    compact_encoded,
+    decode_verify,
+    encode_dataset,
+    encode_dataset_by_source,
+    read_decoded,
+    read_manifest,
+)
+from poc_parquet_aggregator_spark.encode import pipeline as P
+from poc_parquet_aggregator_spark.plans import get_spark
+from poc_parquet_aggregator_spark.sources import generate_token_table
+
+DOCS_PER_FILE = 2000
+_SCRIPT = os.path.join(os.path.dirname(__file__), "..", "scripts", "encode_digest.py")
+_spec = importlib.util.spec_from_file_location("encode_digest", _SCRIPT)
+encode_digest = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(encode_digest)
+
+
+@pytest.fixture(scope="module")
+def spark():
+    return get_spark(
+        "commit_tests", cores=4, extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
+
+
+def _write(src, start: int, seed: int) -> str:
+    """One input file; small row groups so Spark splits it into several
+    parts."""
+    os.makedirs(src, exist_ok=True)
+    path = os.path.join(src, f"tokens-{start:012d}.parquet")
+    tbl = generate_token_table(DOCS_PER_FILE, seed=seed, start_id=start)
+    pq.write_table(tbl, path, compression="zstd", row_group_size=500)
+    return path
+
+
+def _tokens(path: str) -> set[int]:
+    col = pq.read_table(path, columns=["tokens"]).column("tokens").combine_chunks()
+    return set(np.unique(col.flatten().to_numpy()).tolist())
+
+
+def _state(spark, out: str, token: int):
+    """(every row, the doc ids holding ``token``) as the table reads now;
+    None if a read raises."""
+    try:
+        full = read_decoded(spark, out).select("doc_id", "n_tok", F.xxhash64("tokens"))
+        hits = read_decoded(spark, out, contains_token=token, columns=["doc_id"])
+        return sorted(map(tuple, full.collect())), sorted(r[0] for r in hits.collect())
+    except Exception:
+        return None
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(mp, k: int, out: str) -> list:
+    """Make the k-th manifest-plane write or file delete under ``out``
+    raise before it happens; returns the calls seen."""
+    calls = []
+
+    def wrap(fn):
+        def crashing(path, *args, **kwargs):
+            if str(path).startswith(out):
+                calls.append(path)
+                if len(calls) == k:
+                    raise _Crash(path)
+            return fn(path, *args, **kwargs)
+
+        return crashing
+
+    mp.setattr(P, "_atomic_write", wrap(P._atomic_write))
+    for mod, name in ((os, "remove"), (os, "unlink"), (shutil, "rmtree")):
+        mp.setattr(mod, name, wrap(getattr(mod, name)))
+    return calls
+
+
+def _crash_suite(spark, tmp_path, base: str, run, token: int, wants: list) -> list:
+    """For k = 1, 2, …: copy ``base``, run ``run(out)`` crashing at the
+    k-th call, check the state reads as one of ``wants`` (or raises),
+    then rerun cleanly and compare digests with an uninterrupted run.
+    Returns the states seen, in k order."""
+    ref = str(tmp_path / "ref")
+    shutil.copytree(base, ref)
+    run(ref)
+    digest = encode_digest.encode_digest(ref)
+    seen = []
+    for k in itertools.count(1):
+        out = str(tmp_path / f"crash{k}")
+        shutil.copytree(base, out)
+        with pytest.MonkeyPatch.context() as mp:
+            calls = _crash_at(mp, k, out)
+            try:
+                run(out)
+            except _Crash:
+                pass
+        got = _state(spark, out, token)
+        assert got is None or got in wants, k
+        seen.append(None if got is None else wants.index(got))
+        run(out)
+        assert encode_digest.encode_digest(out) == digest, k
+        shutil.rmtree(out)
+        if len(calls) < k:  # the run finished before a k-th call
+            return seen
+    raise AssertionError("unreachable")
+
+
+def test_crash_at_every_commit_step_of_a_re_encode(spark, tmp_path):
+    """One input file changes and re-encodes. Its old version holds a
+    token nothing else holds: the old state returns its docs, the new one
+    none. A sidecar replaced before the record (the old record and data
+    with the new filter) would return the old rows without those docs."""
+    src = str(tmp_path / "src")
+    changed = _write(src, 0, seed=1)
+    other = _write(src, DOCS_PER_FILE, seed=1)
+    base = str(tmp_path / "base")
+    encode_dataset(spark, src, base)
+    old_tokens = _tokens(changed)
+    _write(src, 0, seed=2)  # same doc ids, other tokens
+    token = min(old_tokens - _tokens(changed) - _tokens(other))
+    want_old = _state(spark, base, token)
+    run = lambda out: encode_dataset(spark, src, out)  # noqa: E731
+    ref = str(tmp_path / "new")
+    shutil.copytree(base, ref)
+    run(ref)
+    want_new = _state(spark, ref, token)
+    assert want_old[1] and not want_new[1] and want_old[0] != want_new[0]
+    seen = _crash_suite(spark, tmp_path, base, run, token, [want_old, want_new])
+    assert seen[0] == 0 and seen[-1] == 1, seen
+
+
+def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path):
+    """Compaction of multi-part stems never changes what the table reads."""
+    src = str(tmp_path / "src")
+    first = _write(src, 0, seed=3)
+    second = _write(src, DOCS_PER_FILE, seed=3)
+    base = str(tmp_path / "base")
+    encode_dataset(spark, src, base)
+    assert all(r["n_parts"] > 1 for r in read_manifest(base).values())
+    token = min(_tokens(first) - _tokens(second))
+    want = _state(spark, base, token)
+    assert want[1]
+    seen = _crash_suite(spark, tmp_path, base, compact_encoded, token, [want])
+    assert seen == [0] * len(seen) and len(seen) > 2, seen
+
+
+def test_missing_named_part_fails_the_read(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=4)
+    _write(src, DOCS_PER_FILE, seed=4)
+    out = str(tmp_path / "enc")
+    encode_dataset(spark, src, out)
+    damaged, intact = (read_manifest(out)[s] for s in sorted(read_manifest(out)))
+    os.remove(os.path.join(out, damaged["parts"][0]))
+    for kw in ({}, {"doc_id_range": (damaged["doc_id_min"], damaged["doc_id_max"])}):
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            read_decoded(spark, out, **kw).count()
+    # a read whose keep-list prunes the damaged file still answers
+    rng = (intact["doc_id_min"], intact["doc_id_max"])
+    assert read_decoded(spark, out, doc_id_range=rng).count() == DOCS_PER_FILE
+
+
+def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path):
+    """A run with n_salts=8 cut after the buckets of salts 0-3 committed,
+    resumed with n_salts=2: the new bucket names s000 and s001 are among
+    the committed ones, so the resume would skip rows."""
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=5)
+    _write(src, DOCS_PER_FILE, seed=5)
+    out = str(tmp_path / "enc")
+    encode_dataset_by_source(spark, src, out, n_salts=8)
+    for stem, rec in read_manifest(out).items():
+        if rec["salt"] >= 4:
+            os.remove(os.path.join(out, "_manifest", f"{stem}.json"))
+    os.remove(os.path.join(out, "_manifest", "_job.json"))
+    with pytest.raises(ValueError, match=r"n_salts=8.*n_salts=2"):
+        encode_dataset_by_source(spark, src, out, n_salts=2)
+    m = encode_dataset_by_source(spark, src, out, n_salts=8)
+    assert m["n_docs"] == 2 * DOCS_PER_FILE
+    assert decode_verify(spark, src, out)["bit_identical"]

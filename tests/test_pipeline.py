@@ -15,6 +15,7 @@ from poc_parquet_aggregator_spark.encode import (
     decode_verify,
     encode_dataset,
     encode_dataset_by_source,
+    plan_read,
     read_manifest,
 )
 from poc_parquet_aggregator_spark.plans import get_spark
@@ -62,27 +63,53 @@ def test_resume_skips_committed_and_is_deterministic(spark, token_dir, tmp_path)
     # fault injection: lose one manifest record → exactly one file re-encoded
     stems = sorted(manifest1)
     os.remove(os.path.join(out, "_manifest", f"{stems[0]}.json"))
+    blobs1 = _named_blobs(out, manifest1[stems[0]])
     m3 = encode_dataset(spark, token_dir, out)
     assert m3["files_encoded"] == 1
     # determinism: re-encoded record identical (checksum, bytes, codecs)
+    # apart from its time and fresh file names; the files it names hold
+    # the same bytes
     manifest2 = read_manifest(out)
-    a = {k: v for k, v in manifest1[stems[0]].items() if k != "committed_at"}
-    b = {k: v for k, v in manifest2[stems[0]].items() if k != "committed_at"}
-    assert a == b
+    assert _without_names(manifest1[stems[0]]) == _without_names(manifest2[stems[0]])
+    assert _named_blobs(out, manifest2[stems[0]]) == blobs1
     assert decode_verify(spark, token_dir, out)["bit_identical"]
 
 
-def test_stale_staging_cleaned(spark, token_dir, tmp_path):
+def _without_names(rec: dict) -> dict:
+    return {k: v for k, v in rec.items() if k not in ("committed_at", "parts", "tok_filter")}
+
+
+def _named_blobs(out: str, rec: dict) -> tuple:
+    """sha256 of every blob cell of the record's parts, then of its sidecar."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    cols = ["doc_id_blob", "source_blob", "tokens_blob", "extras_blob", "tok_filter"]
+    cells = [
+        hashlib.sha256(v or b"").hexdigest()
+        for p in rec["parts"]
+        for c in cols
+        for v in pq.read_table(os.path.join(out, p), columns=[c]).column(c).to_pylist()
+    ]
+    with open(os.path.join(out, rec["tok_filter"]), "rb") as f:
+        return sorted(cells), hashlib.sha256(f.read()).hexdigest()
+
+
+def test_stale_parts_deleted_by_commit(spark, token_dir, tmp_path):
+    """Files a crashed run left in a stem's data dir are not in the table
+    (reads scan only the files records name) and are deleted when the
+    stem next commits."""
     out = str(tmp_path / "enc")
     encode_dataset(spark, token_dir, out)
-    staging = os.path.join(out, "_staging", "file_stem=garbage")
-    os.makedirs(staging)
-    with open(os.path.join(staging, "junk.parquet"), "w") as f:
-        f.write("junk")
     stems = sorted(read_manifest(out))
+    junk = os.path.join(out, "data", stems[0], "part-junk.parquet")
+    with open(junk, "w") as f:
+        f.write("junk")
+    assert decode_verify(spark, token_dir, out)["bit_identical"]
     os.remove(os.path.join(out, "_manifest", f"{stems[0]}.json"))
     encode_dataset(spark, token_dir, out)
-    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert not os.path.exists(junk)
     assert decode_verify(spark, token_dir, out)["bit_identical"]
 
 
@@ -251,9 +278,9 @@ def test_manifest_compaction(spark, token_dir, tmp_path):
 
 
 def test_perfile_layout_source_filter_not_pruned(spark, token_dir, tmp_path):
-    """On the default per-file layout the file_stem prefix prune must NOT
-    apply (stems are 'tokens-...', not source names) — the sources filter
-    still returns the right rows via the post-decode filter."""
+    """On the default per-file layout no file is pruned by source (its
+    records carry no ``source``) — the sources filter still returns the
+    right rows via the kernel's row test."""
     from pyspark.sql import functions as F
 
     from poc_parquet_aggregator_spark.encode import read_decoded
@@ -267,6 +294,8 @@ def test_perfile_layout_source_filter_not_pruned(spark, token_dir, tmp_path):
     n = full.filter(F.col("source") == "src00").count()
     assert n > 0
     assert by_src.count() == n
+    funnel = plan_read(out, sources=["src00"]).funnel
+    assert funnel["files_source_pruned"] == 0 and funnel["files_kept"] == funnel["files_total"]
 
 
 def test_same_size_inplace_modify_re_encodes(spark, token_dir, tmp_path):
@@ -361,7 +390,7 @@ def test_pack_token_examples_invariants(spark):
 
 def test_sampled_decode_verify(spark, token_dir, tmp_path):
     """fraction < 1 verifies a deterministic file-level sample: the decode
-    side prunes to the sampled file_stem partitions and the result is
+    side scans only the sampled files' parts and the result is
     bit-identical over exactly those files' docs."""
     import zlib
 
@@ -518,8 +547,8 @@ def test_point_lookup_doc_ids(spark, token_dir, tmp_path):
 
 def test_manifest_file_pruning(spark, token_dir, tmp_path):
     """Range reads prune whole files via the manifest's file-level doc_id
-    bounds before the scan: the physical plan's file_stem filter keeps only
-    overlapping stems, and results match the unpruned filter."""
+    bounds before the scan: the scan's input files are exactly the
+    overlapping stem's parts, and results match the unpruned filter."""
     from pyspark.sql import functions as F
 
     from poc_parquet_aggregator_spark.encode import read_decoded
@@ -532,13 +561,23 @@ def test_manifest_file_pruning(spark, token_dir, tmp_path):
     lo, hi = "doc-000000000100", "doc-000000000199"
     df = read_decoded(spark, out, doc_id_range=(lo, hi))
     assert df.count() == 100
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # the isin list must contain exactly the one overlapping stem
-    assert plan.count("tokens-0000000") == 1, plan[:500]
+    # the scan reads exactly the one overlapping stem's parts
+    (stem,) = [s for s, r in recs.items() if r["doc_id_min"] <= lo <= r["doc_id_max"]]
+    assert _input_stems(df, recs) == {stem}
     full = read_decoded(spark, out)
     assert df.count() == full.filter(
         (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
     ).count()
+
+
+def _input_stems(df, records: dict) -> set[str]:
+    """The stems whose named parts a read's scan opens (every file it
+    opens must be one)."""
+    import urllib.parse
+
+    stem_of = {os.path.basename(p): s for s, r in records.items() for p in r["parts"]}
+    names = [os.path.basename(urllib.parse.unquote(f)) for f in df.inputFiles()]
+    return {stem_of[n] for n in names}
 
 
 def test_emit_record_batches_large_utf8_fallback():
@@ -664,18 +703,16 @@ def test_length_bounds_prune_files_via_manifest(spark, tmp_path):
 
     df = read_decoded(spark, out, n_tok_range=(90, 200), columns=["doc_id", "n_tok"])
     assert df.count() == 50
-    # the 'short' file is pruned at the manifest: its stem is absent from
-    # the isin() file filter in the plan
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "long" in plan and "short" not in plan
+    # the 'short' file is pruned at the manifest: the scan never opens it
+    assert _input_stems(df, rec) == {"long"}
 
 
 def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path):
     """Small-file maintenance: multi-part stems merge to one part with NO
     re-encode (bit-identical decode, manifest checksum untouched, resume
-    still skips), and an interrupted dir swap rolls back on the next run."""
-    import glob as g
-
+    still skips, the old parts deleted), and a merged part an interrupted
+    run left behind is not read and is deleted by the next compaction.
+    Crash points inside the commit are covered in test_commit.py."""
     import pyarrow.parquet as pq_
 
     from poc_parquet_aggregator_spark.encode import compact_encoded
@@ -696,30 +733,36 @@ def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path):
     # tiny splits force Spark to cut each input file into several tasks →
     # several parts per stem
     encode_dataset(spark, token_dir, out)
-    stems = sorted(g.glob(out + "/data/file_stem=*"))
-    n_parts_before = [len(g.glob(s + "/*.parquet")) for s in stems]
-    assert max(n_parts_before) > 1, n_parts_before
     rec_before = read_manifest(out)
+    n_parts_before = [len(r["parts"]) for r in rec_before.values()]
+    assert max(n_parts_before) > 1, n_parts_before
+    assert all(r["n_parts"] == len(r["parts"]) for r in rec_before.values())
+
+    def data_files(stem):
+        return sorted(os.listdir(os.path.join(out, "data", stem)))
 
     m = compact_encoded(out)
     assert m["stems_compacted"] == sum(1 for n in n_parts_before if n > 1)
-    assert all(len(g.glob(s + "/*.parquet")) == 1 for s in stems)
     assert decode_verify(spark, token_dir, out)["bit_identical"]
     rec_after = read_manifest(out)
     for stem, rec in rec_after.items():
         assert rec["checksum"] == rec_before[stem]["checksum"]
-        assert rec["n_parts"] == 1
+        assert rec["n_parts"] == len(rec["parts"]) == 1
+        assert rec["tok_filter"] == rec_before[stem]["tok_filter"]
+        named = [*rec["parts"], rec["tok_filter"]]
+        assert data_files(stem) == sorted(os.path.basename(p) for p in named)
     # resume unaffected: snapshots still match, nothing re-encodes
     m2 = encode_dataset(spark, token_dir, out)
     assert m2["files_encoded"] == 0
 
-    # crash simulation: stem renamed away (between the two swap renames)
-    stem_dir = stems[0]
-    stem = os.path.basename(stem_dir).split("=", 1)[1]
-    os.rename(stem_dir, out + f"/data/.compact-old-{stem}")
-    m3 = compact_encoded(out)
-    assert m3["rolled_back"] == 1
-    assert os.path.exists(stem_dir)
+    # an interrupted compaction's merged part (written, never committed)
+    stem = sorted(rec_after)[0]
+    (part,) = rec_after[stem]["parts"]
+    orphan = os.path.join(out, "data", stem, "part-orphan.parquet")
+    shutil.copy(os.path.join(out, part), orphan)
+    assert decode_verify(spark, token_dir, out)["bit_identical"]
+    assert compact_encoded(out, max_parts=0)["stems_compacted"] == len(rec_after)
+    assert not os.path.exists(orphan)
     assert decode_verify(spark, token_dir, out)["bit_identical"]
 
 

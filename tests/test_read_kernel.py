@@ -5,14 +5,12 @@ is the contract a runner other than Spark's ``mapInArrow`` relies on.
 Every read kind, pruned, returns the rows pyarrow computes from the input
 table, on both layouts and for input file names Spark percent-encodes.
 Also the read-argument contracts: empty id, source and column lists
-raise, and a by-source read prunes bucket dirs by the exact
-``<source>_s`` stem prefix."""
+raise, and a by-source read keeps exactly the buckets whose record
+carries a wanted ``source``."""
 
 from __future__ import annotations
 
-import glob
 import os
-import re
 
 import numpy as np
 import pyarrow as pa
@@ -25,6 +23,7 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset_by_source,
     plan_read,
     read_decoded,
+    read_manifest,
 )
 from poc_parquet_aggregator_spark.encode.pipeline import (
     _decoded_arrow_schema,
@@ -160,8 +159,9 @@ def _assert_reads_match_truth(spark, table, out):
 
 def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
     chunks = pa.concat_tables([
-        pq.read_table(p)
-        for p in sorted(glob.glob(os.path.join(enc_dir, "data", "file_stem=*", "*.parquet")))
+        pq.read_table(os.path.join(enc_dir, p))
+        for rec in read_manifest(enc_dir).values()
+        for p in rec["parts"]
     ])
     extras = read_extras(enc_dir)
     states: dict[str, set] = {}
@@ -189,23 +189,26 @@ def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
 
 @pytest.mark.parametrize("layout", ["per-file", "by-source"])
 def test_reads_match_pyarrow_truth(spark, table, enc_dir, salted_dir, layout):
-    """Every read kind, file- and chunk-pruned, on both layouts. A read
-    with a zone carries the driver keep-list and its funnel."""
+    """Every read kind, file- and chunk-pruned, on both layouts. Every
+    read carries the driver keep-list and its funnel."""
     out = enc_dir if layout == "per-file" else salted_dir
     _assert_reads_match_truth(spark, table, out)
     kinds = _all_read_kinds(table)
     for kind, kw in kinds.items():
         plan = plan_read(out, **{"tok_ids" if k == "contains_token" else k: v
                                  for k, v in kw.items() if k != "columns"})
-        assert (plan.stems is None) == (plan.funnel is None) == (not plan.zones), kind
-    assert plan_read(out, tok_ids=kinds["absent"]["contains_token"]).stems == []
+        assert plan.funnel["files_kept"] == len(plan.stems), kind
+    # a read without a filter keeps every record
+    full = plan_read(out)
+    assert len(full.stems) == full.funnel["files_kept"] == full.funnel["files_total"] > 0
+    assert plan_read(out, tok_ids=kinds["absent"]["contains_token"]).stems == {}
 
 
 def test_percent_encoded_input_file_names(spark, table, tmp_path):
-    """``input_file_name()`` percent-encodes a file's URI: a space in an
-    input name must still map to its file, through the batch encode and
-    the stream. A ``%`` in a commit stem would be decoded again by
-    Spark's partition discovery, so it raises instead."""
+    """``input_file_name()`` percent-encodes a file's URI: a space or a
+    ``%`` in an input name must still map to its file, through the batch
+    encode and the stream. A by-source bucket stem with a ``%`` and glob
+    metacharacters reads back exactly: part paths are literal."""
     from poc_parquet_aggregator_spark.streaming import encode_stream
 
     src = str(tmp_path / "src")
@@ -217,17 +220,22 @@ def test_percent_encoded_input_file_names(spark, table, tmp_path):
 
     pct = str(tmp_path / "pct")
     os.makedirs(pct)
-    pq.write_table(table.slice(0, 400), os.path.join(pct, "x%41.parquet"))
-    with pytest.raises(ValueError, match="%"):
-        encode_dataset(spark, pct, str(tmp_path / "pct_out"))
-    by_src = table.slice(0, 400)
-    by_src = by_src.set_column(
-        by_src.schema.get_field_index("source"), "source",
-        pa.array(["a%41"] * by_src.num_rows, pa.string()),
+    sub = table.slice(0, 400)
+    sub = sub.set_column(
+        sub.schema.get_field_index("source"), "source",
+        pa.array(["a%41[1]{2}"] * sub.num_rows, pa.string()),
     )
-    pq.write_table(by_src, os.path.join(pct, "x%41.parquet"))
-    with pytest.raises(ValueError, match="%"):
-        encode_dataset_by_source(spark, pct, str(tmp_path / "pct_salted"), n_salts=1)
+    pq.write_table(sub, os.path.join(pct, "x%41.parquet"))
+    out = str(tmp_path / "pct_out")
+    encode_dataset(spark, pct, out)
+    assert list(read_manifest(out)) == ["x%41"]
+    salted = str(tmp_path / "pct_salted")
+    encode_dataset_by_source(spark, pct, salted, n_salts=1)
+    assert list(read_manifest(salted)) == ["a%41[1]{2}_s000"]
+    for enc in (out, salted):
+        for kw in ({}, {"sources": ["a%41[1]{2}"]}, {"sources": ["a%41[1]{2}", "A"]}):
+            assert _rows(read_decoded(spark, enc, **kw).toArrow()) == _rows(sub), (enc, kw)
+        assert read_decoded(spark, enc, sources=["aA[1]{2}"]).count() == 0
 
 
 @pytest.mark.parametrize("arg", ["doc_ids", "sources", "columns"])
@@ -250,7 +258,9 @@ def test_by_source_prefix_matches_whole_source(spark, tmp_path):
     out = str(tmp_path / "enc")
     encode_dataset_by_source(spark, str(src), out, n_salts=2)
     df = read_decoded(spark, out, sources=["a"], columns=["doc_id", "source"])
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert re.search(r"StartsWith\(file_stem#\d+, a_s\)", plan), plan
+    plan = plan_read(out, sources=["a"])
+    assert sorted(plan.stems) == ["a_s000", "a_s001"]
+    assert plan.funnel == {"files_total": 4, "files_zone_pruned": 0, "files_source_pruned": 2,
+                           "files_filter_pruned": 0, "files_kept": 2}
     want = [(d, "a") for d, s in zip(tbl.column("doc_id").to_pylist(), source) if s == "a"]
     assert _rows(df.toArrow()) == sorted(want)

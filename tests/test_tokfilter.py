@@ -24,6 +24,7 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset_by_source,
     plan_read,
     read_decoded,
+    read_manifest,
     token_read_stats,
 )
 from poc_parquet_aggregator_spark.encode.tokfilter import (
@@ -387,20 +388,19 @@ def test_pre_upgrade_encode_still_reads_exactly(spark, token_dir, tmp_path):
     driver keep-list must keep the NULL-bound record."""
     out = str(tmp_path / "enc_mixed")
     encode_dataset(spark, token_dir, out)
-    stem_dir = sorted(glob.glob(os.path.join(out, "data", "file_stem=*")))[0]
-    stem = os.path.basename(stem_dir).split("=", 1)[1]
-    for p in glob.glob(os.path.join(stem_dir, "*.parquet")):
-        t = pq.read_table(p)
-        t = t.drop_columns(["tok_min", "tok_max", "tok_filter"])
-        pq.write_table(t, p, compression="none", use_dictionary=False)
+    stem = sorted(read_manifest(out))[0]
     rec_path = os.path.join(out, "_manifest", f"{stem}.json")
     with open(rec_path) as f:
         rec = json.load(f)
+    for p in rec["parts"]:
+        t = pq.read_table(os.path.join(out, p))
+        t = t.drop_columns(["tok_min", "tok_max", "tok_filter"])
+        pq.write_table(t, os.path.join(out, p), compression="none", use_dictionary=False)
+    os.remove(os.path.join(out, rec["tok_filter"]))
     for k in ("tok_min", "tok_max", "tok_filter"):
         rec.pop(k, None)
     with open(rec_path, "w") as f:
         json.dump(rec, f)
-    os.remove(os.path.join(out, "_tokfilters", f"{stem}.bin"))
     # pick a token that lives ONLY in the stripped file: zone/sidecar
     # pruning can't help, the conservative keep must carry it
     per_file = {}
