@@ -7,7 +7,7 @@ Commands:
   decode  --out DIR [--sources a,b] [--doc-id-min X --doc-id-max Y]
           [--n-tok-min A --n-tok-max B] [--columns a,b] [--show N]
   verify  --input DIR --out DIR [--fraction F] [--cores N]
-  stream  --input DIR --out DIR           (AvailableNow incremental encode)
+  stream  --input DIR --out DIR           (encode new or changed files only)
   manifest --out DIR                       (lineage summary)
   compact --out DIR                        (fold manifest JSONs into JSONL segment)
   compact-data --out DIR [--max-parts K]   (merge multi-part encoded stems)

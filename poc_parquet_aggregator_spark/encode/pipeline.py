@@ -1065,6 +1065,48 @@ def _extra_columns(schema: T.StructType) -> list[tuple[str, str]]:
 # ---------------------------------------------------------------- encode job
 
 
+def _encode_parts(
+    spark: SparkSession, df: DataFrame, files: list[str], out_dir: str,
+    layout: str, key: str, zstd_level: int,
+) -> dict[str, list]:
+    """The encode job of both layouts: ``df`` (the input rows plus the
+    commit ``key`` column, filtered and shuffled as the caller needs)
+    through ``_make_encode_fn``; returns the part rows by stem.
+
+    The layout and the extra metadata columns are input-derived, not
+    completion-derived: they are recorded BEFORE any commit, so a crash
+    after the last commit can't leave extras undecodable. The scan's
+    splits are sized to the cluster (Spark's default 128 MB bin-packing
+    would coalesce many small files into a handful of tasks and leave
+    most cores idle): ``files``' bytes over ≥2 waves of parallelism. The
+    split confs hold for this job's scan only and are restored, or unset,
+    when it returns or raises."""
+    extras = _extra_columns(df.drop(key).schema)
+    write_layout(out_dir, layout, extras=[list(e) for e in extras])
+    n_tasks = 2 * spark.sparkContext.defaultParallelism
+    split = max(sum(os.stat(f).st_size for f in files) // n_tasks + 1, 1 << 20)
+    confs = {"spark.sql.files.maxPartitionBytes": str(split),
+             "spark.sql.files.openCostInBytes": "0"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        meta_rows = df.mapInArrow(
+            _make_encode_fn(out_dir, zstd_level, key=key, extras=[n for n, _ in extras]),
+            schema=META_SCHEMA,
+        ).collect()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    by_stem: dict[str, list] = {}
+    for r in meta_rows:
+        by_stem.setdefault(r["file_stem"], []).append(r)
+    return by_stem
+
+
 def encode_dataset(
     spark: SparkSession,
     input_path: str | list[str],
@@ -1091,35 +1133,13 @@ def encode_dataset(
         "files_encoded": len(todo),
     }
     if todo:
-        # extra metadata columns beyond the core schema: encoded per type,
-        # recorded in the layout so decode reassembles them
-        extras = _extra_columns(spark.read.parquet(todo[0]).schema)
-        # size input splits to the cluster: Spark's default 128 MB bin-packing
-        # would coalesce many small files into a handful of tasks and leave
-        # most cores idle. Target ≥2 waves of parallelism.
-        total_bytes = sum(os.stat(f).st_size for f in todo)
-        n_tasks = 2 * spark.sparkContext.defaultParallelism
-        split = max(total_bytes // n_tasks + 1, 1 << 20)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        spark.conf.set("spark.sql.files.openCostInBytes", "0")
-        # layout/extras are input-derived, not completion-derived: record
-        # them BEFORE the commits so a crash after the last commit but
-        # before the layout write can't leave extras permanently undecodable
-        write_layout(out_dir, "per-file", extras=[list(e) for e in extras])
         df = spark.read.parquet(*todo).withColumn("_file", F.input_file_name())
-        meta_rows = df.mapInArrow(
-            _make_encode_fn(out_dir, zstd_level, extras=[n for n, _ in extras]),
-            schema=META_SCHEMA,
-        ).collect()
+        by_stem = _encode_parts(spark, df, todo, out_dir, "per-file", "_file", zstd_level)
         # commit per file (a file may yield several part rows if Spark split
         # it); an empty input file yields none and commits a zero record,
         # so resume doesn't rescan it forever
-        path_of = {_stem(f): f for f in todo}
-        by_stem: dict[str, list] = {stem: [] for stem in path_of}
-        for r in meta_rows:
-            by_stem[r["file_stem"]].append(r)
-        for stem, rows in by_stem.items():
-            _commit_parts(out_dir, stem, rows, snapshot=_snapshot(path_of[stem]))
+        for f in todo:
+            _commit_parts(out_dir, _stem(f), by_stem.get(_stem(f), []), snapshot=_snapshot(f))
 
     _job_metrics(metrics, out_dir, files, t0)
     return metrics

@@ -29,15 +29,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
-    META_SCHEMA,
     _atomic_write,
     _commit_parts,
-    _extra_columns,
+    _encode_parts,
     _input_files,
     _job_metrics,
-    _make_encode_fn,
     read_manifest,
-    write_layout,
 )
 
 
@@ -60,19 +57,23 @@ def encode_dataset_by_source(
     """Encode the token table into source-partitioned, salt-balanced buckets.
 
     Resume unit = (source, salt) bucket; the input snapshot covers the whole
-    input set (a changed input invalidates all buckets — coarse but exact).
-    Bucket records carry ``n_salts``: resuming them with another value
-    raises, since its buckets would split the rows differently.
+    input set. Every record in ``out_dir`` must come from this snapshot: a
+    record committed from another input raises (its bucket would keep
+    serving rows the input no longer has) — encode a changed input into a
+    fresh out_dir. Bucket records carry ``n_salts``: resuming them with
+    another value raises, since its buckets would split the rows
+    differently.
     """
     t0 = time.time()
     files = _input_files(input_path)
     snapshot = _input_snapshot(files)
-    done = {
-        stem: rec
-        for stem, rec in read_manifest(out_dir).items()
-        if rec.get("snapshot") == snapshot
-    }
+    done = read_manifest(out_dir)
     for stem, rec in done.items():
+        if rec.get("snapshot") != snapshot:
+            raise ValueError(
+                f"bucket {stem!r} was committed from another input snapshot; "
+                "the input changed since — encode into a fresh out_dir"
+            )
         if (committed := rec.get("n_salts")) != n_salts:
             raise ValueError(
                 f"bucket {stem!r} was committed with n_salts={committed}; resuming "
@@ -92,42 +93,22 @@ def encode_dataset_by_source(
             expected = job["buckets"]
     metrics = {"buckets_skipped": len(done)}
 
-    df = spark.read.parquet(*files)
-    extras = _extra_columns(df.schema)
-    bucket = F.concat(
-        F.col("source"),
-        F.lit("_s"),
-        F.lpad((F.crc32(F.col("doc_id").cast("binary")) % n_salts).cast("string"), 3, "0"),
-    )
-    df = df.withColumn("_bucket", bucket)
-    if expected is not None and all(b in done for b in expected):
-        todo_df = None
-    elif done:
-        todo_df = df.filter(~F.col("_bucket").isin(list(done)))
-    else:
-        todo_df = df
-
-    if todo_df is not None:
+    if expected is None or not all(b in done for b in expected):
+        bucket = F.concat(
+            F.col("source"),
+            F.lit("_s"),
+            F.lpad((F.crc32(F.col("doc_id").cast("binary")) % n_salts).cast("string"), 3, "0"),
+        )
+        df = spark.read.parquet(*files).withColumn("_bucket", bucket)
+        if done:
+            df = df.filter(~F.col("_bucket").isin(list(done)))
         # the explicit salted repartition: one shuffle, buckets ≈ balanced.
         # sortWithinPartitions keeps each bucket contiguous (interleaved
         # buckets fragment encode chunks → per-chunk overhead ruins the
         # ratio) and makes chunk boundaries deterministic after the shuffle.
-        write_layout(out_dir, "by-source", extras=[list(e) for e in extras])
-        par = spark.sparkContext.defaultParallelism
-        n_buckets_hint = max(par, n_salts)
-        shuffled = todo_df.repartition(n_buckets_hint, "_bucket").sortWithinPartitions(
-            "_bucket", "doc_id"
-        )
-        meta_rows = shuffled.mapInArrow(
-            _make_encode_fn(
-                out_dir, zstd_level, key="_bucket",
-                extras=[n for n, _ in extras],
-            ),
-            schema=META_SCHEMA,
-        ).collect()
-        by_bucket: dict[str, list] = {}
-        for r in meta_rows:
-            by_bucket.setdefault(r["file_stem"], []).append(r)
+        n_buckets_hint = max(spark.sparkContext.defaultParallelism, n_salts)
+        df = df.repartition(n_buckets_hint, "_bucket").sortWithinPartitions("_bucket", "doc_id")
+        by_bucket = _encode_parts(spark, df, files, out_dir, "by-source", "_bucket", zstd_level)
         for stem, rows in by_bucket.items():
             source, salt = stem.rsplit("_s", 1)
             _commit_parts(

@@ -117,16 +117,16 @@ def _gate_lock(path: str):
 
 
 def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    """Encode the synthesized token table through THREE ingest paths —
-    per-file batch (``encode_dataset``), salted by-source
-    (``encode_dataset_by_source``), and Structured Streaming
-    (``encode_stream``: AvailableNow + foreachBatch into the same commit
-    protocol) — read each back through ``read_decoded`` (the by-source
-    branch with a source filter, so bucket-record pruning and chunk
-    src_set zones sit on the checked path), remap the vocab, and roll up
-    per source. The oracle never sees the encoded dirs — any bit
-    divergence anywhere in any encode path, the decode kernels, the
-    selective-read pruning, or the remap kernel breaks the value hash."""
+    """Encode the synthesized token table through THREE ingest entry
+    points — per-file batch (``encode_dataset``), salted by-source
+    (``encode_dataset_by_source``), and incremental (``encode_stream``:
+    the per-file job over the input dir) — read each back through
+    ``read_decoded`` (the by-source branch with a source filter, so
+    bucket-record pruning and chunk src_set zones sit on the checked
+    path), remap the vocab, and roll up per source. The oracle never sees
+    the encoded dirs — any bit divergence anywhere in any encode path, the
+    decode kernels, the selective-read pruning, or the remap kernel breaks
+    the value hash."""
     from ..encode import encode_dataset, encode_dataset_by_source, read_decoded
     from ..streaming import encode_stream
     from .dedup import ensure_workers_can_import
@@ -150,10 +150,9 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
     ).hexdigest()[:10]
     base = os.path.join("/tmp", f"spark_graft_encgate_{key}")
     # Concurrency (r4 VERDICT #4): two sessions sharing one key raced on
-    # the encode dirs / streaming checkpoint (reproduced by the judge with
-    # pytest + plan sweep in parallel). See the lock-pair note above
-    # _gate_lock: liveness mark first, then the build lock serializes the
-    # encode section.
+    # the encode dirs (pytest and a plan sweep run in parallel). See the
+    # lock-pair note above _gate_lock: liveness mark first, then the build
+    # lock serializes the encode section.
     live = _gate_lock(base + ".live")
     fcntl.flock(live, fcntl.LOCK_SH)
     build = _gate_lock(base + ".build")
@@ -197,19 +196,12 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "overwrite"
         ).parquet(tmp)
         os.rename(tmp, in_dir)  # atomic: never half-written under in_dir
-    # the encode jobs tune split-size confs for their own scans; restore
-    # them so the other 49 gate queries (same session) keep their defaults
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    }
     try:
         encode_dataset(spark, in_dir, out_file)  # resume-aware: re-runs no-op
         encode_dataset_by_source(spark, in_dir, out_src, n_salts=2)
-        # third branch: the Structured Streaming ingest (AvailableNow +
-        # foreachBatch into the same commit protocol) — the stream
-        # checkpoint makes re-runs no-ops, the manifest keeps per-file
-        # exactly-once, and the SAME oracle rows must come back out
+        # third branch: the incremental ingest into its own dir — the
+        # manifest's snapshot check makes re-runs no-ops, and the SAME
+        # oracle rows must come back out
         encode_stream(spark, in_dir, out_stream)
         # run BOTH maintenance passes on the per-file table before reading
         # it back: manifest compaction (loose JSONs → JSONL segment) and
@@ -221,11 +213,6 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
         compact_manifest(out_file)
         compact_encoded(out_file)
     finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         # encode section done (or failed): release the build lock so
         # concurrent same-key sessions proceed; the liveness mark stays
         # held (shared) for the process lifetime

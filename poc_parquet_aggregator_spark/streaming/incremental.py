@@ -1,31 +1,32 @@
-"""Structured Streaming surface.
+"""Incremental ingest and the Structured Streaming operators.
 
 The reference's "streaming" is chunked batch with incremental writes and an
 auto mode selector (/root/reference/src/streaming_processor.py:94-263,
 /root/reference/src/streaming_selector.py:12-138, SURVEY.md §2.9) — no
 watermarks or event-time state. Spark subsumes it two ways:
 
-* ``encode_stream``: file-source ``readStream`` + ``Trigger.AvailableNow``
-  + ``foreachBatch`` into the SAME per-file encode/commit protocol as the
-  batch job — files that land after a run are encoded by the next run,
-  exactly once, with the checkpoint dir carrying stream progress and the
-  manifest carrying per-file lineage. This is the Spark-native form of the
-  reference's incremental-DB-write mode (aggregator_ocp_aws.py:307-350).
+* ``encode_stream``: the per-file encode job (``encode_dataset``) over the
+  input dir — a file that lands or changes after a run is encoded by the
+  next run, once per version, because the manifest's per-file snapshot
+  check is the one record of what is encoded. This is the reference's
+  incremental-DB-write mode (aggregator_ocp_aws.py:307-350).
 
-* ``streaming_daily_rollup``: the reference's A1 daily rollup as an
-  event-time windowed streaming aggregation with a watermark — beyond the
-  reference's capabilities (it recomputes days in full), included because
-  any real deployment of this pipeline shape wants late-data handling.
+* ``streaming_daily_rollup`` / ``streaming_sessionize``: event-time
+  operators over a file-source stream with a watermark — beyond
+  the reference's capabilities (it recomputes days in full), included
+  because any real deployment of this pipeline shape wants late-data
+  handling.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..encode.pipeline import _local_path, encode_dataset
+from ..encode.pipeline import encode_dataset
 
 
 def encode_stream(
@@ -35,56 +36,16 @@ def encode_stream(
     checkpoint_dir: str | None = None,
     zstd_level: int = 3,
 ) -> dict:
-    """Incrementally encode newly-arrived token parquet files.
-
-    foreachBatch receives the micro-batch of NEW files' rows; we recover the
-    file list via input_file_name and run the per-file encode/commit (which
-    is idempotent and snapshot-checked), so stream restarts and manifest
-    recovery compose: the stream checkpoint dedups file discovery, the
-    manifest guarantees per-file exactly-once commits.
-    """
-    if checkpoint_dir is None:
-        checkpoint_dir = os.path.join(out_dir, "_stream_checkpoint")
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("tokens", ArrayType(IntegerType()), False),
-            StructField("n_tok", IntegerType(), False),
-            StructField("source", StringType(), False),
-        ]
-    )
-    stats = {"batches": 0, "files": 0}
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        files = [
-            r["f"]
-            for r in batch_df.select(F.input_file_name().alias("f")).distinct().collect()
-        ]
-        local = sorted(_local_path(f) for f in files)
-        if not local:
-            return
-        encode_dataset(spark, local, out_dir, zstd_level=zstd_level)
-        stats["batches"] += 1
-        stats["files"] += len(local)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    return stats
+    """Encode the parquet files of ``input_dir`` that are new or changed
+    since the last call: ``encode_dataset`` over the dir, whose manifest
+    snapshot check skips the files already committed. Returns its metrics
+    plus ``files``, the number of files encoded; a dir without parquet
+    files returns ``files: 0``. ``checkpoint_dir`` is ignored (kept for
+    callers that still pass it)."""
+    if not glob.glob(os.path.join(input_dir, "*.parquet")):
+        return {"files": 0}
+    metrics = encode_dataset(spark, input_dir, out_dir, zstd_level)
+    return {**metrics, "files": metrics["files_encoded"]}
 
 
 def streaming_daily_rollup(

@@ -6,10 +6,13 @@ name; ``compact_encoded`` commits its merged part the same way.
 A crash at every write or delete of that sequence leaves a table whose
 full read and token read both answer as the old version or both as the
 new one (or raise), never a mix or a subset, and a clean rerun ends in
-the bytes of an uninterrupted run (``scripts/encode_digest.py``). A named
-file that is gone fails the read instead of dropping its rows, and a
-by-source resume with another ``n_salts`` raises instead of skipping
-buckets."""
+the bytes of an uninterrupted run (``scripts/encode_digest.py``). A crash
+in a by-source resume also reruns to those bytes, and one in
+``compact_manifest`` never changes the records ``read_manifest`` returns.
+A named file that is gone fails the read instead of dropping its rows,
+and a by-source resume with another ``n_salts``, or over records of
+another input, raises instead of skipping buckets or serving stale
+ones."""
 
 from __future__ import annotations
 
@@ -17,14 +20,17 @@ import importlib.util
 import itertools
 import os
 import shutil
+from functools import partial
 
 import numpy as np
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from poc_parquet_aggregator_spark.encode import (
     compact_encoded,
+    compact_manifest,
     decode_verify,
     encode_dataset,
     encode_dataset_by_source,
@@ -32,6 +38,7 @@ from poc_parquet_aggregator_spark.encode import (
     read_manifest,
 )
 from poc_parquet_aggregator_spark.encode import pipeline as P
+from poc_parquet_aggregator_spark.encode import salted as S
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import generate_token_table
 
@@ -94,17 +101,19 @@ def _crash_at(mp, k: int, out: str) -> list:
 
         return crashing
 
-    mp.setattr(P, "_atomic_write", wrap(P._atomic_write))
+    for mod in (P, S):  # the by-source job summary is written through S
+        mp.setattr(mod, "_atomic_write", wrap(P._atomic_write))
     for mod, name in ((os, "remove"), (os, "unlink"), (shutil, "rmtree")):
         mp.setattr(mod, name, wrap(getattr(mod, name)))
     return calls
 
 
-def _crash_suite(spark, tmp_path, base: str, run, token: int, wants: list) -> list:
+def _crash_suite(tmp_path, base: str, run, state=None, wants=None) -> list:
     """For k = 1, 2, …: copy ``base``, run ``run(out)`` crashing at the
-    k-th call, check the state reads as one of ``wants`` (or raises),
-    then rerun cleanly and compare digests with an uninterrupted run.
-    Returns the states seen, in k order."""
+    k-th call, check ``state(out)`` is one of ``wants`` (None, a raised
+    read, passes too), then rerun cleanly and compare digests with an
+    uninterrupted run. Returns the index in ``wants`` of each k's state
+    (None without ``state``: then only the rerun is checked)."""
     ref = str(tmp_path / "ref")
     shutil.copytree(base, ref)
     run(ref)
@@ -119,7 +128,7 @@ def _crash_suite(spark, tmp_path, base: str, run, token: int, wants: list) -> li
                 run(out)
             except _Crash:
                 pass
-        got = _state(spark, out, token)
+        got = None if state is None else state(out)
         assert got is None or got in wants, k
         seen.append(None if got is None else wants.index(got))
         run(out)
@@ -150,7 +159,8 @@ def test_crash_at_every_commit_step_of_a_re_encode(spark, tmp_path):
     run(ref)
     want_new = _state(spark, ref, token)
     assert want_old[1] and not want_new[1] and want_old[0] != want_new[0]
-    seen = _crash_suite(spark, tmp_path, base, run, token, [want_old, want_new])
+    state = partial(_state, spark, token=token)
+    seen = _crash_suite(tmp_path, base, run, state, [want_old, want_new])
     assert seen[0] == 0 and seen[-1] == 1, seen
 
 
@@ -165,8 +175,46 @@ def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path):
     token = min(_tokens(first) - _tokens(second))
     want = _state(spark, base, token)
     assert want[1]
-    seen = _crash_suite(spark, tmp_path, base, compact_encoded, token, [want])
+    state = partial(_state, spark, token=token)
+    seen = _crash_suite(tmp_path, base, compact_encoded, state, [want])
     assert seen == [0] * len(seen) and len(seen) > 2, seen
+
+
+def test_crash_at_every_commit_step_of_a_by_source_resume(spark, tmp_path):
+    """A by-source run cut after all but two buckets committed: a crash
+    anywhere in its resume (layout, sidecars, records, the deletes of the
+    cut run's files, the job summary) reruns to the bytes of an
+    uninterrupted resume."""
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=8)
+    _write(src, DOCS_PER_FILE, seed=8)
+    base = str(tmp_path / "base")
+    encode_dataset_by_source(spark, src, base, n_salts=1)
+    for stem in ("src00_s000", "src19_s000"):
+        os.remove(os.path.join(base, "_manifest", f"{stem}.json"))
+    run = lambda out: encode_dataset_by_source(spark, src, out, n_salts=1)  # noqa: E731
+    seen = _crash_suite(tmp_path, base, run)
+    assert len(seen) > 5, seen
+    assert decode_verify(spark, src, str(tmp_path / "ref"))["bit_identical"]
+
+
+def test_crash_at_every_step_of_compact_manifest(spark, tmp_path):
+    """A segment, loose records and a loose record overriding a segment
+    one: a crash at any write or delete of the compaction leaves the same
+    records, and a rerun the same digests."""
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=9)
+    changed = _write(src, DOCS_PER_FILE, seed=9)
+    base = str(tmp_path / "base")
+    encode_dataset(spark, src, base)
+    compact_manifest(base)
+    assert _write(src, DOCS_PER_FILE, seed=10) == changed
+    _write(src, 2 * DOCS_PER_FILE, seed=9)
+    assert encode_dataset(spark, src, base)["files_encoded"] == 2
+    want = read_manifest(base)
+    seen = _crash_suite(tmp_path, base, compact_manifest, read_manifest, [want])
+    assert seen == [0] * len(seen) and len(seen) > 3, seen
+    assert read_manifest(str(tmp_path / "ref")) == want
 
 
 def test_missing_named_part_fails_the_read(spark, tmp_path):
@@ -203,3 +251,25 @@ def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path):
     m = encode_dataset_by_source(spark, src, out, n_salts=8)
     assert m["n_docs"] == 2 * DOCS_PER_FILE
     assert decode_verify(spark, src, out)["bit_identical"]
+
+
+def test_by_source_re_encode_after_an_input_change_raises(spark, tmp_path):
+    """Every src19 row leaves the input after a by-source encode. A
+    re-run into the same out_dir would keep serving the src19 buckets of
+    the old input next to the new rows, so it raises; a fresh out_dir
+    encodes the new input."""
+    src = str(tmp_path / "src")
+    paths = [_write(src, 0, seed=6), _write(src, DOCS_PER_FILE, seed=6)]
+    out = str(tmp_path / "enc")
+    encode_dataset_by_source(spark, src, out, n_salts=2)
+    assert "src19_s000" in read_manifest(out)
+    for p in paths:
+        tbl = pq.read_table(p)
+        pq.write_table(tbl.filter(pc.not_equal(tbl.column("source"), "src19")), p)
+    with pytest.raises(ValueError, match=r"bucket '\w+_s00\d'.*another input.*fresh out_dir"):
+        encode_dataset_by_source(spark, src, out, n_salts=2)
+    fresh = str(tmp_path / "fresh")
+    m = encode_dataset_by_source(spark, src, fresh, n_salts=2)
+    n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+    assert m["n_docs"] == n_rows < 2 * DOCS_PER_FILE
+    assert read_decoded(spark, fresh).count() == n_rows

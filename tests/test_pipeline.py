@@ -1093,3 +1093,54 @@ def test_fold_parts_rules():
     nothing = fold_parts([])
     assert nothing["tok_filter"] is None and nothing["doc_id_min"] is None
     assert fold_parts([fold_parts([a, b]), empty]) == f
+
+
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+
+
+def test_encodes_leave_session_split_confs_unchanged(spark, token_dir, tmp_path):
+    """Each encode sizes its own scan's splits: after it returns or
+    raises, the session's split confs read as before (or stay unset), so
+    later reads in the session run under the caller's confs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from poc_parquet_aggregator_spark.sources import generate_token_table
+    from poc_parquet_aggregator_spark.streaming import encode_stream
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    tbl = generate_token_table(200)
+    i = tbl.schema.get_field_index("n_tok")
+    tbl = tbl.set_column(i, "n_tok", pa.array(tbl.column(i).to_numpy() + 1, pa.int32()))
+    pq.write_table(tbl, str(bad / "tokens-000000000000.parquet"))
+    dupes = [os.path.join(token_dir, f) for f in sorted(os.listdir(token_dir))]
+    dupes.append(str(bad / "tokens-000000000000.parquet"))
+    # (call, the error it must raise): the duplicate stem is rejected up
+    # front, the bad n_tok fails inside the encode job
+    calls = {
+        "per-file": (lambda out: encode_dataset(spark, token_dir, out), None),
+        "by-source": (lambda out: encode_dataset_by_source(spark, token_dir, out, n_salts=2), None),
+        "stream": (lambda out: encode_stream(spark, token_dir, out), None),
+        "dupes": (lambda out: encode_dataset(spark, dupes, out), "duplicate input file stems"),
+        "bad": (lambda out: encode_dataset(spark, str(bad), out), "n_tok invariant violated"),
+    }
+    try:
+        for before in ((None, None), ("33554432", "1234")):
+            for k, v in zip(_SPLIT_CONFS, before):
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+            for name, (call, error) in calls.items():
+                out = str(tmp_path / f"{name}-{before[0]}")
+                if error is None:
+                    call(out)
+                else:
+                    with pytest.raises(Exception, match=error):
+                        call(out)
+                after = tuple(spark.conf.get(k, None) for k in _SPLIT_CONFS)
+                assert after == before, (name, after)
+    finally:
+        for k in _SPLIT_CONFS:
+            spark.conf.unset(k)

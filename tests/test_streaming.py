@@ -1,14 +1,16 @@
-"""Structured Streaming surface: AvailableNow incremental encode (new files
-picked up exactly once across restarts) and the watermarked daily rollup."""
+"""Incremental encode (each new or changed file encoded once, decided by
+the manifest alone) and the Structured Streaming operators: the
+watermarked daily rollup and gap sessionization."""
 
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from poc_parquet_aggregator_spark.encode import decode_verify, read_manifest
 from poc_parquet_aggregator_spark.plans import get_spark
-from poc_parquet_aggregator_spark.sources import write_token_table
+from poc_parquet_aggregator_spark.sources import generate_token_table, write_token_table
 from poc_parquet_aggregator_spark.streaming import encode_stream, streaming_daily_rollup
 
 
@@ -26,15 +28,36 @@ def test_incremental_encode_stream(spark, tmp_path):
     s1 = encode_stream(spark, src, out)
     assert s1["files"] == 2
     assert decode_verify(spark, src, out)["bit_identical"]
-    # new files arrive → only they are processed on the next AvailableNow run
-    write_token_table(src, 4000, docs_per_file=1000)  # adds files 2,3 (0,1 identical)
+    # files 2 and 3 land next to the committed ones → only they are encoded
+    landing = str(tmp_path / "landing")
+    for p in write_token_table(landing, 4000, docs_per_file=1000)[2:]:
+        os.replace(p, os.path.join(src, os.path.basename(p)))
     s2 = encode_stream(spark, src, out)
-    assert s2["files"] == 2  # stream checkpoint skips already-seen files
+    assert s2["files"] == 2  # the manifest skips the committed files
     assert len(read_manifest(out)) == 4
     assert decode_verify(spark, src, out)["bit_identical"]
-    # restart with nothing new → no batches
+    # nothing new → nothing encoded
     s3 = encode_stream(spark, src, out)
     assert s3["files"] == 0
+
+
+def test_encode_stream_re_encodes_a_file_rewritten_in_place(spark, tmp_path):
+    """The manifest's snapshot check is the one record of what is encoded:
+    a file rewritten in place between two calls is encoded again, and
+    reads serve its new rows."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    paths = write_token_table(src, 2000, docs_per_file=1000)
+    assert encode_stream(spark, src, out)["files"] == 2
+    pq.write_table(generate_token_table(1000, seed=7), paths[0], compression="zstd")
+    assert encode_stream(spark, src, out)["files"] == 1
+    assert decode_verify(spark, src, out)["bit_identical"]
+
+
+def test_encode_stream_empty_input_dir(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    assert encode_stream(spark, str(src), str(tmp_path / "out"))["files"] == 0
 
 
 def test_streaming_daily_rollup_matches_batch(spark, tmp_path):
