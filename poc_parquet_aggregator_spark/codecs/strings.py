@@ -287,11 +287,11 @@ def _offsets(lens: np.ndarray, n: int, total: int) -> np.ndarray:
 
 def _from_payload(payload: bytes, lens: np.ndarray, n: int) -> "pa.Array":
     offs = _offsets(lens, n, len(payload))
-    if offs[-1] > np.iinfo(np.int32).max:  # ≥2 GiB payload: 64-bit offsets
-        return pa.Array.from_buffers(
-            pa.large_utf8(), n,
-            [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(payload)],
-        )
+    # the encoder takes utf8 (int32-offset) chunks only, so no stored blob
+    # decodes past 2 GiB: one that does (an FSST blob whose symbols expand
+    # it) is corrupt, and wrapping its offsets to int32 would be wrong
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise ValueError(f"corrupt string blob: decodes to {offs[-1]} payload bytes (≥2 GiB)")
     return pa.Array.from_buffers(
         pa.utf8(), n,
         [None, pa.py_buffer(offs.astype(np.int32).tobytes()), pa.py_buffer(payload)],

@@ -114,25 +114,6 @@ _META_ARROW_SCHEMA = pa.schema(
 # the part rows encode tasks yield to the driver (see fold_parts)
 META_SCHEMA = from_arrow_schema(_META_ARROW_SCHEMA)
 
-# parquet column statistics only where a reader predicates: the zone
-# columns (row-group pruning needs their min/max) and the small numeric
-# metadata. Stats on the BLOB columns are pure footer weight — truncated
-# min/max byte strings nobody compares — and at one chunk row per
-# row-group they cost more than the zones themselves on small buckets.
-_STATS_COLS = [
-    "chunk_crc",
-    "n_docs",
-    "n_tokens",
-    "bytes_in",
-    "bytes_out",
-    "doc_id_min",
-    "doc_id_max",
-    "n_tok_min",
-    "n_tok_max",
-    "tok_min",
-    "tok_max",
-]
-
 _ENC_ARROW_SCHEMA = pa.schema(
     [
         pa.field("chunk_crc", pa.int64()),
@@ -140,21 +121,16 @@ _ENC_ARROW_SCHEMA = pa.schema(
         pa.field("n_tokens", pa.int64()),
         pa.field("bytes_in", pa.int64()),
         pa.field("bytes_out", pa.int64()),
-        # chunk-level zone maps: selective decode skips whole chunks by
-        # doc_id range or sequence-length range without touching the blobs
-        # (parquet row-group stats on these columns prune at the scan
-        # already). n_tok bounds serve the training-pipeline's
+        # chunk-level zone maps: the decode kernel skips a chunk whose
+        # doc_id range or sequence-length range misses the read without
+        # parsing its blobs. n_tok bounds serve the training-pipeline's
         # length-bucketed reads (curriculum/packing by length).
         pa.field("doc_id_min", pa.string()),
         pa.field("doc_id_max", pa.string()),
         pa.field("n_tok_min", pa.int32()),
         pa.field("n_tok_max", pa.int32()),
-        # distinct sources in the chunk (≲ the source cardinality, ~20):
-        # source-filtered reads on the PER-FILE layout prune chunks via
-        # arrays_overlap instead of decoding every source blob
-        pa.field("src_set", pa.list_(pa.string())),
-        # token VALUE zone (row-group stats prune content reads JVM-side)
-        # + the chunk's membership filter (tested pre-decode; tokfilter.py)
+        # token VALUE zone + the chunk's membership filter, both tested
+        # by the kernel before any blob is parsed (tokfilter.py)
         pa.field("tok_min", pa.int64()),
         pa.field("tok_max", pa.int64()),
         pa.field("tok_filter", pa.large_binary()),
@@ -351,9 +327,7 @@ def _write_part(out_dir: str, stem: str, tbl: pa.Table) -> str:
     name = os.path.join(_stem_dir(stem), f"part-{uuid.uuid4().hex}.parquet")
     path = os.path.join(out_dir, name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(
-        tbl, path, compression="none", use_dictionary=False, write_statistics=_STATS_COLS
-    )
+    pq.write_table(tbl, path, compression="none", use_dictionary=False, write_statistics=False)
     return name
 
 
@@ -402,9 +376,9 @@ def _encode_chunk_row(
     if extras:
         crc ^= zlib.crc32(extras_blob)
     mm = pc.min_max(did_arr).as_py() if len(did_arr) else {"min": "", "max": ""}
-    # token-membership filter + value zone (tokfilter.py): prunes
-    # token-content reads at the row-group (zones) and decode (bitmap)
-    # levels; deterministic, so resume reproduces it byte-identically.
+    # token-membership filter + value zone (tokfilter.py): the kernel's
+    # chunk tests for token-content reads; deterministic, so resume
+    # reproduces it byte-identically.
     # SIZE GUARD: a tiny chunk (small salted buckets, last slivers) would
     # pay a disproportionate bitmap — keep the filter only while it costs
     # ≲6% of the encoded token stream (zones are 16 bytes, always kept);
@@ -422,7 +396,6 @@ def _encode_chunk_row(
         "tok_min": t_lo,
         "tok_max": t_hi,
         "tok_filter": tok_filter,
-        "src_set": sorted(pc.unique(src_arr.cast(pa.string())).to_pylist()),
         "n_docs": len(lengths),
         "n_tokens": len(flat),
         "bytes_in": bytes_in,
@@ -520,57 +493,6 @@ def _make_encode_fn(
     return encode_batches
 
 
-_SEG_PAYLOAD_CAP = 1 << 30  # utf8-cast segment payload bound (tests shrink it)
-
-
-def _emit_record_batches(
-    out: dict, schema: "pa.Schema"
-) -> Iterator[pa.RecordBatch]:
-    """Yield RecordBatches matching ``schema`` (utf8 string fields).
-
-    decode_strings_arrow falls back to a large_utf8 array when a chunk's
-    concatenated payload overflows int32 offsets (≥2 GiB). Such an array
-    can't go into a utf8-schema batch directly, so the row set is split at
-    boundaries chosen by walking the large arrays' OFFSET buffers — each
-    segment's payload is guaranteed ≤1 GiB, so the utf8 cast can't overflow
-    even under heavily skewed row sizes (equal-count segments could still
-    exceed int32 offsets when a few rows carry most of the bytes — r3
-    ADVICE). The common (<2 GiB) path emits one batch with zero extra
-    work."""
-    arrays = [out[name] for name in schema.names]
-    large = [i for i, a in enumerate(arrays) if pa.types.is_large_string(a.type)]
-    if not large:
-        yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-        return
-    n = len(arrays[0])
-    cap = _SEG_PAYLOAD_CAP  # ≤1 GiB payload per segment per column
-    # per-row payload = sum over large columns; boundary = last row where
-    # cumulative payload since the segment start stays under cap
-    per_row = np.zeros(n, dtype=np.int64)
-    for i in large:
-        a = arrays[i]
-        offs = np.frombuffer(
-            a.buffers()[1], dtype=np.int64, count=n + 1, offset=a.offset * 8
-        )
-        per_row += offs[1:] - offs[:-1]
-    cum = np.cumsum(per_row)  # ONE pass; per-segment cut via searchsorted
-    s = 0
-    while s < n:
-        base = cum[s - 1] if s else 0
-        ln = int(np.searchsorted(cum, base + cap, side="right")) - s
-        ln = max(1, ln)  # a single >cap row still ships alone (cast may
-        # legitimately fail only if ONE row exceeds 2 GiB — impossible for
-        # utf8 input, which this data was on encode)
-        cols = []
-        for i, a in enumerate(arrays):
-            sl = a.slice(s, ln)
-            if i in large:
-                sl = sl.cast(pa.string())
-            cols.append(sl)
-        yield pa.RecordBatch.from_arrays(cols, schema=schema)
-        s += ln
-
-
 def _token_id_list(contains_token) -> list[int]:
     """Normalize the ``contains_token`` argument (single id or an ANY-match
     id set) to a sorted de-duplicated int list."""
@@ -622,19 +544,23 @@ def _decode_column(row: dict, name: str, got: dict, via_tokens: bool) -> "pa.Arr
 
 def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list[str]):
     """Decode kernel: chunk rows in, the read's exact rows of ``columns``
-    out. ``extras`` = [(name, spark_type_name)] as the encode job recorded
-    in the layout. Per chunk: the membership bitmap skips the chunk when it
-    proves every ``plan.tok_ids`` absent, before any blob is parsed
-    (tokfilter.py); then the columns ``plan.rows`` test are decoded and
-    their masks ANDed, and a chunk with no surviving row stops there; then
-    the remaining output columns are decoded and filtered. Blobs no test
-    or output column needs are never parsed."""
+    out; the one place a chunk is pruned. ``extras`` = [(name,
+    spark_type_name)] as the encode job recorded in the layout. Per chunk,
+    before any blob is parsed: ``plan.zones`` skip the chunk with the test
+    the keep-list applies to records (``_Zone.keeps``), then the
+    membership bitmap skips it when it proves every ``plan.tok_ids``
+    absent (tokfilter.py). Then the columns ``plan.rows`` test are decoded
+    and their masks ANDed, and a chunk with no surviving row stops there;
+    then the remaining output columns are decoded and filtered. Blobs no
+    test or output column needs are never parsed."""
     schema = _decoded_arrow_schema(extras, columns)
     via_tokens = "tokens" in {*columns, *(c for c, _ in plan.rows)}
 
     def decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for row in batch.to_pylist():  # a few chunk rows per batch — not hot
+                if not all(z.keeps(row) for z in plan.zones):
+                    continue
                 # a NULL filter (pre-upgrade chunk) is decoded conservatively
                 filt = row.get("tok_filter") if plan.tok_ids is not None else None
                 if filt is not None and not token_filter_contains_any(bytes(filt), plan.tok_ids):
@@ -650,7 +576,7 @@ def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list
                     out = {c: _decode_column(row, c, got, via_tokens) for c in schema.names}
                     if keep is not None and not keep.all():
                         out = {c: a.filter(pa.array(keep)) for c, a in out.items()}
-                    yield from _emit_record_batches(out, schema)
+                    yield pa.RecordBatch.from_arrays(list(out.values()), schema=schema)
 
     return decode_batches
 
@@ -658,12 +584,14 @@ def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list
 def _decode(
     enc: DataFrame, plan: ReadPlan, extras: list[tuple[str, str]], columns: list[str]
 ) -> DataFrame:
-    """The one decode call: scan only the blobs the kernel parses (plus the
-    chunk bitmaps of a token read) and map them to the read's rows."""
-    blobs = {_BLOB_OF.get(c, "extras_blob") for c in [*columns, *(c for c, _ in plan.rows)]}
+    """The one decode call: scan only what the kernel reads — the blobs it
+    parses, the zone columns of ``plan.zones`` and the chunk bitmaps of a
+    token read — and map it to the read's rows."""
+    cols = {_BLOB_OF.get(c, "extras_blob") for c in [*columns, *(c for c, _ in plan.rows)]}
+    cols.update(f"{z.col}_{end}" for z in plan.zones for end in ("min", "max"))
     if plan.tok_ids is not None:
-        blobs.add("tok_filter")
-    return enc.select(*sorted(blobs)).mapInArrow(
+        cols.add("tok_filter")
+    return enc.select(*sorted(cols)).mapInArrow(
         _make_decode_fn(plan, extras, columns),
         schema=from_arrow_schema(_decoded_arrow_schema(extras, columns)),
     )
@@ -724,8 +652,9 @@ class _Zone:
     """Zone-overlap predicate on ``<col>_min``/``<col>_max``, columns that
     manifest records and chunk rows share: keep when the zone meets ANY of
     ``spans`` (closed intervals) or lacks a bound (conservative NULL rule:
-    pre-upgrade encodes stay readable). ``keeps`` tests a record dict,
-    ``column`` renders the same test as a Spark Column."""
+    pre-upgrade encodes stay readable). ``keeps`` is the one test: the
+    keep-list applies it to record dicts, the decode kernel to chunk
+    rows."""
 
     col: str
     spans: tuple
@@ -733,11 +662,6 @@ class _Zone:
     def keeps(self, rec: dict) -> bool:
         lo, hi = rec.get(f"{self.col}_min"), rec.get(f"{self.col}_max")
         return lo is None or hi is None or any(hi >= a and lo <= b for a, b in self.spans)
-
-    def column(self):
-        lo, hi = F.col(f"{self.col}_min"), F.col(f"{self.col}_max")
-        meets = reduce(operator.or_, [(hi >= a) & (lo <= b) for a, b in self.spans])
-        return lo.isNull() | hi.isNull() | meets
 
 
 def _is_in(values: list, arr: "pa.Array") -> np.ndarray:
@@ -762,10 +686,11 @@ def _has_any(ids: list[int], tokens: "pa.ListArray") -> np.ndarray:
 
 @dataclass(frozen=True)
 class ReadPlan:
-    """A read's zone predicates (ANDed), token ids (sidecar probe, chunk
-    bitmap skip) and exact row tests ``rows``: (decoded column, test)
-    pairs, each test mapping that column's Arrow array to a numpy bool
-    mask, which the decode kernel ANDs. ``stems`` maps every kept file's
+    """A read's zone predicates (ANDed; they prune records in the
+    keep-list and chunk rows in the decode kernel), token ids (sidecar
+    probe, chunk bitmap skip) and exact row tests ``rows``: (decoded
+    column, test) pairs, each test mapping that column's Arrow array to a
+    numpy bool mask, which the decode kernel ANDs. ``stems`` maps every kept file's
     stem to the part files its record names (the files the read scans);
     ``funnel`` counts files per pruning stage."""
 
@@ -1157,28 +1082,29 @@ def read_decoded(
 ) -> DataFrame:
     """Read the encoded table back as (doc_id, tokens, n_tok, source).
 
-    Selective decode — the point of a columnar format at 100 TB. Every
-    filter prunes files and chunks before any blob is read; the decode
-    kernel then returns exactly the matching rows of ``columns`` (an
-    empty list raises), parsing only the blobs its row tests and output
-    columns need:
-      * ``sources``: chunk source zones (``src_set``) on ANY layout; on
-        the by-source layout (encode_dataset_by_source) also whole
-        buckets by the ``source`` their manifest record carries;
-      * ``doc_id_range``: chunk zone maps (doc_id_min/max) skip chunks at
-        the parquet scan (row-group stats) — blobs of skipped chunks are
-        never read, let alone decoded;
-      * ``n_tok_range``: sequence-LENGTH zone maps (n_tok_min/max per
-        chunk) — the length-bucketed training read; its row test reads
-        only the lengths stream, not the token values;
+    Selective decode — the point of a columnar format at 100 TB. The
+    driver keep-list (``plan_read``) picks the files: the scan reads
+    exactly the part files the kept records name, so a pruned file never
+    opens a parquet footer (the Iceberg data-file-stats analogy of this
+    manifest). The decode kernel is the only place a chunk row is pruned,
+    with the zone test the keep-list applies to records, and it returns
+    exactly the matching rows of ``columns`` (an empty list raises),
+    parsing only the blobs its row tests and output columns need:
+      * ``sources``: the kernel's exact ``source`` row test on ANY layout;
+        on the by-source layout (encode_dataset_by_source) the keep-list
+        also prunes whole buckets by the ``source`` their record carries;
+      * ``doc_id_range``: file and chunk zone maps (doc_id_min/max) —
+        blobs of a skipped chunk are never parsed;
+      * ``n_tok_range``: sequence-LENGTH zone maps (n_tok_min/max) — the
+        length-bucketed training read; its row test reads only the
+        lengths stream, not the token values;
       * ``contains_token``: docs whose token array CONTAINS the id, or
         ANY id of a list (the banned-id-set audit); absent members of the
-        set cost nothing. Prunes by manifest file zones + the token-filter
-        sidecars the records name (driver-side), chunk
-        ``tok_min``/``tok_max`` zones (row-group stats) and the per-chunk
-        membership bitmap (in the kernel, before the token blob is
-        parsed); the kernel's per-doc hit mask is the exact test. See
-        encode/tokfilter.py.
+        set cost nothing. Prunes by file zones + the token-filter
+        sidecars the records name (driver-side), then per chunk by its
+        ``tok_min``/``tok_max`` zone and membership bitmap (in the
+        kernel, before the token blob is parsed); the kernel's per-doc
+        hit mask is the exact test. See encode/tokfilter.py.
     Encodes that predate a zone or filter column are conservatively kept
     at every level; the row tests stay exact.
 
@@ -1188,41 +1114,13 @@ def read_decoded(
     not millions). A distributed id set (e.g. the output of another
     query) must NOT be collected into this argument; at scale, either
     derive range/length bounds for it and use ``doc_id_range`` /
-    ``n_tok_range``, or semi-join the decoded frame against the id frame
-    (the manifest's per-file bounds still prune files for any range the
-    optimizer can see).
-
-    File-level pruning comes from ``plan_read``'s driver keep-list: the
-    scan reads exactly the part files the kept records name, so a pruned
-    file never opens a parquet footer (the Iceberg data-file-stats
-    analogy of this manifest). The same zone predicates then prune chunks
-    at the scan (parquet row-group stats on the chunk zone columns).
+    ``n_tok_range``, or semi-join the decoded frame against the id frame.
     """
     if columns is not None and not len(columns):
         raise ValueError("columns list must be non-empty")
     plan = plan_read(
         out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
     )
-    enc = _scan(spark, plan.stems.values())
-    if sources:
-        # chunk-level source zone (works on ANY layout, incl. per-file):
-        # a chunk survives only if it contains one of the wanted sources —
-        # pruned chunks never decode their blobs. NULL-TOLERANT: on a mixed
-        # out_dir (old files encoded before src_set existed + new files
-        # appended via resume) the old chunks read the column as NULL, and
-        # arrays_overlap(NULL, …) is NULL → a bare filter would silently
-        # drop every pre-upgrade chunk (r3 ADVICE). NULL zones are
-        # conservatively kept; the kernel's row test stays exact.
-        enc = enc.filter(
-            F.col("src_set").isNull()
-            | F.arrays_overlap(
-                F.col("src_set"), F.array(*[F.lit(s) for s in sources])
-            )
-        )
-    # chunk-level zones: row-group stats evaluate these at the scan, so
-    # pruned chunks never read their blob bytes
-    if plan.zones:
-        enc = enc.filter(reduce(operator.and_, [z.column() for z in plan.zones]))
     extras = read_extras(out_dir)
     names = _decoded_arrow_schema(extras).names
     if columns is not None:
@@ -1230,7 +1128,7 @@ def read_decoded(
         if unknown:
             raise ValueError(f"unknown columns: {sorted(unknown)}")
         names = [c for c in names if c in columns]
-    return _decode(enc, plan, extras, names)
+    return _decode(_scan(spark, plan.stems.values()), plan, extras, names)
 
 
 def token_read_stats(out_dir: str, token: int | list[int]) -> dict:

@@ -9,9 +9,9 @@ Parquet-bloom discipline applied to this format's own metadata:
 
   * per CHUNK: a token-membership filter rides the chunk row
     (``tok_filter`` binary column) next to the zone columns ``tok_min`` /
-    ``tok_max``. The zones prune at the parquet scan via row-group stats
-    (JVM-side, before any blob IO); the filter prunes the DECODE of
-    chunks whose token range overlaps but which don't contain the id.
+    ``tok_max``. The decode kernel tests both before any blob is parsed:
+    the zones skip chunks whose token range misses the ids, the filter
+    skips chunks whose range overlaps but which don't contain them.
   * per FILE: the OR of the chunk filters lands in a sidecar file
     ``data/<stem>/tokfilter-<uuid>.bin``, written under a fresh name
     before the manifest record that names it (in ``tok_filter``, next to

@@ -85,7 +85,8 @@ def _remap_mapping() -> "np.ndarray":
 
 
 # by-source branch reads only these sources: exercises the salted layout's
-# bucket-record pruning + chunk src_set zones under the cross-engine gate
+# bucket-record pruning + the kernel's source row test under the
+# cross-engine gate
 _SRC_FILTER = ["src0", "src19", "src7"]
 _POINT_MOD = 29  # point-lookup branch: every 29th doc id
 _LEN_RANGE = (20, 40)  # length-bucket branch: docs with 20-40 tokens
@@ -122,8 +123,8 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
     (``encode_dataset_by_source``), and incremental (``encode_stream``:
     the per-file job over the input dir) — read each back through
     ``read_decoded`` (the by-source branch with a source filter, so
-    bucket-record pruning and chunk src_set zones sit on the checked
-    path), remap the vocab, and roll up per source. The oracle never sees
+    bucket-record pruning and the kernel's source row test sit on the
+    checked path), remap the vocab, and roll up per source. The oracle never sees
     the encoded dirs — any bit divergence anywhere in any encode path, the
     decode kernels, the selective-read pruning, or the remap kernel breaks
     the value hash."""

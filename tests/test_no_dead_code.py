@@ -1,4 +1,5 @@
-"""Every top-level function and class of the engine is used somewhere.
+"""Every top-level function, class and assigned name of the engine is
+used somewhere.
 
 A use is a ``Name``, an attribute or a ``from … import`` alias in the
 engine, ``tests/``, ``scripts/``, ``perfbench/`` or ``__spark_entry__.py``,
@@ -38,6 +39,17 @@ def _uses(tree: ast.AST, reexports_count: bool = True) -> Counter:
     return uses
 
 
+def _defined(node: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a function or class, or
+    the plain and tuple targets of an assignment (dunders such as
+    ``__all__`` excepted)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = node.targets if isinstance(node, ast.Assign) else []
+    names = [e for t in targets for e in (t.elts if isinstance(t, ast.Tuple) else [t])]
+    return [n.id for n in names if isinstance(n, ast.Name) and not n.id.startswith("__")]
+
+
 def test_every_engine_definition_is_used():
     trees = {p: ast.parse(p.read_text(), str(p)) for p in _sources()}
     uses = Counter()
@@ -48,7 +60,7 @@ def test_every_engine_definition_is_used():
         if ENGINE not in p.parents:
             continue
         for node in tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if uses[node.name] - _uses(node)[node.name] <= 0:
-                    unused.append(f"{p.relative_to(ROOT)}:{node.lineno} {node.name}")
+            for name in _defined(node):
+                if uses[name] - _uses(node)[name] <= 0:
+                    unused.append(f"{p.relative_to(ROOT)}:{node.lineno} {name}")
     assert not unused, "defined but never used:\n" + "\n".join(unused)

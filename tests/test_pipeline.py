@@ -580,27 +580,6 @@ def _input_stems(df, records: dict) -> set[str]:
     return {stem_of[n] for n in names}
 
 
-def test_emit_record_batches_large_utf8_fallback():
-    """A large_utf8 array (the ≥2 GiB decode fallback) must still come out
-    as utf8 batches matching the declared schema — segmented + cast."""
-    import numpy as np
-    import pyarrow as pa
-
-    from poc_parquet_aggregator_spark.encode.pipeline import _emit_record_batches
-
-    n = 10
-    vals = [f"doc-{i:012d}" for i in range(n)]
-    big = pa.array(vals, type=pa.large_utf8())
-    schema = pa.schema([pa.field("doc_id", pa.string()), pa.field("n_tok", pa.int32())])
-    out = {"doc_id": big, "n_tok": pa.array(np.arange(n, dtype=np.int32))}
-    batches = list(_emit_record_batches(out, schema))
-    assert all(b.schema == schema for b in batches)
-    got = [v.as_py() for b in batches for v in b.column(0)]
-    assert got == vals
-    got_n = [v.as_py() for b in batches for v in b.column(1)]
-    assert got_n == list(range(n))
-
-
 def test_jdbc_live_roundtrip_derby(spark, tmp_path):
     """LIVE JDBC wire path (r2 VERDICT 'missing #3'): Spark bundles Derby,
     so the writer seam and the reader seam are exercised against a real
@@ -843,24 +822,6 @@ def test_pack_token_examples_salted_streams(spark):
     packs.unpersist()
 
 
-def test_source_zone_prunes_chunks_on_perfile_layout(spark, token_dir, tmp_path):
-    """Per-file layout: a source-filtered read now prunes chunks via the
-    src_set zone column (arrays_overlap in the plan) and returns exactly
-    the post-hoc-filtered rows."""
-    from pyspark.sql import functions as F
-
-    from poc_parquet_aggregator_spark.encode import read_decoded
-
-    out = str(tmp_path / "enc")
-    encode_dataset(spark, token_dir, out)
-    full = read_decoded(spark, out)
-    want = full.filter(F.col("source") == "src05").count()
-    got_df = read_decoded(spark, out, sources=["src05"])
-    assert got_df.count() == want > 0
-    plan = got_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "src_set" in plan and "arrays_overlap" in plan
-
-
 def test_remap_tokens_vocab_surgery(spark):
     """Vocab remap: 1:1 mapping applied token-exactly, out-of-range and
     negative-mapped ids become UNK, n_tok/doc_id/source untouched."""
@@ -885,9 +846,9 @@ def test_remap_tokens_vocab_surgery(spark):
 
 def test_null_zone_columns_conservatively_kept(spark, token_dir, tmp_path):
     """Mixed-version out_dir: chunks whose zone columns read as NULL (files
-    encoded before src_set / n_tok / doc_id zones existed) must be KEPT by
-    the chunk-level prunes, not silently dropped (r3 ADVICE). Simulated by
-    nulling the zone columns of every encoded part in place."""
+    encoded before n_tok / doc_id zones existed) must be KEPT by the
+    decode kernel's chunk zone test, not silently dropped (r3 ADVICE).
+    Simulated by nulling the zone columns of every encoded part in place."""
     import glob as _glob
 
     import pyarrow as pa
@@ -908,7 +869,6 @@ def test_null_zone_columns_conservatively_kept(spark, token_dir, tmp_path):
         tbl = pq.read_table(p)
         n = tbl.num_rows
         for col, typ in [
-            ("src_set", pa.list_(pa.string())),
             ("n_tok_min", pa.int32()),
             ("n_tok_max", pa.int32()),
             ("doc_id_min", pa.string()),
@@ -917,8 +877,8 @@ def test_null_zone_columns_conservatively_kept(spark, token_dir, tmp_path):
             idx = tbl.schema.get_field_index(col)
             tbl = tbl.set_column(idx, tbl.schema.field(idx), pa.nulls(n, typ))
         pq.write_table(tbl, p, compression="none", use_dictionary=False)
-    # zone prunes can no longer skip anything, but the exact post-decode
-    # filters still apply — same answers, no silent drop
+    # the kernel's zone test can no longer skip a chunk, but its exact
+    # row tests still apply — same answers, no silent drop
     assert read_decoded(spark, out, sources=["src05"]).count() == baseline
     assert read_decoded(spark, out, n_tok_range=(10, 100)).count() == base_range
     assert (
@@ -943,28 +903,6 @@ def test_remap_tokens_rejects_null_lists(spark):
     out = remap_tokens(df, np.arange(10, dtype=np.int32))
     with _pytest.raises(Exception, match="NULL lists"):
         out.collect()
-
-
-def test_emit_record_batches_skewed_rows_bounded_segments(monkeypatch):
-    """Segments split by cumulative PAYLOAD bytes (offset walk), not equal
-    row counts: with one giant row among many tiny ones every emitted
-    segment's payload stays under the cap (r3 ADVICE — equal-count
-    splitting could still overflow int32 offsets under skew)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from poc_parquet_aggregator_spark.encode import pipeline as P
-
-    monkeypatch.setattr(P, "_SEG_PAYLOAD_CAP", 64)
-    vals = ["x" * 60] + ["ab"] * 100 + ["y" * 61] + ["c"] * 50
-    big = pa.array(vals, type=pa.large_utf8())
-    schema = pa.schema([pa.field("s", pa.string()), pa.field("i", pa.int32())])
-    out = {"s": big, "i": pa.array(np.arange(len(vals), dtype=np.int32))}
-    batches = list(P._emit_record_batches(out, schema))
-    assert [v.as_py() for b in batches for v in b.column(0)] == vals
-    for b in batches:
-        payload = sum(len(v.as_py()) for v in b.column(0))
-        assert payload <= 64 or b.num_rows == 1  # lone oversized row ok
 
 
 def test_length_bucketed_pack_over_encoded(spark, token_dir, tmp_path):

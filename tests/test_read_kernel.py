@@ -1,6 +1,8 @@
 """The decode kernel alone returns a read's exact rows: ``_make_decode_fn``
-run in-process over every chunk row of an encoded dir (no file or chunk
-pruning in front of it) equals ``read_decoded`` for every read kind. This
+run in-process over every chunk row of an encoded dir (no file pruning in
+front of it) equals ``read_decoded`` for every read kind. The kernel's
+chunk tests are the production ones: it is the only place a chunk row is
+pruned, and it never parses the blobs of a chunk its zones exclude. This
 is the contract a runner other than Spark's ``mapInArrow`` relies on.
 Every read kind, pruned, returns the rows pyarrow computes from the input
 table, on both layouts and for input file names Spark percent-encodes.
@@ -26,6 +28,7 @@ from poc_parquet_aggregator_spark.encode import (
     read_manifest,
 )
 from poc_parquet_aggregator_spark.encode.pipeline import (
+    _ENC_ARROW_SCHEMA,
     _decoded_arrow_schema,
     _make_decode_fn,
     read_extras,
@@ -158,6 +161,9 @@ def _assert_reads_match_truth(spark, table, out):
 
 
 def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
+    """Every chunk row of every record through the kernel, with no file
+    pruning in front of it: the kernel's own chunk tests (zones, bitmap)
+    and row tests give ``read_decoded``'s rows."""
     chunks = pa.concat_tables([
         pq.read_table(os.path.join(enc_dir, p))
         for rec in read_manifest(enc_dir).values()
@@ -185,6 +191,37 @@ def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
         assert want.num_rows, kind
     assert states["range"] == {"none", "part", "all"}, states
     assert states["projection"] == {"all"}, states
+
+
+_GARBAGE = b"\xfe not a blob"
+
+
+def _garbage_chunk(**zone) -> pa.RecordBatch:
+    """One chunk row whose blobs cannot be parsed, with the zone bounds
+    ``zone`` (missing ones NULL) and no membership bitmap."""
+    row = {f: zone.get(f) for f in ("doc_id_min", "doc_id_max", "n_tok_min",
+                                    "n_tok_max", "tok_min", "tok_max")}
+    row |= {b: _GARBAGE for b in ("doc_id_blob", "source_blob", "tokens_blob", "extras_blob")}
+    return pa.RecordBatch.from_pylist([{**row, "tok_filter": None}], schema=_ENC_ARROW_SCHEMA)
+
+
+@pytest.mark.parametrize("kw", [
+    {"doc_id_range": ("doc-000000000000", "doc-000000000099")},
+    {"n_tok_range": (1, 50)},
+    {"tok_ids": 5},
+], ids=["doc_id_range", "n_tok_range", "contains_token"])
+def test_kernel_never_parses_a_chunk_its_zones_exclude(enc_dir, kw):
+    """A chunk whose zones lie outside the read yields nothing and raises
+    nothing, though its blobs are garbage: the zone test runs before any
+    blob is parsed. A chunk with NULL bounds is kept, so its garbage is
+    parsed and raises."""
+    columns = _decoded_arrow_schema([]).names
+    fn = _make_decode_fn(plan_read(enc_dir, **kw), [], columns)
+    outside = _garbage_chunk(doc_id_min="zzz-0", doc_id_max="zzz-9", n_tok_min=1_000_000,
+                             n_tok_max=1_000_005, tok_min=100_000_000, tok_max=100_000_001)
+    assert list(fn(iter([outside]))) == []
+    with pytest.raises(ValueError):
+        list(fn(iter([_garbage_chunk()])))
 
 
 @pytest.mark.parametrize("layout", ["per-file", "by-source"])
