@@ -10,7 +10,8 @@ Commands:
   stream  --input DIR --out DIR           (encode new or changed files only)
   manifest --out DIR                       (lineage summary)
   compact --out DIR                        (fold manifest JSONs into JSONL segment)
-  compact-data --out DIR [--max-parts K]   (merge multi-part encoded stems)
+  compact-data --out DIR [--max-parts K]   (merge multi-part encoded stems, delete
+                                           stem dirs no record names)
 """
 
 from __future__ import annotations

@@ -16,12 +16,15 @@ Shape mirrors the reference's chunked streaming + incremental-write design
   * the resume unit is the INPUT FILE, and its manifest record is the one
     commit step: the driver writes the merged token filter to a fresh
     sidecar name, then atomically writes the record (input snapshot,
-    per-stream codecs, checksum, bytes in/out, and the ``parts`` and
-    ``tok_filter`` files it names), then deletes the stem's files the
-    record does not name. The files the records name are the table:
-    reads scan exactly those (``plan_read``), never a directory listing.
-    At cluster scale the same protocol is an Iceberg snapshot commit (a
-    manifest listing its data files).
+    per-stream codecs, checksum, bytes in/out, the ``extras`` columns it
+    declares, and the ``parts`` and ``tok_filter`` files it names), then
+    deletes the stem's files the record does not name. The records are
+    the table's only state: reads scan exactly the files they name with
+    the extra columns they declare (``plan_read``), never a directory
+    listing or a second file, and an encode job raises unless every
+    committed record has its layout and extras. At cluster scale the same
+    protocol is an Iceberg snapshot commit (a manifest listing its data
+    files and the schema they were written with).
 
 Correctness: ``decode_verify`` decodes every partition and asserts
 bit-identical token-array equality against the source via a full outer join
@@ -36,7 +39,7 @@ import json
 import operator
 import os
 import re
-import struct
+import shutil
 import time
 import urllib.parse
 import uuid
@@ -137,8 +140,8 @@ _ENC_ARROW_SCHEMA = pa.schema(
         pa.field("doc_id_blob", pa.large_binary()),
         pa.field("source_blob", pa.large_binary()),
         pa.field("tokens_blob", pa.large_binary()),
-        # extra metadata columns beyond the core schema, as one
-        # self-describing container (see _pack_extras)
+        # extra metadata columns beyond the core schema: one payload per
+        # column the manifest record declares, in its order (_pack_extras)
         pa.field("extras_blob", pa.large_binary()),
         pa.field("meta_json", pa.string()),
     ]
@@ -151,72 +154,53 @@ _ENC_SCHEMA = from_arrow_schema(_ENC_ARROW_SCHEMA)
 #
 # A real sequence table carries metadata next to the tokens (language id,
 # quality score, crawl timestamp, …). Any column besides the required
-# (doc_id, tokens, n_tok, source) is encoded per its type and rides the
-# chunk row as one self-describing binary container:
-#   u16 n || per column: u8 len(name) | name | u8 kind | u32 len | payload
-# kinds: 1 string (string-codec blob), 2 int32 (int-codec blob),
-# 3 int64 (child(lo int32 blob) + child(hi int32 blob) — the int codecs are
-# 32-bit, so 64-bit values split into two independently-coded planes),
-# 5 float64 (a RAW, ALP or ALPRD blob, zstd-wrapped when smaller). Kind 4
-# was float64 behind a private flag byte; it is rejected, not guessed at.
-# Extras must be non-null, mirroring the input_hint's non-null schema.
-
-_X_STRING, _X_INT32, _X_INT64, _X_FLOAT64 = 1, 2, 3, 5
-_X_FLOAT64_FLAGGED = 4
-_U16 = struct.Struct("<H")
+# (doc_id, tokens, n_tok, source) is encoded per its Spark type, which every
+# manifest record declares (``extras``: [[name, spark_type], …]); the chunk
+# row holds ``children(*payloads)`` in that order. Payloads: string — a
+# string blob; integer — an int blob; long — children(lo, hi) of two int
+# blobs (the int codecs are 32-bit, so 64-bit values split into two
+# independently-coded planes); double — a RAW, ALP or ALPRD blob. Every
+# blob is zstd-wrapped when smaller. Extras must be non-null, mirroring the
+# input_hint's non-null schema.
 
 
-def _encode_extra_array(arr: "pa.Array", zstd_level: int) -> tuple[int, bytes, str]:
-    """One extra column chunk → (kind, payload, codec_name)."""
+def _encode_extra(arr: "pa.Array", kind: str, zstd_level: int) -> tuple[bytes, str]:
+    """One extra column chunk of Spark type ``kind`` → (payload, codec
+    name). Spark hands ``mapInArrow`` string, int32, int64 and float64
+    arrays for the four types ``_extra_columns`` admits."""
     if arr.null_count:
         raise ValueError("extra columns must be non-null (matches the core schema)")
-    t = arr.type
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
+    if kind == "string":
         blob, codec = encode_strings_arrow(arr)
-        return _X_STRING, wrap_zstd(blob, zstd_level), STR_CODEC_NAMES[codec]
-    # int32 path only for values that FIT int32: signed ≤32 bits or unsigned
-    # ≤16 bits. uint32 would silently wrap in an int32 astype → 64-bit path.
-    fits_i32 = pa.types.is_integer(t) and (
-        t.bit_width <= 16 or (t.bit_width == 32 and pa.types.is_signed_integer(t))
-    )
-    if fits_i32:
-        v = arr.to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
+        return wrap_zstd(blob, zstd_level), STR_CODEC_NAMES[codec]
+    v = arr.to_numpy(zero_copy_only=False)
+    if kind == "integer":
         blob, codec = encode_ints_auto(v)
-        return _X_INT32, wrap_zstd(blob, zstd_level), CODEC_NAMES[codec]
-    if pa.types.is_integer(t):  # 64-bit (and uint32): two 32-bit planes
-        if t.bit_width == 64 and not pa.types.is_signed_integer(t):
-            raise ValueError("uint64 extras unsupported (values may exceed int64)")
-        v = arr.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        lo = (v & 0xFFFFFFFF).astype(np.uint32).view(np.int32)
-        hi = (v >> 32).astype(np.int32)
-        lo_blob, lo_c = encode_ints_auto(lo)
-        hi_blob, hi_c = encode_ints_auto(hi)
+        return wrap_zstd(blob, zstd_level), CODEC_NAMES[codec]
+    if kind == "long":
+        lo_blob, lo_c = encode_ints_auto((v & 0xFFFFFFFF).astype(np.uint32).view(np.int32))
+        hi_blob, hi_c = encode_ints_auto((v >> 32).astype(np.int32))
         payload = children(wrap_zstd(lo_blob, zstd_level), wrap_zstd(hi_blob, zstd_level))
-        return _X_INT64, payload, f"{CODEC_NAMES[lo_c]}+{CODEC_NAMES[hi_c]}"
-    if pa.types.is_float64(t) or pa.types.is_float32(t):
-        # the raw doubles (zstd-wrapped when smaller) and both ALP modes
-        # (codecs/floats.py) compete on exact encoded size like every
-        # other codec in the stack — decimal columns win big through the
-        # int planes, high-precision columns through the front-bit
-        # dictionary, and anything else falls back to the raw blob.
-        v = arr.cast(pa.float64()).to_numpy(zero_copy_only=False)
-        raw = wrap_zstd(raw_blob(v.tobytes()), zstd_level)
-        cands = [(raw, "f64_zstd" if raw[0] == ZSTD else "f64_raw")]
-        for enc in (encode_floats_alp(v, zstd_level), encode_floats_alprd(v, zstd_level)):
-            if enc is not None:
-                cands.append(enc)
-        payload, name = min(cands, key=lambda c: len(c[0]))
-        return _X_FLOAT64, payload, name
-    raise ValueError(f"unsupported extra column type: {t}")
+        return payload, f"{CODEC_NAMES[lo_c]}+{CODEC_NAMES[hi_c]}"
+    # double: the raw doubles (zstd-wrapped when smaller) and both ALP
+    # modes (codecs/floats.py) compete on exact encoded size like every
+    # other codec in the stack — decimal columns win big through the int
+    # planes, high-precision columns through the front-bit dictionary, and
+    # anything else falls back to the raw blob.
+    raw = wrap_zstd(raw_blob(v.tobytes()), zstd_level)
+    cands = [(raw, "f64_zstd" if raw[0] == ZSTD else "f64_raw")]
+    for enc in (encode_floats_alp(v, zstd_level), encode_floats_alprd(v, zstd_level)):
+        if enc is not None:
+            cands.append(enc)
+    return min(cands, key=lambda c: len(c[0]))
 
 
 def _pack_extras(
-    part: "pa.RecordBatch", names: list[str], zstd_level: int, meta: dict
+    part: "pa.RecordBatch", extras: list[list[str]], zstd_level: int, meta: dict
 ) -> tuple[bytes, int]:
     """(container blob, raw input byte count) for the extra columns."""
-    out = [_U16.pack(len(names))]
-    raw_bytes = 0
-    for name in names:
+    payloads, raw_bytes = [], 0
+    for name, kind in extras:
         idx = part.schema.get_field_index(name)
         if idx < 0:  # column(-1) would silently return the LAST column
             raise ValueError(
@@ -224,59 +208,35 @@ def _pack_extras(
                 "heterogeneous input schemas are not supported"
             )
         arr = part.column(idx)
-        if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
+        if kind == "string":
             raw_bytes += len(utf8_buffers(arr)[0])
         else:
             raw_bytes += (arr.type.bit_width // 8) * len(arr)
-        kind, payload, codec = _encode_extra_array(arr, zstd_level)
+        payload, codec = _encode_extra(arr, kind, zstd_level)
         meta["streams"][f"extra:{name}"] = codec
-        nb = name.encode("utf-8")
-        out.append(
-            bytes([len(nb)]) + nb + bytes([kind]) + struct.pack("<I", len(payload)) + payload
-        )
-    return b"".join(out), raw_bytes
+        payloads.append(payload)
+    return children(*payloads), raw_bytes
 
 
-def _unpack_extras(blob: bytes) -> dict[str, tuple[int, bytes]]:
-    """The extras container → {name: (kind, payload)}."""
-    mv = memoryview(blob)
-    (n,) = _U16.unpack_from(mv, 0)
-    pos = 2
-    out = {}
-    for _ in range(n):
-        ln = mv[pos]
-        name = bytes(mv[pos + 1 : pos + 1 + ln]).decode("utf-8")
-        kind = mv[pos + 1 + ln]
-        (plen,) = struct.unpack_from("<I", mv, pos + 2 + ln)
-        out[name] = (kind, bytes(mv[pos + 6 + ln : pos + 6 + ln + plen]))
-        pos += 6 + ln + plen
-    return out
-
-
-def _decode_extra(kind: int, payload: bytes, n: int):
-    if kind == _X_STRING:
+def _decode_extra(kind: str, payload: bytes) -> "pa.Array":
+    """An extra column's payload, decoded by its declared Spark type."""
+    if kind == "string":
         return decode_strings_arrow(payload)
-    if kind == _X_INT32:
+    if kind == "integer":
         return pa.array(decode_ints(payload), type=pa.int32())
-    if kind == _X_INT64:
+    if kind == "long":
         lo_blob, hi_blob = read_children(memoryview(payload), 0, 2)
         lo, hi = decode_ints(lo_blob), decode_ints(hi_blob)
         v = (hi.astype(np.int64) << 32) | (lo.view(np.uint32).astype(np.int64))
         return pa.array(v, type=pa.int64())
-    if kind == _X_FLOAT64:
-        blob = unwrap_zstd(payload)
-        if blob[0] == ALP:
-            v = decode_floats_alp(blob)
-        elif blob[0] == ALPRD:
-            v = decode_floats_alprd(blob)
-        else:
-            v = np.frombuffer(decode_raw(blob), dtype=np.float64)
-        return pa.array(v, type=pa.float64())
-    if kind == _X_FLOAT64_FLAGGED:
-        raise ValueError(
-            "float64 extra column in the pre-framing layout (kind 4); re-encode the dataset"
-        )
-    raise ValueError(f"unknown extra kind {kind}")
+    blob = unwrap_zstd(payload)  # double
+    if blob[0] == ALP:
+        v = decode_floats_alp(blob)
+    elif blob[0] == ALPRD:
+        v = decode_floats_alprd(blob)
+    else:
+        v = np.frombuffer(decode_raw(blob), dtype=np.float64)
+    return pa.array(v, type=pa.float64())
 
 
 # decoded columns as Arrow types: the core schema, then the extras by their
@@ -332,7 +292,7 @@ def _write_part(out_dir: str, stem: str, tbl: pa.Table) -> str:
 
 
 def _encode_chunk_row(
-    part: pa.RecordBatch, zstd_level: int = 3, extras: list[str] | None = None
+    part: pa.RecordBatch, zstd_level: int = 3, extras: list[list[str]] | None = None
 ) -> dict:
     """Encode one Arrow batch → its chunk row (``_ENC_ARROW_SCHEMA``
     columns plus the ``fold_parts`` keys that schema drops).
@@ -468,7 +428,7 @@ def _make_encode_fn(
     out_dir: str,
     zstd_level: int = 3,
     key: str = "_file",
-    extras: list[str] | None = None,
+    extras: list[list[str]] | None = None,
 ):
     stem_of = (lambda f: _stem(_local_path(f))) if key == "_file" else (lambda s: s)
 
@@ -515,11 +475,14 @@ def _token_id_list(contains_token) -> list[int]:
     return ids
 
 
-def _decode_column(row: dict, name: str, got: dict, via_tokens: bool) -> "pa.Array":
+def _decode_column(
+    row: dict, name: str, got: dict, via_tokens: bool, extras: tuple
+) -> "pa.Array":
     """Column ``name`` of one chunk row, parsed from its blob at most once
     (``got`` caches per row). ``n_tok`` comes from the full token decode
     when ``via_tokens``, else from the lengths stream alone
-    (decode_chunk_lengths)."""
+    (decode_chunk_lengths); an extra column from its child of the
+    container, one child per declared ``extras`` (name, spark type)."""
     if name in got:
         return got[name]
     blob = bytes(row[_BLOB_OF.get(name, "extras_blob")])
@@ -535,17 +498,18 @@ def _decode_column(row: dict, name: str, got: dict, via_tokens: bool) -> "pa.Arr
         got["n_tok"] = pa.array(decode_chunk_lengths(blob), type=pa.int32())
     elif name in _BLOB_OF:
         got[name] = decode_strings_arrow(blob)
-    else:  # an extra: unpack the shared container once per row
+    else:  # an extra: split the shared container once per row
         if "extras_blob" not in got:
-            got["extras_blob"] = _unpack_extras(blob)
-        got[name] = _decode_extra(*got["extras_blob"][name], 0)
+            payloads = read_children(memoryview(blob), 0, len(extras))
+            got["extras_blob"] = {n: (t, p) for (n, t), p in zip(extras, payloads)}
+        got[name] = _decode_extra(*got["extras_blob"][name])
     return got[name]
 
 
-def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list[str]):
+def _make_decode_fn(plan: ReadPlan, columns: list[str]):
     """Decode kernel: chunk rows in, the read's exact rows of ``columns``
-    out; the one place a chunk is pruned. ``extras`` = [(name,
-    spark_type_name)] as the encode job recorded in the layout. Per chunk,
+    out; the one place a chunk is pruned. The extra columns are the ones
+    the records declare (``plan.extras``). Per chunk,
     before any blob is parsed: ``plan.zones`` skip the chunk with the test
     the keep-list applies to records (``_Zone.keeps``), then the
     membership bitmap skips it when it proves every ``plan.tok_ids``
@@ -553,7 +517,7 @@ def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list
     and their masks ANDed, and a chunk with no surviving row stops there;
     then the remaining output columns are decoded and filtered. Blobs no
     test or output column needs are never parsed."""
-    schema = _decoded_arrow_schema(extras, columns)
+    schema = _decoded_arrow_schema(plan.extras, columns)
     via_tokens = "tokens" in {*columns, *(c for c, _ in plan.rows)}
 
     def decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -568,12 +532,13 @@ def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list
                 got: dict[str, pa.Array] = {}
                 keep = None
                 for name, test in plan.rows:
-                    hit = test(_decode_column(row, name, got, via_tokens))
+                    hit = test(_decode_column(row, name, got, via_tokens, plan.extras))
                     keep = hit if keep is None else keep & hit
                     if not keep.any():
                         break
                 else:  # some row survives every test
-                    out = {c: _decode_column(row, c, got, via_tokens) for c in schema.names}
+                    out = {c: _decode_column(row, c, got, via_tokens, plan.extras)
+                           for c in schema.names}
                     if keep is not None and not keep.all():
                         out = {c: a.filter(pa.array(keep)) for c, a in out.items()}
                     yield pa.RecordBatch.from_arrays(list(out.values()), schema=schema)
@@ -581,9 +546,7 @@ def _make_decode_fn(plan: ReadPlan, extras: list[tuple[str, str]], columns: list
     return decode_batches
 
 
-def _decode(
-    enc: DataFrame, plan: ReadPlan, extras: list[tuple[str, str]], columns: list[str]
-) -> DataFrame:
+def _decode(enc: DataFrame, plan: ReadPlan, columns: list[str]) -> DataFrame:
     """The one decode call: scan only what the kernel reads — the blobs it
     parses, the zone columns of ``plan.zones`` and the chunk bitmaps of a
     token read — and map it to the read's rows."""
@@ -592,8 +555,8 @@ def _decode(
     if plan.tok_ids is not None:
         cols.add("tok_filter")
     return enc.select(*sorted(cols)).mapInArrow(
-        _make_decode_fn(plan, extras, columns),
-        schema=from_arrow_schema(_decoded_arrow_schema(extras, columns)),
+        _make_decode_fn(plan, columns),
+        schema=from_arrow_schema(_decoded_arrow_schema(plan.extras, columns)),
     )
 
 
@@ -617,9 +580,10 @@ def _atomic_write(path: str, data: str | bytes) -> None:
 
 def _manifest_paths(out_dir: str) -> tuple[list[str], list[str]]:
     """(segments ascending, loose per-file JSONs) — the ONE listing whose
-    rules (segment glob order, underscore exclusion for job-level
-    summaries) every manifest reader shares; read_manifest and the
-    compactors must agree on it byte for byte."""
+    rules (segment glob order, underscore exclusion: the job-level files
+    older builds kept here are never records) every manifest reader
+    shares; read_manifest and the compactors must agree on it byte for
+    byte."""
     mdir = _manifest_dir(out_dir)
     segs = sorted(glob.glob(os.path.join(mdir, "_compacted-*.jsonl")))
     loose = [
@@ -692,21 +656,23 @@ class ReadPlan:
     column, test) pairs, each test mapping that column's Arrow array to a
     numpy bool mask, which the decode kernel ANDs. ``stems`` maps every kept file's
     stem to the part files its record names (the files the read scans);
-    ``funnel`` counts files per pruning stage."""
+    ``funnel`` counts files per pruning stage; ``extras`` are the extra
+    columns (name, spark type) every record declares, in container order."""
 
     zones: tuple
     tok_ids: list[int] | None
     rows: tuple
     stems: dict[str, list[str]]
     funnel: dict
+    extras: tuple
 
 
 def _part_files(out_dir: str, rec: dict) -> list[str]:
     """The part files a committed record names: exactly its stem's rows."""
-    if "parts" not in rec:
+    if "parts" not in rec or "extras" not in rec:
         raise ValueError(
             f"manifest record {rec['file_stem']!r} predates records that name "
-            "their part files; re-encode the dataset"
+            "their part files and extra columns; re-encode the dataset"
         )
     return [os.path.join(out_dir, p) for p in rec["parts"]]
 
@@ -735,29 +701,35 @@ def _sidecar_keeps(out_dir: str, rec: dict, tok_ids: list[int]) -> bool:
 
 def _keep_list(
     out_dir: str, zones: tuple, tok_ids: list[int] | None, sources: set[str] | None
-) -> tuple[dict[str, list[str]], dict]:
+) -> tuple[dict[str, list[str]], dict, tuple]:
     """Driver keep-list over ``read_manifest``: (kept stem → its part
-    files, funnel). Each record is tested against the zones, then a
+    files, funnel, the extra columns the records declare — all records
+    must agree). Each record is tested against the zones, then a
     by-source bucket record by its ``source``, then a token read's
     sidecar probe."""
-    stems, zone_pruned, source_pruned = {}, 0, 0
+    stems, zone_pruned, source_pruned, extras = {}, 0, 0, set()
     records = read_manifest(out_dir)
     for stem, rec in records.items():
         files = _part_files(out_dir, rec)
+        extras.add(tuple(map(tuple, rec["extras"])))
         if not all(z.keeps(rec) for z in zones):
             zone_pruned += 1
         elif sources is not None and "source" in rec and rec["source"] not in sources:
             source_pruned += 1
         elif tok_ids is None or _sidecar_keeps(out_dir, rec, tok_ids):
             stems[stem] = files
+    if len(extras) > 1:
+        raise ValueError(
+            f"manifest records declare different extra columns {sorted(extras)}; "
+            "re-encode into a fresh out_dir"
+        )
     return stems, {
         "files_total": len(records),
         "files_zone_pruned": zone_pruned,
         "files_source_pruned": source_pruned,
         "files_filter_pruned": len(records) - zone_pruned - source_pruned - len(stems),
         "files_kept": len(stems),
-    }
-
+    }, extras.pop() if extras else ()
 
 
 def plan_read(
@@ -796,10 +768,10 @@ def plan_read(
     if tids is not None:  # ANY-match: per-id spans OR'd
         zones.append(_Zone("tok", tuple((t, t) for t in tids)))
         rows.append(("tokens", partial(_has_any, tids)))
-    stems, funnel = _keep_list(
+    stems, funnel, extras = _keep_list(
         out_dir, tuple(zones), tids, None if sources is None else set(sources)
     )
-    return ReadPlan(tuple(zones), tids, tuple(rows), stems, funnel)
+    return ReadPlan(tuple(zones), tids, tuple(rows), stems, funnel, extras)
 
 
 def compact_manifest(out_dir: str) -> dict:
@@ -850,16 +822,26 @@ def compact_encoded(out_dir: str, max_parts: int = 1) -> dict:
     encode (``_commit``): the record naming it is the switch, and the old
     parts are deleted after it. A crash at any point leaves either the
     old record with its parts or the new record with the merged part.
+
+    Then every ``data/<stem>/`` dir no record names is deleted: a stem
+    whose first encode crashed before its record, and whose input is gone,
+    is never committed again. The sweep must not run beside an encode job
+    into the same out_dir, whose new stems have no record yet.
     """
     compacted = 0
-    for stem, rec in sorted(read_manifest(out_dir).items()):
+    records = read_manifest(out_dir)
+    for stem, rec in sorted(records.items()):
         parts = _part_files(out_dir, rec)
         if len(parts) <= max_parts:
             continue
         part = _write_part(out_dir, stem, pa.concat_tables([pq.read_table(p) for p in parts]))
         _commit(out_dir, {**rec, "parts": [part], "n_parts": 1, "compacted_at": time.time()})
         compacted += 1
-    return {"stems_compacted": compacted}
+    data = os.path.join(out_dir, "data")
+    orphans = sorted(set(os.listdir(data)) - set(records)) if os.path.isdir(data) else []
+    for stem in orphans:
+        shutil.rmtree(os.path.join(data, stem))
+    return {"stems_compacted": compacted, "stems_swept": len(orphans)}
 
 
 def _snapshot(path: str) -> dict:
@@ -873,36 +855,6 @@ def _snapshot_matches(rec: dict, path: str) -> bool:
     snap = rec.get("snapshot", {})
     st = os.stat(path)
     return snap.get("size") == st.st_size and snap.get("mtime_ns") == st.st_mtime_ns
-
-
-_LAYOUT_FILE = "_layout.json"
-
-
-def write_layout(out_dir: str, layout: str, extras: list[list[str]] | None = None) -> None:
-    """Record the physical layout (per-file | by-source) and the extra
-    metadata columns [(name, spark_type)] in the manifest dir; read_decoded
-    uses the extras list to assemble the decoded schema (atomic rename, same
-    protocol as every other manifest write)."""
-    _atomic_write(
-        os.path.join(_manifest_dir(out_dir), _LAYOUT_FILE),
-        json.dumps({"layout": layout, "extras": extras or []}),
-    )
-
-
-def _read_layout_record(out_dir: str) -> dict:
-    p = os.path.join(_manifest_dir(out_dir), _LAYOUT_FILE)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
-
-
-def read_layout(out_dir: str) -> str | None:
-    return _read_layout_record(out_dir).get("layout")
-
-
-def read_extras(out_dir: str) -> list[tuple[str, str]]:
-    return [tuple(e) for e in _read_layout_record(out_dir).get("extras", [])]
 
 
 def _commit(out_dir: str, rec: dict) -> None:
@@ -992,22 +944,30 @@ def _extra_columns(schema: T.StructType) -> list[tuple[str, str]]:
 
 def _encode_parts(
     spark: SparkSession, df: DataFrame, files: list[str], out_dir: str,
-    layout: str, key: str, zstd_level: int,
-) -> dict[str, list]:
+    done: dict[str, dict], key: str, zstd_level: int,
+) -> tuple[dict[str, list], list[list[str]]]:
     """The encode job of both layouts: ``df`` (the input rows plus the
     commit ``key`` column, filtered and shuffled as the caller needs)
-    through ``_make_encode_fn``; returns the part rows by stem.
+    through ``_make_encode_fn``; returns (the part rows by stem, the extra
+    columns [[name, spark type], …] each of the job's records declares).
 
-    The layout and the extra metadata columns are input-derived, not
-    completion-derived: they are recorded BEFORE any commit, so a crash
-    after the last commit can't leave extras undecodable. The scan's
-    splits are sized to the cluster (Spark's default 128 MB bin-packing
-    would coalesce many small files into a handful of tasks and leave
-    most cores idle): ``files``' bytes over ≥2 waves of parallelism. The
-    split confs hold for this job's scan only and are restored, or unset,
-    when it returns or raises."""
-    extras = _extra_columns(df.drop(key).schema)
-    write_layout(out_dir, layout, extras=[list(e) for e in extras])
+    Before any task runs, every committed record in ``done`` must have
+    the job's layout (by-source records carry ``n_salts``) and extra
+    columns, otherwise the job raises: a read serves all records as one
+    table. The scan's splits are sized to the cluster (Spark's default
+    128 MB bin-packing would coalesce many small files into a handful of
+    tasks and leave most cores idle): ``files``' bytes over ≥2 waves of
+    parallelism. The split confs hold for this job's scan only and are
+    restored, or unset, when it returns or raises."""
+    extras = [list(e) for e in _extra_columns(df.drop(key).schema)]
+    by_source = key == "_bucket"
+    for stem, rec in done.items():
+        if ("n_salts" in rec) != by_source or rec.get("extras") != extras:
+            raise ValueError(
+                f"record {stem!r} (by-source: {'n_salts' in rec}, extras {rec.get('extras')}) "
+                f"does not match this job (by-source: {by_source}, extras {extras}); "
+                "encode into a fresh out_dir"
+            )
     n_tasks = 2 * spark.sparkContext.defaultParallelism
     split = max(sum(os.stat(f).st_size for f in files) // n_tasks + 1, 1 << 20)
     confs = {"spark.sql.files.maxPartitionBytes": str(split),
@@ -1017,7 +977,7 @@ def _encode_parts(
         for k, v in confs.items():
             spark.conf.set(k, v)
         meta_rows = df.mapInArrow(
-            _make_encode_fn(out_dir, zstd_level, key=key, extras=[n for n, _ in extras]),
+            _make_encode_fn(out_dir, zstd_level, key=key, extras=extras),
             schema=META_SCHEMA,
         ).collect()
     finally:
@@ -1029,7 +989,7 @@ def _encode_parts(
     by_stem: dict[str, list] = {}
     for r in meta_rows:
         by_stem.setdefault(r["file_stem"], []).append(r)
-    return by_stem
+    return by_stem, extras
 
 
 def encode_dataset(
@@ -1059,12 +1019,13 @@ def encode_dataset(
     }
     if todo:
         df = spark.read.parquet(*todo).withColumn("_file", F.input_file_name())
-        by_stem = _encode_parts(spark, df, todo, out_dir, "per-file", "_file", zstd_level)
+        by_stem, extras = _encode_parts(spark, df, todo, out_dir, done, "_file", zstd_level)
         # commit per file (a file may yield several part rows if Spark split
         # it); an empty input file yields none and commits a zero record,
         # so resume doesn't rescan it forever
         for f in todo:
-            _commit_parts(out_dir, _stem(f), by_stem.get(_stem(f), []), snapshot=_snapshot(f))
+            rows = by_stem.get(_stem(f), [])
+            _commit_parts(out_dir, _stem(f), rows, extras=extras, snapshot=_snapshot(f))
 
     _job_metrics(metrics, out_dir, files, t0)
     return metrics
@@ -1121,14 +1082,13 @@ def read_decoded(
     plan = plan_read(
         out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
     )
-    extras = read_extras(out_dir)
-    names = _decoded_arrow_schema(extras).names
+    names = _decoded_arrow_schema(plan.extras).names
     if columns is not None:
         unknown = set(columns) - set(names)
         if unknown:
             raise ValueError(f"unknown columns: {sorted(unknown)}")
         names = [c for c in names if c in columns]
-    return _decode(_scan(spark, plan.stems.values()), plan, extras, names)
+    return _decode(_scan(spark, plan.stems.values()), plan, names)
 
 
 def token_read_stats(out_dir: str, token: int | list[int]) -> dict:
@@ -1158,14 +1118,13 @@ def decode_verify(
     plan = plan_read(out_dir)
     parts = plan.stems.values()
     if fraction < 1.0:
-        if read_layout(out_dir) == "by-source":
+        if any("n_salts" in r for r in read_manifest(out_dir).values()):
             raise ValueError("sampled verify requires the per-file layout")
         cut = int(fraction * 1000)
         sampled = [f for f in files if zlib.crc32(_stem(f).encode()) % 1000 < cut]
         files = sampled or files[:1]
         parts = [plan.stems[s] for s in map(_stem, files) if s in plan.stems]
-    extras = read_extras(out_dir)
-    dec = _decode(_scan(spark, parts), plan, extras, _decoded_arrow_schema(extras).names)
+    dec = _decode(_scan(spark, parts), plan, _decoded_arrow_schema(plan.extras).names)
     src = spark.read.parquet(*files)
     joined = src.alias("s").join(dec.alias("d"), "doc_id", "full_outer")
     same = (
@@ -1173,7 +1132,7 @@ def decode_verify(
         & (F.col("s.n_tok") == F.col("d.n_tok"))
         & (F.col("s.source") == F.col("d.source"))
     )
-    for name, t in extras:
+    for name, t in plan.extras:
         a, b = F.col(f"s.{name}"), F.col(f"d.{name}")
         eq = a == b
         if t == "double":  # NaN round-trips bit-identically but NaN != NaN

@@ -12,6 +12,10 @@ Plan shape:
     df.repartition(n_buckets, "bucket") → mapInArrow encode → per-bucket
     commit (the same manifest-record commit as the per-file job)
 
+Each bucket record carries ``source``, ``salt``, ``n_salts``, the input
+snapshot and ``n_buckets``, the size of the bucket universe of its run:
+the records alone tell a resume whether every bucket is committed.
+
 n_salts bounds the largest bucket at ~60%/n_salts of the data; AQE's
 skew-join handling does not apply here (no join), so the salt IS the
 mechanism. Salting is deterministic on doc_id, so a resumed run reproduces
@@ -20,7 +24,6 @@ identical buckets byte-for-byte.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import zlib
@@ -29,7 +32,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
-    _atomic_write,
     _commit_parts,
     _encode_parts,
     _input_files,
@@ -62,7 +64,8 @@ def encode_dataset_by_source(
     serving rows the input no longer has) — encode a changed input into a
     fresh out_dir. Bucket records carry ``n_salts``: resuming them with
     another value raises, since its buckets would split the rows
-    differently.
+    differently. They also carry ``n_buckets``: the scan is skipped only
+    when every record's count equals the number of records.
     """
     t0 = time.time()
     files = _input_files(input_path)
@@ -81,19 +84,9 @@ def encode_dataset_by_source(
                 f"n_salts={committed} or encode into a fresh out_dir"
             )
 
-    # the bucket universe is data-dependent: a complete prior run records it
-    # in a job summary, so "all buckets committed" is decidable on resume
-    # even when individual manifests were lost
-    job_path = os.path.join(out_dir, "_manifest", "_job.json")
-    expected: list[str] | None = None
-    if os.path.exists(job_path):
-        with open(job_path) as f:
-            job = json.load(f)
-        if job.get("snapshot") == snapshot:
-            expected = job["buckets"]
     metrics = {"buckets_skipped": len(done)}
 
-    if expected is None or not all(b in done for b in expected):
+    if not done or any(r.get("n_buckets") != len(done) for r in done.values()):
         bucket = F.concat(
             F.col("source"),
             F.lit("_s"),
@@ -108,19 +101,14 @@ def encode_dataset_by_source(
         # ratio) and makes chunk boundaries deterministic after the shuffle.
         n_buckets_hint = max(spark.sparkContext.defaultParallelism, n_salts)
         df = df.repartition(n_buckets_hint, "_bucket").sortWithinPartitions("_bucket", "doc_id")
-        by_bucket = _encode_parts(spark, df, files, out_dir, "by-source", "_bucket", zstd_level)
+        by_bucket, extras = _encode_parts(spark, df, files, out_dir, done, "_bucket", zstd_level)
+        n_buckets = len(set(done) | set(by_bucket))
         for stem, rows in by_bucket.items():
             source, salt = stem.rsplit("_s", 1)
             _commit_parts(
-                out_dir, stem, rows,
-                source=source, salt=int(salt), n_salts=n_salts, snapshot=snapshot,
+                out_dir, stem, rows, extras=extras, source=source, salt=int(salt),
+                n_salts=n_salts, n_buckets=n_buckets, snapshot=snapshot,
             )
-        # job summary: the complete bucket universe for this snapshot
-        all_buckets = sorted(set(done) | set(by_bucket))
-        _atomic_write(
-            job_path,
-            json.dumps({"snapshot": snapshot, "n_salts": n_salts, "buckets": all_buckets}),
-        )
 
     manifest = _job_metrics(metrics, out_dir, files, t0)
     metrics["buckets_total"] = len(manifest)

@@ -169,28 +169,14 @@ def test_raw_blob_framing_property(first, body, repeat, level):
 def test_float_extras_arbitrary_bytes_property(first, body, repeat):
     """Float extras whose doubles are arbitrary bit patterns (any first
     byte, incompressible or repetitive) round-trip bit-exactly."""
-    from poc_parquet_aggregator_spark.encode.pipeline import (
-        _decode_extra,
-        _encode_extra_array,
-    )
+    from poc_parquet_aggregator_spark.encode.pipeline import _decode_extra, _encode_extra
 
     raw = bytes([first]) + body * repeat
     raw = raw[: len(raw) // 8 * 8] or bytes([first]) * 8
     v = np.frombuffer(raw, dtype=np.float64)
-    kind, payload, _ = _encode_extra_array(pa.array(v, type=pa.float64()), 3)
-    out = _decode_extra(kind, payload, len(v)).to_numpy(zero_copy_only=False)
+    payload, _ = _encode_extra(pa.array(v, type=pa.float64()), "double", 3)
+    out = _decode_extra("double", payload).to_numpy(zero_copy_only=False)
     assert out.view(np.int64).tolist() == v.view(np.int64).tolist()
-
-
-def test_old_float_extras_layout_rejected():
-    """Float extras from before the blob framing (kind 4: a private flag
-    byte in front of raw/zstd/ALP bytes) must fail loudly, never decode."""
-    from poc_parquet_aggregator_spark.encode.pipeline import _decode_extra
-
-    raw = np.arange(16, dtype=np.float64).tobytes()
-    for old in (b"\x00" + raw, b"\x01" + wrap_zstd(CI.raw_blob(raw))):
-        with pytest.raises(ValueError, match="re-encode"):
-            _decode_extra(4, old, 16)
 
 
 def test_selector_picks_the_right_regime():
@@ -252,20 +238,17 @@ def test_arrow_fsst_branch_from_buffers():
 def test_extras_container_property(ss, i32s, i64s, f64s):
     """Extra-column container: every supported type round-trips exactly
     (including NaN/inf doubles and int64 extremes)."""
-    from poc_parquet_aggregator_spark.encode.pipeline import (
-        _decode_extra,
-        _encode_extra_array,
-    )
+    from poc_parquet_aggregator_spark.encode.pipeline import _decode_extra, _encode_extra
 
-    arrays = [
-        pa.array(ss, type=pa.string()),
-        pa.array(np.array(i32s, dtype=np.int32), type=pa.int32()),
-        pa.array(np.array(i64s, dtype=np.int64), type=pa.int64()),
-        pa.array(np.array(f64s, dtype=np.float64), type=pa.float64()),
-    ]
-    for arr in arrays:
-        kind, payload, _codec = _encode_extra_array(arr, 3)
-        out = _decode_extra(kind, payload, len(arr))
+    arrays = {
+        "string": pa.array(ss, type=pa.string()),
+        "integer": pa.array(np.array(i32s, dtype=np.int32), type=pa.int32()),
+        "long": pa.array(np.array(i64s, dtype=np.int64), type=pa.int64()),
+        "double": pa.array(np.array(f64s, dtype=np.float64), type=pa.float64()),
+    }
+    for kind, arr in arrays.items():
+        payload, _codec = _encode_extra(arr, kind, 3)
+        out = _decode_extra(kind, payload)
         a = arr.to_pandas().to_numpy()
         b = out.to_pandas().to_numpy()
         if arr.type == pa.float64():
@@ -338,11 +321,7 @@ class TestAlpFloats:
         assert enc is None  # 0 sample hits -> fast-path skip
 
     def test_extra_container_selects_alp_only_when_smaller(self):
-        from poc_parquet_aggregator_spark.encode.pipeline import (
-            _X_FLOAT64,
-            _decode_extra,
-            _encode_extra_array,
-        )
+        from poc_parquet_aggregator_spark.encode.pipeline import _decode_extra, _encode_extra
 
         rng = np.random.default_rng(3)
         cases = {
@@ -352,9 +331,8 @@ class TestAlpFloats:
         }
         for label, v in cases.items():
             arr = pa.array(v, type=pa.float64())
-            kind, payload, codec = _encode_extra_array(arr, 3)
-            assert kind == _X_FLOAT64
-            out = _decode_extra(kind, payload, len(arr)).to_numpy(zero_copy_only=False)
+            payload, codec = _encode_extra(arr, "double", 3)
+            out = _decode_extra("double", payload).to_numpy(zero_copy_only=False)
             assert out.view(np.int64).tolist() == v.view(np.int64).tolist(), label
             if label == "noise":
                 # decimal ALP declined (full mantissas) — the ALPrd

@@ -12,12 +12,16 @@ in a by-source resume also reruns to those bytes, and one in
 A named file that is gone fails the read instead of dropping its rows,
 and a by-source resume with another ``n_salts``, or over records of
 another input, raises instead of skipping buckets or serving stale
-ones."""
+ones. The records are the table's only state: a per-file encode over
+by-source records raises instead of serving each row twice, a record
+that declares no extra columns raises, and ``compact_encoded`` deletes
+the stem dirs no record names."""
 
 from __future__ import annotations
 
 import importlib.util
 import itertools
+import json
 import os
 import shutil
 from functools import partial
@@ -38,7 +42,6 @@ from poc_parquet_aggregator_spark.encode import (
     read_manifest,
 )
 from poc_parquet_aggregator_spark.encode import pipeline as P
-from poc_parquet_aggregator_spark.encode import salted as S
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import generate_token_table
 
@@ -101,8 +104,7 @@ def _crash_at(mp, k: int, out: str) -> list:
 
         return crashing
 
-    for mod in (P, S):  # the by-source job summary is written through S
-        mp.setattr(mod, "_atomic_write", wrap(P._atomic_write))
+    mp.setattr(P, "_atomic_write", wrap(P._atomic_write))
     for mod, name in ((os, "remove"), (os, "unlink"), (shutil, "rmtree")):
         mp.setattr(mod, name, wrap(getattr(mod, name)))
     return calls
@@ -182,9 +184,8 @@ def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path):
 
 def test_crash_at_every_commit_step_of_a_by_source_resume(spark, tmp_path):
     """A by-source run cut after all but two buckets committed: a crash
-    anywhere in its resume (layout, sidecars, records, the deletes of the
-    cut run's files, the job summary) reruns to the bytes of an
-    uninterrupted resume."""
+    anywhere in its resume (sidecars, records, the deletes of the cut
+    run's files) reruns to the bytes of an uninterrupted resume."""
     src = str(tmp_path / "src")
     _write(src, 0, seed=8)
     _write(src, DOCS_PER_FILE, seed=8)
@@ -245,7 +246,6 @@ def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path):
     for stem, rec in read_manifest(out).items():
         if rec["salt"] >= 4:
             os.remove(os.path.join(out, "_manifest", f"{stem}.json"))
-    os.remove(os.path.join(out, "_manifest", "_job.json"))
     with pytest.raises(ValueError, match=r"n_salts=8.*n_salts=2"):
         encode_dataset_by_source(spark, src, out, n_salts=2)
     m = encode_dataset_by_source(spark, src, out, n_salts=8)
@@ -273,3 +273,60 @@ def test_by_source_re_encode_after_an_input_change_raises(spark, tmp_path):
     n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
     assert m["n_docs"] == n_rows < 2 * DOCS_PER_FILE
     assert read_decoded(spark, fresh).count() == n_rows
+
+
+def test_per_file_encode_over_by_source_records_raises(spark, tmp_path):
+    """A per-file encode into a by-source out_dir would commit every row a
+    second time under its file stem, and reads would serve each doc
+    twice: it raises before any task runs, and the table still reads
+    each doc once."""
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=11)
+    out = str(tmp_path / "enc")
+    encode_dataset_by_source(spark, src, out, n_salts=2)
+    before = read_manifest(out)
+    with pytest.raises(ValueError, match=r"by-source: True.*by-source: False.*fresh out_dir"):
+        encode_dataset(spark, src, out)
+    assert read_manifest(out) == before
+    ids = [r[0] for r in read_decoded(spark, out, columns=["doc_id"]).collect()]
+    assert len(ids) == len(set(ids)) == DOCS_PER_FILE
+
+
+def test_pre_change_record_raises_re_encode(spark, tmp_path):
+    """A record that declares no extra columns (written before records
+    did) makes reads raise "re-encode", and an encode job over it raise
+    "fresh out_dir": its chunks' extras container is not the one the
+    decoder parses."""
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=12)
+    out = str(tmp_path / "enc")
+    encode_dataset(spark, src, out)
+    ((stem, rec),) = read_manifest(out).items()
+    del rec["extras"]
+    with open(os.path.join(out, "_manifest", f"{stem}.json"), "w") as f:
+        json.dump(rec, f)
+    with pytest.raises(ValueError, match="re-encode"):
+        read_decoded(spark, out)
+    _write(src, DOCS_PER_FILE, seed=12)
+    with pytest.raises(ValueError, match="fresh out_dir"):
+        encode_dataset(spark, src, out)
+
+
+def test_compact_encoded_sweeps_unrecorded_stem_dirs(spark, tmp_path):
+    """A stem dir no record names (its first encode crashed before the
+    record, and its input is gone) is deleted by ``compact_encoded``;
+    reads are unchanged."""
+    src = str(tmp_path / "src")
+    _write(src, 0, seed=13)
+    out = str(tmp_path / "enc")
+    encode_dataset(spark, src, out)
+    (rec,) = read_manifest(out).values()
+    orphan = os.path.join(out, "data", "tokens-gone")
+    os.makedirs(orphan)
+    shutil.copy(os.path.join(out, rec["parts"][0]), os.path.join(orphan, "part-0.parquet"))
+    want = _state(spark, out, token=0)
+    stats = compact_encoded(out)
+    assert not os.path.exists(orphan)
+    assert stats["stems_swept"] == 1
+    assert sorted(os.listdir(os.path.join(out, "data"))) == [rec["file_stem"]]
+    assert _state(spark, out, token=0) == want

@@ -284,11 +284,10 @@ def test_perfile_layout_source_filter_not_pruned(spark, token_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from poc_parquet_aggregator_spark.encode import read_decoded
-    from poc_parquet_aggregator_spark.encode.pipeline import read_layout
 
     out = str(tmp_path / "enc")
     encode_dataset(spark, token_dir, out)
-    assert read_layout(out) == "per-file"
+    assert not any("n_salts" in r for r in read_manifest(out).values())
     full = read_decoded(spark, out)
     by_src = read_decoded(spark, out, sources=["src00"])
     n = full.filter(F.col("source") == "src00").count()
@@ -502,10 +501,7 @@ def test_extra_float_container_incompressible():
     import numpy as np
     import pyarrow as pa
 
-    from poc_parquet_aggregator_spark.encode.pipeline import (
-        _decode_extra,
-        _encode_extra_array,
-    )
+    from poc_parquet_aggregator_spark.encode.pipeline import _decode_extra, _encode_extra
 
     rng = np.random.default_rng(0)
     # raw random bytes as doubles: maximally incompressible, may embed any
@@ -514,15 +510,15 @@ def test_extra_float_container_incompressible():
     vals = np.frombuffer(raw, dtype=np.float64)
     arr = pa.array(vals, type=pa.float64())
     for lvl in (1, 15):
-        kind, payload, codec = _encode_extra_array(arr, lvl)
-        out = _decode_extra(kind, payload, len(vals)).to_numpy(zero_copy_only=False)
+        payload, codec = _encode_extra(arr, "double", lvl)
+        out = _decode_extra("double", payload).to_numpy(zero_copy_only=False)
         assert np.array_equal(out, vals, equal_nan=True), codec
     # compressible doubles never take the RAW blob (zstd or ALP, whichever
     # is byte-smaller — all-zeros is decimal-exact so ALP competes too)
     smooth = pa.array(np.zeros(4096), type=pa.float64())
-    kind, payload, codec = _encode_extra_array(smooth, 3)
+    payload, codec = _encode_extra(smooth, "double", 3)
     assert codec != "f64_raw"
-    out = _decode_extra(kind, payload, 4096).to_numpy(zero_copy_only=False)
+    out = _decode_extra("double", payload).to_numpy(zero_copy_only=False)
     assert np.array_equal(out, np.zeros(4096))
 
 

@@ -31,7 +31,6 @@ from poc_parquet_aggregator_spark.encode.pipeline import (
     _ENC_ARROW_SCHEMA,
     _decoded_arrow_schema,
     _make_decode_fn,
-    read_extras,
 )
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import generate_token_table
@@ -169,15 +168,14 @@ def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
         for rec in read_manifest(enc_dir).values()
         for p in rec["parts"]
     ])
-    extras = read_extras(enc_dir)
     states: dict[str, set] = {}
     for kind, kw in _read_kinds(table).items():
         plan = plan_read(
             enc_dir,
             **{"tok_ids" if k == "contains_token" else k: v for k, v in kw.items() if k != "columns"},
         )
-        columns = kw.get("columns") or _decoded_arrow_schema(extras).names
-        fn = _make_decode_fn(plan, extras, columns)
+        columns = kw.get("columns") or _decoded_arrow_schema(plan.extras).names
+        fn = _make_decode_fn(plan, columns)
         got, states[kind] = [], set()
         for i in range(chunks.num_rows):
             chunk = chunks.slice(i, 1)
@@ -216,7 +214,7 @@ def test_kernel_never_parses_a_chunk_its_zones_exclude(enc_dir, kw):
     blob is parsed. A chunk with NULL bounds is kept, so its garbage is
     parsed and raises."""
     columns = _decoded_arrow_schema([]).names
-    fn = _make_decode_fn(plan_read(enc_dir, **kw), [], columns)
+    fn = _make_decode_fn(plan_read(enc_dir, **kw), columns)
     outside = _garbage_chunk(doc_id_min="zzz-0", doc_id_max="zzz-9", n_tok_min=1_000_000,
                              n_tok_max=1_000_005, tok_min=100_000_000, tok_max=100_000_001)
     assert list(fn(iter([outside]))) == []

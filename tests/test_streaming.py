@@ -1,14 +1,16 @@
 """Incremental encode (each new or changed file encoded once, decided by
-the manifest alone) and the Structured Streaming operators: the
-watermarked daily rollup and gap sessionization."""
+the manifest alone; a file whose extra columns differ from the
+committed records' is refused) and the Structured Streaming operators:
+the watermarked daily rollup and gap sessionization."""
 
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from poc_parquet_aggregator_spark.encode import decode_verify, read_manifest
+from poc_parquet_aggregator_spark.encode import decode_verify, read_decoded, read_manifest
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import generate_token_table, write_token_table
 from poc_parquet_aggregator_spark.streaming import encode_stream, streaming_daily_rollup
@@ -58,6 +60,28 @@ def test_encode_stream_empty_input_dir(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     assert encode_stream(spark, str(src), str(tmp_path / "out"))["files"] == 0
+
+
+def test_encode_stream_append_with_other_extras_raises(spark, tmp_path):
+    """An appended file whose only extra column is ``q`` next to committed
+    files with ``lang``: the append raises naming both lists before any
+    task runs, and the table still reads its rows with ``lang``."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    tbl = generate_token_table(1000, seed=8)
+    lang = pa.array(["en", "de"] * 500)
+    pq.write_table(tbl.append_column("lang", lang), f"{src}/tokens-a.parquet")
+    assert encode_stream(spark, src, out)["files"] == 1
+    other = generate_token_table(500, seed=9, start_id=1000)
+    pq.write_table(other.append_column("q", pa.array(range(500), pa.int32())),
+                   f"{src}/tokens-b.parquet")
+    with pytest.raises(ValueError, match=r"\[\['lang', 'string'\]\].*\[\['q', 'integer'\]\]"):
+        encode_stream(spark, src, out)
+    assert list(read_manifest(out)) == ["tokens-a"]
+    got = read_decoded(spark, out, columns=["doc_id", "lang"]).toArrow()
+    assert got.num_rows == 1000
+    assert sorted(got.column("lang").to_pylist()) == sorted(lang.to_pylist())
 
 
 def test_streaming_daily_rollup_matches_batch(spark, tmp_path):
