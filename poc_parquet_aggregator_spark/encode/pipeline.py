@@ -45,7 +45,7 @@ import urllib.parse
 import uuid
 import zlib
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import partial, reduce
 
 import numpy as np
@@ -54,8 +54,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, from_arrow_type
 
 from ..codecs.floats import (
     decode_floats_alp,
@@ -149,6 +148,13 @@ _ENC_ARROW_SCHEMA = pa.schema(
 # every read scans part files with this declared schema: no inference, and
 # a file that predates a column reads it as NULL
 _ENC_SCHEMA = from_arrow_schema(_ENC_ARROW_SCHEMA)
+
+# the largest read, in the kept records' encoded bytes (``bytes_out``),
+# that ``read_decoded`` decodes in this process instead of a Spark job:
+# below it a job's fixed cost outweighs the decode work. Set at the
+# crossover of a full-scan sweep on 4 cores (ARCHITECTURE §4,
+# scripts/runner_sweep.py): in-process wins at 3.9 MiB, Spark at 4.9 MiB.
+_LOCAL_READ_BYTES = 4 << 20
 
 # ---------------- extra metadata columns (beyond the core 4-column schema)
 #
@@ -546,18 +552,49 @@ def _make_decode_fn(plan: ReadPlan, columns: list[str]):
     return decode_batches
 
 
-def _decode(enc: DataFrame, plan: ReadPlan, columns: list[str]) -> DataFrame:
-    """The one decode call: scan only what the kernel reads — the blobs it
-    parses, the zone columns of ``plan.zones`` and the chunk bitmaps of a
-    token read — and map it to the read's rows."""
+def _scan_columns(plan: ReadPlan, columns: list[str]) -> list[str]:
+    """The chunk-row columns a read scans, for either runner: the blobs
+    the kernel parses, the zone columns of ``plan.zones`` and the chunk
+    bitmaps of a token read."""
     cols = {_BLOB_OF.get(c, "extras_blob") for c in [*columns, *(c for c, _ in plan.rows)]}
     cols.update(f"{z.col}_{end}" for z in plan.zones for end in ("min", "max"))
     if plan.tok_ids is not None:
         cols.add("tok_filter")
-    return enc.select(*sorted(cols)).mapInArrow(
+    return sorted(cols)
+
+
+def _read_spark(spark: SparkSession, plan: ReadPlan, columns: list[str]) -> DataFrame:
+    """The Spark runner: the kept records' part files (``plan.stems``)
+    scanned with the declared chunk schema and decoded by the kernel in a
+    ``mapInArrow`` job when an action runs. No directory listing or
+    partition discovery, and a named file that is gone fails the action.
+    Glob metacharacters are escaped: the paths are literal."""
+    files = [re.sub(r"([\[\]{}*?\\])", r"\\\1", f) for fs in plan.stems.values() for f in fs]
+    return spark.read.schema(_ENC_SCHEMA).parquet(*files).select(
+        *_scan_columns(plan, columns)
+    ).mapInArrow(
         _make_decode_fn(plan, columns),
         schema=from_arrow_schema(_decoded_arrow_schema(plan.extras, columns)),
     )
+
+
+def _read_local(spark: SparkSession, plan: ReadPlan, columns: list[str]) -> DataFrame:
+    """The in-process runner: the kept records' part files read with
+    pyarrow (the declared chunk schema, literal paths, no partition
+    discovery; a named file that is gone raises) and decoded by the same
+    kernel on the driver, now; the DataFrame is built from the decoded
+    Arrow rows."""
+    schema = _decoded_arrow_schema(plan.extras, columns)
+    files = [f for fs in plan.stems.values() for f in fs]
+    batches = []
+    if files:
+        chunks = pq.read_table(files, columns=_scan_columns(plan, columns),
+                               schema=_ENC_ARROW_SCHEMA, partitioning=None)
+        batches = list(_make_decode_fn(plan, columns)(chunks.to_batches()))
+    # createDataFrame fails on a list column with no chunks: an empty read
+    # is one empty batch
+    rows = pa.Table.from_batches(batches or [pa.RecordBatch.from_pylist([], schema=schema)])
+    return spark.createDataFrame(rows, schema=from_arrow_schema(schema))
 
 
 # ----------------------------------------------------------------- manifest
@@ -656,8 +693,10 @@ class ReadPlan:
     column, test) pairs, each test mapping that column's Arrow array to a
     numpy bool mask, which the decode kernel ANDs. ``stems`` maps every kept file's
     stem to the part files its record names (the files the read scans);
-    ``funnel`` counts files per pruning stage; ``extras`` are the extra
-    columns (name, spark type) every record declares, in container order."""
+    ``funnel`` counts files per pruning stage and the kept bytes
+    (``read_decoded`` adds the ``runner`` they chose); ``extras`` are the
+    extra columns (name, spark type) every record declares, in container
+    order."""
 
     zones: tuple
     tok_ids: list[int] | None
@@ -675,15 +714,6 @@ def _part_files(out_dir: str, rec: dict) -> list[str]:
             "their part files and extra columns; re-encode the dataset"
         )
     return [os.path.join(out_dir, p) for p in rec["parts"]]
-
-
-def _scan(spark: SparkSession, parts) -> DataFrame:
-    """The chunk rows of exactly the files in ``parts`` (one list per
-    record), read with the declared chunk schema: no directory listing or
-    partition discovery, and a named file that is gone fails the read.
-    Glob metacharacters are escaped: the paths are literal."""
-    files = [re.sub(r"([\[\]{}*?\\])", r"\\\1", f) for fs in parts for f in fs]
-    return spark.read.schema(_ENC_SCHEMA).parquet(*files)
 
 
 def _sidecar_keeps(out_dir: str, rec: dict, tok_ids: list[int]) -> bool:
@@ -704,9 +734,10 @@ def _keep_list(
 ) -> tuple[dict[str, list[str]], dict, tuple]:
     """Driver keep-list over ``read_manifest``: (kept stem → its part
     files, funnel, the extra columns the records declare — all records
-    must agree). Each record is tested against the zones, then a
-    by-source bucket record by its ``source``, then a token read's
-    sidecar probe."""
+    must agree). The funnel counts files per pruning stage and sums the
+    kept records' encoded bytes (``bytes_kept``). Each record is tested
+    against the zones, then a by-source bucket record by its ``source``,
+    then a token read's sidecar probe."""
     stems, zone_pruned, source_pruned, extras = {}, 0, 0, set()
     records = read_manifest(out_dir)
     for stem, rec in records.items():
@@ -729,6 +760,7 @@ def _keep_list(
         "files_source_pruned": source_pruned,
         "files_filter_pruned": len(records) - zone_pruned - source_pruned - len(stems),
         "files_kept": len(stems),
+        "bytes_kept": sum(records[stem]["bytes_out"] for stem in stems),
     }, extras.pop() if extras else ()
 
 
@@ -922,12 +954,12 @@ def _input_files(input_path: str | list[str]) -> list[str]:
     return files
 
 
-def _extra_columns(schema: T.StructType) -> list[tuple[str, str]]:
-    """(name, spark type) of the input's metadata columns beyond the core
-    schema, sorted; an unsupported type fails the job up front."""
+def _extra_columns(schema: pa.Schema) -> list[tuple[str, str]]:
+    """(name, spark type) of an input file's metadata columns beyond the
+    core schema, sorted; an unsupported type fails the job up front."""
     extras = sorted(
-        (f.name, f.dataType.typeName())
-        for f in schema.fields
+        (f.name, from_arrow_type(f.type).typeName())
+        for f in schema
         if f.name not in ("doc_id", "tokens", "n_tok", "source")
     )
     for name, t in extras:
@@ -939,6 +971,24 @@ def _extra_columns(schema: T.StructType) -> list[tuple[str, str]]:
     return extras
 
 
+def _input_extras(files: list[str]) -> list[list[str]]:
+    """The extra columns [[name, spark type], …] every file in ``files``
+    declares in its parquet footer (no data page is read). Files that
+    disagree raise, naming two of them: Spark would infer one file's
+    schema for the whole scan and drop or NULL the others' columns."""
+    def extras(f):
+        return [list(e) for e in _extra_columns(pq.read_schema(f))]
+
+    first = extras(files[0])
+    for f in files[1:]:
+        if (other := extras(f)) != first:
+            raise ValueError(
+                f"input files declare different extra columns: {files[0]} has {first}, "
+                f"{f} has {other}; encode them into separate out_dirs"
+            )
+    return first
+
+
 # ---------------------------------------------------------------- encode job
 
 
@@ -946,20 +996,21 @@ def _encode_parts(
     spark: SparkSession, df: DataFrame, files: list[str], out_dir: str,
     done: dict[str, dict], key: str, zstd_level: int,
 ) -> tuple[dict[str, list], list[list[str]]]:
-    """The encode job of both layouts: ``df`` (the input rows plus the
-    commit ``key`` column, filtered and shuffled as the caller needs)
+    """The encode job of both layouts: ``df`` (the rows of ``files`` plus
+    the commit ``key`` column, filtered and shuffled as the caller needs)
     through ``_make_encode_fn``; returns (the part rows by stem, the extra
     columns [[name, spark type], …] each of the job's records declares).
 
-    Before any task runs, every committed record in ``done`` must have
-    the job's layout (by-source records carry ``n_salts``) and extra
-    columns, otherwise the job raises: a read serves all records as one
-    table. The scan's splits are sized to the cluster (Spark's default
-    128 MB bin-packing would coalesce many small files into a handful of
-    tasks and leave most cores idle): ``files``' bytes over ≥2 waves of
-    parallelism. The split confs hold for this job's scan only and are
+    Before any task runs, every file in ``files`` must declare the same
+    extra columns (``_input_extras``), and every committed record in
+    ``done`` must have the job's layout (by-source records carry
+    ``n_salts``) and those extras, otherwise the job raises: a read
+    serves all records as one table. The scan's splits are sized to the
+    cluster (Spark's default 128 MB bin-packing would coalesce many small
+    files into a handful of tasks and leave most cores idle): ``files``'
+    bytes over ≥2 waves of parallelism. The split confs hold for this job's scan only and are
     restored, or unset, when it returns or raises."""
-    extras = [list(e) for e in _extra_columns(df.drop(key).schema)]
+    extras = _input_extras(files)
     by_source = key == "_bucket"
     for stem, rec in done.items():
         if ("n_salts" in rec) != by_source or rec.get("extras") != extras:
@@ -1031,6 +1082,31 @@ def encode_dataset(
     return metrics
 
 
+def _plan_decode(
+    out_dir: str,
+    sources: list[str] | None = None,
+    doc_id_range: tuple[str, str] | None = None,
+    doc_ids: list[str] | None = None,
+    n_tok_range: tuple[int, int] | None = None,
+    contains_token: int | list[int] | None = None,
+    columns: list[str] | None = None,
+) -> tuple[ReadPlan, list[str]]:
+    """``read_decoded``'s plan and output columns, ready for either
+    runner: its arguments, checked the same way."""
+    if columns is not None and not len(columns):
+        raise ValueError("columns list must be non-empty")
+    plan = plan_read(
+        out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
+    )
+    names = _decoded_arrow_schema(plan.extras).names
+    if columns is not None:
+        unknown = set(columns) - set(names)
+        if unknown:
+            raise ValueError(f"unknown columns: {sorted(unknown)}")
+        names = [c for c in names if c in columns]
+    return plan, names
+
+
 def read_decoded(
     spark: SparkSession,
     out_dir: str,
@@ -1069,6 +1145,14 @@ def read_decoded(
     Encodes that predate a zone or filter column are conservatively kept
     at every level; the row tests stay exact.
 
+    The runner is picked from the kept records' encoded bytes
+    (``plan.funnel["bytes_kept"]``, recorded with the choice as
+    ``funnel["runner"]``): at or below ``_LOCAL_READ_BYTES`` the kernel
+    runs in this process and the read is decoded at call time
+    (``_read_local``); above it the kernel runs in a ``mapInArrow`` job
+    when an action runs (``_read_spark``). The file set is pinned at
+    call time either way, so both return the same rows.
+
     CONTRACT BOUND for ``doc_ids``: the list is a plain Python argument,
     so it lives in driver memory and is folded into zone-map OR-predicates
     — the contract is point lookups of a HUMAN-SIZED id set (thousands,
@@ -1077,18 +1161,12 @@ def read_decoded(
     derive range/length bounds for it and use ``doc_id_range`` /
     ``n_tok_range``, or semi-join the decoded frame against the id frame.
     """
-    if columns is not None and not len(columns):
-        raise ValueError("columns list must be non-empty")
-    plan = plan_read(
-        out_dir, doc_id_range, doc_ids, n_tok_range, contains_token, sources=sources
+    plan, names = _plan_decode(
+        out_dir, sources, doc_id_range, doc_ids, n_tok_range, contains_token, columns
     )
-    names = _decoded_arrow_schema(plan.extras).names
-    if columns is not None:
-        unknown = set(columns) - set(names)
-        if unknown:
-            raise ValueError(f"unknown columns: {sorted(unknown)}")
-        names = [c for c in names if c in columns]
-    return _decode(_scan(spark, plan.stems.values()), plan, names)
+    local = plan.funnel["bytes_kept"] <= _LOCAL_READ_BYTES
+    plan.funnel["runner"] = "local" if local else "spark"
+    return (_read_local if local else _read_spark)(spark, plan, names)
 
 
 def token_read_stats(out_dir: str, token: int | list[int]) -> dict:
@@ -1105,7 +1183,9 @@ def decode_verify(
     fraction: float = 1.0,
 ) -> dict:
     """Decode every partition, full-outer-join on doc_id against the source,
-    assert bit-identical tokens + n_tok + source. Returns counts.
+    assert every column bit-identical: tokens, n_tok, source and each extra.
+    A column of the source that no record declares (or the reverse) makes
+    every row a mismatch. Returns counts.
 
     ``fraction`` < 1 verifies a deterministic FILE-level sample (stems with
     crc32(stem) below the fraction cut): at the 100 TB target a full decode
@@ -1116,26 +1196,27 @@ def decode_verify(
     verified."""
     files = _input_files(input_path)
     plan = plan_read(out_dir)
-    parts = plan.stems.values()
     if fraction < 1.0:
         if any("n_salts" in r for r in read_manifest(out_dir).values()):
             raise ValueError("sampled verify requires the per-file layout")
         cut = int(fraction * 1000)
         sampled = [f for f in files if zlib.crc32(_stem(f).encode()) % 1000 < cut]
         files = sampled or files[:1]
-        parts = [plan.stems[s] for s in map(_stem, files) if s in plan.stems]
-    dec = _decode(_scan(spark, parts), plan, _decoded_arrow_schema(plan.extras).names)
-    src = spark.read.parquet(*files)
+        plan = replace(plan, stems={s: plan.stems[s] for s in map(_stem, files) if s in plan.stems})
+    names = _decoded_arrow_schema(plan.extras).names
+    dec = _read_spark(spark, plan, names)
+    # every column of every file, from the footers: Spark would infer the
+    # schema of one file
+    src_schema = pa.unify_schemas([pq.read_schema(f) for f in files])
+    src = spark.read.schema(from_arrow_schema(src_schema)).parquet(*files)
     joined = src.alias("s").join(dec.alias("d"), "doc_id", "full_outer")
-    same = (
-        (F.col("s.tokens") == F.col("d.tokens"))
-        & (F.col("s.n_tok") == F.col("d.n_tok"))
-        & (F.col("s.source") == F.col("d.source"))
-    )
-    for name, t in plan.extras:
+    kinds = dict(plan.extras)
+    # a column only one side has was lost: every row is a mismatch
+    same = F.lit(sorted(src_schema.names) == sorted(names))
+    for name in [n for n in names if n != "doc_id" and n in src_schema.names]:
         a, b = F.col(f"s.{name}"), F.col(f"d.{name}")
         eq = a == b
-        if t == "double":  # NaN round-trips bit-identically but NaN != NaN
+        if kinds.get(name) == "double":  # NaN round-trips bit-identically but NaN != NaN
             eq = eq | (F.isnan(a) & F.isnan(b))
         same = same & eq
     status = joined.select(

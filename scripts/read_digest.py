@@ -1,10 +1,13 @@
 """Row digests of every read kind over an encoded output directory, for
-row-identity checks between two builds of the reader on the same data.
+row-identity checks between the two read runners and between two builds
+of the reader on the same data.
 
 Usage: python scripts/read_digest.py OUT_DIR
 
 Prints one line per read kind: the kind, its row count and one sha256
-over its sorted rows. The read arguments are derived deterministically
+over its sorted rows. Every read runs through both runners (in-process
+and ``mapInArrow``); if their digests differ, both are printed to stderr
+and the script exits 1. The read arguments are derived deterministically
 from the table itself (a full scan), so two builds reading the same
 OUT_DIR issue the same reads:
 
@@ -18,8 +21,10 @@ OUT_DIR issue the same reads:
   tokens   the two rarest token ids plus one id no doc holds
 
 The package is imported from the tree this script lives in, on the
-driver and on the Python workers. To compare against another build, copy
-this file into that build's ``scripts/`` and diff the two outputs.
+driver and on the Python workers. To compare against another build, run
+that build's own ``scripts/read_digest.py`` on the same OUT_DIR and diff
+the two outputs (builds before the in-process runner print the same
+lines from ``read_decoded``).
 """
 
 from __future__ import annotations
@@ -37,6 +42,11 @@ sys.path.insert(0, ROOT)
 os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 from poc_parquet_aggregator_spark.encode import read_decoded  # noqa: E402
+from poc_parquet_aggregator_spark.encode.pipeline import (  # noqa: E402
+    _plan_decode,
+    _read_local,
+    _read_spark,
+)
 from poc_parquet_aggregator_spark.plans import get_spark  # noqa: E402
 
 
@@ -83,12 +93,19 @@ def main() -> int:
     out_dir = sys.argv[1]
     spark = get_spark(app_name="read-digest", extra_conf={"spark.ui.showConsoleProgress": "false"})
     full = read_decoded(spark, out_dir).toArrow()
+    differ = 0
     for kind, kw in read_kinds(full).items():
-        tbl = full if kind == "scan" else read_decoded(spark, out_dir, **kw).toArrow()
-        rows, digest = _digest(tbl)
+        plan, names = _plan_decode(out_dir, **kw)
+        got = {run.__name__: _digest(run(spark, plan, names).toArrow())
+               for run in (_read_local, _read_spark)}
+        (rows, digest), *_ = got.values()
+        if len(set(got.values())) > 1:
+            differ += 1
+            for runner, (n, d) in got.items():
+                print(f"RUNNERS DIFFER {kind:8s} {runner}: {n:7d} {d}", file=sys.stderr)
         print(f"{kind:8s} {rows:7d} {digest}")
     spark.stop()
-    return 0
+    return 1 if differ else 0
 
 
 if __name__ == "__main__":

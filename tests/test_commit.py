@@ -218,7 +218,9 @@ def test_crash_at_every_step_of_compact_manifest(spark, tmp_path):
     assert read_manifest(str(tmp_path / "ref")) == want
 
 
-def test_missing_named_part_fails_the_read(spark, tmp_path):
+def test_missing_named_part_fails_the_read(runners, spark, tmp_path):
+    """Through each runner: Spark's scan fails with PATH_NOT_FOUND, the
+    in-process scan with a FileNotFoundError naming the file."""
     src = str(tmp_path / "src")
     _write(src, 0, seed=4)
     _write(src, DOCS_PER_FILE, seed=4)
@@ -226,12 +228,14 @@ def test_missing_named_part_fails_the_read(spark, tmp_path):
     encode_dataset(spark, src, out)
     damaged, intact = (read_manifest(out)[s] for s in sorted(read_manifest(out)))
     os.remove(os.path.join(out, damaged["parts"][0]))
-    for kw in ({}, {"doc_id_range": (damaged["doc_id_min"], damaged["doc_id_max"])}):
-        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
-            read_decoded(spark, out, **kw).count()
-    # a read whose keep-list prunes the damaged file still answers
+    error = {"spark": "PATH_NOT_FOUND", "local": os.path.basename(damaged["parts"][0])}
     rng = (intact["doc_id_min"], intact["doc_id_max"])
-    assert read_decoded(spark, out, doc_id_range=rng).count() == DOCS_PER_FILE
+    for runner, read in runners.items():
+        for kw in ({}, {"doc_id_range": (damaged["doc_id_min"], damaged["doc_id_max"])}):
+            with pytest.raises(Exception, match=error[runner]):
+                read(spark, out, **kw).count()
+        # a read whose keep-list prunes the damaged file still answers
+        assert read(spark, out, doc_id_range=rng).count() == DOCS_PER_FILE, runner
 
 
 def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path):

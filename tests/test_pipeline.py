@@ -458,11 +458,63 @@ def test_extra_metadata_columns_roundtrip(spark, tmp_path):
     assert decode_verify(spark, src, out2)["bit_identical"]
 
 
-def test_column_pruned_decode(spark, token_dir, tmp_path):
+def _with_extras(tbl, *names):
+    """``tbl`` plus one int32 extra column per name."""
+    import numpy as np
+    import pyarrow as pa
+
+    for name in names:
+        tbl = tbl.append_column(name, pa.array(np.arange(tbl.num_rows, dtype=np.int32)))
+    return tbl
+
+
+def test_files_with_different_extras_fail_the_job(spark, tmp_path):
+    """One job over a file with ``lang`` and one with ``lang, q`` raises
+    before any task runs, naming both files and their columns, and
+    commits nothing: Spark infers one file's schema for the whole scan,
+    so the job would drop ``q`` (or NULL it for the other file)."""
+    import pyarrow.parquet as pq
+
+    from poc_parquet_aggregator_spark.sources import generate_token_table
+
+    base = generate_token_table(600, seed=5)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    pq.write_table(_with_extras(base.slice(0, 300), "lang"), f"{src}/tokens-a.parquet")
+    pq.write_table(_with_extras(base.slice(300), "lang", "q"), f"{src}/tokens-b.parquet")
+    for encode in (encode_dataset, encode_dataset_by_source):
+        out = str(tmp_path / encode.__name__)
+        with pytest.raises(ValueError, match=r"tokens-a\.parquet has \[\['lang', 'integer'\]\], "
+                                             r".*tokens-b\.parquet has \[.*'q'"):
+            encode(spark, src, out)
+        assert read_manifest(out) == {}
+
+
+def test_decode_verify_flags_a_column_no_record_declares(spark, tmp_path):
+    """A source column the encoded table lacks is a mismatch: here the
+    input gains ``q`` after its encode, so no record declares it."""
+    import pyarrow.parquet as pq
+
+    from poc_parquet_aggregator_spark.sources import generate_token_table
+
+    base = _with_extras(generate_token_table(400, seed=6), "lang")
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    path = f"{src}/tokens-000000000000.parquet"
+    pq.write_table(base, path)
+    out = str(tmp_path / "enc")
+    encode_dataset(spark, src, out)
+    assert decode_verify(spark, src, out)["bit_identical"]
+    pq.write_table(_with_extras(base, "q"), path)
+    res = decode_verify(spark, src, out)
+    assert not res["bit_identical"] and res["mismatch"] == 400, res
+
+
+def test_column_pruned_decode(runners, spark, token_dir, tmp_path, monkeypatch):
     """read_decoded(columns=...) decodes only the selected columns: results
     match the full decode's projection, the lengths-only path (n_tok
-    without tokens) agrees, and the parquet scan reads only the needed
-    blob columns."""
+    without tokens) agrees, and the parquet scan of each runner reads only
+    the needed blob columns."""
     from pyspark.sql import functions as F
 
     from poc_parquet_aggregator_spark.encode import read_decoded
@@ -471,12 +523,14 @@ def test_column_pruned_decode(spark, token_dir, tmp_path):
     encode_dataset(spark, token_dir, out)
     full = read_decoded(spark, out)
 
-    ntok = read_decoded(spark, out, columns=["doc_id", "n_tok"])
+    ntok = runners["spark"](spark, out, columns=["doc_id", "n_tok"])
     assert ntok.columns == ["doc_id", "n_tok"]
     a = {r["doc_id"]: r["n_tok"] for r in ntok.collect()}
     b = {r["doc_id"]: r["n_tok"] for r in full.select("doc_id", "n_tok").collect()}
     assert a == b
-    # scan pruning: tokens/source blobs never read for this projection
+    # scan pruning: source/extras blobs never read for this projection
+    _, columns = _local_scan(runners, spark, monkeypatch, out, columns=["doc_id", "n_tok"])
+    assert columns == ["doc_id_blob", "tokens_blob"]
     plan = ntok._jdf.queryExecution().executedPlan().toString()
     import re
 
@@ -541,9 +595,9 @@ def test_point_lookup_doc_ids(spark, token_dir, tmp_path):
     assert read_decoded(spark, out, doc_ids=["doc-999999999999"]).count() == 0
 
 
-def test_manifest_file_pruning(spark, token_dir, tmp_path):
+def test_manifest_file_pruning(runners, spark, token_dir, tmp_path, monkeypatch):
     """Range reads prune whole files via the manifest's file-level doc_id
-    bounds before the scan: the scan's input files are exactly the
+    bounds before the scan: each runner's input files are exactly the
     overlapping stem's parts, and results match the unpruned filter."""
     from pyspark.sql import functions as F
 
@@ -555,25 +609,44 @@ def test_manifest_file_pruning(spark, token_dir, tmp_path):
     assert all(r.get("doc_id_min") and r.get("doc_id_max") for r in recs.values())
     # range falling inside ONE file (files are 2000 docs each, ids sorted)
     lo, hi = "doc-000000000100", "doc-000000000199"
-    df = read_decoded(spark, out, doc_id_range=(lo, hi))
+    df = runners["spark"](spark, out, doc_id_range=(lo, hi))
     assert df.count() == 100
     # the scan reads exactly the one overlapping stem's parts
     (stem,) = [s for s, r in recs.items() if r["doc_id_min"] <= lo <= r["doc_id_max"]]
     assert _input_stems(df, recs) == {stem}
+    files, _ = _local_scan(runners, spark, monkeypatch, out, doc_id_range=(lo, hi))
+    assert _stems(files, recs) == {stem}
     full = read_decoded(spark, out)
     assert df.count() == full.filter(
         (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
     ).count()
 
 
+def _stems(files, records: dict) -> set[str]:
+    """The stems whose named parts ``files`` are (every file must be one)."""
+    stem_of = {os.path.basename(p): s for s, r in records.items() for p in r["parts"]}
+    return {stem_of[os.path.basename(f)] for f in files}
+
+
 def _input_stems(df, records: dict) -> set[str]:
-    """The stems whose named parts a read's scan opens (every file it
-    opens must be one)."""
+    """The stems whose named parts a Spark runner's scan opens."""
     import urllib.parse
 
-    stem_of = {os.path.basename(p): s for s, r in records.items() for p in r["parts"]}
-    names = [os.path.basename(urllib.parse.unquote(f)) for f in df.inputFiles()]
-    return {stem_of[n] for n in names}
+    return _stems([urllib.parse.unquote(f) for f in df.inputFiles()], records)
+
+
+def _local_scan(runners, spark, monkeypatch, out, **kw) -> tuple[list[str], list[str]]:
+    """(files, chunk columns) the in-process runner reads for a read: the
+    arguments of its one ``pyarrow.parquet.read_table`` call."""
+    import pyarrow.parquet as pq
+
+    calls, real = [], pq.read_table
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_table", lambda files, **opts: calls.append(
+            (files, opts["columns"])) or real(files, **opts))
+        runners["local"](spark, out, **kw)
+    (call,) = calls
+    return call
 
 
 def test_jdbc_live_roundtrip_derby(spark, tmp_path):
@@ -622,7 +695,7 @@ def test_jdbc_writer_seam_failure_modes(spark):
         write_summary_jdbc(df, "jdbc:postgresql://h/db", "t")
 
 
-def test_length_zone_map_pruned_read(spark, token_dir, tmp_path):
+def test_length_zone_map_pruned_read(runners, spark, token_dir, tmp_path, monkeypatch):
     """n_tok zone maps: a length-bucketed read (the training dataloader's
     curriculum/length-sampling pattern) prunes chunks via chunk-level
     n_tok_min/max before any blob is decoded, and the exact per-row filter
@@ -635,21 +708,23 @@ def test_length_zone_map_pruned_read(spark, token_dir, tmp_path):
     encode_dataset(spark, token_dir, out)
     full = read_decoded(spark, out).select("doc_id", "n_tok")
     want = {r["doc_id"] for r in full.filter(F.col("n_tok") <= 8).collect()}
-    got_df = read_decoded(spark, out, n_tok_range=(1, 8), columns=["doc_id", "n_tok"])
+    got_df = runners["spark"](spark, out, n_tok_range=(1, 8), columns=["doc_id", "n_tok"])
     got = {r["doc_id"] for r in got_df.collect()}
     assert got == want and len(got) > 0
-    # the chunk-level prune is in the plan (scan-side filter on the zone map)
+    # each runner scans the chunk zone columns the kernel prunes with
     plan = got_df._jdf.queryExecution().optimizedPlan().toString()
     assert "n_tok_max" in plan and "n_tok_min" in plan
+    _, columns = _local_scan(runners, spark, monkeypatch, out, n_tok_range=(1, 8),
+                             columns=["doc_id", "n_tok"])
+    assert columns == ["doc_id_blob", "n_tok_max", "n_tok_min", "tokens_blob"]
 
 
-def test_length_bounds_prune_files_via_manifest(spark, tmp_path):
+def test_length_bounds_prune_files_via_manifest(runners, spark, tmp_path, monkeypatch):
     """Files whose manifest n_tok bounds don't overlap the requested length
     band are dropped BEFORE the scan (the doc_id manifest-prune analog)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from poc_parquet_aggregator_spark.encode import read_decoded
     from poc_parquet_aggregator_spark.sources import token_table_schema
 
     src = str(tmp_path / "src")
@@ -676,10 +751,12 @@ def test_length_bounds_prune_files_via_manifest(spark, tmp_path):
     assert rec["short"]["n_tok_min"] == rec["short"]["n_tok_max"] == 2
     assert rec["long"]["n_tok_min"] == rec["long"]["n_tok_max"] == 100
 
-    df = read_decoded(spark, out, n_tok_range=(90, 200), columns=["doc_id", "n_tok"])
+    df = runners["spark"](spark, out, n_tok_range=(90, 200), columns=["doc_id", "n_tok"])
     assert df.count() == 50
-    # the 'short' file is pruned at the manifest: the scan never opens it
+    # the 'short' file is pruned at the manifest: no runner's scan opens it
     assert _input_stems(df, rec) == {"long"}
+    files, _ = _local_scan(runners, spark, monkeypatch, out, n_tok_range=(90, 200))
+    assert _stems(files, rec) == {"long"}
 
 
 def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path):

@@ -5,13 +5,15 @@ chunk tests are the production ones: it is the only place a chunk row is
 pruned, and it never parses the blobs of a chunk its zones exclude. This
 is the contract a runner other than Spark's ``mapInArrow`` relies on.
 Every read kind, pruned, returns the rows pyarrow computes from the input
-table, on both layouts and for input file names Spark percent-encodes.
-Also the read-argument contracts: empty id, source and column lists
-raise, and a by-source read keeps exactly the buckets whose record
-carries a wanted ``source``."""
+table through each runner (in-process and ``mapInArrow``), on both
+layouts and for input file names Spark percent-encodes. Also the
+read-argument contracts: empty id, source and column lists raise, a
+by-source read keeps exactly the buckets whose record carries a wanted
+``source``, and ``read_decoded`` picks its runner from the kept bytes."""
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import numpy as np
@@ -27,6 +29,7 @@ from poc_parquet_aggregator_spark.encode import (
     read_decoded,
     read_manifest,
 )
+from poc_parquet_aggregator_spark.encode import pipeline
 from poc_parquet_aggregator_spark.encode.pipeline import (
     _ENC_ARROW_SCHEMA,
     _decoded_arrow_schema,
@@ -150,12 +153,13 @@ def _rows(tbl) -> list[tuple]:
     return sorted(tuple(r.values()) for r in tbl.to_pylist())
 
 
-def _assert_reads_match_truth(spark, table, out):
+def _assert_reads_match_truth(runners, spark, table, out):
     for kind, kw in _all_read_kinds(table).items():
         want = _truth(table, kw)
-        got = read_decoded(spark, out, **kw).toArrow()
-        assert got.column_names == want.column_names, kind
-        assert _rows(got) == _rows(want), kind
+        for runner, read in runners.items():
+            got = read(spark, out, **kw).toArrow()
+            assert got.column_names == want.column_names, (runner, kind)
+            assert _rows(got) == _rows(want), (runner, kind)
         assert want.num_rows or kind == "absent", kind
 
 
@@ -223,27 +227,30 @@ def test_kernel_never_parses_a_chunk_its_zones_exclude(enc_dir, kw):
 
 
 @pytest.mark.parametrize("layout", ["per-file", "by-source"])
-def test_reads_match_pyarrow_truth(spark, table, enc_dir, salted_dir, layout):
-    """Every read kind, file- and chunk-pruned, on both layouts. Every
-    read carries the driver keep-list and its funnel."""
+def test_reads_match_pyarrow_truth(runners, spark, table, enc_dir, salted_dir, layout):
+    """Every read kind, file- and chunk-pruned, on both layouts, through
+    each runner. Every read carries the driver keep-list and its funnel."""
     out = enc_dir if layout == "per-file" else salted_dir
-    _assert_reads_match_truth(spark, table, out)
+    _assert_reads_match_truth(runners, spark, table, out)
     kinds = _all_read_kinds(table)
+    records = read_manifest(out)
     for kind, kw in kinds.items():
         plan = plan_read(out, **{"tok_ids" if k == "contains_token" else k: v
                                  for k, v in kw.items() if k != "columns"})
         assert plan.funnel["files_kept"] == len(plan.stems), kind
+        assert plan.funnel["bytes_kept"] == sum(records[s]["bytes_out"] for s in plan.stems)
     # a read without a filter keeps every record
     full = plan_read(out)
     assert len(full.stems) == full.funnel["files_kept"] == full.funnel["files_total"] > 0
     assert plan_read(out, tok_ids=kinds["absent"]["contains_token"]).stems == {}
 
 
-def test_percent_encoded_input_file_names(spark, table, tmp_path):
+def test_percent_encoded_input_file_names(runners, spark, table, tmp_path):
     """``input_file_name()`` percent-encodes a file's URI: a space or a
     ``%`` in an input name must still map to its file, through the batch
     encode and the stream. A by-source bucket stem with a ``%`` and glob
-    metacharacters reads back exactly: part paths are literal."""
+    metacharacters reads back exactly through each runner: part paths
+    are literal."""
     from poc_parquet_aggregator_spark.streaming import encode_stream
 
     src = str(tmp_path / "src")
@@ -251,7 +258,7 @@ def test_percent_encoded_input_file_names(spark, table, tmp_path):
     for encode in (encode_dataset, encode_stream):
         out = str(tmp_path / encode.__name__)
         encode(spark, src, out)
-        _assert_reads_match_truth(spark, table, out)
+        _assert_reads_match_truth(runners, spark, table, out)
 
     pct = str(tmp_path / "pct")
     os.makedirs(pct)
@@ -267,10 +274,10 @@ def test_percent_encoded_input_file_names(spark, table, tmp_path):
     salted = str(tmp_path / "pct_salted")
     encode_dataset_by_source(spark, pct, salted, n_salts=1)
     assert list(read_manifest(salted)) == ["a%41[1]{2}_s000"]
-    for enc in (out, salted):
+    for (runner, read), enc in itertools.product(runners.items(), (out, salted)):
         for kw in ({}, {"sources": ["a%41[1]{2}"]}, {"sources": ["a%41[1]{2}", "A"]}):
-            assert _rows(read_decoded(spark, enc, **kw).toArrow()) == _rows(sub), (enc, kw)
-        assert read_decoded(spark, enc, sources=["aA[1]{2}"]).count() == 0
+            assert _rows(read(spark, enc, **kw).toArrow()) == _rows(sub), (runner, enc, kw)
+        assert read(spark, enc, sources=["aA[1]{2}"]).count() == 0, runner
 
 
 @pytest.mark.parametrize("arg", ["doc_ids", "sources", "columns"])
@@ -279,7 +286,7 @@ def test_empty_list_arguments_raise(spark, enc_dir, arg):
         read_decoded(spark, enc_dir, **{arg: []})
 
 
-def test_by_source_prefix_matches_whole_source(spark, tmp_path):
+def test_by_source_prefix_matches_whole_source(runners, spark, tmp_path):
     """Source ``a`` must not keep the buckets of source ``ab``."""
     base = generate_token_table(1200, seed=13)
     source = np.where(np.arange(base.num_rows) % 3 == 0, "a", "ab")
@@ -292,10 +299,38 @@ def test_by_source_prefix_matches_whole_source(spark, tmp_path):
     pq.write_table(tbl.slice(600), str(src / "tokens-000000000600.parquet"))
     out = str(tmp_path / "enc")
     encode_dataset_by_source(spark, str(src), out, n_salts=2)
-    df = read_decoded(spark, out, sources=["a"], columns=["doc_id", "source"])
     plan = plan_read(out, sources=["a"])
     assert sorted(plan.stems) == ["a_s000", "a_s001"]
+    records = read_manifest(out)
     assert plan.funnel == {"files_total": 4, "files_zone_pruned": 0, "files_source_pruned": 2,
-                           "files_filter_pruned": 0, "files_kept": 2}
+                           "files_filter_pruned": 0, "files_kept": 2,
+                           "bytes_kept": sum(records[s]["bytes_out"] for s in plan.stems)}
     want = [(d, "a") for d, s in zip(tbl.column("doc_id").to_pylist(), source) if s == "a"]
-    assert _rows(df.toArrow()) == sorted(want)
+    for runner, read in runners.items():
+        df = read(spark, out, sources=["a"], columns=["doc_id", "source"])
+        assert _rows(df.toArrow()) == sorted(want), runner
+
+
+def test_read_decoded_picks_the_runner_from_kept_bytes(spark, enc_dir, monkeypatch):
+    """``read_decoded`` runs the kernel in-process when the kept records
+    hold at most ``_LOCAL_READ_BYTES`` encoded bytes and in a
+    ``mapInArrow`` job above it, and records the choice in the funnel
+    next to the bytes that made it."""
+    records = read_manifest(enc_dir)
+    stem = sorted(records)[1]
+    rng = (records[stem]["doc_id_min"], records[stem]["doc_id_max"])
+    kept = records[stem]["bytes_out"]
+    assert 0 < kept <= pipeline._LOCAL_READ_BYTES  # the test table reads in-process
+    plans = []
+    real = pipeline.plan_read
+    monkeypatch.setattr(pipeline, "plan_read", lambda *a, **kw: plans.append(real(*a, **kw)) or plans[-1])
+    for limit, runner in ((pipeline._LOCAL_READ_BYTES, "local"), (kept, "local"),
+                          (kept - 1, "spark")):
+        monkeypatch.setattr(pipeline, "_LOCAL_READ_BYTES", limit)
+        df = read_decoded(spark, enc_dir, doc_id_range=rng)
+        assert plans[-1].funnel == {"files_total": N_DOCS // DOCS_PER_FILE, "files_zone_pruned": 3,
+                                    "files_source_pruned": 0, "files_filter_pruned": 0,
+                                    "files_kept": 1, "bytes_kept": kept, "runner": runner}
+        has_job = "MapInArrow" in df._jdf.queryExecution().optimizedPlan().toString()
+        assert has_job == (runner == "spark"), runner
+        assert df.count() == DOCS_PER_FILE

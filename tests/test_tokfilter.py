@@ -1,7 +1,8 @@
 """Token-membership filters (encode/tokfilter.py) + the contains_token
 read path: unit semantics, hypothesis properties (no false negatives,
 exact-mode no false positives), end-to-end equality against a plain
-array_contains over the raw input, measured pruning, and pre-upgrade
+array_contains over the raw input through each read runner, measured
+pruning, and pre-upgrade
 compatibility (encodes that predate the filter columns stay readable
 and exact)."""
 
@@ -23,7 +24,6 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset,
     encode_dataset_by_source,
     plan_read,
-    read_decoded,
     read_manifest,
     token_read_stats,
 )
@@ -292,28 +292,28 @@ def _rare_and_absent(token_dir):
     return rare, absent
 
 
-def test_contains_token_matches_plain_filter_and_prunes(spark, token_dir, enc_dir):
+def _doc_ids(df) -> list[str]:
+    return [r[0] for r in df.select("doc_id").orderBy("doc_id").collect()]
+
+
+def test_contains_token_matches_plain_filter_and_prunes(runners, spark, token_dir, enc_dir):
     rare, absent = _rare_and_absent(token_dir)
-    got = [
-        r[0]
-        for r in read_decoded(spark, enc_dir, contains_token=rare)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    assert got == _expected_ids(spark, token_dir, rare) and got
+    want = _expected_ids(spark, token_dir, rare)
+    for runner, read in runners.items():
+        got = _doc_ids(read(spark, enc_dir, contains_token=rare))
+        assert got == want and got, runner
+        # absent id: nothing decoded, nothing returned
+        assert read(spark, enc_dir, contains_token=absent).count() == 0, runner
     # the sidecar bitmaps are exact for vocab-sized spans: every file but
     # the one holding the token must be pruned driver-side
     st_ = token_read_stats(enc_dir, rare)
     assert st_["files_total"] == N_DOCS // DOCS_PER_FILE
     assert st_["files_kept"] == 1, st_
-    # absent id: nothing decoded, nothing returned
-    assert read_decoded(spark, enc_dir, contains_token=absent).count() == 0
     st0 = token_read_stats(enc_dir, absent)
     assert st0["files_kept"] == 0, st0
 
 
-def test_contains_token_composes_with_other_prunes(spark, token_dir, enc_dir):
+def test_contains_token_composes_with_other_prunes(runners, spark, token_dir, enc_dir):
     rare, _ = _rare_and_absent(token_dir)
     exp = (
         spark.read.parquet(token_dir)
@@ -322,18 +322,19 @@ def test_contains_token_composes_with_other_prunes(spark, token_dir, enc_dir):
         .orderBy("doc_id")
         .collect()
     )
-    got = (
-        read_decoded(
-            spark, enc_dir, contains_token=rare, n_tok_range=(10, 1 << 30),
-            columns=["doc_id", "n_tok"],
+    for runner, read in runners.items():
+        got = (
+            read(
+                spark, enc_dir, contains_token=rare, n_tok_range=(10, 1 << 30),
+                columns=["doc_id", "n_tok"],
+            )
+            .orderBy("doc_id")
+            .collect()
         )
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
+        assert [tuple(r) for r in got] == [tuple(r) for r in exp], runner
 
 
-def test_contains_token_on_salted_layout(spark, tmp_path):
+def test_contains_token_on_salted_layout(runners, spark, tmp_path):
     # bigger corpus so the salted buckets clear the filter SIZE GUARD
     # (tiny chunks drop their bitmap by design; ~300 docs/bucket keeps it)
     src = str(tmp_path / "tokens_big")
@@ -341,19 +342,14 @@ def test_contains_token_on_salted_layout(spark, tmp_path):
     out = str(tmp_path / "enc_salted")
     encode_dataset_by_source(spark, src, out, n_salts=2)
     rare, _ = _rare_and_absent(src)
-    got = [
-        r[0]
-        for r in read_decoded(spark, out, contains_token=rare)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    assert got == _expected_ids(spark, src, rare)
+    want = _expected_ids(spark, src, rare)
+    for runner, read in runners.items():
+        assert _doc_ids(read(spark, out, contains_token=rare)) == want, runner
     st_ = token_read_stats(out, rare)
     assert st_["files_kept"] < st_["files_total"], st_
 
 
-def test_contains_token_set_any_semantics(spark, token_dir, enc_dir):
+def test_contains_token_set_any_semantics(runners, spark, token_dir, enc_dir):
     """A banned-id SET (the realistic audit shape): docs containing ANY of
     the ids, equal to an arrays_overlap over the raw input; absent ids in
     the set must not weaken pruning for the rare one."""
@@ -366,22 +362,18 @@ def test_contains_token_set_any_semantics(spark, token_dir, enc_dir):
         .orderBy("doc_id")
         .collect()
     )
-    got = (
-        read_decoded(spark, enc_dir, contains_token=ids)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert [r[0] for r in got] == [r[0] for r in exp] and got
+    for runner, read in runners.items():
+        got = _doc_ids(read(spark, enc_dir, contains_token=ids))
+        assert got == [r[0] for r in exp] and got, runner
+        # single-id behaviour unchanged through the list form
+        one = read(spark, enc_dir, contains_token=[rare]).count()
+        assert one == read(spark, enc_dir, contains_token=rare).count(), runner
     # the absent member adds no files: still only the rare token's file
     st_ = token_read_stats(enc_dir, ids)
     assert st_["files_kept"] == 1, st_
-    # single-id behaviour unchanged through the list form
-    one = read_decoded(spark, enc_dir, contains_token=[rare]).count()
-    assert one == read_decoded(spark, enc_dir, contains_token=rare).count()
 
 
-def test_pre_upgrade_encode_still_reads_exactly(spark, token_dir, tmp_path):
+def test_pre_upgrade_encode_still_reads_exactly(runners, spark, token_dir, tmp_path):
     """Strip one committed file down to the pre-filter format (no tok_*
     chunk columns, no manifest bounds, no sidecar): the conservative-keep
     rules must decode it and the result must stay exact, and the plan's
@@ -414,13 +406,9 @@ def test_pre_upgrade_encode_still_reads_exactly(spark, token_dir, tmp_path):
         )
     others = set().union(*(s for k, s in per_file.items() if k != stem))
     only_here = next(iter(sorted(per_file[stem] - others)))
-    got = [
-        r[0]
-        for r in read_decoded(spark, out, contains_token=only_here)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    assert got == _expected_ids(spark, token_dir, only_here) and got
+    want = _expected_ids(spark, token_dir, only_here)
+    for runner, read in runners.items():
+        got = _doc_ids(read(spark, out, contains_token=only_here))
+        assert got == want and got, runner
     assert stem in plan_read(out, tok_ids=only_here).stems
     shutil.rmtree(out)
