@@ -69,6 +69,13 @@ def _bit_width(max_delta: int) -> int:
     return int(max_delta).bit_length()
 
 
+# n × width at or below this many bits packs through np.packbits over the
+# n×width bit matrix, above it through the word-parallel loop: at width 11
+# packbits takes 0.013 ms at n = 64 against 0.52 ms, 0.35 against 0.50 ms
+# at n = 10k, but 3.5 ms at n = 100k against 1.0 ms (ARCHITECTURE §2)
+_PACKBITS_MAX_BITS = 1 << 17
+
+
 def pack_bits(values: np.ndarray, width: int) -> bytes:
     """Pack non-negative values into ``width``-bit little-endian cells.
 
@@ -76,7 +83,9 @@ def pack_bits(values: np.ndarray, width: int) -> bytes:
     packs into exactly ``width`` uint64 words and the bit-offset pattern is
     identical across blocks — the inner loops run ~64+width vectorized ops
     over n/64-length arrays (≈1.5 ops/value) instead of building an n×width
-    bit matrix.
+    bit matrix. Those ~64+width calls cost the same at any n, so inputs of
+    at most ``_PACKBITS_MAX_BITS`` bits build the bit matrix instead and
+    pack it in one ``np.packbits`` call: the same bytes.
     """
     n = len(values)
     if width == 0 or n == 0:
@@ -89,6 +98,10 @@ def pack_bits(values: np.ndarray, width: int) -> bytes:
         return values.astype(np.uint16).tobytes()
     if width == 32:
         return values.astype(np.uint32, copy=False).tobytes()
+    if n * width <= _PACKBITS_MAX_BITS:
+        shifts = np.arange(width, dtype=np.uint64)
+        bits = (values.astype(np.uint64, copy=False)[:, None] >> shifts) & np.uint64(1)
+        return np.packbits(bits.astype(np.uint8).ravel(), bitorder="little").tobytes()
     n_blocks = (n + 63) // 64
     v = np.zeros(n_blocks * 64, dtype=np.uint64)
     v[:n] = values.astype(np.uint64, copy=False)

@@ -53,6 +53,11 @@ _ESCAPE = 0xFF
 _MAX_SYMBOLS = 254  # codes 0..253; 0xFF = escape
 _MAX_SYMBOL_LEN = 8
 _TRAIN_ITERS = 5
+# a trial sample (the first 512 strings) with fewer payload bytes than
+# this returns STR_PLAIN untrained: no measured family won with FSST from
+# a sample this small, and the pure-Python trial costs 14-253 ms a chunk
+# (ARCHITECTURE §2, "FSST floor")
+_FSST_MIN_SAMPLE_BYTES = 2048
 
 
 # ------------------------------------------------------------- FSST training
@@ -177,8 +182,10 @@ def utf8_buffers(arr: "pa.Array") -> tuple[memoryview, np.ndarray]:
 def choose_string_codec(arr: "pa.Array") -> int:
     """The codec for one string chunk, picked per the north rule:
       * low cardinality (≤ max(16, n/4) distinct) → STR_DICT;
-      * FSST when a 512-string sample of it is < 0.9× STR_PLAIN after
-        zstd (the size that is stored);
+      * STR_PLAIN, untrained, when the 512-string sample holds fewer
+        than ``_FSST_MIN_SAMPLE_BYTES`` payload bytes;
+      * FSST when that sample is < 0.9× STR_PLAIN after zstd (the size
+        that is stored);
       * else STR_PLAIN.
     The trial runs on slices of the Arrow payload, never on Python strings."""
     n = len(arr)
@@ -187,6 +194,8 @@ def choose_string_codec(arr: "pa.Array") -> int:
     if pc.count_distinct(arr).as_py() <= max(16, n // 4):
         return STR_DICT
     sample, lens = utf8_buffers(arr[: min(512, n)])
+    if len(sample) < _FSST_MIN_SAMPLE_BYTES:
+        return STR_PLAIN
     sample = bytes(sample)
     fsst = wrap_zstd(_fsst_from_payload(sample, lens))
     if len(fsst) < 0.9 * len(wrap_zstd(_plain_from_buffers(sample, lens))):

@@ -4,8 +4,11 @@ Shape mirrors the reference's chunked streaming + incremental-write design
 (/root/reference/src/streaming_processor.py:94-263,
  /root/reference/src/aggregator_ocp_aws.py:307-350) re-expressed Spark-first:
 
-  * the "chunk" is an Arrow batch inside ``mapInArrow`` (vectorized, no
-    per-row Python — BASELINE.json input_hint);
+  * the "chunk" is ``_CHUNK_ROWS`` rows of one commit unit (an input
+    file or a by-source bucket), cut from the unit's first row whichever
+    runner feeds the kernel its Arrow batches (vectorized, no per-row
+    Python — BASELINE.json input_hint): a ``mapInArrow`` job, or the
+    driver itself for a job of at most ``_LOCAL_ENCODE_BYTES`` input;
   * encoded blobs are written TASK-LOCALLY with pyarrow, straight into
     fresh part files ``data/<stem>/part-<uuid>.parquet`` — they never
     cross the Arrow boundary back to the JVM (multi-MB binary cells are
@@ -44,7 +47,7 @@ import time
 import urllib.parse
 import uuid
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, replace
 from functools import partial, reduce
 
@@ -155,6 +158,20 @@ _ENC_SCHEMA = from_arrow_schema(_ENC_ARROW_SCHEMA)
 # crossover of a full-scan sweep on 4 cores (ARCHITECTURE §4,
 # scripts/runner_sweep.py): in-process wins at 3.9 MiB, Spark at 4.9 MiB.
 _LOCAL_READ_BYTES = 4 << 20
+
+# the largest encode job, in its input files' on-disk bytes, that runs
+# the encode kernel in this process instead of a Spark job: below it the
+# job's fixed cost outweighs the kernel work. Set below the smaller
+# crossover of the two layouts in an encode sweep on 4 cores (ARCHITECTURE
+# §1, scripts/runner_sweep.py encode): by-source runs faster in-process at
+# 6.6 MiB and in Spark at 7.4 MiB; per-file at 8.8 and 11.8 MiB.
+_LOCAL_ENCODE_BYTES = 6 << 20
+
+# rows per encoded chunk, counted from the first row of its commit unit
+# (an input file, or a by-source bucket) whatever batches the unit
+# arrives in: a unit's bytes do not depend on the runner, on the task
+# that read it or on the units beside it, so a resume is byte-exact
+_CHUNK_ROWS = 2048
 
 # ---------------- extra metadata columns (beyond the core 4-column schema)
 #
@@ -379,8 +396,9 @@ def _encode_chunk_row(
 
 
 def _split_by_file(batch: pa.RecordBatch, key: str = "_file") -> Iterator[tuple[str, pa.RecordBatch]]:
-    """Split a batch at commit-key boundaries (batches straddle keys only at
-    split edges; the common case is a single slice, zero-copy)."""
+    """Split a batch at commit-key boundaries (a batch straddles keys
+    where one unit ends and the next begins; the common case is a single
+    slice, zero-copy)."""
     files = batch.column(batch.schema.get_field_index(key))
     if len(files) == 0:
         return
@@ -430,29 +448,75 @@ def fold_parts(rows: list[dict]) -> dict:
     return out
 
 
-def _make_encode_fn(
+def _concat(batches: list[pa.RecordBatch]) -> pa.RecordBatch:
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+def _unit_chunks(
+    pieces: Iterator[tuple[str, pa.RecordBatch]],
+) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """Re-cut (stem, batch) pieces, each unit's pieces in a row, into
+    (stem, chunk) pairs of ``_CHUNK_ROWS`` rows counted from the unit's
+    first row (its last chunk shorter), whatever batches the unit came
+    in."""
+    stem, buf, n = None, [], 0
+    for key, part in pieces:
+        if key != stem:
+            if n:
+                yield stem, _concat(buf)
+            stem, buf, n = key, [], 0
+        buf.append(part)
+        n += part.num_rows
+        while n >= _CHUNK_ROWS:
+            whole = _concat(buf)
+            yield stem, whole.slice(0, _CHUNK_ROWS)
+            buf, n = [whole.slice(_CHUNK_ROWS)], n - _CHUNK_ROWS
+    if n:
+        yield stem, _concat(buf)
+
+
+def _part_row(out_dir: str, stem: str, rows: list[dict]) -> dict:
+    """Write one unit's chunk rows as a part file; returns its part row
+    (``_META_ARROW_SCHEMA``)."""
+    part_path = _write_part(out_dir, stem, pa.Table.from_pylist(rows, schema=_ENC_ARROW_SCHEMA))
+    part = fold_parts(rows)
+    part["codecs_json"] = json.dumps(part.pop("codecs"), sort_keys=True)
+    return {"file_stem": stem, "part_path": part_path, **part}
+
+
+def _encode_units(
+    pieces: Iterator[tuple[str, pa.RecordBatch]],
     out_dir: str,
-    zstd_level: int = 3,
-    key: str = "_file",
-    extras: list[list[str]] | None = None,
-):
-    stem_of = (lambda f: _stem(_local_path(f))) if key == "_file" else (lambda s: s)
+    zstd_level: int,
+    extras: list[list[str]],
+) -> Iterator[dict]:
+    """The encode kernel of both runners: (stem, batch) pieces, each
+    commit unit's pieces in a row, encoded one unit after another. A
+    unit's chunks (``_unit_chunks``) become one part file, written when
+    the unit ends; yields its part row. A unit with no rows writes
+    nothing."""
+    stem, rows = None, []
+    for key, chunk in _unit_chunks(pieces):
+        if key != stem and rows:
+            yield _part_row(out_dir, stem, rows)
+            rows = []
+        stem = key
+        rows.append(_encode_chunk_row(chunk, zstd_level, extras=extras))
+    if rows:
+        yield _part_row(out_dir, stem, rows)
+
+
+def _make_encode_fn(out_dir: str, zstd_level: int, key: str, extras: list[list[str]]):
+    """``_encode_units`` as a ``mapInArrow`` function: each batch is split
+    at its ``key`` column (an ``input_file_name()`` URI, or a by-source
+    bucket) and the task's part rows come back as one batch."""
+    stem_of = (lambda f: _stem(_local_path(f))) if key == "_file" else str
 
     def encode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        per_file: dict[str, list[dict]] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            for fname, part in _split_by_file(batch, key):
-                row = _encode_chunk_row(part, zstd_level, extras=extras)
-                per_file.setdefault(stem_of(str(fname)), []).append(row)
-        out_rows = []
-        for stem, rows in per_file.items():
-            tbl = pa.Table.from_pylist(rows, schema=_ENC_ARROW_SCHEMA)
-            part_path = _write_part(out_dir, stem, tbl)
-            part = fold_parts(rows)
-            part["codecs_json"] = json.dumps(part.pop("codecs"), sort_keys=True)
-            out_rows.append({"file_stem": stem, "part_path": part_path, **part})
+        pieces = ((stem_of(k), part) for b in batches for k, part in _split_by_file(b, key))
+        out_rows = list(_encode_units(pieces, out_dir, zstd_level, extras))
         if out_rows:
             yield pa.RecordBatch.from_pylist(out_rows, schema=_META_ARROW_SCHEMA)
 
@@ -843,10 +907,11 @@ def compact_manifest(out_dir: str) -> dict:
 
 def compact_encoded(out_dir: str, max_parts: int = 1) -> dict:
     """Merge multi-part encoded stems into one part each — the small-file
-    maintenance pass. Spark splits a large input file across tasks, so one
-    stem can hold several small parquet parts; at the 10^12-sequence target
-    that's the classic small-file problem on the READ side (footer/open
-    cost per part). Chunk rows are opaque, already-encoded blobs, so
+    maintenance pass. An encode writes one part per unit, but tables
+    written by builds that split an input file across Spark tasks hold
+    several small parts per stem; at the 10^12-sequence target that's the
+    classic small-file problem on the READ side (footer/open cost per
+    part). Chunk rows are opaque, already-encoded blobs, so
     compaction is a driver-side pyarrow concat — NO re-encode, checksums
     unchanged.
 
@@ -907,12 +972,12 @@ def _commit(out_dir: str, rec: dict) -> None:
             os.remove(os.path.join(path, name))
 
 
-def _commit_parts(out_dir: str, stem: str, rows: list, **fields) -> None:
-    """Commit the part rows (META_SCHEMA) the encode tasks wrote for one
+def _commit_parts(out_dir: str, stem: str, rows: list[dict], **fields) -> None:
+    """Commit the part rows (META_SCHEMA) the encode kernel wrote for one
     stem: they fold into the manifest record, plus the caller's
     ``fields``; the merged token filter goes to a fresh sidecar name the
     record names, and ``_commit`` writes the record."""
-    rec = fold_parts([{**r.asDict(), "codecs": json.loads(r["codecs_json"])} for r in rows])
+    rec = fold_parts([{**r, "codecs": json.loads(r["codecs_json"])} for r in rows])
     tok_filter = rec.pop("tok_filter")
     rec.update({
         "file_stem": stem, "parts": sorted(r["part_path"] for r in rows),
@@ -926,7 +991,9 @@ def _commit_parts(out_dir: str, stem: str, rows: list, **fields) -> None:
 
 def _job_metrics(metrics: dict, out_dir: str, files: list[str], t0: float) -> dict:
     """Add the totals every encode job reports to ``metrics``; returns
-    the manifest."""
+    the manifest. A call that had nothing to encode ran no runner."""
+    metrics.setdefault("runner", None)
+    metrics.setdefault("input_bytes", 0)
     manifest = read_manifest(out_dir)
     for k in ("n_docs", "n_tokens", "bytes_in", "bytes_out"):
         metrics[k] = sum(r[k] for r in manifest.values())
@@ -992,24 +1059,68 @@ def _input_extras(files: list[str]) -> list[list[str]]:
 # ---------------------------------------------------------------- encode job
 
 
+def _encode_spark(
+    spark: SparkSession, df: DataFrame, sizes: list[int], out_dir: str, key: str,
+    zstd_level: int, extras: list[list[str]],
+) -> list[dict]:
+    """The Spark runner: ``df`` through the kernel in a ``mapInArrow`` job;
+    returns the part rows. ``sizes`` are the scanned files' bytes. The
+    splits are sized to the cluster (Spark's default 128 MB bin-packing
+    would coalesce many small files into a handful of tasks and leave
+    most cores idle): the bytes over ≥2 waves of parallelism, but never
+    less than the largest file, and with ``minPartitionNum`` 1 Spark's
+    split size is the ``maxPartitionBytes`` set here (it is
+    ``min(maxPartitionBytes, max(openCostInBytes, totalBytes /
+    minPartitionNum))``), so no input file is split across tasks: a
+    task reads whole units. The split confs hold for this job's scan
+    only and are restored, or unset, when it returns or raises."""
+    n_tasks = 2 * spark.sparkContext.defaultParallelism
+    split = max(sum(sizes) // n_tasks + 1, max(sizes), 1 << 20)
+    confs = {"spark.sql.files.maxPartitionBytes": str(split),
+             "spark.sql.files.openCostInBytes": "0",
+             "spark.sql.files.minPartitionNum": "1"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        meta_rows = df.mapInArrow(
+            _make_encode_fn(out_dir, zstd_level, key, extras),
+            schema=META_SCHEMA,
+        ).collect()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    return [r.asDict() for r in meta_rows]
+
+
 def _encode_parts(
-    spark: SparkSession, df: DataFrame, files: list[str], out_dir: str,
-    done: dict[str, dict], key: str, zstd_level: int,
-) -> tuple[dict[str, list], list[list[str]]]:
-    """The encode job of both layouts: ``df`` (the rows of ``files`` plus
-    the commit ``key`` column, filtered and shuffled as the caller needs)
-    through ``_make_encode_fn``; returns (the part rows by stem, the extra
-    columns [[name, spark type], …] each of the job's records declares).
+    spark: SparkSession, files: list[str], out_dir: str, done: dict[str, dict],
+    key: str, zstd_level: int, metrics: dict,
+    spark_df: Callable[[], DataFrame],
+    local_pieces: Callable[[], Iterator[tuple[str, pa.RecordBatch]]],
+) -> tuple[dict[str, list[dict]], list[list[str]]]:
+    """The encode job of both layouts over ``files``; returns (the part
+    rows by stem, the extra columns [[name, spark type], …] each of the
+    job's records declares).
 
     Before any task runs, every file in ``files`` must declare the same
     extra columns (``_input_extras``), and every committed record in
     ``done`` must have the job's layout (by-source records carry
     ``n_salts``) and those extras, otherwise the job raises: a read
-    serves all records as one table. The scan's splits are sized to the
-    cluster (Spark's default 128 MB bin-packing would coalesce many small
-    files into a handful of tasks and leave most cores idle): ``files``'
-    bytes over ≥2 waves of parallelism. The split confs hold for this job's scan only and are
-    restored, or unset, when it returns or raises."""
+    serves all records as one table.
+
+    Then the job's input bytes (``files``' on-disk size, recorded with
+    the choice in ``metrics`` as ``input_bytes`` and ``runner``) pick
+    one runner for the whole job: at or below ``_LOCAL_ENCODE_BYTES`` the
+    kernel runs in this process, one unit after another, over
+    ``local_pieces()`` ((stem, batch) pieces, each unit's in a row) and
+    makes no JVM call; above it ``spark_df()`` (the rows plus the commit
+    ``key`` column, each unit within one task and in a row) runs
+    through it in a Spark job (``_encode_spark``). A unit's chunks are
+    cut from its own rows alone, so both runners write the same bytes."""
     extras = _input_extras(files)
     by_source = key == "_bucket"
     for stem, rec in done.items():
@@ -1019,28 +1130,25 @@ def _encode_parts(
                 f"does not match this job (by-source: {by_source}, extras {extras}); "
                 "encode into a fresh out_dir"
             )
-    n_tasks = 2 * spark.sparkContext.defaultParallelism
-    split = max(sum(os.stat(f).st_size for f in files) // n_tasks + 1, 1 << 20)
-    confs = {"spark.sql.files.maxPartitionBytes": str(split),
-             "spark.sql.files.openCostInBytes": "0"}
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        meta_rows = df.mapInArrow(
-            _make_encode_fn(out_dir, zstd_level, key=key, extras=extras),
-            schema=META_SCHEMA,
-        ).collect()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    by_stem: dict[str, list] = {}
-    for r in meta_rows:
+    sizes = [os.stat(f).st_size for f in files]
+    local = sum(sizes) <= _LOCAL_ENCODE_BYTES
+    metrics.update(runner="local" if local else "spark", input_bytes=sum(sizes))
+    if local:
+        part_rows = list(_encode_units(local_pieces(), out_dir, zstd_level, extras))
+    else:
+        part_rows = _encode_spark(spark, spark_df(), sizes, out_dir, key, zstd_level, extras)
+    by_stem: dict[str, list[dict]] = {}
+    for r in part_rows:
         by_stem.setdefault(r["file_stem"], []).append(r)
     return by_stem, extras
+
+
+def _file_pieces(files: list[str]) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """The per-file layout's units for the in-process runner: each file's
+    batches, keyed by the stem of its path."""
+    for f in files:
+        for batch in pq.ParquetFile(f).iter_batches(batch_size=_CHUNK_ROWS):
+            yield _stem(f), batch
 
 
 def encode_dataset(
@@ -1069,11 +1177,13 @@ def encode_dataset(
         "files_encoded": len(todo),
     }
     if todo:
-        df = spark.read.parquet(*todo).withColumn("_file", F.input_file_name())
-        by_stem, extras = _encode_parts(spark, df, todo, out_dir, done, "_file", zstd_level)
-        # commit per file (a file may yield several part rows if Spark split
-        # it); an empty input file yields none and commits a zero record,
-        # so resume doesn't rescan it forever
+        by_stem, extras = _encode_parts(
+            spark, todo, out_dir, done, "_file", zstd_level, metrics,
+            lambda: spark.read.parquet(*todo).withColumn("_file", F.input_file_name()),
+            lambda: _file_pieces(todo),
+        )
+        # commit per file; an empty input file yields no part row and
+        # commits a zero record, so resume doesn't rescan it forever
         for f in todo:
             rows = by_stem.get(_stem(f), [])
             _commit_parts(out_dir, _stem(f), rows, extras=extras, snapshot=_snapshot(f))

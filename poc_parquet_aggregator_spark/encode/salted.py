@@ -12,6 +12,12 @@ Plan shape:
     df.repartition(n_buckets, "bucket") → mapInArrow encode → per-bucket
     commit (the same manifest-record commit as the per-file job)
 
+A job whose input is at most ``_LOCAL_ENCODE_BYTES`` skips the Spark job:
+the driver computes the same buckets in Arrow, sorts the rows by (bucket,
+doc_id) and encodes one bucket after another with the same kernel, which
+cuts a bucket's chunks from its own rows alone, so both runners write the
+same bytes.
+
 Each bucket record carries ``source``, ``salt``, ``n_salts``, the input
 snapshot and ``n_buckets``, the size of the bucket universe of its run:
 the records alone tell a resume whether every bucket is committed.
@@ -27,15 +33,22 @@ from __future__ import annotations
 import os
 import time
 import zlib
+from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..codecs.strings import utf8_buffers
 from .pipeline import (
     _commit_parts,
     _encode_parts,
     _input_files,
     _job_metrics,
+    _split_by_file,
     read_manifest,
 )
 
@@ -47,6 +60,55 @@ def _input_snapshot(files: list[str]) -> dict:
 
     sig = zlib.crc32("|".join(sig_of(f) for f in sorted(files)).encode())
     return {"n_files": len(files), "crc": sig}
+
+
+def _bucket_df(spark: SparkSession, files: list[str], n_salts: int, done: dict) -> DataFrame:
+    """The Spark runner's input: the rows of ``files`` with their
+    ``_bucket``, committed buckets dropped, through the explicit salted
+    repartition (one shuffle, buckets ≈ balanced). sortWithinPartitions
+    puts each bucket's rows in a row, ordered by doc_id, so a bucket is
+    one unit of the kernel."""
+    bucket = F.concat(
+        F.col("source"),
+        F.lit("_s"),
+        F.lpad((F.crc32(F.col("doc_id").cast("binary")) % n_salts).cast("string"), 3, "0"),
+    )
+    df = spark.read.parquet(*files).withColumn("_bucket", bucket)
+    if done:
+        df = df.filter(~F.col("_bucket").isin(list(done)))
+    n_buckets_hint = max(spark.sparkContext.defaultParallelism, n_salts)
+    return df.repartition(n_buckets_hint, "_bucket").sortWithinPartitions("_bucket", "doc_id")
+
+
+def _bucket_pieces(
+    files: list[str], n_salts: int, done: dict
+) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """The in-process runner's input: ``_bucket_df``'s rows computed in
+    Arrow — the same bucket strings (``zlib.crc32`` over each doc_id's
+    UTF-8 bytes), committed buckets dropped, sorted by (bucket, doc_id)
+    in byte order — as (bucket, batch) pieces, one unit after another."""
+    names = pq.read_schema(files[0]).names
+    tbl = pa.concat_tables(
+        [pq.ParquetFile(f).read().select(names) for f in files], promote_options="default"
+    )
+    payload, lens = utf8_buffers(tbl.column("doc_id").combine_chunks())
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    crc = np.fromiter(
+        (zlib.crc32(payload[offs[i]:offs[i + 1]]) for i in range(len(lens))),
+        dtype=np.int64, count=len(lens),
+    )
+    salts, inverse = np.unique(crc % n_salts, return_inverse=True)
+    # Spark's lpad(salt, 3, "0") pads to three characters and cuts above
+    labels = pc.take(pa.array([str(s).rjust(3, "0")[:3] for s in salts], pa.string()),
+                     pa.array(inverse))
+    source = tbl.column("source").cast(pa.string())
+    tbl = tbl.append_column("_bucket", pc.binary_join_element_wise(source, labels, "_s"))
+    if done:
+        tbl = tbl.filter(pc.invert(pc.is_in(tbl.column("_bucket"), pa.array(list(done)))))
+    tbl = tbl.sort_by([("_bucket", "ascending"), ("doc_id", "ascending")])
+    for batch in tbl.to_batches():
+        yield from _split_by_file(batch, "_bucket")
 
 
 def encode_dataset_by_source(
@@ -87,21 +149,11 @@ def encode_dataset_by_source(
     metrics = {"buckets_skipped": len(done)}
 
     if not done or any(r.get("n_buckets") != len(done) for r in done.values()):
-        bucket = F.concat(
-            F.col("source"),
-            F.lit("_s"),
-            F.lpad((F.crc32(F.col("doc_id").cast("binary")) % n_salts).cast("string"), 3, "0"),
+        by_bucket, extras = _encode_parts(
+            spark, files, out_dir, done, "_bucket", zstd_level, metrics,
+            lambda: _bucket_df(spark, files, n_salts, done),
+            lambda: _bucket_pieces(files, n_salts, done),
         )
-        df = spark.read.parquet(*files).withColumn("_bucket", bucket)
-        if done:
-            df = df.filter(~F.col("_bucket").isin(list(done)))
-        # the explicit salted repartition: one shuffle, buckets ≈ balanced.
-        # sortWithinPartitions keeps each bucket contiguous (interleaved
-        # buckets fragment encode chunks → per-chunk overhead ruins the
-        # ratio) and makes chunk boundaries deterministic after the shuffle.
-        n_buckets_hint = max(spark.sparkContext.defaultParallelism, n_salts)
-        df = df.repartition(n_buckets_hint, "_bucket").sortWithinPartitions("_bucket", "doc_id")
-        by_bucket, extras = _encode_parts(spark, df, files, out_dir, done, "_bucket", zstd_level)
         n_buckets = len(set(done) | set(by_bucket))
         for stem, rows in by_bucket.items():
             source, salt = stem.rsplit("_s", 1)

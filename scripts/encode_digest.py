@@ -2,6 +2,7 @@
 checks between two builds of the encoder on the same input.
 
 Usage: python scripts/encode_digest.py OUT_DIR
+       python scripts/encode_digest.py --runners IN_DIR
 
 Prints one sha256 per blob column of the data files (tokens_blob,
 doc_id_blob, source_blob, extras_blob, tok_filter), one over the token
@@ -17,6 +18,14 @@ those are found there, so the output of both builds can be compared.
 The manifest digest drops what names files or times rather than content:
 ``committed_at``, ``compacted_at`` and ``parts``, and it reduces
 ``tok_filter`` to "has a filter".
+
+With ``--runners``, the script encodes IN_DIR in both layouts
+(``encode_dataset``, ``encode_dataset_by_source``) with each encode
+runner (in-process and ``mapInArrow``; 4 cores) into a temporary dir and
+prints the digests of each layout. If the two runners' digests differ,
+both are printed to stderr and the script exits 1. The package is
+imported from the tree this script lives in, on the driver and on the
+Python workers.
 """
 
 from __future__ import annotations
@@ -26,11 +35,14 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
 
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+sys.path.insert(0, ROOT)
 
+from poc_parquet_aggregator_spark.encode import pipeline  # noqa: E402
 from poc_parquet_aggregator_spark.encode.pipeline import read_manifest  # noqa: E402
 
 BLOB_COLUMNS = ["tokens_blob", "doc_id_blob", "source_blob", "extras_blob", "tok_filter"]
@@ -86,12 +98,47 @@ def encode_digest(out_dir: str) -> dict[str, str]:
     return out
 
 
-def main() -> None:
+def runner_digests(in_dir: str) -> int:
+    """Encode ``in_dir`` with each runner in both layouts; print the
+    digests, and return 1 if the runners' digests of a layout differ."""
+    # workers start after this, so they import the same tree as the driver
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
+    from poc_parquet_aggregator_spark.encode import encode_dataset, encode_dataset_by_source
+    from poc_parquet_aggregator_spark.plans import get_spark
+
+    spark = get_spark(app_name="encode-digest", cores=4,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    differ = 0
+    with tempfile.TemporaryDirectory() as tmp:
+        for encode in (encode_dataset, encode_dataset_by_source):
+            got = {}
+            # the runner is picked from the input size: force each in turn
+            for runner, limit in (("local", 1 << 62), ("spark", -1)):
+                pipeline._LOCAL_ENCODE_BYTES = limit
+                out = os.path.join(tmp, f"{encode.__name__}-{runner}")
+                encode(spark, in_dir, out)
+                got[runner] = encode_digest(out)
+            for name, digest in got["local"].items():
+                print(f"{digest}  {encode.__name__} {name}")
+                if got["spark"][name] != digest:
+                    differ += 1
+                    for runner, d in got.items():
+                        print(f"RUNNERS DIFFER {encode.__name__} {name} {runner}: {d[name]}",
+                              file=sys.stderr)
+    spark.stop()
+    return 1 if differ else 0
+
+
+def main() -> int:
+    if len(sys.argv) == 3 and sys.argv[1] == "--runners":
+        return runner_digests(sys.argv[2])
     if len(sys.argv) != 2:
-        sys.exit(__doc__)
+        print(__doc__)
+        return 2
     for name, digest in encode_digest(sys.argv[1]).items():
         print(f"{digest}  {name}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -423,3 +423,42 @@ class TestAlprdFloats:
     )
     def test_alprd_property_bit_roundtrip(self, fs):
         self._roundtrip(np.array(fs, dtype=np.float64))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(1, 31), st.integers(0, 20000), st.integers(0, 2**32 - 1))
+def test_pack_bits_paths_write_the_same_bytes(width, n, seed):
+    """``pack_bits`` packs inputs of at most ``_PACKBITS_MAX_BITS`` bits
+    through ``np.packbits`` and larger ones word-parallel: forced either
+    way, both write the same bytes, on either side of the threshold, and
+    ``unpack_bits`` reads them back."""
+    v = np.random.default_rng(seed).integers(0, 1 << width, n, dtype=np.int64)
+    got = {}
+    for limit in (-1, 1 << 40):
+        CI._PACKBITS_MAX_BITS, saved = limit, CI._PACKBITS_MAX_BITS
+        try:
+            got[limit] = CI.pack_bits(v, width)
+        finally:
+            CI._PACKBITS_MAX_BITS = saved
+    assert got[-1] == got[1 << 40] == CI.pack_bits(v, width)
+    assert np.array_equal(CI.unpack_bits(got[-1], n, width), v)
+
+
+def test_fsst_trial_skipped_below_the_sample_floor(monkeypatch):
+    """A chunk whose 512-string sample holds fewer than
+    ``_FSST_MIN_SAMPLE_BYTES`` payload bytes is STR_PLAIN without an FSST
+    trial; from the floor up the trial runs."""
+    trained = []
+    real = CS._train_symbols
+    monkeypatch.setattr(CS, "_train_symbols", lambda s: trained.append(len(s)) or real(s))
+    ids = [f"doc-{i:012d}" for i in range(2000)]  # high cardinality: never STR_DICT
+    width = len(ids[0])
+    below = pa.array(ids[: (CS._FSST_MIN_SAMPLE_BYTES - 1) // width])
+    assert len(CS.utf8_buffers(below)[0]) < CS._FSST_MIN_SAMPLE_BYTES
+    assert CS.choose_string_codec(below) == CS.STR_PLAIN and trained == []
+    at = pa.array(ids[: -(-CS._FSST_MIN_SAMPLE_BYTES // width)])
+    assert len(CS.utf8_buffers(at)[0]) >= CS._FSST_MIN_SAMPLE_BYTES
+    CS.choose_string_codec(at)
+    assert trained == [len(at)]
+    blob, codec = CS.encode_strings_arrow(below)
+    assert codec == CS.STR_PLAIN and decode_strings_arrow(blob).to_pylist() == below.to_pylist()

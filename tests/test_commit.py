@@ -6,8 +6,9 @@ name; ``compact_encoded`` commits its merged part the same way.
 A crash at every write or delete of that sequence leaves a table whose
 full read and token read both answer as the old version or both as the
 new one (or raise), never a mix or a subset, and a clean rerun ends in
-the bytes of an uninterrupted run (``scripts/encode_digest.py``). A crash
-in a by-source resume also reruns to those bytes, and one in
+the bytes of an uninterrupted run (``scripts/encode_digest.py``), on
+each encode runner. A crash in a by-source resume also reruns to those
+bytes on each runner, and one in
 ``compact_manifest`` never changes the records ``read_manifest`` returns.
 A named file that is gone fails the read instead of dropping its rows,
 and a by-source resume with another ``n_salts``, or over records of
@@ -59,12 +60,11 @@ def spark():
     )
 
 
-def _write(src, start: int, seed: int) -> str:
-    """One input file; small row groups so Spark splits it into several
-    parts."""
+def _write(src, start: int, seed: int, n: int = DOCS_PER_FILE) -> str:
+    """One input file of ``n`` docs, in several row groups."""
     os.makedirs(src, exist_ok=True)
     path = os.path.join(src, f"tokens-{start:012d}.parquet")
-    tbl = generate_token_table(DOCS_PER_FILE, seed=seed, start_id=start)
+    tbl = generate_token_table(n, seed=seed, start_id=start)
     pq.write_table(tbl, path, compression="zstd", row_group_size=500)
     return path
 
@@ -141,38 +141,42 @@ def _crash_suite(tmp_path, base: str, run, state=None, wants=None) -> list:
     raise AssertionError("unreachable")
 
 
-def test_crash_at_every_commit_step_of_a_re_encode(spark, tmp_path):
-    """One input file changes and re-encodes. Its old version holds a
-    token nothing else holds: the old state returns its docs, the new one
-    none. A sidecar replaced before the record (the old record and data
-    with the new filter) would return the old rows without those docs."""
-    src = str(tmp_path / "src")
-    changed = _write(src, 0, seed=1)
-    other = _write(src, DOCS_PER_FILE, seed=1)
-    base = str(tmp_path / "base")
-    encode_dataset(spark, src, base)
-    old_tokens = _tokens(changed)
-    _write(src, 0, seed=2)  # same doc ids, other tokens
-    token = min(old_tokens - _tokens(changed) - _tokens(other))
-    want_old = _state(spark, base, token)
-    run = lambda out: encode_dataset(spark, src, out)  # noqa: E731
-    ref = str(tmp_path / "new")
-    shutil.copytree(base, ref)
-    run(ref)
-    want_new = _state(spark, ref, token)
-    assert want_old[1] and not want_new[1] and want_old[0] != want_new[0]
-    state = partial(_state, spark, token=token)
-    seen = _crash_suite(tmp_path, base, run, state, [want_old, want_new])
-    assert seen[0] == 0 and seen[-1] == 1, seen
+def test_crash_at_every_commit_step_of_a_re_encode(spark, tmp_path, encode_runners):
+    """One input file changes and re-encodes, on each encode runner. Its
+    old version holds a token nothing else holds: the old state returns
+    its docs, the new one none. A sidecar replaced before the record (the
+    old record and data with the new filter) would return the old rows
+    without those docs."""
+    for runner in encode_runners():
+        tmp = tmp_path / runner
+        src = str(tmp / "src")
+        changed = _write(src, 0, seed=1)
+        other = _write(src, DOCS_PER_FILE, seed=1)
+        base = str(tmp / "base")
+        encode_dataset(spark, src, base)
+        old_tokens = _tokens(changed)
+        _write(src, 0, seed=2)  # same doc ids, other tokens
+        token = min(old_tokens - _tokens(changed) - _tokens(other))
+        want_old = _state(spark, base, token)
+        run = lambda out: encode_dataset(spark, src, out)  # noqa: E731
+        ref = str(tmp / "new")
+        shutil.copytree(base, ref)
+        run(ref)
+        want_new = _state(spark, ref, token)
+        assert want_old[1] and not want_new[1] and want_old[0] != want_new[0]
+        state = partial(_state, spark, token=token)
+        seen = _crash_suite(tmp, base, run, state, [want_old, want_new])
+        assert seen[0] == 0 and seen[-1] == 1, (runner, seen)
 
 
-def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path):
+def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path, split_parts):
     """Compaction of multi-part stems never changes what the table reads."""
     src = str(tmp_path / "src")
-    first = _write(src, 0, seed=3)
-    second = _write(src, DOCS_PER_FILE, seed=3)
+    first = _write(src, 0, seed=3, n=2 * DOCS_PER_FILE + 500)
+    second = _write(src, 3 * DOCS_PER_FILE, seed=3, n=2 * DOCS_PER_FILE + 500)
     base = str(tmp_path / "base")
     encode_dataset(spark, src, base)
+    split_parts(base)
     assert all(r["n_parts"] > 1 for r in read_manifest(base).values())
     token = min(_tokens(first) - _tokens(second))
     want = _state(spark, base, token)
@@ -182,21 +186,24 @@ def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path):
     assert seen == [0] * len(seen) and len(seen) > 2, seen
 
 
-def test_crash_at_every_commit_step_of_a_by_source_resume(spark, tmp_path):
+def test_crash_at_every_commit_step_of_a_by_source_resume(spark, tmp_path, encode_runners):
     """A by-source run cut after all but two buckets committed: a crash
     anywhere in its resume (sidecars, records, the deletes of the cut
-    run's files) reruns to the bytes of an uninterrupted resume."""
+    run's files) reruns to the bytes of an uninterrupted resume, on each
+    encode runner."""
     src = str(tmp_path / "src")
     _write(src, 0, seed=8)
     _write(src, DOCS_PER_FILE, seed=8)
-    base = str(tmp_path / "base")
-    encode_dataset_by_source(spark, src, base, n_salts=1)
-    for stem in ("src00_s000", "src19_s000"):
-        os.remove(os.path.join(base, "_manifest", f"{stem}.json"))
-    run = lambda out: encode_dataset_by_source(spark, src, out, n_salts=1)  # noqa: E731
-    seen = _crash_suite(tmp_path, base, run)
-    assert len(seen) > 5, seen
-    assert decode_verify(spark, src, str(tmp_path / "ref"))["bit_identical"]
+    for runner in encode_runners():
+        tmp = tmp_path / runner
+        base = str(tmp / "base")
+        encode_dataset_by_source(spark, src, base, n_salts=1)
+        for stem in ("src00_s000", "src19_s000"):
+            os.remove(os.path.join(base, "_manifest", f"{stem}.json"))
+        run = lambda out: encode_dataset_by_source(spark, src, out, n_salts=1)  # noqa: E731
+        seen = _crash_suite(tmp, base, run)
+        assert len(seen) > 5, (runner, seen)
+        assert decode_verify(spark, src, str(tmp / "ref"))["bit_identical"], runner
 
 
 def test_crash_at_every_step_of_compact_manifest(spark, tmp_path):

@@ -5,6 +5,7 @@ discipline (/root/reference/src/expected_results.py:309-431) at pipeline
 granularity. Run: python -m pytest -x -q
 """
 
+import itertools
 import json
 import os
 import shutil
@@ -52,27 +53,28 @@ def test_encode_decode_bit_identical_and_ratio(spark, token_dir, tmp_path):
     assert v["bit_identical"], v
 
 
-def test_resume_skips_committed_and_is_deterministic(spark, token_dir, tmp_path):
-    out = str(tmp_path / "enc")
-    m1 = encode_dataset(spark, token_dir, out)
-    manifest1 = read_manifest(out)
-    # full resume: nothing re-encoded
-    m2 = encode_dataset(spark, token_dir, out)
-    assert m2["files_encoded"] == 0
-    assert m2["files_skipped"] == m1["files_total"]
-    # fault injection: lose one manifest record → exactly one file re-encoded
-    stems = sorted(manifest1)
-    os.remove(os.path.join(out, "_manifest", f"{stems[0]}.json"))
-    blobs1 = _named_blobs(out, manifest1[stems[0]])
-    m3 = encode_dataset(spark, token_dir, out)
-    assert m3["files_encoded"] == 1
-    # determinism: re-encoded record identical (checksum, bytes, codecs)
-    # apart from its time and fresh file names; the files it names hold
-    # the same bytes
-    manifest2 = read_manifest(out)
-    assert _without_names(manifest1[stems[0]]) == _without_names(manifest2[stems[0]])
-    assert _named_blobs(out, manifest2[stems[0]]) == blobs1
-    assert decode_verify(spark, token_dir, out)["bit_identical"]
+def test_resume_skips_committed_and_is_deterministic(spark, token_dir, tmp_path, encode_runners):
+    for runner in encode_runners():
+        out = str(tmp_path / runner)
+        m1 = encode_dataset(spark, token_dir, out)
+        manifest1 = read_manifest(out)
+        # full resume: nothing re-encoded
+        m2 = encode_dataset(spark, token_dir, out)
+        assert m2["files_encoded"] == 0
+        assert m2["files_skipped"] == m1["files_total"]
+        # fault injection: lose one manifest record → exactly one file re-encoded
+        stems = sorted(manifest1)
+        os.remove(os.path.join(out, "_manifest", f"{stems[0]}.json"))
+        blobs1 = _named_blobs(out, manifest1[stems[0]])
+        m3 = encode_dataset(spark, token_dir, out)
+        assert m3["files_encoded"] == 1
+        # determinism: re-encoded record identical (checksum, bytes, codecs)
+        # apart from its time and fresh file names; the files it names hold
+        # the same bytes
+        manifest2 = read_manifest(out)
+        assert _without_names(manifest1[stems[0]]) == _without_names(manifest2[stems[0]])
+        assert _named_blobs(out, manifest2[stems[0]]) == blobs1
+        assert decode_verify(spark, token_dir, out)["bit_identical"], runner
 
 
 def _without_names(rec: dict) -> dict:
@@ -468,11 +470,12 @@ def _with_extras(tbl, *names):
     return tbl
 
 
-def test_files_with_different_extras_fail_the_job(spark, tmp_path):
+def test_files_with_different_extras_fail_the_job(spark, tmp_path, encode_runners):
     """One job over a file with ``lang`` and one with ``lang, q`` raises
     before any task runs, naming both files and their columns, and
-    commits nothing: Spark infers one file's schema for the whole scan,
-    so the job would drop ``q`` (or NULL it for the other file)."""
+    commits nothing, on each encode runner: Spark infers one file's
+    schema for the whole scan, so the job would drop ``q`` (or NULL it
+    for the other file)."""
     import pyarrow.parquet as pq
 
     from poc_parquet_aggregator_spark.sources import generate_token_table
@@ -482,8 +485,8 @@ def test_files_with_different_extras_fail_the_job(spark, tmp_path):
     os.makedirs(src)
     pq.write_table(_with_extras(base.slice(0, 300), "lang"), f"{src}/tokens-a.parquet")
     pq.write_table(_with_extras(base.slice(300), "lang", "q"), f"{src}/tokens-b.parquet")
-    for encode in (encode_dataset, encode_dataset_by_source):
-        out = str(tmp_path / encode.__name__)
+    for runner, encode in itertools.product(encode_runners(), (encode_dataset, encode_dataset_by_source)):
+        out = str(tmp_path / f"{runner}-{encode.__name__}")
         with pytest.raises(ValueError, match=r"tokens-a\.parquet has \[\['lang', 'integer'\]\], "
                                              r".*tokens-b\.parquet has \[.*'q'"):
             encode(spark, src, out)
@@ -759,7 +762,7 @@ def test_length_bounds_prune_files_via_manifest(runners, spark, tmp_path, monkey
     assert _stems(files, rec) == {"long"}
 
 
-def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path):
+def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path, split_parts):
     """Small-file maintenance: multi-part stems merge to one part with NO
     re-encode (bit-identical decode, manifest checksum untouched, resume
     still skips, the old parts deleted), and a merged part an interrupted
@@ -770,21 +773,20 @@ def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path):
     from poc_parquet_aggregator_spark.encode import compact_encoded
     from poc_parquet_aggregator_spark.sources.tokens import generate_token_table
 
-    # inputs with SMALL row groups: Spark can only split a parquet file at
-    # row-group boundaries, so multi-part stems need multi-row-group files
+    # inputs of several chunks each; an encode writes one part per file,
+    # so the parts are split afterwards, as older builds wrote them
     src = str(tmp_path / "src")
     os.makedirs(src)
-    for start in (0, 2000, 4000):
-        tbl = generate_token_table(2000, start_id=start)
+    for start in (0, 4500, 9000):
+        tbl = generate_token_table(4500, start_id=start)
         pq_.write_table(
             tbl, f"{src}/tokens-{start:012d}.parquet",
             compression="zstd", row_group_size=500,
         )
     token_dir = src
     out = str(tmp_path / "enc")
-    # tiny splits force Spark to cut each input file into several tasks →
-    # several parts per stem
     encode_dataset(spark, token_dir, out)
+    split_parts(out)
     rec_before = read_manifest(out)
     n_parts_before = [len(r["parts"]) for r in rec_before.values()]
     assert max(n_parts_before) > 1, n_parts_before
@@ -1019,10 +1021,10 @@ def test_length_bucketed_pack_over_encoded(spark, token_dir, tmp_path):
 
 
 def test_empty_doc_id_keeps_file_bounds(spark, tmp_path):
-    """An input file whose smallest doc_id is "" and that Spark splits into
-    several parts: the file record must keep "" as its lower bound. A fold
-    that dropped falsy bounds recorded the NEXT part's minimum, so range
-    and point reads pruned the file and returned no rows."""
+    """An input file whose smallest doc_id is "" and that is cut into
+    several chunks: the file record must keep "" as its lower bound. A fold
+    that dropped falsy bounds recorded the NEXT chunk's or part's minimum,
+    so range and point reads pruned the file and returned no rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -1039,11 +1041,11 @@ def test_empty_doc_id_keeps_file_bounds(spark, tmp_path):
         tbl.schema.field("doc_id"),
         pa.array(ids, pa.string()),
     )
-    pq.write_table(tbl, path, row_group_size=1600)  # splittable input
+    pq.write_table(tbl, path, row_group_size=1600)
     out = str(tmp_path / "enc")
     encode_dataset(spark, src, out)
     (rec,) = read_manifest(out).values()
-    assert rec["n_parts"] >= 2
+    assert rec["n_chunks"] >= 2
 
     def truth(mask):
         t = tbl.filter(mask).select(["doc_id", "n_tok"]).sort_by("doc_id")
@@ -1106,13 +1108,15 @@ def test_fold_parts_rules():
     assert fold_parts([fold_parts([a, b]), empty]) == f
 
 
-_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes",
+                "spark.sql.files.minPartitionNum")
 
 
-def test_encodes_leave_session_split_confs_unchanged(spark, token_dir, tmp_path):
+def test_encodes_leave_session_split_confs_unchanged(spark, token_dir, tmp_path, encode_runners):
     """Each encode sizes its own scan's splits: after it returns or
-    raises, the session's split confs read as before (or stay unset), so
-    later reads in the session run under the caller's confs."""
+    raises, on either encode runner, the session's split confs read as
+    before (or stay unset), so later reads in the session run under the
+    caller's confs."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1137,21 +1141,177 @@ def test_encodes_leave_session_split_confs_unchanged(spark, token_dir, tmp_path)
         "bad": (lambda out: encode_dataset(spark, str(bad), out), "n_tok invariant violated"),
     }
     try:
-        for before in ((None, None), ("33554432", "1234")):
+        for runner, before in itertools.product(
+            encode_runners(), ((None, None, None), ("33554432", "1234", "3"))
+        ):
             for k, v in zip(_SPLIT_CONFS, before):
                 if v is None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
             for name, (call, error) in calls.items():
-                out = str(tmp_path / f"{name}-{before[0]}")
+                out = str(tmp_path / f"{runner}-{name}-{before[0]}")
                 if error is None:
                     call(out)
                 else:
                     with pytest.raises(Exception, match=error):
                         call(out)
                 after = tuple(spark.conf.get(k, None) for k in _SPLIT_CONFS)
-                assert after == before, (name, after)
+                assert after == before, (runner, name, after)
     finally:
         for k in _SPLIT_CONFS:
             spark.conf.unset(k)
+
+
+def _record_bytes(out: str, stem: str) -> tuple:
+    """A record without its names and time, and the bytes it names."""
+    rec = read_manifest(out)[stem]
+    return _without_names(rec), _named_blobs(out, rec)
+
+
+def test_resume_re_encodes_a_file_to_its_own_bytes(spark, tmp_path, encode_runners):
+    """A file's chunks are cut from its own rows alone. 16 files of 1,500
+    docs, a job on 4 cores: Spark's Arrow batches used to cross file
+    boundaries inside a task, so a file sharing its task was cut into two
+    chunks, and re-encoding it alone after its record was lost gave one
+    chunk, other blobs, another checksum and other ``bytes_out``."""
+    src = str(tmp_path / "src")
+    write_token_table(src, 24000, seed=3, docs_per_file=1500)
+    stem = "tokens-000000003000"
+    for runner in encode_runners():
+        out = str(tmp_path / runner)
+        encode_dataset(spark, src, out)
+        assert all(r["n_chunks"] == 1 for r in read_manifest(out).values()), runner
+        want = _record_bytes(out, stem)
+        os.remove(os.path.join(out, "_manifest", f"{stem}.json"))
+        assert encode_dataset(spark, src, out)["files_encoded"] == 1
+        assert _record_bytes(out, stem) == want, runner
+
+
+def test_multi_row_group_file_encodes_alike_alone_and_beside_others(spark, tmp_path, encode_runners):
+    """A 5,000-doc file in five row groups encodes to the same record and
+    blobs beside seven other files and alone: no task reads part of a
+    file, and its chunks are 2,048 rows counted from its first row."""
+    import pyarrow.parquet as pq
+
+    from poc_parquet_aggregator_spark.sources import generate_token_table
+
+    src = str(tmp_path / "src")
+    write_token_table(src, 14000, seed=4, docs_per_file=2000)
+    big = os.path.join(src, "tokens-big.parquet")
+    pq.write_table(generate_token_table(5000, seed=4, start_id=14000), big,
+                   compression="zstd", row_group_size=1000)
+    assert pq.ParquetFile(big).num_row_groups == 5
+    for runner in encode_runners():
+        beside, alone = str(tmp_path / f"{runner}-beside"), str(tmp_path / f"{runner}-alone")
+        assert encode_dataset(spark, src, beside)["files_encoded"] == 8
+        encode_dataset(spark, [big], alone)
+        assert read_manifest(alone)["tokens-big"]["n_chunks"] == 3
+        assert _record_bytes(beside, "tokens-big") == _record_bytes(alone, "tokens-big"), runner
+
+
+def test_encode_picks_the_runner_from_input_bytes(spark, token_dir, tmp_path, monkeypatch):
+    """Each encode call runs the kernel in-process when its input files
+    hold at most ``_LOCAL_ENCODE_BYTES`` on-disk bytes and in a Spark job
+    above it, and reports the choice next to the bytes that made it; a
+    call with nothing to encode runs neither. The in-process runner makes
+    no JVM call: it runs without a session."""
+    import glob
+
+    from poc_parquet_aggregator_spark.encode import pipeline
+    from poc_parquet_aggregator_spark.streaming import encode_stream
+
+    size = sum(os.stat(f).st_size for f in glob.glob(os.path.join(token_dir, "*.parquet")))
+    assert 0 < size <= pipeline._LOCAL_ENCODE_BYTES  # the test table encodes in-process
+    jobs = []
+    real = pipeline._encode_spark
+    monkeypatch.setattr(pipeline, "_encode_spark", lambda *a: jobs.append(a) or real(*a))
+    calls = {"per-file": encode_dataset, "by-source": encode_dataset_by_source,
+             "stream": encode_stream}
+    for limit, runner in ((pipeline._LOCAL_ENCODE_BYTES, "local"), (size, "local"),
+                          (size - 1, "spark")):
+        monkeypatch.setattr(pipeline, "_LOCAL_ENCODE_BYTES", limit)
+        session = spark if runner == "spark" else None
+        for name, call in calls.items():
+            out = str(tmp_path / f"{limit}-{name}")
+            n_jobs = len(jobs)
+            m = call(session, token_dir, out)
+            assert (m["runner"], m["input_bytes"]) == (runner, size), (name, limit)
+            assert len(jobs) - n_jobs == (runner == "spark"), (name, limit)
+            assert m["n_docs"] == N_DOCS
+            again = call(session, token_dir, out)
+            assert (again["runner"], again["input_bytes"]) == (None, 0), name
+
+
+def test_runners_write_the_same_bytes(spark, tmp_path, encode_runners):
+    """Both layouts, over files of one to three chunks (one in several row
+    groups), an empty file and extra columns of every type: the two
+    encode runners write the same stored bytes and records
+    (``scripts/encode_digest.py``)."""
+    import importlib.util
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from poc_parquet_aggregator_spark.sources import generate_token_table
+
+    spec = importlib.util.spec_from_file_location(
+        "encode_digest", os.path.join(os.path.dirname(__file__), "..", "scripts", "encode_digest.py"))
+    encode_digest = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(encode_digest)
+
+    def with_extras(tbl):
+        rng = np.random.default_rng(tbl.num_rows)
+        n = tbl.num_rows
+        return (tbl.append_column("lang", pa.array(rng.choice(["en", "de"], n), pa.string()))
+                .append_column("quality", pa.array(rng.random(n), pa.float64()))
+                .append_column("ts", pa.array(rng.integers(0, 1 << 40, n), pa.int64()))
+                .append_column("q", pa.array(rng.integers(0, 9, n), pa.int32())))
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for start, n, rg in ((0, 5000, 700), (5000, 2000, None), (7000, 900, None), (7900, 0, None)):
+        tbl = with_extras(generate_token_table(max(n, 8), seed=21, start_id=start).slice(0, n))
+        pq.write_table(tbl, f"{src}/tokens-{start:012d}.parquet", row_group_size=rg)
+    for encode in (encode_dataset, encode_dataset_by_source):
+        digests = {}
+        for runner in encode_runners():
+            out = str(tmp_path / f"{runner}-{encode.__name__}")
+            assert encode(spark, src, out)["runner"] == runner
+            digests[runner] = encode_digest.encode_digest(out)
+        assert digests["local"] == digests["spark"], encode.__name__
+        assert decode_verify(spark, src, out)["bit_identical"], encode.__name__
+
+
+def test_in_process_buckets_equal_spark_buckets(spark, tmp_path):
+    """The in-process by-source runner names every row's bucket exactly
+    as Spark's ``source || "_s" || lpad(crc32(doc_id) % n_salts, 3, "0")``
+    does — non-ASCII doc ids hashed as UTF-8, salts above 999 cut to three
+    characters like ``lpad`` — and hands over each bucket's rows in a
+    row, sorted by doc_id in byte order, like the shuffle does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from poc_parquet_aggregator_spark.encode.salted import _bucket_df, _bucket_pieces
+    from poc_parquet_aggregator_spark.sources import generate_token_table
+
+    tbl = generate_token_table(3000, seed=17)
+    ids = [d if i % 3 else f"{d}-é{i}" for i, d in enumerate(tbl.column("doc_id").to_pylist())]
+    tbl = tbl.set_column(tbl.schema.get_field_index("doc_id"), "doc_id", pa.array(ids, pa.string()))
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    files = [f"{src}/tokens-a.parquet", f"{src}/tokens-b.parquet"]
+    pq.write_table(tbl.slice(0, 1700), files[0])
+    pq.write_table(tbl.slice(1700), files[1])
+    for n_salts in (8, 1500):
+        want = sorted(map(tuple, _bucket_df(spark, files, n_salts, {})
+                          .select("_bucket", "doc_id").collect()))
+        got, seen = [], []
+        for bucket, batch in _bucket_pieces(files, n_salts, {}):
+            if not seen or seen[-1] != bucket:
+                seen.append(bucket)
+            got += [(bucket, d) for d in batch.column(batch.schema.get_field_index("doc_id")).to_pylist()]
+        assert sorted(got) == want, n_salts
+        assert len(seen) == len(set(seen))  # each bucket's rows in a row
+        assert got == sorted(got, key=lambda r: (r[0].encode(), r[1].encode()))

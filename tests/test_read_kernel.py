@@ -245,21 +245,16 @@ def test_reads_match_pyarrow_truth(runners, spark, table, enc_dir, salted_dir, l
     assert plan_read(out, tok_ids=kinds["absent"]["contains_token"]).stems == {}
 
 
-def test_percent_encoded_input_file_names(runners, spark, table, tmp_path):
+def test_percent_encoded_input_file_names(runners, encode_runners, spark, table, tmp_path):
     """``input_file_name()`` percent-encodes a file's URI: a space or a
     ``%`` in an input name must still map to its file, through the batch
-    encode and the stream. A by-source bucket stem with a ``%`` and glob
-    metacharacters reads back exactly through each runner: part paths
-    are literal."""
+    encode and the stream, on each encode runner. A by-source bucket stem
+    with a ``%`` and glob metacharacters reads back exactly through each
+    read runner: part paths are literal."""
     from poc_parquet_aggregator_spark.streaming import encode_stream
 
     src = str(tmp_path / "src")
     _write_files(table, src, name="tok en")
-    for encode in (encode_dataset, encode_stream):
-        out = str(tmp_path / encode.__name__)
-        encode(spark, src, out)
-        _assert_reads_match_truth(runners, spark, table, out)
-
     pct = str(tmp_path / "pct")
     os.makedirs(pct)
     sub = table.slice(0, 400)
@@ -268,16 +263,22 @@ def test_percent_encoded_input_file_names(runners, spark, table, tmp_path):
         pa.array(["a%41[1]{2}"] * sub.num_rows, pa.string()),
     )
     pq.write_table(sub, os.path.join(pct, "x%41.parquet"))
-    out = str(tmp_path / "pct_out")
-    encode_dataset(spark, pct, out)
-    assert list(read_manifest(out)) == ["x%41"]
-    salted = str(tmp_path / "pct_salted")
-    encode_dataset_by_source(spark, pct, salted, n_salts=1)
-    assert list(read_manifest(salted)) == ["a%41[1]{2}_s000"]
-    for (runner, read), enc in itertools.product(runners.items(), (out, salted)):
-        for kw in ({}, {"sources": ["a%41[1]{2}"]}, {"sources": ["a%41[1]{2}", "A"]}):
-            assert _rows(read(spark, enc, **kw).toArrow()) == _rows(sub), (runner, enc, kw)
-        assert read(spark, enc, sources=["aA[1]{2}"]).count() == 0, runner
+    for encoder in encode_runners():
+        for encode in (encode_dataset, encode_stream):
+            out = str(tmp_path / f"{encoder}-{encode.__name__}")
+            encode(spark, src, out)
+            _assert_reads_match_truth(runners, spark, table, out)
+
+        out = str(tmp_path / f"{encoder}-pct_out")
+        encode_dataset(spark, pct, out)
+        assert list(read_manifest(out)) == ["x%41"]
+        salted = str(tmp_path / f"{encoder}-pct_salted")
+        encode_dataset_by_source(spark, pct, salted, n_salts=1)
+        assert list(read_manifest(salted)) == ["a%41[1]{2}_s000"]
+        for (runner, read), enc in itertools.product(runners.items(), (out, salted)):
+            for kw in ({}, {"sources": ["a%41[1]{2}"]}, {"sources": ["a%41[1]{2}", "A"]}):
+                assert _rows(read(spark, enc, **kw).toArrow()) == _rows(sub), (encoder, runner, enc, kw)
+            assert read(spark, enc, sources=["aA[1]{2}"]).count() == 0, (encoder, runner)
 
 
 @pytest.mark.parametrize("arg", ["doc_ids", "sources", "columns"])
