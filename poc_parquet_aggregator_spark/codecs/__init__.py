@@ -3,8 +3,9 @@
 Integer codecs (int32 value streams): PLAIN, BITPACK, FOR (frame-of-reference),
 RLE, DICT, DELTA — self-describing recursive blob format with exact size
 estimates and per-chunk argmin selection, see ``ints.py``.
-String codecs: STR_PLAIN, STR_DICT, FSST (symbol-table byte compression),
-one Arrow-buffer front-end — see ``strings.py``. Lossless float codecs
+String codecs: STR_PLAIN and STR_DICT, one Arrow-buffer front-end; FSST
+(symbol-table byte compression) blobs of earlier builds still decode, but
+the encoder no longer writes them — see ``strings.py``. Lossless float codecs
 (ALP, ALPrd) — see ``floats.py``.
 
 Every stored blob starts with a one-byte id from the registry in

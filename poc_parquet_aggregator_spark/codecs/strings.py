@@ -9,10 +9,11 @@ the integer codec framework (ints.py); the payload gets one of:
   (/root/reference/src/parquet_reader.py:464-494, "50-70% memory savings").
 * FSST      — symbol-table byte compression (Boncz/Neumann/Leis, "FSST: Fast
   Random Access String Compression", VLDB 2020): up to 254 symbols of 1-8
-  bytes learned from a sample by iterative pair-merging; greedy
-  longest-match encode; escape byte 0xFF for uncovered bytes. The encode hot
-  path is a compiled regex alternation (C-speed scan, leftmost-longest via
-  length-sorted alternation) — no per-character Python.
+  bytes, escape byte 0xFF for uncovered bytes. Decode-only: earlier builds
+  wrote FSST blobs and every one still reads, but the encoder no longer
+  picks it — no measured string family kept its trial, which cost a
+  pure-Python symbol-table training per chunk (ARCHITECTURE §2, "FSST is
+  decode-only").
 
 Blob format: ``codec_id:uint8 || payload`` like ints.py; the ids live in
 the one registry there. There is one front-end: ``encode_strings_arrow``
@@ -22,9 +23,7 @@ the one registry there. There is one front-end: ``encode_strings_arrow``
 
 from __future__ import annotations
 
-import re
 import struct
-from collections import Counter
 
 import numpy as np
 import pyarrow as pa
@@ -42,123 +41,15 @@ from .ints import (
     encode_ints_auto,
     read_children,
     unwrap_zstd,
-    wrap_zstd,
 )
 
 STR_CODEC_NAMES = {c: BLOB_IDS[c] for c in (STR_PLAIN, STR_DICT, FSST)}
 
 _U32 = struct.Struct("<I")
-
-_ESCAPE = 0xFF
-_MAX_SYMBOLS = 254  # codes 0..253; 0xFF = escape
-_MAX_SYMBOL_LEN = 8
-_TRAIN_ITERS = 5
-# a trial sample (the first 512 strings) with fewer payload bytes than
-# this returns STR_PLAIN untrained: no measured family won with FSST from
-# a sample this small, and the pure-Python trial costs 14-253 ms a chunk
-# (ARCHITECTURE §2, "FSST floor")
-_FSST_MIN_SAMPLE_BYTES = 2048
-
-
-# ------------------------------------------------------------- FSST training
-
-
-def _train_symbols(sample_strings: list[bytes]) -> list[bytes]:
-    """Learn ≤254 symbols by iterative re-parse + pair-merge (FSST §3.3
-    shape): parse the sample under the current table, credit each symbol its
-    REALIZED gain ((len-1) × frequency), propose adjacent-pair
-    concatenations at a discounted gain, always retain observed single
-    bytes (escape avoidance), keep the top earners. 6 rounds converge on
-    e.g. 8-byte digit-prefix symbols for doc-id-style strings (measured
-    3.9× on 'doc-%012d' vs 1.3× for the naive one-shot count)."""
-    if not sample_strings:
-        return []
-    counts = Counter(b for s in sample_strings for b in s)
-    table = [bytes([b]) for b, _ in counts.most_common(_MAX_SYMBOLS)]
-    for _ in range(_TRAIN_ITERS):
-        pattern = _compile_pattern(table)
-        sym_freq: Counter = Counter()
-        pair_freq: Counter = Counter()
-        for d in sample_strings:
-            toks = pattern.findall(d)
-            sym_freq.update(toks)
-            for a, b in zip(toks, toks[1:]):
-                if len(a) + len(b) <= _MAX_SYMBOL_LEN:
-                    pair_freq[a + b] += 1
-        gain: Counter = Counter()
-        for s, c in sym_freq.items():
-            gain[s] = (len(s) - 1) * c
-        for s, c in pair_freq.items():
-            gain[s] += (len(s) - 1) * c // 2  # discount un-realized pairs
-        singles = [s for s in gain if len(s) == 1]
-        multis = sorted((s for s in gain if len(s) > 1), key=lambda s: (-gain[s], s))
-        table = (singles + multis)[:_MAX_SYMBOLS]
-    table.sort(key=lambda s: (-len(s), s))
-    return table
-
-
-def _compile_pattern(table: list[bytes]) -> "re.Pattern[bytes]":
-    # longest-first alternation → greedy longest match at each position;
-    # trailing '.' (DOTALL) consumes bytes not covered by any symbol.
-    alts = sorted(table, key=len, reverse=True)
-    pat = b"|".join(re.escape(s) for s in alts)
-    if pat:
-        pat += b"|"
-    return re.compile(pat + b"(?s:.)")
-
-
-def _fsst_decode_payload(enc: bytes, table: list[bytes]) -> bytes:
-    out = bytearray()
-    i, n = 0, len(enc)
-    append = out.extend
-    while i < n:
-        b = enc[i]
-        if b == _ESCAPE:
-            append(enc[i + 1 : i + 2])
-            i += 2
-        else:
-            append(table[b])
-            i += 1
-    return bytes(out)
+_ESCAPE = 0xFF  # FSST: the next byte is literal
 
 
 # ----------------------------------------------------------------- encoders
-
-
-def _fsst_from_payload(payload: bytes, lens: np.ndarray) -> bytes:
-    """FSST-encode a string chunk given only its flat utf-8 payload and
-    per-string lengths — the representation Arrow's offsets/data buffers
-    give for free, so no per-row Python strings are ever materialized
-    (bytes SLICES of one payload are cheap; decoded PyUnicode objects are
-    the measured 10× TLB-storm at 32 workers). Symbols never span string
-    boundaries (FSST's per-string semantics), which also yields exact
-    per-string encoded lengths for random-access decode."""
-    offs = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    n_sample = min(512, len(lens))
-    sample_strings = [payload[offs[i] : offs[i + 1]] for i in range(n_sample)]
-    table = _train_symbols(sample_strings)
-    pattern = _compile_pattern(table)
-    code_of = {s: bytes([i]) for i, s in enumerate(table)}
-    esc = bytes([_ESCAPE])
-
-    def repl(m: "re.Match[bytes]") -> bytes:
-        c = code_of.get(m.group(0))
-        return c if c is not None else esc + m.group(0)
-
-    pieces = [
-        pattern.sub(repl, payload[offs[i] : offs[i + 1]]) for i in range(len(lens))
-    ]
-    enc = b"".join(pieces)
-    enc_lens = np.fromiter((len(p) for p in pieces), dtype=np.int32, count=len(pieces))
-    sym_blob = b"".join(bytes([len(s)]) + s for s in table)
-    return (
-        bytes([FSST])
-        + _U32.pack(len(lens))
-        + bytes([len(table)])
-        + children(sym_blob, encode_ints_auto(enc_lens, delta=False)[0])
-        + enc
-    )
 
 
 def _plain_from_buffers(payload: bytes, lens: np.ndarray) -> bytes:
@@ -180,26 +71,11 @@ def utf8_buffers(arr: "pa.Array") -> tuple[memoryview, np.ndarray]:
 
 
 def choose_string_codec(arr: "pa.Array") -> int:
-    """The codec for one string chunk, picked per the north rule:
-      * low cardinality (≤ max(16, n/4) distinct) → STR_DICT;
-      * STR_PLAIN, untrained, when the 512-string sample holds fewer
-        than ``_FSST_MIN_SAMPLE_BYTES`` payload bytes;
-      * FSST when that sample is < 0.9× STR_PLAIN after zstd (the size
-        that is stored);
-      * else STR_PLAIN.
-    The trial runs on slices of the Arrow payload, never on Python strings."""
+    """The codec for one string chunk: STR_DICT at low cardinality (≤
+    max(16, n/4) distinct), else STR_PLAIN. FSST is never picked."""
     n = len(arr)
-    if n == 0:
-        return STR_PLAIN
-    if pc.count_distinct(arr).as_py() <= max(16, n // 4):
+    if n and pc.count_distinct(arr).as_py() <= max(16, n // 4):
         return STR_DICT
-    sample, lens = utf8_buffers(arr[: min(512, n)])
-    if len(sample) < _FSST_MIN_SAMPLE_BYTES:
-        return STR_PLAIN
-    sample = bytes(sample)
-    fsst = wrap_zstd(_fsst_from_payload(sample, lens))
-    if len(fsst) < 0.9 * len(wrap_zstd(_plain_from_buffers(sample, lens))):
-        return FSST
     return STR_PLAIN
 
 
@@ -214,13 +90,10 @@ def build_strings(arr: "pa.Array", codec_id: int) -> bytes:
         dict_blob = _plain_from_buffers(bytes(payload), lens)
         codes_blob = encode_ints(codes, BITPACK)
         return bytes([STR_DICT]) + _U32.pack(len(arr)) + children(dict_blob, codes_blob)
-    payload, lens = utf8_buffers(arr)
-    payload = bytes(payload)
     if codec_id == STR_PLAIN:
-        return _plain_from_buffers(payload, lens)
-    if codec_id == FSST:
-        return _fsst_from_payload(payload, lens)
-    raise ValueError(f"unknown string codec {codec_id}")
+        payload, lens = utf8_buffers(arr)
+        return _plain_from_buffers(bytes(payload), lens)
+    raise ValueError(f"string codec {codec_id} has no encoder")
 
 
 def encode_strings_arrow(arr) -> tuple[bytes, int]:
@@ -280,6 +153,21 @@ def decode_strings_arrow(blob: bytes) -> "pa.Array":
         lens = np.fromiter((len(p) for p in pieces), dtype=np.int32, count=n)
         return _from_payload(b"".join(pieces), lens, n)
     raise ValueError(f"unknown string codec {codec_id}")
+
+
+def _fsst_decode_payload(enc: bytes, table: list[bytes]) -> bytes:
+    out = bytearray()
+    i, n = 0, len(enc)
+    append = out.extend
+    while i < n:
+        b = enc[i]
+        if b == _ESCAPE:
+            append(enc[i + 1 : i + 2])
+            i += 2
+        else:
+            append(table[b])
+            i += 1
+    return bytes(out)
 
 
 def _offsets(lens: np.ndarray, n: int, total: int) -> np.ndarray:

@@ -47,7 +47,8 @@ import time
 import urllib.parse
 import uuid
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 from functools import partial, reduce
 
@@ -85,6 +86,7 @@ from ..codecs.strings import (
     encode_strings_arrow,
     utf8_buffers,
 )
+from ..plans.session import host_cores
 from .chunk import decode_chunk_lengths, decode_token_chunk, encode_token_chunk
 from .tokfilter import (
     build_token_filter,
@@ -163,8 +165,10 @@ _LOCAL_READ_BYTES = 4 << 20
 # the encode kernel in this process instead of a Spark job: below it the
 # job's fixed cost outweighs the kernel work. Set below the smaller
 # crossover of the two layouts in an encode sweep on 4 cores (ARCHITECTURE
-# §1, scripts/runner_sweep.py encode): by-source runs faster in-process at
-# 6.6 MiB and in Spark at 7.4 MiB; per-file at 8.8 and 11.8 MiB.
+# §1, scripts/runner_sweep.py encode) while units ran one after another:
+# by-source ran faster in-process at 6.6 MiB and in Spark at 7.4 MiB.
+# With the thread pool both crossovers lie above 46 MiB; the constant
+# moves together with the serve benchmark's whole-dir probe encode.
 _LOCAL_ENCODE_BYTES = 6 << 20
 
 # rows per encoded chunk, counted from the first row of its commit unit
@@ -493,10 +497,9 @@ def _encode_units(
     extras: list[list[str]],
 ) -> Iterator[dict]:
     """The encode kernel of both runners: (stem, batch) pieces, each
-    commit unit's pieces in a row, encoded one unit after another. A
-    unit's chunks (``_unit_chunks``) become one part file, written when
-    the unit ends; yields its part row. A unit with no rows writes
-    nothing."""
+    commit unit's pieces in a row. A unit's chunks (``_unit_chunks``)
+    become one part file, written when the unit ends; yields its part
+    row. A unit with no rows writes nothing."""
     stem, rows = None, []
     for key, chunk in _unit_chunks(pieces):
         if key != stem and rows:
@@ -506,6 +509,24 @@ def _encode_units(
         rows.append(_encode_chunk_row(chunk, zstd_level, extras=extras))
     if rows:
         yield _part_row(out_dir, stem, rows)
+
+
+def _encode_local(
+    units: list[Iterable[tuple[str, pa.RecordBatch]]],
+    out_dir: str,
+    zstd_level: int,
+    extras: list[list[str]],
+) -> list[dict]:
+    """The in-process runner: each unit's (stem, batch) pieces through
+    the kernel as one task of a pool of ``min(len(units), host_cores())``
+    threads; returns the part rows in unit order. The first unit that
+    raises fails the job once the running units finish; the units not
+    yet started never run."""
+    def encode(unit):
+        return list(_encode_units(unit, out_dir, zstd_level, extras))
+
+    with ThreadPoolExecutor(max(1, min(len(units), host_cores()))) as pool:
+        return [row for rows in pool.map(encode, units) for row in rows]
 
 
 def _make_encode_fn(out_dir: str, zstd_level: int, key: str, extras: list[list[str]]):
@@ -1100,7 +1121,7 @@ def _encode_parts(
     spark: SparkSession, files: list[str], out_dir: str, done: dict[str, dict],
     key: str, zstd_level: int, metrics: dict,
     spark_df: Callable[[], DataFrame],
-    local_pieces: Callable[[], Iterator[tuple[str, pa.RecordBatch]]],
+    local_units: Callable[[], list[Iterable[tuple[str, pa.RecordBatch]]]],
 ) -> tuple[dict[str, list[dict]], list[list[str]]]:
     """The encode job of both layouts over ``files``; returns (the part
     rows by stem, the extra columns [[name, spark type], …] each of the
@@ -1115,9 +1136,9 @@ def _encode_parts(
     Then the job's input bytes (``files``' on-disk size, recorded with
     the choice in ``metrics`` as ``input_bytes`` and ``runner``) pick
     one runner for the whole job: at or below ``_LOCAL_ENCODE_BYTES`` the
-    kernel runs in this process, one unit after another, over
-    ``local_pieces()`` ((stem, batch) pieces, each unit's in a row) and
-    makes no JVM call; above it ``spark_df()`` (the rows plus the commit
+    kernel runs in this process over ``local_units()`` (each unit's
+    (stem, batch) pieces) on a thread pool (``_encode_local``) and makes
+    no JVM call; above it ``spark_df()`` (the rows plus the commit
     ``key`` column, each unit within one task and in a row) runs
     through it in a Spark job (``_encode_spark``). A unit's chunks are
     cut from its own rows alone, so both runners write the same bytes."""
@@ -1134,7 +1155,7 @@ def _encode_parts(
     local = sum(sizes) <= _LOCAL_ENCODE_BYTES
     metrics.update(runner="local" if local else "spark", input_bytes=sum(sizes))
     if local:
-        part_rows = list(_encode_units(local_pieces(), out_dir, zstd_level, extras))
+        part_rows = _encode_local(local_units(), out_dir, zstd_level, extras)
     else:
         part_rows = _encode_spark(spark, spark_df(), sizes, out_dir, key, zstd_level, extras)
     by_stem: dict[str, list[dict]] = {}
@@ -1143,12 +1164,11 @@ def _encode_parts(
     return by_stem, extras
 
 
-def _file_pieces(files: list[str]) -> Iterator[tuple[str, pa.RecordBatch]]:
-    """The per-file layout's units for the in-process runner: each file's
-    batches, keyed by the stem of its path."""
-    for f in files:
-        for batch in pq.ParquetFile(f).iter_batches(batch_size=_CHUNK_ROWS):
-            yield _stem(f), batch
+def _file_pieces(f: str) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """One per-file unit for the in-process runner: the file's batches,
+    keyed by the stem of its path, read by the task that encodes them."""
+    for batch in pq.ParquetFile(f).iter_batches(batch_size=_CHUNK_ROWS):
+        yield _stem(f), batch
 
 
 def encode_dataset(
@@ -1180,7 +1200,7 @@ def encode_dataset(
         by_stem, extras = _encode_parts(
             spark, todo, out_dir, done, "_file", zstd_level, metrics,
             lambda: spark.read.parquet(*todo).withColumn("_file", F.input_file_name()),
-            lambda: _file_pieces(todo),
+            lambda: [_file_pieces(f) for f in todo],
         )
         # commit per file; an empty input file yields no part row and
         # commits a zero record, so resume doesn't rescan it forever

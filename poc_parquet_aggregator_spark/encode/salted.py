@@ -14,9 +14,9 @@ Plan shape:
 
 A job whose input is at most ``_LOCAL_ENCODE_BYTES`` skips the Spark job:
 the driver computes the same buckets in Arrow, sorts the rows by (bucket,
-doc_id) and encodes one bucket after another with the same kernel, which
-cuts a bucket's chunks from its own rows alone, so both runners write the
-same bytes.
+doc_id) and encodes each bucket as one task of the in-process runner's
+thread pool with the same kernel, which cuts a bucket's chunks from its
+own rows alone, so both runners write the same bytes.
 
 Each bucket record carries ``source``, ``salt``, ``n_salts``, the input
 snapshot and ``n_buckets``, the size of the bucket universe of its run:
@@ -33,7 +33,8 @@ from __future__ import annotations
 import os
 import time
 import zlib
-from collections.abc import Iterator
+from itertools import groupby
+from operator import itemgetter
 
 import numpy as np
 import pyarrow as pa
@@ -82,11 +83,12 @@ def _bucket_df(spark: SparkSession, files: list[str], n_salts: int, done: dict) 
 
 def _bucket_pieces(
     files: list[str], n_salts: int, done: dict
-) -> Iterator[tuple[str, pa.RecordBatch]]:
-    """The in-process runner's input: ``_bucket_df``'s rows computed in
+) -> list[list[tuple[str, pa.RecordBatch]]]:
+    """The in-process runner's units: ``_bucket_df``'s rows computed in
     Arrow — the same bucket strings (``zlib.crc32`` over each doc_id's
     UTF-8 bytes), committed buckets dropped, sorted by (bucket, doc_id)
-    in byte order — as (bucket, batch) pieces, one unit after another."""
+    in byte order — as one list of (bucket, batch) pieces per bucket, in
+    bucket order."""
     names = pq.read_schema(files[0]).names
     tbl = pa.concat_tables(
         [pq.ParquetFile(f).read().select(names) for f in files], promote_options="default"
@@ -107,8 +109,8 @@ def _bucket_pieces(
     if done:
         tbl = tbl.filter(pc.invert(pc.is_in(tbl.column("_bucket"), pa.array(list(done)))))
     tbl = tbl.sort_by([("_bucket", "ascending"), ("doc_id", "ascending")])
-    for batch in tbl.to_batches():
-        yield from _split_by_file(batch, "_bucket")
+    pieces = (piece for batch in tbl.to_batches() for piece in _split_by_file(batch, "_bucket"))
+    return [list(unit) for _, unit in groupby(pieces, key=itemgetter(0))]
 
 
 def encode_dataset_by_source(

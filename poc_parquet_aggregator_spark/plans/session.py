@@ -49,6 +49,13 @@ def _host_driver_memory() -> str:
     return f"{max(1024, kib // 1024 // 4)}m"
 
 
+def host_cores() -> int:
+    """The cores this host gives the engine: ``SPARK_GRAFT_CPUS``, else
+    the CPUs this process may run on. The default width of the local
+    Spark session and of the in-process encode pool."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "poc_parquet_aggregator_spark",
     cores: int | None = None,
@@ -57,11 +64,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` controls local[N] parallelism. The default is ``SPARK_GRAFT_CPUS``, else the CPUs this process may run
-    on.
+    ``cores`` controls local[N] parallelism; the default is ``host_cores()``.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+        cores = host_cores()
     if shuffle_partitions is None:
         # 2x cores: enough tasks to keep AQE coalescing meaningful locally;
         # on a real cluster this is 2-3x total executor cores.

@@ -2,6 +2,10 @@
 arrays (SURVEY.md §5 — the reference's expected-results oracle discipline,
 /root/reference/src/expected_results.py:309-431, applied per codec)."""
 
+import re
+import struct
+from collections import Counter
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -25,6 +29,85 @@ from poc_parquet_aggregator_spark.codecs.ints import estimate_sizes, int_stats
 
 ALL_INT_CODECS = [CI.PLAIN, CI.BITPACK, CI.FOR, CI.RLE, CI.DICT, CI.DELTA]
 ALL_STR_CODECS = [CS.STR_PLAIN, CS.STR_DICT, CS.FSST]
+
+
+# ------------------------------------------------------- FSST test writer
+#
+# The encoder no longer writes FSST (ARCHITECTURE §2, "FSST is
+# decode-only"); this is the writer earlier builds used, kept to make FSST
+# blobs for the decoder tests: up to 254 symbols of 1-8 bytes learned
+# from the first 512 strings by iterative re-parse + pair-merge (FSST
+# §3.3 shape), greedy longest-match encode through a regex alternation,
+# escape byte 0xFF for bytes no symbol covers.
+
+_FSST_MAX_SYMBOLS = 254
+_FSST_MAX_SYMBOL_LEN = 8
+
+
+def _train_symbols(sample_strings: list[bytes]) -> list[bytes]:
+    if not sample_strings:
+        return []
+    counts = Counter(b for s in sample_strings for b in s)
+    table = [bytes([b]) for b, _ in counts.most_common(_FSST_MAX_SYMBOLS)]
+    for _ in range(5):
+        pattern = _compile_pattern(table)
+        sym_freq: Counter = Counter()
+        pair_freq: Counter = Counter()
+        for d in sample_strings:
+            toks = pattern.findall(d)
+            sym_freq.update(toks)
+            for a, b in zip(toks, toks[1:]):
+                if len(a) + len(b) <= _FSST_MAX_SYMBOL_LEN:
+                    pair_freq[a + b] += 1
+        gain: Counter = Counter()
+        for s, c in sym_freq.items():
+            gain[s] = (len(s) - 1) * c
+        for s, c in pair_freq.items():
+            gain[s] += (len(s) - 1) * c // 2  # discount un-realized pairs
+        singles = [s for s in gain if len(s) == 1]
+        multis = sorted((s for s in gain if len(s) > 1), key=lambda s: (-gain[s], s))
+        table = (singles + multis)[:_FSST_MAX_SYMBOLS]
+    table.sort(key=lambda s: (-len(s), s))
+    return table
+
+
+def _compile_pattern(table: list[bytes]) -> "re.Pattern[bytes]":
+    # longest-first alternation → greedy longest match at each position;
+    # trailing '.' (DOTALL) consumes bytes not covered by any symbol.
+    pat = b"|".join(re.escape(s) for s in sorted(table, key=len, reverse=True))
+    return re.compile((pat + b"|" if pat else b"") + b"(?s:.)")
+
+
+def fsst_blob(arr: "pa.Array") -> bytes:
+    """An FSST blob of a non-null string array, in the stored format:
+    ``FSST | u32 n | u8 n_symbols | children(symbols, encoded lengths) |
+    encoded payload``. Symbols never span strings."""
+    payload, lens = CS.utf8_buffers(arr)
+    payload = bytes(payload)
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    strings = [payload[offs[i] : offs[i + 1]] for i in range(len(lens))]
+    table = _train_symbols(strings[:512])
+    pattern = _compile_pattern(table)
+    code_of = {s: bytes([i]) for i, s in enumerate(table)}
+
+    def repl(m: "re.Match[bytes]") -> bytes:
+        return code_of.get(m.group(0)) or b"\xff" + m.group(0)
+
+    pieces = [pattern.sub(repl, s) for s in strings]
+    enc_lens = np.array([len(p) for p in pieces], dtype=np.int32)
+    return (
+        bytes([CS.FSST]) + struct.pack("<I", len(lens)) + bytes([len(table)])
+        + CI.children(b"".join(bytes([len(s)]) + s for s in table),
+                      encode_ints_auto(enc_lens, delta=False)[0])
+        + b"".join(pieces)
+    )
+
+
+def build_strings(arr: "pa.Array", codec: int) -> bytes:
+    """``CS.build_strings``, with FSST blobs from the test writer."""
+    return fsst_blob(arr) if codec == CS.FSST else CS.build_strings(arr, codec)
+
 
 ADVERSARIAL = {
     "empty": np.array([], np.int32),
@@ -107,7 +190,7 @@ def test_int_property_roundtrip(xs):
 def test_string_property_roundtrip(xs):
     arr = pa.array(xs, type=pa.string())
     for codec in ALL_STR_CODECS:
-        assert decode_strings_arrow(CS.build_strings(arr, codec)).to_pylist() == xs
+        assert decode_strings_arrow(build_strings(arr, codec)).to_pylist() == xs
     blob, _ = encode_strings_arrow(arr)
     assert decode_strings_arrow(blob).to_pylist() == xs
     assert decode_strings_arrow(wrap_zstd(blob)).to_pylist() == xs
@@ -191,7 +274,7 @@ def test_selector_picks_the_right_regime():
 
 def test_fsst_compresses_shared_prefixes():
     docs = [f"doc-{i:012d}" for i in range(4000)]
-    blob = CS.build_strings(pa.array(docs, type=pa.string()), CS.FSST)
+    blob = fsst_blob(pa.array(docs, type=pa.string()))
     raw = sum(len(s) for s in docs)
     assert len(blob) < raw
     assert decode_strings_arrow(blob).to_pylist() == docs
@@ -205,8 +288,10 @@ def test_str_dict_beats_plain_on_categoricals():
 
 
 def test_arrow_fsst_branch_from_buffers():
-    """encode_strings_arrow's FSST branch must work straight from the Arrow
-    payload/offsets buffers (no to_pylist) and roundtrip bit-identically,
+    """The fragment strings FSST won on when the encoder still tried it
+    now encode as STR_PLAIN, and an FSST blob of them still decodes
+    exactly. encode_strings_arrow works straight from the Arrow
+    payload/offsets buffers (no to_pylist) and roundtrips bit-identically,
     including multi-chunk and offset-sliced inputs."""
     import random
 
@@ -215,8 +300,10 @@ def test_arrow_fsst_branch_from_buffers():
     vals = ["".join(random.choice(frags) for _ in range(6)) + str(i % 7) for i in range(8000)]
     random.shuffle(vals)
     arr = pa.array(vals, type=pa.string())
+    assert CS.choose_string_codec(arr) == CS.STR_PLAIN
+    assert decode_strings_arrow(fsst_blob(arr)).to_pylist() == vals
     blob, codec = CS.encode_strings_arrow(arr)
-    assert codec == CS.FSST
+    assert codec == CS.STR_PLAIN
     assert decode_strings_arrow(blob).to_pylist() == vals
     # sliced array (nonzero offset into the buffers) must encode the slice only
     sl = arr.slice(100, 5000)
@@ -444,21 +531,24 @@ def test_pack_bits_paths_write_the_same_bytes(width, n, seed):
     assert np.array_equal(CI.unpack_bits(got[-1], n, width), v)
 
 
-def test_fsst_trial_skipped_below_the_sample_floor(monkeypatch):
-    """A chunk whose 512-string sample holds fewer than
-    ``_FSST_MIN_SAMPLE_BYTES`` payload bytes is STR_PLAIN without an FSST
-    trial; from the floor up the trial runs."""
-    trained = []
-    real = CS._train_symbols
-    monkeypatch.setattr(CS, "_train_symbols", lambda s: trained.append(len(s)) or real(s))
-    ids = [f"doc-{i:012d}" for i in range(2000)]  # high cardinality: never STR_DICT
-    width = len(ids[0])
-    below = pa.array(ids[: (CS._FSST_MIN_SAMPLE_BYTES - 1) // width])
-    assert len(CS.utf8_buffers(below)[0]) < CS._FSST_MIN_SAMPLE_BYTES
-    assert CS.choose_string_codec(below) == CS.STR_PLAIN and trained == []
-    at = pa.array(ids[: -(-CS._FSST_MIN_SAMPLE_BYTES // width)])
-    assert len(CS.utf8_buffers(at)[0]) >= CS._FSST_MIN_SAMPLE_BYTES
-    CS.choose_string_codec(at)
-    assert trained == [len(at)]
-    blob, codec = CS.encode_strings_arrow(below)
-    assert codec == CS.STR_PLAIN and decode_strings_arrow(blob).to_pylist() == below.to_pylist()
+# written by the FSST encoder of earlier builds (zstd-wrapped, as stored):
+# 512 strings "doc-00".."doc-39" train the symbols, and the four strings
+# after the sample need escapes ("Zürich/ä", a tab) and an empty string
+_GOLDEN_FSST = bytes.fromhex(
+    "057903000028b52ffd607902250700040a1204020000281801000006646f632d"
+    "3030313233343536373839313031323334353637383932303132333435363738"
+    "3933303132333435363738393400000003120000000205000501d0a000150000"
+    "00010a00061040000100000102030405060708090a0b0c0d0e0f101112131415"
+    "161718191a1b1c1d1e1f2021222324252627ff5affc3ffbcff72ff69ff63ff68"
+    "ff2fffc3ffa407ff74ff61ff62ff09ff782b20c083a43550bda40a7373445b93"
+    "626b9cc1868c1bec9071834d7365dc60438c1b6cc838834dbb32ce6043c60d66"
+    "c8b8c1a6b9326eb021c60d36641c1eac060206"
+)
+
+
+def test_fsst_golden_blob_decodes():
+    """A stored FSST blob from an earlier build decodes to its strings:
+    compatibility with stored data, independent of the test writer."""
+    want = [f"doc-{i % 40:02d}" for i in range(512)] + ["", "Zürich/ä", "doc-07", "tab\tx"]
+    assert unwrap_zstd(_GOLDEN_FSST)[0] == CS.FSST
+    assert decode_strings_arrow(_GOLDEN_FSST).to_pylist() == want

@@ -1243,45 +1243,120 @@ def test_encode_picks_the_runner_from_input_bytes(spark, token_dir, tmp_path, mo
             assert (again["runner"], again["input_bytes"]) == (None, 0), name
 
 
-def test_runners_write_the_same_bytes(spark, tmp_path, encode_runners):
-    """Both layouts, over files of one to three chunks (one in several row
-    groups), an empty file and extra columns of every type: the two
-    encode runners write the same stored bytes and records
-    (``scripts/encode_digest.py``)."""
+def _encode_digest():
+    """``scripts/encode_digest.py``'s ``encode_digest``."""
     import importlib.util
 
+    spec = importlib.util.spec_from_file_location(
+        "encode_digest", os.path.join(os.path.dirname(__file__), "..", "scripts", "encode_digest.py"))
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module.encode_digest
+
+
+def _write_mixed_files(src: str, files: tuple) -> None:
+    """Token files from (first doc, docs, row group size) triples, with
+    extra columns of all four types; a file of 0 docs is empty."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from poc_parquet_aggregator_spark.sources import generate_token_table
 
-    spec = importlib.util.spec_from_file_location(
-        "encode_digest", os.path.join(os.path.dirname(__file__), "..", "scripts", "encode_digest.py"))
-    encode_digest = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(encode_digest)
-
-    def with_extras(tbl):
-        rng = np.random.default_rng(tbl.num_rows)
-        n = tbl.num_rows
-        return (tbl.append_column("lang", pa.array(rng.choice(["en", "de"], n), pa.string()))
-                .append_column("quality", pa.array(rng.random(n), pa.float64()))
-                .append_column("ts", pa.array(rng.integers(0, 1 << 40, n), pa.int64()))
-                .append_column("q", pa.array(rng.integers(0, 9, n), pa.int32())))
-
-    src = str(tmp_path / "src")
     os.makedirs(src)
-    for start, n, rg in ((0, 5000, 700), (5000, 2000, None), (7000, 900, None), (7900, 0, None)):
-        tbl = with_extras(generate_token_table(max(n, 8), seed=21, start_id=start).slice(0, n))
+    for start, n, rg in files:
+        tbl = generate_token_table(max(n, 8), seed=21, start_id=start).slice(0, n)
+        rng = np.random.default_rng(n)
+        tbl = (tbl.append_column("lang", pa.array(rng.choice(["en", "de"], n), pa.string()))
+               .append_column("quality", pa.array(rng.random(n), pa.float64()))
+               .append_column("ts", pa.array(rng.integers(0, 1 << 40, n), pa.int64()))
+               .append_column("q", pa.array(rng.integers(0, 9, n), pa.int32())))
         pq.write_table(tbl, f"{src}/tokens-{start:012d}.parquet", row_group_size=rg)
+
+
+def test_runners_write_the_same_bytes(spark, tmp_path, encode_runners):
+    """Both layouts, over files of one to three chunks (one in several row
+    groups), an empty file and extra columns of every type: the two
+    encode runners write the same stored bytes and records
+    (``scripts/encode_digest.py``)."""
+    encode_digest = _encode_digest()
+    src = str(tmp_path / "src")
+    _write_mixed_files(src, ((0, 5000, 700), (5000, 2000, None), (7000, 900, None), (7900, 0, None)))
     for encode in (encode_dataset, encode_dataset_by_source):
         digests = {}
         for runner in encode_runners():
             out = str(tmp_path / f"{runner}-{encode.__name__}")
             assert encode(spark, src, out)["runner"] == runner
-            digests[runner] = encode_digest.encode_digest(out)
+            digests[runner] = encode_digest(out)
         assert digests["local"] == digests["spark"], encode.__name__
         assert decode_verify(spark, src, out)["bit_identical"], encode.__name__
+
+
+def _pool_width(monkeypatch, width: int) -> None:
+    """Run in-process encodes on a pool of at most ``width`` threads."""
+    from poc_parquet_aggregator_spark.encode import pipeline
+
+    monkeypatch.setattr(pipeline, "host_cores", lambda: width)
+
+
+def test_pool_widths_write_the_same_bytes(tmp_path, monkeypatch):
+    """The in-process runner writes the same stored bytes and records on
+    a pool of one thread and of four, in both layouts: 8 files, one in
+    several row groups and one empty, with extras of every type. At
+    width 4 the first four units do run at once (they meet at a
+    barrier)."""
+    import threading
+
+    from poc_parquet_aggregator_spark.encode import pipeline
+
+    encode_digest = _encode_digest()
+    src = str(tmp_path / "src")
+    _write_mixed_files(src, ((0, 5000, 700), (5000, 0, None),
+                             *((5000 + 900 * i, 900, None) for i in range(6))))
+    real = pipeline._encode_units
+    for encode in (encode_dataset, encode_dataset_by_source):
+        digests = {}
+        for width in (1, 4):
+            _pool_width(monkeypatch, width)
+            met = threading.Barrier(width, timeout=60)
+            calls = itertools.count()
+
+            def units(*a, met=met, calls=calls):
+                if next(calls) < met.parties:
+                    met.wait()
+                yield from real(*a)
+
+            monkeypatch.setattr(pipeline, "_encode_units", units)
+            out = str(tmp_path / f"{encode.__name__}-{width}")
+            assert encode(None, src, out)["runner"] == "local"
+            digests[width] = encode_digest(out)
+        assert digests[1] == digests[4], encode.__name__
+
+
+def test_pool_failure_commits_nothing(tmp_path, monkeypatch):
+    """A middle file that breaks the ``n_tok`` invariant fails the
+    in-process job at every pool width, in both layouts: no record is
+    committed and no pool thread is left running."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    write_token_table(str(src), 5000, docs_per_file=1000)
+    bad = src / "tokens-000000002000.parquet"
+    tbl = pq.read_table(bad)
+    i = tbl.schema.get_field_index("n_tok")
+    pq.write_table(tbl.set_column(i, "n_tok", pa.array(tbl.column(i).to_numpy() + 1, pa.int32())),
+                   bad)
+    before = set(threading.enumerate())
+    for width, encode in itertools.product((1, 4), (encode_dataset, encode_dataset_by_source)):
+        _pool_width(monkeypatch, width)
+        out = str(tmp_path / f"{encode.__name__}-{width}")
+        with pytest.raises(ValueError, match="n_tok invariant violated"):
+            encode(None, str(src), out)
+        assert read_manifest(out) == {}, (encode.__name__, width)
+        assert set(threading.enumerate()) <= before, (encode.__name__, width)
 
 
 def test_in_process_buckets_equal_spark_buckets(spark, tmp_path):
@@ -1308,10 +1383,12 @@ def test_in_process_buckets_equal_spark_buckets(spark, tmp_path):
         want = sorted(map(tuple, _bucket_df(spark, files, n_salts, {})
                           .select("_bucket", "doc_id").collect()))
         got, seen = [], []
-        for bucket, batch in _bucket_pieces(files, n_salts, {}):
-            if not seen or seen[-1] != bucket:
-                seen.append(bucket)
-            got += [(bucket, d) for d in batch.column(batch.schema.get_field_index("doc_id")).to_pylist()]
+        for unit in _bucket_pieces(files, n_salts, {}):
+            seen.append(unit[0][0])
+            for bucket, batch in unit:
+                assert bucket == seen[-1]  # one bucket per unit
+                got += [(bucket, d)
+                        for d in batch.column(batch.schema.get_field_index("doc_id")).to_pylist()]
         assert sorted(got) == want, n_salts
-        assert len(seen) == len(set(seen))  # each bucket's rows in a row
+        assert len(seen) == len(set(seen))  # each bucket's rows in one unit
         assert got == sorted(got, key=lambda r: (r[0].encode(), r[1].encode()))
