@@ -2,8 +2,8 @@
 
 Commands:
   gen     --out DIR --docs N [--docs-per-file K] [--seed S]
-  encode  --input DIR --out DIR [--by-source] [--n-salts K] [--zstd-level L]
-          [--cores N]
+  encode  --input DIR --out DIR [--by-source] [--zstd-level L] [--cores N]
+          (--by-source: buckets sized from each source's token count)
   decode  --out DIR [--sources a,b] [--doc-id-min X --doc-id-max Y]
           [--n-tok-min A --n-tok-max B] [--columns a,b] [--show N]
   verify  --input DIR --out DIR [--fraction F] [--cores N]
@@ -41,7 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("--input", required=True)
     e.add_argument("--out", required=True)
     e.add_argument("--by-source", action="store_true")
-    e.add_argument("--n-salts", type=int, default=8)
     e.add_argument("--zstd-level", type=int, default=3)
     e.add_argument("--cores", type=int, default=8)
 
@@ -121,8 +120,7 @@ def main(argv: list[str] | None = None) -> int:
 
             if args.by_source:
                 metrics = encode_dataset_by_source(
-                    spark, args.input, args.out,
-                    n_salts=args.n_salts, zstd_level=args.zstd_level,
+                    spark, args.input, args.out, zstd_level=args.zstd_level
                 )
             else:
                 metrics = encode_dataset(

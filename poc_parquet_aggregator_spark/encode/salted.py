@@ -7,9 +7,10 @@ would put 60% of all data in ONE task — the straggler that caps scaling at
 any cluster size. North rule: handle this with explicit salting, not hope.
 
 Plan shape:
-    salt   = crc32(doc_id) % n_salts          (deterministic → stable resume)
-    bucket = source || "_s" || salt
-    df.repartition(n_buckets, "bucket") → mapInArrow encode → per-bucket
+    n_salts_s = max(1, ceil(tokens_s / _BUCKET_TOKENS))   (per source)
+    salt      = crc32(doc_id) % n_salts_s   (deterministic → stable resume)
+    bucket    = source || "_s" || salt      (salt printed as %03d, never cut)
+    df.repartition(cores, "bucket") → mapInArrow encode → per-bucket
     commit (the same manifest-record commit as the per-file job)
 
 A job whose input is at most ``_LOCAL_ENCODE_BYTES`` skips the Spark job:
@@ -18,14 +19,19 @@ doc_id) and encodes each bucket as one task of the in-process runner's
 thread pool with the same kernel, which cuts a bucket's chunks from its
 own rows alone, so both runners write the same bytes.
 
-Each bucket record carries ``source``, ``salt``, ``n_salts``, the input
-snapshot and ``n_buckets``, the size of the bucket universe of its run:
-the records alone tell a resume whether every bucket is committed.
+Each bucket record carries ``source``, ``salt``, its source's
+``n_salts``, the input snapshot and ``n_buckets``, the size of the
+bucket universe of its run: the records alone tell a resume whether
+every bucket is committed.
 
-n_salts bounds the largest bucket at ~60%/n_salts of the data; AQE's
+A source's salt count follows its tokens, ``tokens_s``, its summed
+``n_tok`` over the whole input: every bucket holds about
+``_BUCKET_TOKENS`` tokens or fewer, whatever the skew, so the head
+source is cut into many buckets and a small source stays one. AQE's
 skew-join handling does not apply here (no join), so the salt IS the
-mechanism. Salting is deterministic on doc_id, so a resumed run reproduces
-identical buckets byte-for-byte.
+mechanism. The count depends on the input alone, not on the host or the
+runner, and salting is deterministic on doc_id, so a resumed run
+reproduces identical buckets byte-for-byte.
 """
 
 from __future__ import annotations
@@ -54,6 +60,17 @@ from .pipeline import (
 )
 
 
+# the token count a by-source bucket is sized to: a source of
+# ``tokens_s`` tokens is cut into ceil(tokens_s / _BUCKET_TOKENS) salts.
+# Each bucket is a commit unit with a fixed cost (a part file, its footer,
+# a record), so buckets only need to be small enough to spread the head
+# source over the cores. Set from an encode sweep of 2^18-2^21 on 4 cores
+# (ARCHITECTURE §1, scripts/runner_sweep.py encode): times are flat from
+# 2^19 up, and 2^19 is the largest target that keeps the 16k-doc ingest
+# corpus's largest bucket at 1/8 of its tokens (24 buckets, not 160).
+_BUCKET_TOKENS = 1 << 19
+
+
 def _input_snapshot(files: list[str]) -> dict:
     def sig_of(f: str) -> str:
         st = os.stat(f)
@@ -63,36 +80,66 @@ def _input_snapshot(files: list[str]) -> dict:
     return {"n_files": len(files), "crc": sig}
 
 
-def _bucket_df(spark: SparkSession, files: list[str], n_salts: int, done: dict) -> DataFrame:
+def _salt_counts(tokens: dict[str, int], done: dict[str, dict]) -> dict[str, int]:
+    """Each source's salt count from its summed ``n_tok`` over the whole
+    input snapshot: ``k_s = max(1, ceil(tokens_s / _BUCKET_TOKENS))``.
+    A committed record in ``done`` cut with another count raises: its
+    salts would split the source's rows differently, and the resume
+    would skip or repeat rows."""
+    salts = {s: max(1, -(-int(t) // _BUCKET_TOKENS)) for s, t in tokens.items()}
+    for stem, rec in done.items():
+        if (committed := rec["n_salts"]) != (k := salts.get(rec["source"])):
+            raise ValueError(
+                f"bucket {stem!r} was committed with n_salts={committed}; this build "
+                f"cuts source {rec['source']!r} into n_salts={k} (_BUCKET_TOKENS="
+                f"{_BUCKET_TOKENS}), so a resume would lose rows — encode into a fresh out_dir"
+            )
+    return salts
+
+
+def _bucket_df(
+    spark: SparkSession, files: list[str], done: dict, salts: dict[str, int]
+) -> DataFrame:
     """The Spark runner's input: the rows of ``files`` with their
     ``_bucket``, committed buckets dropped, through the explicit salted
-    repartition (one shuffle, buckets ≈ balanced). sortWithinPartitions
-    puts each bucket's rows in a row, ordered by doc_id, so a bucket is
-    one unit of the kernel."""
-    bucket = F.concat(
-        F.col("source"),
-        F.lit("_s"),
-        F.lpad((F.crc32(F.col("doc_id").cast("binary")) % n_salts).cast("string"), 3, "0"),
-    )
-    df = spark.read.parquet(*files).withColumn("_bucket", bucket)
+    repartition into one partition per core (one shuffle, buckets ≈
+    balanced; each task pays a fixed cost, so one partition per bucket
+    measured slower, ARCHITECTURE §1). sortWithinPartitions puts each
+    bucket's rows in a row, ordered by doc_id, so a bucket is one unit of
+    the kernel. The salt counts come from one ``groupBy`` over the
+    input, collected before the shuffle; they are put in ``salts``."""
+    df = spark.read.parquet(*files)
+    tokens = df.groupBy("source").agg(F.sum("n_tok")).collect()
+    salts.update(_salt_counts(dict(map(tuple, tokens)), done))
+    k = F.create_map(*[F.lit(x) for kv in salts.items() for x in kv])[F.col("source")]
+    salt = F.crc32(F.col("doc_id").cast("binary")) % (k if salts else F.lit(1))
+    df = df.withColumn("_bucket", F.concat(F.col("source"), F.lit("_s"),
+                                           F.format_string("%03d", salt)))
     if done:
         df = df.filter(~F.col("_bucket").isin(list(done)))
-    n_buckets_hint = max(spark.sparkContext.defaultParallelism, n_salts)
-    return df.repartition(n_buckets_hint, "_bucket").sortWithinPartitions("_bucket", "doc_id")
+    return df.repartition(spark.sparkContext.defaultParallelism, "_bucket") \
+        .sortWithinPartitions("_bucket", "doc_id")
 
 
 def _bucket_pieces(
-    files: list[str], n_salts: int, done: dict
+    files: list[str], done: dict, salts: dict[str, int]
 ) -> list[list[tuple[str, pa.RecordBatch]]]:
     """The in-process runner's units: ``_bucket_df``'s rows computed in
-    Arrow — the same bucket strings (``zlib.crc32`` over each doc_id's
-    UTF-8 bytes), committed buckets dropped, sorted by (bucket, doc_id)
-    in byte order — as one list of (bucket, batch) pieces per bucket, in
-    bucket order."""
+    Arrow — the same salt counts (put in ``salts``) and bucket strings
+    (``zlib.crc32`` over each doc_id's UTF-8 bytes), committed buckets
+    dropped, sorted by (bucket, doc_id) in byte order — as one list of
+    (bucket, batch) pieces per bucket, in bucket order."""
     names = pq.read_schema(files[0]).names
     tbl = pa.concat_tables(
         [pq.ParquetFile(f).read().select(names) for f in files], promote_options="default"
     )
+    source = tbl.column("source").cast(pa.string())
+    sums = pa.table({"source": source, "n_tok": tbl.column("n_tok")}).group_by("source") \
+        .aggregate([("n_tok", "sum")])
+    salts.update(_salt_counts(dict(zip(sums["source"].to_pylist(),
+                                       sums["n_tok_sum"].to_pylist())), done))
+    k = pc.take(pa.array(list(salts.values()), pa.int64()),
+                pc.index_in(source, pa.array(list(salts), pa.string()))).to_numpy()
     payload, lens = utf8_buffers(tbl.column("doc_id").combine_chunks())
     offs = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(lens, out=offs[1:])
@@ -100,11 +147,9 @@ def _bucket_pieces(
         (zlib.crc32(payload[offs[i]:offs[i + 1]]) for i in range(len(lens))),
         dtype=np.int64, count=len(lens),
     )
-    salts, inverse = np.unique(crc % n_salts, return_inverse=True)
-    # Spark's lpad(salt, 3, "0") pads to three characters and cuts above
-    labels = pc.take(pa.array([str(s).rjust(3, "0")[:3] for s in salts], pa.string()),
-                     pa.array(inverse))
-    source = tbl.column("source").cast(pa.string())
+    labels, inverse = np.unique(crc % k, return_inverse=True)
+    # Spark's format_string("%03d", salt): three digits at least, never cut
+    labels = pc.take(pa.array([f"{s:03d}" for s in labels], pa.string()), pa.array(inverse))
     tbl = tbl.append_column("_bucket", pc.binary_join_element_wise(source, labels, "_s"))
     if done:
         tbl = tbl.filter(pc.invert(pc.is_in(tbl.column("_bucket"), pa.array(list(done)))))
@@ -117,7 +162,6 @@ def encode_dataset_by_source(
     spark: SparkSession,
     input_path: str | list[str],
     out_dir: str,
-    n_salts: int = 8,
     zstd_level: int = 3,
 ) -> dict:
     """Encode the token table into source-partitioned, salt-balanced buckets.
@@ -126,10 +170,11 @@ def encode_dataset_by_source(
     input set. Every record in ``out_dir`` must come from this snapshot: a
     record committed from another input raises (its bucket would keep
     serving rows the input no longer has) — encode a changed input into a
-    fresh out_dir. Bucket records carry ``n_salts``: resuming them with
-    another value raises, since its buckets would split the rows
-    differently. They also carry ``n_buckets``: the scan is skipped only
-    when every record's count equals the number of records.
+    fresh out_dir. Bucket records carry their source's ``n_salts``
+    (``_salt_counts``): a resume recomputes it from the same input, and
+    a record cut with another count raises. They also carry
+    ``n_buckets``: the scan and the count are skipped only when every
+    record's count equals the number of records.
     """
     t0 = time.time()
     files = _input_files(input_path)
@@ -141,27 +186,22 @@ def encode_dataset_by_source(
                 f"bucket {stem!r} was committed from another input snapshot; "
                 "the input changed since — encode into a fresh out_dir"
             )
-        if (committed := rec.get("n_salts")) != n_salts:
-            raise ValueError(
-                f"bucket {stem!r} was committed with n_salts={committed}; resuming "
-                f"it with n_salts={n_salts} would lose rows — pass "
-                f"n_salts={committed} or encode into a fresh out_dir"
-            )
 
     metrics = {"buckets_skipped": len(done)}
 
     if not done or any(r.get("n_buckets") != len(done) for r in done.values()):
+        salts: dict[str, int] = {}
         by_bucket, extras = _encode_parts(
             spark, files, out_dir, done, "_bucket", zstd_level, metrics,
-            lambda: _bucket_df(spark, files, n_salts, done),
-            lambda: _bucket_pieces(files, n_salts, done),
+            lambda: _bucket_df(spark, files, done, salts),
+            lambda: _bucket_pieces(files, done, salts),
         )
         n_buckets = len(set(done) | set(by_bucket))
         for stem, rows in by_bucket.items():
             source, salt = stem.rsplit("_s", 1)
             _commit_parts(
                 out_dir, stem, rows, extras=extras, source=source, salt=int(salt),
-                n_salts=n_salts, n_buckets=n_buckets, snapshot=snapshot,
+                n_salts=salts[source], n_buckets=n_buckets, snapshot=snapshot,
             )
 
     manifest = _job_metrics(metrics, out_dir, files, t0)

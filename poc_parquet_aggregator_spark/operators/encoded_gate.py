@@ -199,7 +199,7 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
         os.rename(tmp, in_dir)  # atomic: never half-written under in_dir
     try:
         encode_dataset(spark, in_dir, out_file)  # resume-aware: re-runs no-op
-        encode_dataset_by_source(spark, in_dir, out_src, n_salts=2)
+        encode_dataset_by_source(spark, in_dir, out_src)
         # third branch: the incremental ingest into its own dir — the
         # manifest's snapshot check makes re-runs no-ops, and the SAME
         # oracle rows must come back out

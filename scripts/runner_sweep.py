@@ -20,9 +20,11 @@ Encode sweep (``encode``): for each D, a token table of D thousand docs
 WORK_DIR unless it exists, and encoded into a fresh dir by
 ``encode_dataset`` and ``encode_dataset_by_source`` on each runner (the
 runner forced through ``_LOCAL_ENCODE_BYTES``). Prints one JSON line per
-D: the input's on-disk MiB and the median of REPS (default 3) warm runs
-per layout and runner. ``_LOCAL_ENCODE_BYTES`` belongs at or below the
-smaller of the two layouts' crossovers (ARCHITECTURE §1).
+D: the input's on-disk MiB, the median of REPS (default 3) warm runs
+per layout and runner, and each runner's by-source ``buckets_total``
+and ``max_bucket_token_share`` (the skew the salts leave).
+``_LOCAL_ENCODE_BYTES`` belongs at or below the smaller of the two
+layouts' crossovers (ARCHITECTURE §1).
 
 Uses 4 cores. The package is imported from the tree this script lives
 in, on the driver and on the Python workers.
@@ -88,12 +90,18 @@ def encode_sweep(spark, work: str, ds: list[int], reps: int) -> None:
         for layout, encode in (("per_file", encode_dataset), ("by_source", encode_dataset_by_source)):
             for runner, limit in (("local", 1 << 62), ("spark", -1)):
                 pipeline._LOCAL_ENCODE_BYTES = limit
+                metrics = {}
 
                 def run():
                     shutil.rmtree(out, ignore_errors=True)
-                    assert encode(spark, in_dir, out)["runner"] == runner
+                    metrics.update(encode(spark, in_dir, out))
+                    assert metrics["runner"] == runner
 
                 row[f"{layout}_{runner}_s"] = _median_s(run, reps)
+                if layout == "by_source":
+                    row[f"{layout}_{runner}_buckets_total"] = metrics["buckets_total"]
+                    row[f"{layout}_{runner}_max_bucket_token_share"] = round(
+                        metrics["max_bucket_token_share"], 3)
         print(json.dumps(row), flush=True)
 
 

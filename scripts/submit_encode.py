@@ -4,7 +4,7 @@ Packaged and launched by scripts/run_encode_submit.sh:
 
     spark-submit --master local[N] --py-files engine.zip \
         scripts/submit_encode.py --input DIR --out DIR [--by-source] \
-        [--zstd-level L] [--n-salts K]
+        [--zstd-level L]
 
 On a real cluster the same invocation takes --master yarn/k8s and the
 engine zip ships to executors; nothing in the job is local-mode-specific
@@ -24,7 +24,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--by-source", action="store_true")
     ap.add_argument("--zstd-level", type=int, default=3)
-    ap.add_argument("--n-salts", type=int, default=8)
     ap.add_argument("--verify", action="store_true")
     args = ap.parse_args()
 
@@ -41,7 +40,7 @@ def main() -> None:
 
     if args.by_source:
         metrics = encode_dataset_by_source(
-            spark, args.input, args.out, n_salts=args.n_salts, zstd_level=args.zstd_level
+            spark, args.input, args.out, zstd_level=args.zstd_level
         )
     else:
         metrics = encode_dataset(

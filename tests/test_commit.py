@@ -11,8 +11,8 @@ each encode runner. A crash in a by-source resume also reruns to those
 bytes on each runner, and one in
 ``compact_manifest`` never changes the records ``read_manifest`` returns.
 A named file that is gone fails the read instead of dropping its rows,
-and a by-source resume with another ``n_salts``, or over records of
-another input, raises instead of skipping buckets or serving stale
+and a by-source resume over records cut with another salt count (another
+``_BUCKET_TOKENS``), or over records of another input, raises instead of skipping buckets or serving stale
 ones. The records are the table's only state: a per-file encode over
 by-source records raises instead of serving each row twice, a record
 that declares no extra columns raises, and ``compact_encoded`` deletes
@@ -24,6 +24,7 @@ import importlib.util
 import itertools
 import json
 import os
+import re
 import shutil
 from functools import partial
 
@@ -41,6 +42,7 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset_by_source,
     read_decoded,
     read_manifest,
+    salted,
 )
 from poc_parquet_aggregator_spark.encode import pipeline as P
 from poc_parquet_aggregator_spark.plans import get_spark
@@ -186,21 +188,24 @@ def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path, split_pa
     assert seen == [0] * len(seen) and len(seen) > 2, seen
 
 
-def test_crash_at_every_commit_step_of_a_by_source_resume(spark, tmp_path, encode_runners):
+def test_crash_at_every_commit_step_of_a_by_source_resume(
+    spark, tmp_path, encode_runners, monkeypatch
+):
     """A by-source run cut after all but two buckets committed: a crash
     anywhere in its resume (sidecars, records, the deletes of the cut
     run's files) reruns to the bytes of an uninterrupted resume, on each
-    encode runner."""
+    encode runner. Every source is one bucket here."""
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 30)
     src = str(tmp_path / "src")
     _write(src, 0, seed=8)
     _write(src, DOCS_PER_FILE, seed=8)
     for runner in encode_runners():
         tmp = tmp_path / runner
         base = str(tmp / "base")
-        encode_dataset_by_source(spark, src, base, n_salts=1)
+        encode_dataset_by_source(spark, src, base)
         for stem in ("src00_s000", "src19_s000"):
             os.remove(os.path.join(base, "_manifest", f"{stem}.json"))
-        run = lambda out: encode_dataset_by_source(spark, src, out, n_salts=1)  # noqa: E731
+        run = lambda out: encode_dataset_by_source(spark, src, out)  # noqa: E731
         seen = _crash_suite(tmp, base, run)
         assert len(seen) > 5, (runner, seen)
         assert decode_verify(spark, src, str(tmp / "ref"))["bit_identical"], runner
@@ -245,26 +250,39 @@ def test_missing_named_part_fails_the_read(runners, spark, tmp_path):
         assert read(spark, out, doc_id_range=rng).count() == DOCS_PER_FILE, runner
 
 
-def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path):
-    """A run with n_salts=8 cut after the buckets of salts 0-3 committed,
-    resumed with n_salts=2: the new bucket names s000 and s001 are among
-    the committed ones, so the resume would skip rows."""
+def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path, monkeypatch):
+    """A run whose build sized buckets at 2^14 tokens, cut after the
+    buckets of salts 0-3 committed, resumed by a build that sizes them
+    at 2^16: the new buckets s000 and s001 of each source are among the
+    committed ones, so the resume would skip rows. It raises, naming
+    both salt counts; the first build's resume completes the table."""
     src = str(tmp_path / "src")
     _write(src, 0, seed=5)
     _write(src, DOCS_PER_FILE, seed=5)
     out = str(tmp_path / "enc")
-    encode_dataset_by_source(spark, src, out, n_salts=8)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 14)
+    encode_dataset_by_source(spark, src, out)
+    first, tokens = {}, {}
     for stem, rec in read_manifest(out).items():
+        first[rec["source"]] = rec["n_salts"]
+        tokens[rec["source"]] = tokens.get(rec["source"], 0) + rec["n_tokens"]
         if rec["salt"] >= 4:
             os.remove(os.path.join(out, "_manifest", f"{stem}.json"))
-    with pytest.raises(ValueError, match=r"n_salts=8.*n_salts=2"):
-        encode_dataset_by_source(spark, src, out, n_salts=2)
-    m = encode_dataset_by_source(spark, src, out, n_salts=8)
+    assert max(first.values()) > 4
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 16)
+    with pytest.raises(ValueError, match="fresh out_dir") as e:
+        encode_dataset_by_source(spark, src, out)
+    source, committed, now = re.search(
+        r"bucket '(\w+)_s\d+' was committed with n_salts=(\d+).*n_salts=(\d+)", str(e.value)
+    ).groups()
+    assert int(committed) == first[source] != int(now) == -(-tokens[source] // (1 << 16))
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 14)
+    m = encode_dataset_by_source(spark, src, out)
     assert m["n_docs"] == 2 * DOCS_PER_FILE
     assert decode_verify(spark, src, out)["bit_identical"]
 
 
-def test_by_source_re_encode_after_an_input_change_raises(spark, tmp_path):
+def test_by_source_re_encode_after_an_input_change_raises(spark, tmp_path, monkeypatch):
     """Every src19 row leaves the input after a by-source encode. A
     re-run into the same out_dir would keep serving the src19 buckets of
     the old input next to the new rows, so it raises; a fresh out_dir
@@ -272,21 +290,22 @@ def test_by_source_re_encode_after_an_input_change_raises(spark, tmp_path):
     src = str(tmp_path / "src")
     paths = [_write(src, 0, seed=6), _write(src, DOCS_PER_FILE, seed=6)]
     out = str(tmp_path / "enc")
-    encode_dataset_by_source(spark, src, out, n_salts=2)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 18)
+    encode_dataset_by_source(spark, src, out)
     assert "src19_s000" in read_manifest(out)
     for p in paths:
         tbl = pq.read_table(p)
         pq.write_table(tbl.filter(pc.not_equal(tbl.column("source"), "src19")), p)
     with pytest.raises(ValueError, match=r"bucket '\w+_s00\d'.*another input.*fresh out_dir"):
-        encode_dataset_by_source(spark, src, out, n_salts=2)
+        encode_dataset_by_source(spark, src, out)
     fresh = str(tmp_path / "fresh")
-    m = encode_dataset_by_source(spark, src, fresh, n_salts=2)
+    m = encode_dataset_by_source(spark, src, fresh)
     n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
     assert m["n_docs"] == n_rows < 2 * DOCS_PER_FILE
     assert read_decoded(spark, fresh).count() == n_rows
 
 
-def test_per_file_encode_over_by_source_records_raises(spark, tmp_path):
+def test_per_file_encode_over_by_source_records_raises(spark, tmp_path, monkeypatch):
     """A per-file encode into a by-source out_dir would commit every row a
     second time under its file stem, and reads would serve each doc
     twice: it raises before any task runs, and the table still reads
@@ -294,7 +313,8 @@ def test_per_file_encode_over_by_source_records_raises(spark, tmp_path):
     src = str(tmp_path / "src")
     _write(src, 0, seed=11)
     out = str(tmp_path / "enc")
-    encode_dataset_by_source(spark, src, out, n_salts=2)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 18)
+    encode_dataset_by_source(spark, src, out)
     before = read_manifest(out)
     with pytest.raises(ValueError, match=r"by-source: True.*by-source: False.*fresh out_dir"):
         encode_dataset(spark, src, out)

@@ -18,6 +18,7 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset_by_source,
     plan_read,
     read_manifest,
+    salted,
 )
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import write_token_table
@@ -128,32 +129,37 @@ def test_changed_input_re_encodes(spark, token_dir, tmp_path):
     assert decode_verify(spark, src, out)["bit_identical"]
 
 
-def test_salted_source_mode(spark, token_dir, tmp_path):
+def test_salted_source_mode(spark, token_dir, tmp_path, monkeypatch):
     out = str(tmp_path / "enc_salted")
-    m = encode_dataset_by_source(spark, token_dir, out, n_salts=4)
-    # skew defused: head source is ~60% of tokens; with 4 salts no bucket
-    # should exceed ~1/4 of that plus slack
-    assert m["max_bucket_token_share"] < 0.25
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 17)
+    m = encode_dataset_by_source(spark, token_dir, out)
+    # skew defused: the head source is ~60% of the table's 1.46M tokens,
+    # so it is cut into 7 salts of 128Ki tokens and the other 19 sources
+    # stay one bucket each; no bucket holds more than ~1/10 of the tokens
+    assert m["buckets_total"] == 26
+    assert {r["n_salts"] for r in read_manifest(out).values()} == {1, 7}
+    assert m["max_bucket_token_share"] < 0.1
     assert m["ratio_vs_parquet_zstd"] <= 1.0
     assert decode_verify(spark, token_dir, out)["bit_identical"]
-    m2 = encode_dataset_by_source(spark, token_dir, out, n_salts=4)
+    m2 = encode_dataset_by_source(spark, token_dir, out)
     assert m2["buckets_skipped"] == m2["buckets_total"]
 
 
-def test_salted_lost_manifest_re_encodes(spark, token_dir, tmp_path):
+def test_salted_lost_manifest_re_encodes(spark, token_dir, tmp_path, monkeypatch):
     """Regression: a committed bucket whose manifest record is lost must be
     re-encoded on resume (the job summary defines the bucket universe)."""
     import glob as g
 
     out = str(tmp_path / "enc_salted")
-    m0 = encode_dataset_by_source(spark, token_dir, out, n_salts=4)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 17)
+    m0 = encode_dataset_by_source(spark, token_dir, out)
     manifests = sorted(
         p
         for p in g.glob(out + "/_manifest/*.json")
         if not os.path.basename(p).startswith("_")  # skip job-level records
     )
     os.remove(manifests[0])
-    m = encode_dataset_by_source(spark, token_dir, out, n_salts=4)
+    m = encode_dataset_by_source(spark, token_dir, out)
     assert m["buckets_total"] == m0["buckets_total"]
     assert m["buckets_skipped"] == m0["buckets_total"] - 1
     assert decode_verify(spark, token_dir, out)["bit_identical"]
@@ -180,7 +186,7 @@ def test_empty_input_file_committed_once(spark, token_dir, tmp_path):
     assert decode_verify(spark, src, out)["bit_identical"]
 
 
-def test_selective_decode(spark, token_dir, tmp_path):
+def test_selective_decode(spark, token_dir, tmp_path, monkeypatch):
     """Source pruning + doc_id zone-map skipping return exactly the
     matching rows (compared against a full-decode filter)."""
     from pyspark.sql import functions as F
@@ -188,7 +194,8 @@ def test_selective_decode(spark, token_dir, tmp_path):
     from poc_parquet_aggregator_spark.encode import read_decoded
 
     out = str(tmp_path / "enc_salted")
-    encode_dataset_by_source(spark, token_dir, out, n_salts=4)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 17)
+    encode_dataset_by_source(spark, token_dir, out)
     full = read_decoded(spark, out)
 
     by_src = read_decoded(spark, out, sources=["src00"])
@@ -410,7 +417,7 @@ def test_sampled_decode_verify(spark, token_dir, tmp_path):
     assert 0 < expect_docs < N_DOCS or len(sampled) in (0, len(files))
 
 
-def test_extra_metadata_columns_roundtrip(spark, tmp_path):
+def test_extra_metadata_columns_roundtrip(spark, tmp_path, monkeypatch):
     """Columns beyond the core schema (string / int32 / int64 / double)
     encode per type, ride the lineage manifest, and decode bit-identically
     — including through the salted by-source mode and decode_verify's
@@ -456,7 +463,8 @@ def test_extra_metadata_columns_roundtrip(spark, tmp_path):
     assert any(k == "extra:seq:delta" for k in rec["codecs"]), rec["codecs"]
     # salted mode carries extras too
     out2 = str(tmp_path / "enc_salted")
-    encode_dataset_by_source(spark, src, out2, n_salts=2)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 13)
+    encode_dataset_by_source(spark, src, out2)
     assert decode_verify(spark, src, out2)["bit_identical"]
 
 
@@ -1135,7 +1143,7 @@ def test_encodes_leave_session_split_confs_unchanged(spark, token_dir, tmp_path,
     # front, the bad n_tok fails inside the encode job
     calls = {
         "per-file": (lambda out: encode_dataset(spark, token_dir, out), None),
-        "by-source": (lambda out: encode_dataset_by_source(spark, token_dir, out, n_salts=2), None),
+        "by-source": (lambda out: encode_dataset_by_source(spark, token_dir, out), None),
         "stream": (lambda out: encode_stream(spark, token_dir, out), None),
         "dupes": (lambda out: encode_dataset(spark, dupes, out), "duplicate input file stems"),
         "bad": (lambda out: encode_dataset(spark, str(bad), out), "n_tok invariant violated"),
@@ -1359,12 +1367,17 @@ def test_pool_failure_commits_nothing(tmp_path, monkeypatch):
         assert set(threading.enumerate()) <= before, (encode.__name__, width)
 
 
-def test_in_process_buckets_equal_spark_buckets(spark, tmp_path):
-    """The in-process by-source runner names every row's bucket exactly
-    as Spark's ``source || "_s" || lpad(crc32(doc_id) % n_salts, 3, "0")``
-    does — non-ASCII doc ids hashed as UTF-8, salts above 999 cut to three
-    characters like ``lpad`` — and hands over each bucket's rows in a
-    row, sorted by doc_id in byte order, like the shuffle does."""
+def test_in_process_buckets_equal_spark_buckets(spark, tmp_path, monkeypatch):
+    """The in-process by-source runner sizes every source's salt count
+    like the Spark runner — ``max(1, ceil(tokens_s / _BUCKET_TOKENS))``
+    over the source's summed n_tok — and names every row's bucket
+    exactly as Spark's ``source || "_s" || format_string("%03d",
+    crc32(doc_id) % k_s)`` does, non-ASCII doc ids hashed as UTF-8. At
+    one size every source but the head is one bucket, at the other the
+    head is cut into more than 1,000. Each bucket's rows come in a row,
+    sorted by doc_id in byte order, like the shuffle hands them over."""
+    import zlib
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1379,16 +1392,30 @@ def test_in_process_buckets_equal_spark_buckets(spark, tmp_path):
     files = [f"{src}/tokens-a.parquet", f"{src}/tokens-b.parquet"]
     pq.write_table(tbl.slice(0, 1700), files[0])
     pq.write_table(tbl.slice(1700), files[1])
-    for n_salts in (8, 1500):
-        want = sorted(map(tuple, _bucket_df(spark, files, n_salts, {})
+    source = dict(zip(ids, tbl.column("source").to_pylist()))
+    tokens = {}
+    for d, n in zip(ids, tbl.column("n_tok").to_pylist()):
+        tokens[source[d]] = tokens.get(source[d], 0) + n
+    head = max(tokens, key=tokens.get)
+    for size in (max(v for s, v in tokens.items() if s != head), 256):
+        monkeypatch.setattr(salted, "_BUCKET_TOKENS", size)
+        want_k = {s: max(1, -(-t // size)) for s, t in tokens.items()}
+        spark_k, local_k = {}, {}
+        want = sorted(map(tuple, _bucket_df(spark, files, {}, spark_k)
                           .select("_bucket", "doc_id").collect()))
         got, seen = [], []
-        for unit in _bucket_pieces(files, n_salts, {}):
+        for unit in _bucket_pieces(files, {}, local_k):
             seen.append(unit[0][0])
             for bucket, batch in unit:
                 assert bucket == seen[-1]  # one bucket per unit
                 got += [(bucket, d)
                         for d in batch.column(batch.schema.get_field_index("doc_id")).to_pylist()]
-        assert sorted(got) == want, n_salts
+        assert spark_k == local_k == want_k, size
+        assert sorted(got) == want, size
         assert len(seen) == len(set(seen))  # each bucket's rows in one unit
         assert got == sorted(got, key=lambda r: (r[0].encode(), r[1].encode()))
+        # the label holds the whole salt: distinct salts, distinct buckets
+        salt = {d: zlib.crc32(d.encode()) % want_k[source[d]] for d in ids}
+        assert all(b == f"{source[d]}_s{salt[d]:03d}" for b, d in got)
+        assert len({b for b, _ in got}) == len({(source[d], salt[d]) for d in ids})
+    assert want_k[head] > 1000 and len({b for b, _ in got if b.startswith(head)}) > 1000

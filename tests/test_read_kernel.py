@@ -29,7 +29,7 @@ from poc_parquet_aggregator_spark.encode import (
     read_decoded,
     read_manifest,
 )
-from poc_parquet_aggregator_spark.encode import pipeline
+from poc_parquet_aggregator_spark.encode import pipeline, salted
 from poc_parquet_aggregator_spark.encode.pipeline import (
     _ENC_ARROW_SCHEMA,
     _decoded_arrow_schema,
@@ -82,7 +82,11 @@ def enc_dir(spark, src_dir, tmp_path_factory):
 @pytest.fixture(scope="module")
 def salted_dir(spark, src_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc_salted") / "out")
-    encode_dataset_by_source(spark, src_dir, out, n_salts=2)
+    # 2^14-token buckets: the head source is cut into ~36 salts, the
+    # other sources into one or two
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(salted, "_BUCKET_TOKENS", 1 << 14)
+        encode_dataset_by_source(spark, src_dir, out)
     return out
 
 
@@ -272,10 +276,10 @@ def test_percent_encoded_input_file_names(runners, encode_runners, spark, table,
         out = str(tmp_path / f"{encoder}-pct_out")
         encode_dataset(spark, pct, out)
         assert list(read_manifest(out)) == ["x%41"]
-        salted = str(tmp_path / f"{encoder}-pct_salted")
-        encode_dataset_by_source(spark, pct, salted, n_salts=1)
-        assert list(read_manifest(salted)) == ["a%41[1]{2}_s000"]
-        for (runner, read), enc in itertools.product(runners.items(), (out, salted)):
+        by_source = str(tmp_path / f"{encoder}-pct_salted")
+        encode_dataset_by_source(spark, pct, by_source)
+        assert list(read_manifest(by_source)) == ["a%41[1]{2}_s000"]
+        for (runner, read), enc in itertools.product(runners.items(), (out, by_source)):
             for kw in ({}, {"sources": ["a%41[1]{2}"]}, {"sources": ["a%41[1]{2}", "A"]}):
                 assert _rows(read(spark, enc, **kw).toArrow()) == _rows(sub), (encoder, runner, enc, kw)
             assert read(spark, enc, sources=["aA[1]{2}"]).count() == 0, (encoder, runner)
@@ -287,7 +291,7 @@ def test_empty_list_arguments_raise(spark, enc_dir, arg):
         read_decoded(spark, enc_dir, **{arg: []})
 
 
-def test_by_source_prefix_matches_whole_source(runners, spark, tmp_path):
+def test_by_source_prefix_matches_whole_source(runners, spark, tmp_path, monkeypatch):
     """Source ``a`` must not keep the buckets of source ``ab``."""
     base = generate_token_table(1200, seed=13)
     source = np.where(np.arange(base.num_rows) % 3 == 0, "a", "ab")
@@ -299,11 +303,16 @@ def test_by_source_prefix_matches_whole_source(runners, spark, tmp_path):
     pq.write_table(tbl.slice(0, 600), str(src / "tokens-000000000000.parquet"))
     pq.write_table(tbl.slice(600), str(src / "tokens-000000000600.parquet"))
     out = str(tmp_path / "enc")
-    encode_dataset_by_source(spark, str(src), out, n_salts=2)
+    # buckets of half of a's tokens: a is cut into two salts, ab into more
+    tokens_a = pc.sum(tbl.filter(pa.array(source == "a")).column("n_tok")).as_py()
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", -(-tokens_a // 2))
+    encode_dataset_by_source(spark, str(src), out)
     plan = plan_read(out, sources=["a"])
     assert sorted(plan.stems) == ["a_s000", "a_s001"]
     records = read_manifest(out)
-    assert plan.funnel == {"files_total": 4, "files_zone_pruned": 0, "files_source_pruned": 2,
+    assert len(records) > 4
+    assert plan.funnel == {"files_total": len(records), "files_zone_pruned": 0,
+                           "files_source_pruned": len(records) - 2,
                            "files_filter_pruned": 0, "files_kept": 2,
                            "bytes_kept": sum(records[s]["bytes_out"] for s in plan.stems)}
     want = [(d, "a") for d, s in zip(tbl.column("doc_id").to_pylist(), source) if s == "a"]

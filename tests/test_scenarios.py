@@ -21,6 +21,7 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset,
     encode_dataset_by_source,
     read_manifest,
+    salted,
 )
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import token_table_schema
@@ -164,7 +165,7 @@ def test_scenario_golden(spark, tmp_path, name):
     assert content(read_manifest(out)["tokens-000000000000"]) == first
 
 
-def test_scenario_one_source_skew(spark, tmp_path):
+def test_scenario_one_source_skew(spark, tmp_path, monkeypatch):
     """Everything in ONE source: the salted by-source mode must still split
     it into balanced buckets (the whole point of the salt)."""
     rng = np.random.default_rng(7)
@@ -178,7 +179,9 @@ def test_scenario_one_source_skew(spark, tmp_path):
         compression="zstd",
     )
     out = str(tmp_path / "enc")
-    m = encode_dataset_by_source(spark, src, out, n_salts=4)
+    # buckets of a quarter of the source's 512,000 tokens: 4 salts
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 8000 * 64 // 4)
+    m = encode_dataset_by_source(spark, src, out)
     assert m["buckets_total"] == 4
     assert m["max_bucket_token_share"] < 0.40  # 4 salts → ~0.25 + slack
     assert decode_verify(spark, src, out)["bit_identical"]

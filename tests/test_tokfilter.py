@@ -25,6 +25,7 @@ from poc_parquet_aggregator_spark.encode import (
     encode_dataset_by_source,
     plan_read,
     read_manifest,
+    salted,
     token_read_stats,
 )
 from poc_parquet_aggregator_spark.encode.tokfilter import (
@@ -334,13 +335,14 @@ def test_contains_token_composes_with_other_prunes(runners, spark, token_dir, en
         assert [tuple(r) for r in got] == [tuple(r) for r in exp], runner
 
 
-def test_contains_token_on_salted_layout(runners, spark, tmp_path):
+def test_contains_token_on_salted_layout(runners, spark, tmp_path, monkeypatch):
     # bigger corpus so the salted buckets clear the filter SIZE GUARD
     # (tiny chunks drop their bitmap by design; ~300 docs/bucket keeps it)
     src = str(tmp_path / "tokens_big")
     write_token_table(src, 12_000, seed=23, docs_per_file=3000)
     out = str(tmp_path / "enc_salted")
-    encode_dataset_by_source(spark, src, out, n_salts=2)
+    monkeypatch.setattr(salted, "_BUCKET_TOKENS", 1 << 16)  # 1-2 salts per small source
+    encode_dataset_by_source(spark, src, out)
     rare, _ = _rare_and_absent(src)
     want = _expected_ids(spark, src, rare)
     for runner, read in runners.items():
