@@ -74,6 +74,10 @@ def _bit_width(max_delta: int) -> int:
 # packbits takes 0.013 ms at n = 64 against 0.52 ms, 0.35 against 0.50 ms
 # at n = 10k, but 3.5 ms at n = 100k against 1.0 ms (ARCHITECTURE §2)
 _PACKBITS_MAX_BITS = 1 << 17
+# unpack_bits' own cut for its bit-matrix path: it takes 0.42-0.48× the
+# word loop's time at 2^17 bits and 0.61-0.72× at 2^18 at widths 3-27,
+# but loses at 2^19 from width 5 up (ARCHITECTURE §2)
+_UNPACKBITS_MAX_BITS = 1 << 18
 
 
 def pack_bits(values: np.ndarray, width: int) -> bytes:
@@ -121,7 +125,10 @@ def pack_bits(values: np.ndarray, width: int) -> bytes:
 
 
 def unpack_bits(buf: bytes, n: int, width: int) -> np.ndarray:
-    """Inverse of pack_bits → uint32 array of length n."""
+    """Inverse of pack_bits → uint32 array of length n. Like pack_bits,
+    an input of at most ``_UNPACKBITS_MAX_BITS`` bits goes through the
+    n×width bit matrix (one ``np.unpackbits``, then one product with the
+    bit weights) instead of the 64-step word loop."""
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint32)
     if width == 8:
@@ -130,6 +137,11 @@ def unpack_bits(buf: bytes, n: int, width: int) -> np.ndarray:
         return np.frombuffer(buf, dtype=np.uint16, count=n).astype(np.uint32)
     if width == 32:
         return np.frombuffer(buf, dtype=np.uint32, count=n).copy()
+    if n * width <= _UNPACKBITS_MAX_BITS:
+        bits = np.unpackbits(
+            np.frombuffer(buf, dtype=np.uint8), count=n * width, bitorder="little"
+        ).reshape(n, width)
+        return bits.astype(np.uint32) @ (np.uint32(1) << np.arange(width, dtype=np.uint32))
     n_blocks = (n + 63) // 64
     raw = np.zeros(n_blocks * width * 8, dtype=np.uint8)
     raw[: len(buf)] = np.frombuffer(buf, dtype=np.uint8)
@@ -328,6 +340,41 @@ def decode_ints(blob: bytes) -> np.ndarray:
 _FOR_HDR = struct.Struct("<IqB")  # n | ref | width byte (layout flags on top)
 
 
+def _for_parts(body) -> tuple[int, int, int, int, bytes]:
+    """(n, ref, width byte, bit width, packed bytes) of a FOR/BITPACK
+    body; a packed payload of the wrong size raises ValueError."""
+    n, ref, width = _FOR_HDR.unpack_from(body, 0)
+    raw = bytes(body[_FOR_HDR.size :])
+    bits = width & ~(_GROUP_FLAG | _PLANE_FLAG)
+    if bits > 32 or len(raw) != (n * bits + 7) // 8:
+        raise ValueError(
+            f"truncated or malformed FOR blob: {len(raw)} packed bytes for "
+            f"{n} values of width {bits}"
+        )
+    return n, ref, width, bits, raw
+
+
+def _rle_parts(body) -> tuple[int, np.ndarray, np.ndarray]:
+    """(n, run values, run lengths as int64) of an RLE body; runs that
+    do not add up to n values raise ValueError."""
+    (n,) = _U32.unpack_from(body, 0)
+    val_blob, len_blob = read_children(body, 4, 2)
+    vals, lens = _decode_ints(val_blob), _decode_ints(len_blob).astype(np.int64)
+    if len(vals) != len(lens) or (lens < 0).any():
+        raise ValueError("malformed RLE blob: run values and lengths differ")
+    _expect_len(int(lens.sum()), n)
+    return n, vals, lens
+
+
+def _dict_parts(body) -> tuple[int, np.ndarray, bytes]:
+    """(n, dictionary values, codes blob) of a DICT body; a codes blob
+    that does not declare n values raises ValueError."""
+    (n,) = _U32.unpack_from(body, 0)
+    dict_blob, code_blob = read_children(body, 4, 2)
+    _expect_len(count_ints(code_blob), n)
+    return n, _decode_ints(dict_blob), code_blob
+
+
 def _decode_ints(blob: bytes) -> np.ndarray:
     if not blob:
         raise ValueError("empty int blob")
@@ -341,14 +388,7 @@ def _decode_ints(blob: bytes) -> np.ndarray:
             raise ValueError(f"truncated PLAIN blob: {len(body) - 4} bytes for {n} values")
         return np.frombuffer(body, dtype="<i4", count=n, offset=4).astype(np.int32)
     if codec_id in (FOR, BITPACK):
-        n, ref, width = _FOR_HDR.unpack_from(body, 0)
-        raw = bytes(body[_FOR_HDR.size :])
-        bits = width & ~(_GROUP_FLAG | _PLANE_FLAG)
-        if bits > 32 or len(raw) != (n * bits + 7) // 8:
-            raise ValueError(
-                f"truncated or malformed FOR blob: {len(raw)} packed bytes for "
-                f"{n} values of width {bits}"
-            )
+        n, ref, width, bits, raw = _for_parts(body)
         if width & _GROUP_FLAG:
             lo_grouped = np.frombuffer(raw, dtype=np.uint8, count=n)
             hi = np.frombuffer(raw, dtype=np.uint8, count=n, offset=n)
@@ -362,20 +402,11 @@ def _decode_ints(blob: bytes) -> np.ndarray:
         # uint32 wraparound add — exact inverse of the encode-side subtract
         return (deltas + np.uint32(ref & 0xFFFFFFFF)).view(np.int32)
     if codec_id == RLE:
-        (n,) = _U32.unpack_from(body, 0)
-        val_blob, len_blob = read_children(body, 4, 2)
-        vals, lens = _decode_ints(val_blob), _decode_ints(len_blob)
-        if len(vals) != len(lens):
-            raise ValueError("malformed RLE blob: run values and lengths differ")
-        out = np.repeat(vals, lens.astype(np.int64))
-        _expect_len(len(out), n)
-        return out
+        _, vals, lens = _rle_parts(body)
+        return np.repeat(vals, lens)
     if codec_id == DICT:
-        (n,) = _U32.unpack_from(body, 0)
-        dict_blob, code_blob = read_children(body, 4, 2)
-        uniq, codes = _decode_ints(dict_blob), _decode_ints(code_blob)
-        _expect_len(len(codes), n)
-        return uniq[codes]
+        _, uniq, code_blob = _dict_parts(body)
+        return uniq[_decode_ints(code_blob)]
     if codec_id == DELTA:
         (n,) = _U32.unpack_from(body, 0)
         d = _decode_ints(bytes(body[4:]))
@@ -386,6 +417,209 @@ def _decode_ints(blob: bytes) -> np.ndarray:
             np.uint32
         ).view(np.int32)
     raise ValueError(f"unknown codec id {codec_id}")
+
+
+# -------------------------------------------------------------- random access
+#
+# take_ints and find_ints answer ``decode_ints(blob)[positions]`` and
+# ``flatnonzero(isin(decode_ints(blob), values))`` while decoding only
+# what the answer needs: FOR/BITPACK read just the asked cells in every
+# layout, and drop target values outside their frame before touching the
+# payload; RLE searches its run ends; DICT goes through its codes. DELTA
+# has no random access (a value is the sum of all before it), so it, like
+# any codec without a path here, decodes in full. The checks are the ones
+# decode_ints makes: a truncated or malformed blob raises ValueError.
+
+
+def count_ints(blob: bytes) -> int:
+    """The number of values an int blob declares in its header."""
+    if not blob:
+        raise ValueError("empty int blob")
+    if blob[0] == ZSTD:
+        blob = unwrap_zstd(blob)
+    if blob[0] not in CODEC_NAMES or len(blob) < 5:
+        raise ValueError(f"truncated or unknown int blob (id {blob[0]})")
+    return _U32.unpack_from(blob, 1)[0]
+
+
+def concat_ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """``concatenate([arange(s, s + l) for s, l in zip(starts, lens)])``
+    as int64, in one repeat."""
+    lens = np.asarray(lens, dtype=np.int64)
+    firsts = np.cumsum(lens) - lens
+    return np.repeat(np.asarray(starts, dtype=np.int64) - firsts, lens) + np.arange(
+        int(lens.sum()), dtype=np.int64
+    )
+
+
+def _check_positions(p: np.ndarray, n: int) -> None:
+    if len(p) and (int(p.min()) < 0 or int(p.max()) >= n):
+        raise IndexError(f"positions outside the blob's {n} values")
+
+
+def _grouped_places(hi: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """Where positions ``p`` sit in a hi-grouped lo plane: the start of
+    their hi byte's group plus their rank among the earlier positions of
+    that hi byte. Both come from per-hi-byte prefix counts — one
+    ``np.bincount`` over the plane, labelled by the runs of consecutive
+    asked positions — plus ranks among the asked positions themselves.
+    An ask of more than 1/8 of the plane, or with more runs than the
+    plane has values per hi byte, inverts the whole grouping instead, as
+    the full decode does: on a 140k-value plane the counts take 0.7 ms
+    for a few runs and 1.2 ms at 1/9 of it, the inversion 1.4 ms."""
+    if not len(p):
+        return p
+    u, inv = (p, None) if (np.diff(p) > 0).all() else np.unique(p, return_inverse=True)
+    brk = np.flatnonzero(np.diff(u) != 1) + 1
+    first = u[np.concatenate(([0], brk))]  # the first position of each run
+    n_runs = len(first)
+    if max(len(u) * 8, n_runs * 256) > len(hi):
+        place = np.empty(len(hi), dtype=np.int64)
+        place[np.argsort(hi, kind="stable")] = np.arange(len(hi))
+        return place[p]
+    # label r counts [first[r-1], first[r]); the last label the tail
+    label = np.repeat(np.arange(n_runs + 1, dtype=np.int64) * 256,
+                      np.diff(first, prepend=0, append=len(hi)))
+    label += hi
+    before = np.cumsum(np.bincount(label, minlength=(n_runs + 1) * 256).reshape(-1, 256), axis=0)
+    start = np.cumsum(before[-1]) - before[-1]  # before[r]: counts in hi[:first[r]]
+    run = np.repeat(np.arange(n_runs), np.diff(brk, prepend=0, append=len(u)))
+    h = hi[u].astype(np.int64)
+    key = run * 256 + h
+    order = np.argsort(key, kind="stable")
+    new = np.flatnonzero(np.diff(key[order], prepend=-1))
+    rank = np.empty(len(u), dtype=np.int64)
+    rank[order] = np.arange(len(u)) - np.repeat(new, np.diff(new, append=len(u)))
+    place = start[h] + before[run, h] + rank
+    return place if inv is None else place[inv]
+
+
+def _take_cells(raw: bytes, n: int, width: int, bits: int, p: np.ndarray) -> np.ndarray:
+    """The uint32 cells at positions ``p`` of a FOR payload of ``n``
+    ``bits``-wide cells stored in layout ``width`` (the width byte)."""
+    if bits == 0:
+        return np.zeros(len(p), dtype=np.uint32)
+    u8 = np.frombuffer(raw, dtype=np.uint8)
+    if width & _GROUP_FLAG:
+        hi = u8[n : 2 * n]
+        return u8[_grouped_places(hi, p)].astype(np.uint32) | (hi[p].astype(np.uint32) << 8)
+    if width & _PLANE_FLAG:
+        out = np.zeros(len(p), dtype=np.uint32)
+        for j in range(bits // 8):
+            out |= u8[j * n + p].astype(np.uint32) << np.uint32(8 * j)
+        return out
+    if bits in (8, 16, 32):
+        return np.frombuffer(raw, dtype=f"<u{bits // 8}", count=n)[p].astype(np.uint32)
+    # any other width: the 8 bytes from a cell's first byte hold all of it
+    # (bits ≤ 32 plus a shift ≤ 7); reads past the end repeat the last
+    # byte, which lands above the cell and is masked off
+    bitpos = p * bits
+    idx = np.minimum((bitpos >> 3)[:, None] + np.arange(8), len(u8) - 1)
+    words = u8[idx].view("<u8")[:, 0]
+    mask = np.uint64((1 << bits) - 1)
+    return ((words >> (bitpos & 7).astype(np.uint64)) & mask).astype(np.uint32)
+
+
+def take_ints(blob: bytes, positions) -> np.ndarray:
+    """``decode_ints(blob)[positions]`` (int32), decoding only the asked
+    values where the codec allows random access. A position outside the
+    blob's values raises IndexError; a truncated or malformed blob raises
+    ValueError."""
+    try:
+        return _take_ints(blob, np.asarray(positions, dtype=np.int64))
+    except struct.error as e:
+        raise ValueError(f"truncated int blob: {e}") from None
+
+
+def _take_ints(blob: bytes, p: np.ndarray) -> np.ndarray:
+    if not blob:
+        raise ValueError("empty int blob")
+    codec_id = blob[0]
+    if codec_id == ZSTD:
+        return _take_ints(unwrap_zstd(blob), p)
+    body = memoryview(blob)[1:]
+    if codec_id == PLAIN:
+        (n,) = _U32.unpack_from(body, 0)
+        if len(body) != 4 + 4 * n:
+            raise ValueError(f"truncated PLAIN blob: {len(body) - 4} bytes for {n} values")
+        _check_positions(p, n)
+        return np.frombuffer(body, dtype="<i4", count=n, offset=4)[p].astype(np.int32)
+    if codec_id in (FOR, BITPACK):
+        n, ref, width, bits, raw = _for_parts(body)
+        _check_positions(p, n)
+        return (_take_cells(raw, n, width, bits, p) + np.uint32(ref & 0xFFFFFFFF)).view(np.int32)
+    if codec_id == RLE:
+        n, vals, lens = _rle_parts(body)
+        _check_positions(p, n)
+        return vals[np.searchsorted(np.cumsum(lens), p, side="right")]
+    if codec_id == DICT:
+        n, uniq, code_blob = _dict_parts(body)
+        _check_positions(p, n)
+        return uniq[_take_ints(code_blob, p)]
+    out = _decode_ints(blob)
+    _check_positions(p, len(out))
+    return out[p]
+
+
+def find_ints(blob: bytes, values) -> np.ndarray:
+    """``np.flatnonzero(np.isin(decode_ints(blob), values))``: the
+    ascending int64 positions of the blob's values that are in
+    ``values``, decoding only what the codec needs to find them. A
+    truncated or malformed blob raises ValueError."""
+    v = np.unique(np.asarray(values, dtype=np.int64))
+    v = v[(v >= -(1 << 31)) & (v < 1 << 31)].astype(np.int32)  # only int32s occur
+    try:
+        return _find_ints(blob, v)
+    except struct.error as e:
+        raise ValueError(f"truncated int blob: {e}") from None
+
+
+def _grouped_find(u8: np.ndarray, n: int, d: np.ndarray) -> np.ndarray:
+    """Positions of the cells ``d`` (sorted uint32 < 2^16) in a
+    hi-grouped plane of ``n`` cells: per target hi byte, the matches in
+    its group of the lo plane (which starts after every smaller hi byte),
+    mapped back through that hi byte's positions in the hi plane."""
+    lo, hi = u8[:n], u8[n : 2 * n]
+    found = []
+    for h in np.unique(d >> 8):
+        at = np.flatnonzero(hi == h)
+        start = np.count_nonzero(hi < h)
+        group = lo[start : start + len(at)]
+        rank = np.flatnonzero(np.isin(group, (d[(d >> 8) == h] & 0xFF).astype(np.uint8)))
+        if len(rank):
+            found.append(at[rank])
+    return np.sort(np.concatenate(found)) if found else np.zeros(0, dtype=np.int64)
+
+
+def _find_ints(blob: bytes, v: np.ndarray) -> np.ndarray:
+    if not blob:
+        raise ValueError("empty int blob")
+    codec_id = blob[0]
+    if codec_id == ZSTD:
+        return _find_ints(unwrap_zstd(blob), v)
+    body = memoryview(blob)[1:]
+    if codec_id in (FOR, BITPACK):
+        n, ref, width, bits, raw = _for_parts(body)
+        d = v.view(np.uint32) - np.uint32(ref & 0xFFFFFFFF)  # the targets' cells
+        d = np.unique(d[d.astype(np.int64) < (1 << bits)])  # the frame holds no others
+        if not len(d) or not n:
+            return np.zeros(0, dtype=np.int64)
+        if width & _GROUP_FLAG:
+            return _grouped_find(np.frombuffer(raw, dtype=np.uint8), n, d)
+        if width & _PLANE_FLAG:
+            raw = _untranspose_planes(raw, n, bits // 8)
+        return np.flatnonzero(np.isin(unpack_bits(raw, n, bits), d))
+    if codec_id == RLE:
+        _, vals, lens = _rle_parts(body)
+        hit = np.isin(vals, v)
+        return concat_ranges((np.cumsum(lens) - lens)[hit], lens[hit])
+    if codec_id == DICT:
+        _, uniq, code_blob = _dict_parts(body)
+        codes = np.flatnonzero(np.isin(uniq, v))
+        if not len(codes):
+            return np.zeros(0, dtype=np.int64)
+        return _find_ints(code_blob, codes.astype(np.int32))
+    return np.flatnonzero(np.isin(_decode_ints(blob), v))
 
 
 # ----------------------------------------------------------------- statistics

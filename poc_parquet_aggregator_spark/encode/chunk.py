@@ -39,6 +39,7 @@ from ..codecs.ints import (
     decode_ints,
     encode_ints_auto,
     read_children,
+    unwrap_zstd,
     wrap_zstd,
 )
 
@@ -141,53 +142,158 @@ def encode_token_chunk(
     return out, meta
 
 
-def _token_body(blob: bytes) -> memoryview:
-    if len(blob) < 10 or blob[0] != TOK:
-        raise ValueError("not a token chunk, or a truncated one")
-    return memoryview(blob)
+class TokenChunk:
+    """A token chunk's streams, parsed on first use: each child blob is
+    unwrapped from zstd at most once, and the per-doc streams (lengths,
+    groups, frames) are decoded at most once, so the row tests and the
+    output columns of one chunk row share them. Every decode entry point
+    below takes a chunk blob or one of these. A truncated chunk, or
+    streams that disagree with its ``n_docs``, raise ValueError."""
+
+    def __init__(self, blob: bytes):
+        if len(blob) < 10 or blob[0] != TOK:
+            raise ValueError("not a token chunk, or a truncated one")
+        mv = memoryview(blob)
+        (self.n_docs,) = _U32.unpack_from(mv, 1)
+        self.n_groups = mv[5]
+        self._blobs = read_children(mv, 6, 3 + self.n_groups)
+        self._unwrapped: set[int] = set()
+        self._lengths = self._layout = None
+
+    def blob(self, i: int) -> bytes:
+        """Child stream ``i`` (lengths, groups, refs, then the value
+        streams), unwrapped from zstd."""
+        if i not in self._unwrapped:
+            self._blobs[i] = unwrap_zstd(self._blobs[i])
+            self._unwrapped.add(i)
+        return self._blobs[i]
+
+    @property
+    def lengths(self) -> np.ndarray:
+        """Per-doc token counts (int32), from the lengths stream alone."""
+        if self._lengths is None:
+            self._lengths = decode_ints(self.blob(0))
+            if len(self._lengths) != self.n_docs:
+                raise ValueError(f"malformed token chunk: streams disagree with {self.n_docs} docs")
+        return self._lengths
+
+    def layout(self) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray | None]:
+        """(lengths, groups, each doc's first position in its group's
+        value stream, each group's token count, per-doc frames or None
+        when every frame is 0), decoded once."""
+        if self._layout is None:
+            lengths, groups = self.lengths, decode_ints(self.blob(1))
+            if len(groups) != self.n_docs:
+                raise ValueError(f"malformed token chunk: streams disagree with {self.n_docs} docs")
+            if len(groups) and (groups.min() < 0 or groups.max() >= self.n_groups):
+                raise ValueError("malformed token chunk: group id out of range")
+            L = lengths.astype(np.int64)
+            starts = np.zeros(self.n_docs, dtype=np.int64)
+            totals = np.zeros(self.n_groups, dtype=np.int64)
+            for g in range(self.n_groups):
+                m = groups == g
+                ends = np.cumsum(L[m])
+                starts[m] = ends - L[m]
+                totals[g] = ends[-1] if len(ends) else 0
+            refs = decode_ints(self.blob(2))
+            small = groups == GROUP_SMALL
+            if len(refs) != np.count_nonzero(small):
+                raise ValueError("malformed token chunk: refs disagree with its SMALL docs")
+            frames = None
+            if refs.any():
+                frames = np.zeros(self.n_docs, dtype=np.int32)
+                frames[small] = refs
+            self._layout = (lengths, groups, starts, totals, frames)
+        return self._layout
+
+    def values(self, g: int) -> bytes:
+        """Value stream ``g``, unwrapped; one that does not hold its
+        group's tokens raises ValueError."""
+        blob = self.blob(3 + g)
+        if CI.count_ints(blob) != self.layout()[3][g]:
+            raise ValueError(
+                f"malformed token chunk: value stream {g} does not hold its docs' tokens"
+            )
+        return blob
 
 
-def decode_chunk_lengths(blob: bytes) -> np.ndarray:
+def _parsed(chunk) -> TokenChunk:
+    return chunk if isinstance(chunk, TokenChunk) else TokenChunk(chunk)
+
+
+def decode_chunk_lengths(chunk) -> np.ndarray:
     """Parse ONLY the per-doc lengths stream of a token chunk — n_tok
-    without touching the (much larger) value streams. This is what makes
-    a lengths-only projection (read_decoded(columns=[... 'n_tok'])) skip
-    ~95% of the decode work."""
-    mv = _token_body(blob)
-    (ln,) = _U32.unpack_from(mv, 6)
-    return decode_ints(bytes(mv[10 : 10 + ln])).astype(np.int32)
+    without touching the (much larger) value streams."""
+    return _parsed(chunk).lengths
 
 
-def decode_token_chunk(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
+def _tokens(c: TokenChunk, rows: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
+    """(flat tokens, lengths) of docs ``rows`` (None: every doc). Each
+    group's values for those docs are read from its stream — all of it
+    when ``rows`` is None, else just their positions (``take_ints``) —
+    and put in doc order with one gather; SMALL docs get their frame
+    added back."""
+    lengths, groups, starts, _, frames = c.layout()
+    if rows is not None:
+        lengths, groups, starts = lengths[rows], groups[rows], starts[rows]
+        frames = None if frames is None else frames[rows]
+    L = lengths.astype(np.int64)
+    out_start = np.cumsum(L) - L
+    src, pieces, base = out_start.copy(), [], 0
+    for g in range(c.n_groups):
+        docs = np.flatnonzero((groups == g) & (L > 0))
+        if not len(docs):
+            continue
+        blob = c.values(g)
+        if rows is None:
+            vals = decode_ints(blob)
+        else:
+            vals = CI.take_ints(blob, CI.concat_ranges(starts[docs], L[docs]))
+        # where each doc's values start among the values read so far
+        src[docs] = base + np.cumsum(L[docs]) - L[docs]
+        pieces.append(vals)
+        base += len(vals)
+    flat = np.concatenate(pieces) if pieces else np.zeros(0, np.int32)
+    if not np.array_equal(src, out_start):
+        flat = flat[np.repeat(src - out_start, L) + np.arange(len(flat), dtype=np.int64)]
+    if frames is not None and frames.any():
+        flat = (flat.view(np.uint32) + np.repeat(frames.view(np.uint32), L)).view(np.int32)
+    return flat, lengths.astype(np.int32)
+
+
+def decode_token_chunk(chunk) -> tuple[np.ndarray, np.ndarray]:
     """Inverse of encode_token_chunk → (flat int32 values, int32 lengths).
     A truncated chunk raises ValueError."""
-    mv = _token_body(blob)
-    (n_docs,) = _U32.unpack_from(mv, 1)
-    n_groups = mv[5]
-    streams = [decode_ints(b) for b in read_children(mv, 6, 3 + n_groups)]
-    lengths, groups, refs_small, value_streams = streams[0], streams[1], streams[2], streams[3:]
-    if len(lengths) != n_docs or len(groups) != n_docs:
-        raise ValueError(f"malformed token chunk: streams disagree with {n_docs} docs")
+    return _tokens(_parsed(chunk), None)
 
-    total = int(lengths.astype(np.int64).sum())
-    if sum(len(v) for v in value_streams) != total:
-        raise ValueError(f"malformed token chunk: value streams do not hold {total} tokens")
-    nonempty = [g for g in range(n_groups) if len(value_streams[g])]
-    has_refs = len(refs_small) and np.any(refs_small)
-    doc_of_value = None
-    if len(nonempty) > 1 or has_refs:
-        doc_of_value = np.repeat(np.arange(n_docs, dtype=np.int32), lengths.astype(np.int64))
 
-    if len(nonempty) <= 1:
-        flat = value_streams[nonempty[0]].copy() if nonempty else np.zeros(0, np.int32)
-    else:
-        value_group = groups[doc_of_value]
-        flat = np.zeros(total, dtype=np.int32)
-        for g in nonempty:
-            flat[value_group == g] = value_streams[g]
+def decode_token_rows(chunk, rows) -> tuple[np.ndarray, np.ndarray]:
+    """``decode_token_chunk`` restricted to the docs ``rows`` (indices
+    into the chunk, in the order they are wanted): (their flat int32
+    tokens, their int32 lengths), reading only their positions of each
+    value stream."""
+    return _tokens(_parsed(chunk), np.asarray(rows, dtype=np.int64))
 
-    if has_refs:
-        refs = np.zeros(n_docs, dtype=np.int32)
-        refs[groups == GROUP_SMALL] = refs_small
-        frame = refs[doc_of_value]
-        flat = (flat.view(np.uint32) + frame.view(np.uint32)).view(np.int32)
-    return flat, lengths.astype(np.int32)
+
+def token_docs_with_any(chunk, ids) -> np.ndarray:
+    """Per-doc bool mask: does the doc hold ANY of ``ids``? Tested on
+    the encoded value streams: ``find_ints`` per stream (a FOR stream
+    whose frame holds none of the ids is not unpacked), its positions
+    mapped to docs through the lengths. The SMALL stream stores each
+    doc's tokens minus its frame, so it is decoded and its frames added
+    back first."""
+    c = _parsed(chunk)
+    lengths, groups, _, totals, frames = c.layout()
+    ids = np.unique(np.asarray(ids, dtype=np.int64))
+    hit = np.zeros(c.n_docs, dtype=bool)
+    for g in np.flatnonzero(totals):
+        docs = np.flatnonzero(groups == g)
+        L = lengths[docs].astype(np.int64)
+        blob = c.values(g)
+        if frames is not None and g == GROUP_SMALL:
+            tokens = decode_ints(blob).view(np.uint32) + np.repeat(frames[docs].view(np.uint32), L)
+            pos = np.flatnonzero(np.isin(tokens.view(np.int32), ids))
+        else:
+            pos = CI.find_ints(blob, ids)
+        hit[docs[np.searchsorted(np.cumsum(L), pos, side="right")]] = True
+    return hit

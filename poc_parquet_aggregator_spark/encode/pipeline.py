@@ -87,7 +87,14 @@ from ..codecs.strings import (
     utf8_buffers,
 )
 from ..plans.session import host_cores
-from .chunk import decode_chunk_lengths, decode_token_chunk, encode_token_chunk
+from .chunk import (
+    TokenChunk,
+    decode_chunk_lengths,
+    decode_token_chunk,
+    decode_token_rows,
+    encode_token_chunk,
+    token_docs_with_any,
+)
 from .tokfilter import (
     build_token_filter,
     merge_token_filters,
@@ -566,35 +573,41 @@ def _token_id_list(contains_token) -> list[int]:
     return ids
 
 
-def _decode_column(
-    row: dict, name: str, got: dict, via_tokens: bool, extras: tuple
-) -> "pa.Array":
-    """Column ``name`` of one chunk row, parsed from its blob at most once
-    (``got`` caches per row). ``n_tok`` comes from the full token decode
-    when ``via_tokens``, else from the lengths stream alone
-    (decode_chunk_lengths); an extra column from its child of the
+def _token_chunk(row: dict, got: dict) -> TokenChunk:
+    """The chunk row's token chunk, parsed once per row (``got`` caches
+    per row): the row tests and the output columns share its streams."""
+    if "tokens_blob" not in got:
+        got["tokens_blob"] = TokenChunk(bytes(row["tokens_blob"]))
+    return got["tokens_blob"]
+
+
+def _decode_column(row: dict, name: str, got: dict, extras: tuple) -> "pa.Array":
+    """Every value of column ``name`` (not ``tokens``) in one chunk row,
+    parsed from its blob at most once (``got`` caches per row): ``n_tok``
+    from the lengths stream alone, an extra column from its child of the
     container, one child per declared ``extras`` (name, spark type)."""
     if name in got:
         return got[name]
-    blob = bytes(row[_BLOB_OF.get(name, "extras_blob")])
-    if name == "tokens" or (name == "n_tok" and via_tokens):
-        flat, lengths = decode_token_chunk(blob)
-        offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offsets[1:])
-        got["tokens"] = pa.ListArray.from_arrays(  # zero-copy
-            pa.array(offsets, type=pa.int32()), pa.array(flat, type=pa.int32())
-        )
-        got["n_tok"] = pa.array(lengths, type=pa.int32())
-    elif name == "n_tok":
-        got["n_tok"] = pa.array(decode_chunk_lengths(blob), type=pa.int32())
+    if name == "n_tok":
+        got[name] = pa.array(decode_chunk_lengths(_token_chunk(row, got)), type=pa.int32())
     elif name in _BLOB_OF:
-        got[name] = decode_strings_arrow(blob)
+        got[name] = decode_strings_arrow(bytes(row[_BLOB_OF[name]]))
     else:  # an extra: split the shared container once per row
         if "extras_blob" not in got:
-            payloads = read_children(memoryview(blob), 0, len(extras))
+            payloads = read_children(memoryview(bytes(row["extras_blob"])), 0, len(extras))
             got["extras_blob"] = {n: (t, p) for (n, t), p in zip(extras, payloads)}
         got[name] = _decode_extra(*got["extras_blob"][name])
     return got[name]
+
+
+def _decode_tokens(chunk: TokenChunk, rows: np.ndarray | None) -> "pa.ListArray":
+    """The ``tokens`` of docs ``rows`` of a chunk (None: all of them)."""
+    flat, lengths = decode_token_chunk(chunk) if rows is None else decode_token_rows(chunk, rows)
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    return pa.ListArray.from_arrays(  # zero-copy
+        pa.array(offsets, type=pa.int32()), pa.array(flat, type=pa.int32())
+    )
 
 
 def _make_decode_fn(plan: ReadPlan, columns: list[str]):
@@ -604,12 +617,15 @@ def _make_decode_fn(plan: ReadPlan, columns: list[str]):
     before any blob is parsed: ``plan.zones`` skip the chunk with the test
     the keep-list applies to records (``_Zone.keeps``), then the
     membership bitmap skips it when it proves every ``plan.tok_ids``
-    absent (tokfilter.py). Then the columns ``plan.rows`` test are decoded
-    and their masks ANDed, and a chunk with no surviving row stops there;
-    then the remaining output columns are decoded and filtered. Blobs no
-    test or output column needs are never parsed."""
+    absent (tokfilter.py). Then ``plan.rows`` test the chunk's rows and
+    their masks are ANDed, and a chunk with no surviving row stops there.
+    A test reads only what it tests: ``n_tok`` the lengths stream, a token
+    test the encoded value streams (``token_docs_with_any``). Then the
+    output columns are decoded, ``tokens`` for the kept rows only
+    (``decode_token_rows``) unless every row is kept. Blobs no test or
+    output column needs are never parsed, and the token chunk's streams
+    are unwrapped at most once per row."""
     schema = _decoded_arrow_schema(plan.extras, columns)
-    via_tokens = "tokens" in {*columns, *(c for c, _ in plan.rows)}
 
     def decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -620,19 +636,23 @@ def _make_decode_fn(plan: ReadPlan, columns: list[str]):
                 filt = row.get("tok_filter") if plan.tok_ids is not None else None
                 if filt is not None and not token_filter_contains_any(bytes(filt), plan.tok_ids):
                     continue
-                got: dict[str, pa.Array] = {}
+                got: dict = {}
                 keep = None
                 for name, test in plan.rows:
-                    hit = test(_decode_column(row, name, got, via_tokens, plan.extras))
+                    hit = test(_token_chunk(row, got) if name == "tokens"
+                               else _decode_column(row, name, got, plan.extras))
                     keep = hit if keep is None else keep & hit
                     if not keep.any():
                         break
                 else:  # some row survives every test
-                    out = {c: _decode_column(row, c, got, via_tokens, plan.extras)
-                           for c in schema.names}
-                    if keep is not None and not keep.all():
-                        out = {c: a.filter(pa.array(keep)) for c, a in out.items()}
-                    yield pa.RecordBatch.from_arrays(list(out.values()), schema=schema)
+                    rows = None if keep is None or keep.all() else np.flatnonzero(keep)
+                    out = [_decode_tokens(_token_chunk(row, got), rows) if c == "tokens"
+                           else _decode_column(row, c, got, plan.extras) for c in schema.names]
+                    if rows is not None:
+                        mask = pa.array(keep)
+                        out = [a if c == "tokens" else a.filter(mask)
+                               for c, a in zip(schema.names, out)]
+                    yield pa.RecordBatch.from_arrays(out, schema=schema)
 
     return decode_batches
 
@@ -759,24 +779,14 @@ def _between(lo, hi, arr: "pa.Array") -> np.ndarray:  # closed interval
     return inside.to_numpy(zero_copy_only=False)
 
 
-def _has_any(ids: list[int], tokens: "pa.ListArray") -> np.ndarray:
-    """Per-doc ANY-match of ``ids`` via one cumsum over the token hit mask
-    (empty-doc-safe, unlike reduceat at repeated offsets)."""
-    flat = tokens.values.to_numpy()
-    offsets = tokens.offsets.to_numpy()
-    hit = flat == ids[0] if len(ids) == 1 else np.isin(flat, ids)
-    cs = np.zeros(len(flat) + 1, dtype=np.int64)
-    np.cumsum(hit, out=cs[1:])
-    return cs[offsets[1:]] > cs[offsets[:-1]]
-
-
 @dataclass(frozen=True)
 class ReadPlan:
     """A read's zone predicates (ANDed; they prune records in the
     keep-list and chunk rows in the decode kernel), token ids (sidecar
     probe, chunk bitmap skip) and exact row tests ``rows``: (decoded
-    column, test) pairs, each test mapping that column's Arrow array to a
-    numpy bool mask, which the decode kernel ANDs. ``stems`` maps every kept file's
+    column, test) pairs, each test mapping that column's Arrow array (for
+    ``tokens``, the row's parsed ``TokenChunk``) to a numpy bool mask,
+    which the decode kernel ANDs. ``stems`` maps every kept file's
     stem to the part files its record names (the files the read scans);
     ``funnel`` counts files per pruning stage and the kept bytes
     (``read_decoded`` adds the ``runner`` they chose); ``extras`` are the
@@ -884,7 +894,7 @@ def plan_read(
     tids = None if tok_ids is None else _token_id_list(tok_ids)
     if tids is not None:  # ANY-match: per-id spans OR'd
         zones.append(_Zone("tok", tuple((t, t) for t in tids)))
-        rows.append(("tokens", partial(_has_any, tids)))
+        rows.append(("tokens", partial(token_docs_with_any, ids=tids)))
     stems, funnel, extras = _keep_list(
         out_dir, tuple(zones), tids, None if sources is None else set(sources)
     )
@@ -967,6 +977,14 @@ def _snapshot(path: str) -> dict:
     rewrite to the same byte count still invalidates the commit."""
     st = os.stat(path)
     return {"size": st.st_size, "mtime_ns": st.st_mtime_ns, "path": path}
+
+
+def _files_present(out_dir: str, rec: dict) -> bool:
+    """Does every file a committed record names (its ``parts`` and its
+    ``tok_filter`` sidecar) exist? A resume redoes a record that names
+    a missing file, as if its input had changed; reads still raise."""
+    named = [*rec.get("parts", ()), *([rec["tok_filter"]] if "tok_filter" in rec else [])]
+    return all(os.path.exists(os.path.join(out_dir, p)) for p in named)
 
 
 def _snapshot_matches(rec: dict, path: str) -> bool:
@@ -1178,7 +1196,9 @@ def encode_dataset(
     zstd_level: int = 3,
 ) -> dict:
     """Encode all input parquet files, skipping files already committed with
-    a matching input snapshot. Returns job metrics."""
+    a matching input snapshot whose record's files all exist (a record
+    that names a missing part or sidecar is re-encoded). Returns job
+    metrics."""
     t0 = time.time()
     files = _input_files(input_path)
     # commits are keyed by basename stem: same-named files from different
@@ -1189,7 +1209,9 @@ def encode_dataset(
         raise ValueError(f"duplicate input file stems (commit key collision): {dupes}")
     done = read_manifest(out_dir)
     todo = [
-        f for f in files if _stem(f) not in done or not _snapshot_matches(done[_stem(f)], f)
+        f for f in files
+        if _stem(f) not in done or not _snapshot_matches(done[_stem(f)], f)
+        or not _files_present(out_dir, done[_stem(f)])
     ]
     metrics = {
         "files_total": len(files),
@@ -1270,8 +1292,9 @@ def read_decoded(
         set cost nothing. Prunes by file zones + the token-filter
         sidecars the records name (driver-side), then per chunk by its
         ``tok_min``/``tok_max`` zone and membership bitmap (in the
-        kernel, before the token blob is parsed); the kernel's per-doc
-        hit mask is the exact test. See encode/tokfilter.py.
+        kernel, before the token blob is parsed); the kernel's exact
+        row test runs on the encoded value streams
+        (``token_docs_with_any``). See encode/tokfilter.py.
     Encodes that predate a zone or filter column are conservatively kept
     at every level; the row tests stay exact.
 

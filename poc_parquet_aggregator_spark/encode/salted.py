@@ -53,6 +53,7 @@ from ..codecs.strings import utf8_buffers
 from .pipeline import (
     _commit_parts,
     _encode_parts,
+    _files_present,
     _input_files,
     _job_metrics,
     _split_by_file,
@@ -174,7 +175,9 @@ def encode_dataset_by_source(
     (``_salt_counts``): a resume recomputes it from the same input, and
     a record cut with another count raises. They also carry
     ``n_buckets``: the scan and the count are skipped only when every
-    record's count equals the number of records.
+    record's count equals the number of records. A record that names a
+    missing part or sidecar is not counted as done, so its bucket is
+    redone.
     """
     t0 = time.time()
     files = _input_files(input_path)
@@ -186,6 +189,8 @@ def encode_dataset_by_source(
                 f"bucket {stem!r} was committed from another input snapshot; "
                 "the input changed since — encode into a fresh out_dir"
             )
+    # a bucket whose record names a missing file is redone: the scan runs
+    done = {stem: rec for stem, rec in done.items() if _files_present(out_dir, rec)}
 
     metrics = {"buckets_skipped": len(done)}
 

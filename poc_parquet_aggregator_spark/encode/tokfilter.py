@@ -33,7 +33,7 @@ Filter modes (one byte in the header, per filter, chosen by value span):
     hash of the id, for arbitrary int32 token spaces where an exact
     bitmap would not fit. No false negatives; false positives only cost
     a wasted decode, never a wrong row (the decode kernel's exact per-doc
-    hit mask always runs).
+    row test always runs).
 
 The bitmap after the header is a ``RAW`` blob (codecs/ints.py), zstd-
 wrapped when that is smaller. Filters written before that framing used

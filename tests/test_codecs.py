@@ -212,6 +212,107 @@ def test_truncated_int_blob_raises(codec):
             decode_ints(cut)
 
 
+def _one_more_value(blob: bytes) -> bytes:
+    """The blob with its header declaring one value more than it holds."""
+    (n,) = struct.unpack_from("<I", blob, 1)
+    return blob[:1] + struct.pack("<I", n + 1) + blob[5:]
+
+
+@pytest.mark.parametrize("zstd", [False, True], ids=["bare", "zstd"])
+@pytest.mark.parametrize("codec", ALL_INT_CODECS)
+def test_random_access_on_a_bad_blob_raises(codec, zstd):
+    """``take_ints`` and ``find_ints`` make the checks ``decode_ints``
+    makes, before they answer anything: a cut blob, or one whose header
+    declares more values than it holds, raises ValueError, also for a
+    target outside the stream's frame."""
+    blob = encode_ints(TRUNCATE_INPUT, codec)
+    bad = [_one_more_value(blob)]
+    if zstd:
+        blob = wrap_zstd(blob)
+        bad = [wrap_zstd(b) for b in bad]
+    assert blob[0] == (CI.ZSTD if zstd else codec)
+    asks = (lambda b: CI.take_ints(b, [0, 4999]), lambda b: CI.find_ints(b, [7]),
+            lambda b: CI.find_ints(b, [-5]))
+    for b in (blob[:-1], blob[: len(blob) // 2], *bad):
+        for ask in asks:
+            with pytest.raises(ValueError):
+                ask(b)
+
+
+FOR_LAYOUTS = ["packed16", "planes16", "grouped16", "planes32"]
+
+
+def _for_layout(a: np.ndarray, layout: str) -> tuple[np.ndarray, bytes]:
+    """(values, a FOR blob of them stored in ``layout``, whatever their
+    count). The 16-bit layouts spread ``a`` over [0, 65535], ``planes32``
+    adds the int32 extremes; the blob decodes to the values."""
+    if layout == "planes32":
+        a = np.concatenate(([-(2**31), 2**31 - 1], a)).astype(np.int32)
+    else:
+        a = np.concatenate(([0, 65535], a.astype(np.int64) % 65536)).astype(np.int32)
+    ref = int(a.min())
+    cells = a.view(np.uint32) - np.uint32(ref & 0xFFFFFFFF)
+    lo, hi = (cells & 0xFF).astype(np.uint8), (cells >> 8).astype(np.uint8)
+    bits, flag, payload = {
+        "packed16": lambda: (16, 0, cells.astype("<u2").tobytes()),
+        "planes16": lambda: (16, 0x80, lo.tobytes() + hi.tobytes()),
+        "grouped16": lambda: (16, 0x40, lo[np.argsort(hi, kind="stable")].tobytes() + hi.tobytes()),
+        "planes32": lambda: (32, 0x80, np.ascontiguousarray(
+            cells.astype("<u4").view(np.uint8).reshape(-1, 4).T).tobytes()),
+    }[layout]()
+    blob = bytes([CI.FOR]) + struct.pack("<IqB", len(a), ref, bits | flag) + payload
+    assert np.array_equal(decode_ints(blob), a)
+    return a, blob
+
+
+def _assert_random_access(blob: bytes, positions, targets) -> None:
+    full = decode_ints(blob)
+    p = np.asarray(positions, dtype=np.int64)
+    got = CI.take_ints(blob, p)
+    assert got.dtype == np.int32 and np.array_equal(got, full[p])
+    assert np.array_equal(CI.find_ints(blob, targets), np.flatnonzero(np.isin(full, targets)))
+
+
+_INT32 = st.integers(min_value=-(2**31), max_value=2**31 - 1)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_INT32, max_size=300), st.sampled_from([*ALL_INT_CODECS, *FOR_LAYOUTS]),
+       st.booleans(), st.data())
+def test_random_access_property(xs, codec, zstd, data):
+    """``take_ints(b, p) == decode_ints(b)[p]`` and ``find_ints(b, v) ==
+    flatnonzero(isin(decode_ints(b), v))`` for every int codec and every
+    FOR layout, zstd-wrapped or not, for any positions (repeated,
+    unordered, a run) and any targets (held values, other int32s and
+    values no int32 can be)."""
+    a = np.array(xs, dtype=np.int32)
+    a, blob = _for_layout(a, codec) if codec in FOR_LAYOUTS else (a, encode_ints(a, codec))
+    if zstd:
+        blob = wrap_zstd(blob)
+    n = len(a)
+    picks = data.draw(st.lists(st.integers(0, max(n - 1, 0)), max_size=60)) if n else []
+    start = data.draw(st.integers(0, n)) if n else 0
+    run = list(range(start, min(n, start + data.draw(st.integers(0, 40)))))
+    held = st.sampled_from(a.tolist()) if n else _INT32
+    targets = data.draw(st.lists(st.one_of(held, _INT32, st.integers(-(2**40), 2**40)), max_size=8))
+    for positions in (picks, run, sorted(set(picks))):
+        _assert_random_access(blob, positions, targets)
+
+
+@pytest.mark.parametrize("layout", FOR_LAYOUTS)
+@pytest.mark.parametrize("name", ["zipf", "wide16_uniform", "max_card"])
+def test_random_access_on_large_streams(name, layout):
+    """Large streams, so that a few runs of positions take the
+    hi-grouped layout's prefix counts and a dense ask its full
+    inversion; 70000 and -1 lie outside the 16-bit layouts' frame."""
+    a, blob = _for_layout(ADVERSARIAL[name], layout)
+    rng = np.random.default_rng(3)
+    n = len(a)
+    runs = CI.concat_ranges(np.sort(rng.choice(n - 300, 5, replace=False)), rng.integers(1, 300, 5))
+    for positions in (runs, runs[::-1], rng.integers(0, n, 3 * n // 4), [n - 1, 0, 0], []):
+        _assert_random_access(blob, positions, [*a[rng.integers(0, n, 3)].tolist(), 70000, -1])
+
+
 def test_wrap_zstd_accepts_only_registered_blobs():
     compressible = bytes(range(256)) * 8
     for first in range(256):
@@ -518,7 +619,9 @@ def test_pack_bits_paths_write_the_same_bytes(width, n, seed):
     """``pack_bits`` packs inputs of at most ``_PACKBITS_MAX_BITS`` bits
     through ``np.packbits`` and larger ones word-parallel: forced either
     way, both write the same bytes, on either side of the threshold, and
-    ``unpack_bits`` reads them back."""
+    ``unpack_bits`` reads them back through either of its paths (at most
+    ``_UNPACKBITS_MAX_BITS`` bits through ``np.unpackbits``), forced or
+    not."""
     v = np.random.default_rng(seed).integers(0, 1 << width, n, dtype=np.int64)
     got = {}
     for limit in (-1, 1 << 40):
@@ -528,6 +631,12 @@ def test_pack_bits_paths_write_the_same_bytes(width, n, seed):
         finally:
             CI._PACKBITS_MAX_BITS = saved
     assert got[-1] == got[1 << 40] == CI.pack_bits(v, width)
+    for limit in (-1, 1 << 40):
+        CI._UNPACKBITS_MAX_BITS, saved = limit, CI._UNPACKBITS_MAX_BITS
+        try:
+            assert np.array_equal(CI.unpack_bits(got[-1], n, width), v)
+        finally:
+            CI._UNPACKBITS_MAX_BITS = saved
     assert np.array_equal(CI.unpack_bits(got[-1], n, width), v)
 
 

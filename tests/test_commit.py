@@ -11,9 +11,10 @@ each encode runner. A crash in a by-source resume also reruns to those
 bytes on each runner, and one in
 ``compact_manifest`` never changes the records ``read_manifest`` returns.
 A named file that is gone fails the read instead of dropping its rows,
-and a by-source resume over records cut with another salt count (another
-``_BUCKET_TOKENS``), or over records of another input, raises instead of skipping buckets or serving stale
-ones. The records are the table's only state: a per-file encode over
+and a resume redoes the record that names it, on either layout. A
+by-source resume over records cut with another salt count (another
+``_BUCKET_TOKENS``), or over records of another input, raises instead
+of skipping buckets or serving stale ones. The records are the table's only state: a per-file encode over
 by-source records raises instead of serving each row twice, a record
 that declares no extra columns raises, and ``compact_encoded`` deletes
 the stem dirs no record names."""
@@ -29,6 +30,7 @@ import shutil
 from functools import partial
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -248,6 +250,46 @@ def test_missing_named_part_fails_the_read(runners, spark, tmp_path):
                 read(spark, out, **kw).count()
         # a read whose keep-list prunes the damaged file still answers
         assert read(spark, out, doc_id_range=rng).count() == DOCS_PER_FILE, runner
+
+
+@pytest.mark.parametrize("layout", ["per-file", "by-source"])
+def test_resume_heals_a_record_whose_named_file_is_gone(spark, tmp_path, layout):
+    """One record's part file and another record's token-filter sidecar
+    are deleted: reads raise, and a rerun redoes exactly those two
+    records (per-file: their stems re-encode; by-source: the scan runs
+    and their buckets are redone). Then every source row reads back, a
+    token read answers exactly and ``decode_verify`` is bit-identical."""
+    src = str(tmp_path / "src")
+    paths = [_write(src, 0, seed=6), _write(src, DOCS_PER_FILE, seed=6)]
+    out = str(tmp_path / "enc")
+    encode = encode_dataset if layout == "per-file" else encode_dataset_by_source
+    encode(spark, src, out)
+    records = read_manifest(out)
+    part_stem = sorted(records)[0]
+    filt_stem = min(s for s, r in records.items() if "tok_filter" in r and s != part_stem)
+    os.remove(os.path.join(out, records[part_stem]["parts"][0]))
+    os.remove(os.path.join(out, records[filt_stem]["tok_filter"]))
+    with pytest.raises(Exception, match="part-"):
+        read_decoded(spark, out).count()
+
+    metrics = encode(spark, src, out)
+    redone = {s for s, r in read_manifest(out).items() if r != records[s]}
+    assert redone == {part_stem, filt_stem}, redone
+    if layout == "per-file":
+        assert (metrics["files_encoded"], metrics["files_skipped"]) == (2, 0)
+    else:
+        skipped, total = metrics["buckets_skipped"], metrics["buckets_total"]
+        assert (skipped, total) == (len(records) - 2, len(records))
+    source = pa.concat_tables([pq.read_table(p) for p in paths])
+    got = read_decoded(spark, out).toArrow().select(source.column_names)
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == sorted(
+        tuple(r.values()) for r in source.to_pylist())
+    token = source.column("tokens")[7].as_py()[0]
+    hits = read_decoded(spark, out, contains_token=token, columns=["doc_id"]).toArrow()
+    want = [d for d, t in zip(source["doc_id"].to_pylist(), source["tokens"].to_pylist())
+            if token in t]
+    assert sorted(hits["doc_id"].to_pylist()) == sorted(want)
+    assert decode_verify(spark, src, out)["bit_identical"]
 
 
 def test_by_source_resume_with_other_n_salts_raises(spark, tmp_path, monkeypatch):

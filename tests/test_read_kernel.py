@@ -199,6 +199,51 @@ def test_kernel_alone_returns_exact_rows(spark, table, enc_dir):
     assert states["projection"] == {"all"}, states
 
 
+def test_partly_kept_chunks_decode_only_their_kept_rows(table, enc_dir, monkeypatch):
+    """Point, range, ``n_tok`` and token reads test their rows on the
+    encoded token chunk and decode tokens for the kept rows only: over
+    chunks each read keeps in part, the kernel never calls
+    ``decode_token_chunk`` and still returns the exact rows. A full
+    scan keeps whole chunks and does call it, so the counter sees the
+    kernel's calls."""
+    calls = []
+    real = pipeline.decode_token_chunk
+    monkeypatch.setattr(pipeline, "decode_token_chunk", lambda c: calls.append(c) or real(c))
+    chunks = pa.concat_tables([
+        pq.read_table(os.path.join(enc_dir, p))
+        for rec in read_manifest(enc_dir).values()
+        for p in rec["parts"]
+    ])
+    ids = table.column("doc_id").to_pylist()
+    kinds = _read_kinds(table)
+    for kind, kw in {
+        "points": kinds["points"],
+        "range": {"doc_id_range": (ids[100], ids[300])},
+        "n_tok": kinds["n_tok"],
+        "token": kinds["token"],
+        "token_list": kinds["token_list"],
+    }.items():
+        plan = plan_read(enc_dir, **{"tok_ids" if k == "contains_token" else k: v
+                                     for k, v in kw.items()})
+        want = _truth(table, kw)
+        fn = _make_decode_fn(plan, want.column_names)
+        got, kept = [], set()
+        for i in range(chunks.num_rows):
+            chunk = chunks.slice(i, 1)
+            out = list(fn(iter(chunk.to_batches())))
+            n_out = sum(b.num_rows for b in out)
+            kept.add("none" if n_out == 0 else "all" if n_out == chunk.column("n_docs")[0].as_py()
+                     else "part")
+            got += out
+        assert "part" in kept and "all" not in kept, (kind, kept)
+        assert calls == [], kind
+        schema = _decoded_arrow_schema(plan.extras, want.column_names)
+        assert _rows(pa.Table.from_batches(got, schema)) == _rows(want), kind
+    fn = _make_decode_fn(plan_read(enc_dir), ["doc_id", "tokens"])
+    assert sum(b.num_rows for b in fn(iter(chunks.to_batches()))) == N_DOCS
+    assert len(calls) == chunks.num_rows
+
+
 _GARBAGE = b"\xfe not a blob"
 
 
