@@ -11,9 +11,9 @@ Layout:
     encode/     the Spark encode/decode pipeline (mapInPandas, manifest, resume)
     operators/  relational operator layer (SURVEY.md §2 inventory as DataFrame fns)
     functions/  scalar/label/map helpers (SURVEY.md §2.8)
-    sources/    readers & synthetic-data generators
+    sources/    seeded token-table generator (the encode input)
     plans/      session builder + tuning knobs
-    streaming/  Structured Streaming incremental-encode surface
+    streaming/  incremental encode of new or changed input files
 """
 
 __version__ = "0.1.0"

@@ -10,11 +10,7 @@ from .pipeline import (
     token_read_stats,
 )
 from .salted import encode_dataset_by_source
-from .tokfilter import (
-    build_token_filter,
-    merge_token_filters,
-    token_filter_contains,
-)
+from .tokfilter import build_token_filter, merge_token_filters
 
 __all__ = [
     "encode_token_chunk",
@@ -30,5 +26,4 @@ __all__ = [
     "token_read_stats",
     "build_token_filter",
     "merge_token_filters",
-    "token_filter_contains",
 ]

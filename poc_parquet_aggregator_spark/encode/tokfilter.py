@@ -125,26 +125,12 @@ def token_filter_bounds(blob: bytes) -> tuple[int, int]:
     return lo, hi
 
 
-def token_filter_contains(blob: bytes, token: int) -> bool:
-    """May the filtered value set contain ``token``? Never a false
-    negative; false positives only in HASHED mode."""
-    mode, lo, hi, nbits, payload = _parse(blob)
-    if token < lo or token > hi:
-        return False
-    bits = _bits(payload, nbits)
-    if mode == MODE_EXACT:
-        j = token - lo
-    else:
-        j = int(_hash_slots(np.asarray([token]), nbits)[0])
-    return bool((bits[j >> 3] >> (j & 7)) & 1)
-
-
 def token_filter_contains_any(blob: bytes, tokens) -> bool:
     """ANY-match probe over an id list: may the filtered value set contain
-    any of ``tokens``? One header parse + one zstd decompression for the
-    whole list — the per-id loop through ``token_filter_contains`` paid K
-    decompressions per filter for a K-id banned set (r6 ADVICE). Verdict
-    identical to ``any(token_filter_contains(blob, t) for t in tokens)``."""
+    any of ``tokens``? Never a false negative; false positives only in
+    HASHED mode. One header parse and one zstd decompression for the
+    whole list, so a K-id banned set costs one decompression per filter,
+    not K."""
     mode, lo, hi, nbits, payload = _parse(blob)
     ids = np.asarray([int(t) for t in tokens if lo <= t <= hi], dtype=np.int64)
     if ids.size == 0:

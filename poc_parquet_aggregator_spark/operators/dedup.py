@@ -247,86 +247,6 @@ _N_HASHES = 8
 _BAND_SIZE = 2  # 4 bands of 2 → candidates sharing any band
 
 
-def _minhash_banded(doc_sets: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) LSH band rows from the per-doc shingle sets
-    (the decontamination pass's MinHash bands).
-
-    8 signatures from TWO md5 evaluations per shingle, not eight: md5's
-    32 hex chars split into four independent 8-hex (32-bit) min-hash
-    domains per seed (string min over fixed-width hex = numeric min).
-    Collision odds per 32-bit domain at |set|≈300 are ~1e-5 — no quality
-    impact (and the oracle mirrors the split exactly).
-
-    Round 4: the md5 arrays are projected to their OWN columns first and
-    the eight per-domain mins map over those. Inlining the md5 transform
-    into each of the eight array_min(transform(substring(md5(…)))) columns
-    re-evaluated md5 four times per seed — Catalyst does not CSE across
-    separate higher-order-function lambdas — while a multi-referenced
-    non-cheap projection is kept by CollapseProject (the same lesson as
-    _shingles' words array). Measured 2.4 s → 1.35 s for the signature
-    stage at sf0.1, bit-identical output."""
-    hashed = doc_sets.select(
-        "doc_id",
-        # one-arg lambdas: a two-arg lambda would receive the array INDEX
-        # as the second argument (pyspark transform arity dispatch)
-        F.transform("sh_set", lambda x: F.md5(F.concat(F.lit("0|"), x))).alias("h0"),
-        F.transform("sh_set", lambda x: F.md5(F.concat(F.lit("1|"), x))).alias("h1"),
-    )
-
-    def _minhash_col(i: int):
-        src, pos = ("h0" if i < 4 else "h1"), (i % 4) * 8 + 1
-        return F.array_min(
-            F.transform(src, lambda h: F.substring(h, pos, 8))
-        ).alias(f"s{i}")
-
-    sigs = hashed.select("doc_id", *[_minhash_col(i) for i in range(_N_HASHES)])
-    # one band row per (doc, band) via a single explode — a union of N
-    # projections would rescan/reaggregate the signature pipeline N times
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    *[F.col(f"s{b * _BAND_SIZE + j}") for j in range(_BAND_SIZE)],
-                ).alias("band_key"),
-            )
-            for b in range(_N_HASHES // _BAND_SIZE)
-        ]
-    )
-    return sigs.select("doc_id", F.explode(band_structs).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
-
-
-def doc_shingle_sets(sh: DataFrame) -> DataFrame:
-    """(doc_id, sh_set, n_sh) per-doc capped shingle sets — ONE doc_id
-    shuffle over the (already df-capped) exploded shingle frame.  The
-    shared set-frame contract of every MinHash consumer: the self-join
-    family below and the bipartite decontamination screen
-    (operators/decontam.py) build from this same helper, so the cap
-    semantics live in exactly one place."""
-    return (
-        sh.groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh_set"))
-        .withColumn("n_sh", F.size("sh_set"))
-    )
-
-
-def drop_overcap_buckets(banded: DataFrame) -> DataFrame:
-    """Band rows minus degenerate buckets (> _MAX_BUCKET members on this
-    frame): a bucket-size aggregation + semi-style join back.  Bounds any
-    bucket join over the result — self-join pairs to cap², a cross-frame
-    join to cap·|other side's bucket| (decontam caps both sides)."""
-    ok = (
-        banded.groupBy("band", "band_key")
-        .agg(F.count("*").alias("n_bucket"))
-        .filter(F.col("n_bucket") <= _MAX_BUCKET)
-        .select("band", "band_key")
-    )
-    return banded.join(ok, ["band", "band_key"])
-
-
 def _minhash_sigs(sh: DataFrame) -> DataFrame:
     """(doc_id, s0..s7, n_sh) — the 8 min-hash signatures, built to be
     PERSISTED so they are evaluated exactly once (round 7): the r7 profile
@@ -738,9 +658,8 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     identical-signature cliques; Hamming 1-3 rows pair clique
     REPRESENTATIVES only. Intra-clique member pairs and cross-clique
     member pairs are implicit — a consumer needing the full quadratic
-    enumeration must expand through the star edges (see
-    ``expand_simhash_pairs``; the collapsed form is the point — a 7,357-doc
-    clique is 7,356 rows here vs 27M expanded)."""
+    enumeration must expand through the star edges (the collapsed form is
+    the point — a 7,357-doc clique is 7,356 rows here vs 27M expanded)."""
     reps, exact_edges = _simhash_reps(_simhash_tagged(spark, sf))
     capped, final_sized, final_keys = _simhash_blocked(reps)
     l_final = final_sized.filter(F.col("n_sub") <= _MAX_BUCKET).drop("n_sub")
@@ -769,58 +688,6 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
     )
     return exact_edges.unionByName(rep_pairs)
-
-
-def expand_simhash_pairs(pairs: DataFrame) -> DataFrame:
-    """Expand q_dedup_simhash's collapsed output into the complete
-    Hamming ≤ 3 pair enumeration (the r5 ADVICE contract helper).
-
-    Input rows: Hamming-0 star edges (clique rep → member) plus Hamming
-    1-3 pairs between clique representatives. Output: every (doc_a,
-    doc_b, hamming) with doc_a < doc_b — intra-clique pairs at Hamming 0
-    and all cross-clique member pairs at their reps' Hamming (exact:
-    members share their rep's signature bit-for-bit, so the rep-level
-    distance IS the member-level distance).
-
-    WARNING — this reintroduces the Θ(k²) the collapse exists to avoid
-    (one 7,357-doc clique expands to 27M rows). It is a derived VIEW for
-    consumers that genuinely need full enumeration, not part of the gate
-    query; at 100 TB, expand only after filtering to the cliques of
-    interest."""
-    star = pairs.filter(F.col("hamming") == 0)
-    rep_pairs = pairs.filter(F.col("hamming") > 0)
-    reps = (
-        star.select(F.col("doc_a").alias("rep"))
-        .unionByName(rep_pairs.select(F.col("doc_a").alias("rep")))
-        .unionByName(rep_pairs.select(F.col("doc_b").alias("rep")))
-        .distinct()
-    )
-    members = reps.select("rep", F.col("rep").alias("member")).unionByName(
-        star.select(F.col("doc_a").alias("rep"), F.col("doc_b").alias("member"))
-    )
-    ma, mb = members.alias("ma"), members.alias("mb")
-    intra = ma.join(
-        mb,
-        (F.col("ma.rep") == F.col("mb.rep"))
-        & (F.col("ma.member") < F.col("mb.member")),
-    ).select(
-        F.col("ma.member").alias("doc_a"),
-        F.col("mb.member").alias("doc_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
-    # cliques are disjoint, so intra (same clique) and cross (two cliques)
-    # can never emit the same pair, and no cross pair repeats — a plain
-    # unionByName needs no distinct
-    cross = (
-        rep_pairs.join(ma, F.col("doc_a") == F.col("ma.rep"))
-        .join(mb, F.col("doc_b") == F.col("mb.rep"))
-        .select(
-            F.least("ma.member", "mb.member").alias("doc_a"),
-            F.greatest("ma.member", "mb.member").alias("doc_b"),
-            "hamming",
-        )
-    )
-    return intra.unionByName(cross)
 
 
 _DUCK_VOTES = ",\n         ".join(

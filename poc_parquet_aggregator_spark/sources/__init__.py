@@ -1,23 +1,3 @@
-from .iceberg import has_iceberg, iceberg_input_files, read_sequence_table
-from .jdbc import (
-    enabled_tag_keys,
-    has_jdbc_driver,
-    read_jdbc_dimension,
-    write_summary_jdbc,
-)
-from .docs import write_doc_corpus
 from .tokens import generate_token_table, token_table_schema, write_token_table
 
-__all__ = [
-    "enabled_tag_keys",
-    "generate_token_table",
-    "has_iceberg",
-    "has_jdbc_driver",
-    "iceberg_input_files",
-    "read_jdbc_dimension",
-    "write_summary_jdbc",
-    "read_sequence_table",
-    "token_table_schema",
-    "write_token_table",
-    "write_doc_corpus",
-]
+__all__ = ["generate_token_table", "token_table_schema", "write_token_table"]

@@ -1,3 +1,3 @@
-from .incremental import encode_stream, streaming_daily_rollup, streaming_sessionize
+from .incremental import encode_stream
 
-__all__ = ["encode_stream", "streaming_daily_rollup", "streaming_sessionize"]
+__all__ = ["encode_stream"]

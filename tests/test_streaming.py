@@ -1,10 +1,8 @@
-"""Incremental encode (each new or changed file encoded once, decided by
-the manifest alone; a file whose extra columns differ from the
-committed records' is refused) and the Structured Streaming operators:
-the watermarked daily rollup and gap sessionization."""
+"""Incremental encode: each new or changed file is encoded once, decided
+by the manifest alone; a file whose extra columns differ from the
+committed records' is refused."""
 
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,7 +11,7 @@ import pytest
 from poc_parquet_aggregator_spark.encode import decode_verify, read_decoded, read_manifest
 from poc_parquet_aggregator_spark.plans import get_spark
 from poc_parquet_aggregator_spark.sources import generate_token_table, write_token_table
-from poc_parquet_aggregator_spark.streaming import encode_stream, streaming_daily_rollup
+from poc_parquet_aggregator_spark.streaming import encode_stream
 
 
 @pytest.fixture(scope="module")
@@ -86,133 +84,3 @@ def test_encode_stream_append_with_other_extras_raises(spark, tmp_path, encode_r
         got = read_decoded(spark, out, columns=["doc_id", "lang"]).toArrow()
         assert got.num_rows == 1000
         assert sorted(got.column("lang").to_pylist()) == sorted(lang.to_pylist())
-
-
-def test_streaming_daily_rollup_matches_batch(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    events_dir = str(tmp_path / "events")
-    os.makedirs(events_dir)
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src.write.mode("overwrite").parquet(events_dir)
-
-    sdf = streaming_daily_rollup(spark, events_dir, str(tmp_path / "ckpt"))
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName("rollup_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["usage_date"], r["event_type"]): (r["n_events"], round(r["sum_value"], 6))
-        for r in spark.sql("select * from rollup_test").collect()
-    }
-    expect = {
-        (r["usage_date"], r["event_type"]): (r["n_events"], round(r["sum_value"], 6))
-        for r in (
-            src.groupBy(
-                F.to_date("ts").cast("string").alias("usage_date"), "event_type"
-            )
-            .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-            .collect()
-        )
-    }
-    assert got == expect
-
-
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization: state carries open sessions
-    ACROSS micro-batches (maxFilesPerTrigger=1 forces one batch per file);
-    sessions closed by an inactivity gap are emitted exactly once."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from poc_parquet_aggregator_spark.streaming import streaming_sessionize
-
-    src = str(tmp_path / "events")
-    os.makedirs(src)
-
-    def write(name, rows):
-        tbl = pa.table(
-            {
-                "user_id": pa.array([r[0] for r in rows], type=pa.int64()),
-                "ts": pa.array(
-                    [r[1] * 1_000_000 for r in rows], type=pa.timestamp("us")
-                ),
-            }
-        )
-        pq.write_table(tbl, f"{src}/{name}.parquet")
-
-    # NB: event times must sit ABOVE the initial watermark (epoch 0) or the
-    # stateful operator drops them as late — hence the base offset.
-    B = 1_000_000
-    # batch A: user 1 events at +0,+100,+200; user 2 at +0 and +4000
-    write("a", [(1, B), (1, B + 100), (1, B + 200), (2, B), (2, B + 4000)])
-    time.sleep(1.1)  # file source orders batches by mtime
-    # batch B: user 1 at +250 (merges with open session) then +5000 (gap →
-    # closes +0..+250); user 2 at +4100 (merges, stays open)
-    write("b", [(1, B + 250), (1, B + 5000), (2, B + 4100)])
-
-    q = (
-        streaming_sessionize(spark, src, gap_s=1800)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .option("maxFilesPerTrigger", "1")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sessions").collect()
-    }
-    # user 1: +0..+250 (4 events, merged ACROSS the batch boundary) closed
-    # by the +5000 gap; user 2: the single event at +0 closed by the +4000
-    # gap. Open tails (1@+5000, 2@+4000..+4100) stay in state — not emitted.
-    assert got == {(1, B, B + 250, 4), (2, B, B, 1)}
-
-
-def test_merge_sessions_late_data_semantics():
-    """The cross-batch merge must match the batch twin under admitted late
-    data: a late event can BRIDGE two batch segments through the carried
-    session, and a detached late segment closes on its own (both were wrong
-    under a first-segment-only merge)."""
-    from poc_parquet_aggregator_spark.streaming.incremental import _merge_sessions
-
-    gap = 1800
-    # bridge: carried (0..1000); batch has late 100 and new 2000. 2000-1000
-    # <= gap, so everything is ONE open session — nothing closes.
-    closed, tail = _merge_sessions([100, 2000], (0, 1000, 3), gap)
-    assert closed == [] and tail == (0, 2000, 5)
-    # detached late segment: carried (10000..11000); late event at 100 is
-    # its own closed session, carried stays open untouched.
-    closed, tail = _merge_sessions([100], (10000, 11000, 4), gap)
-    assert closed == [(100, 100, 1)] and tail == (10000, 11000, 4)
-    # no carried state: plain gap split
-    closed, tail = _merge_sessions([0, 100, 5000], None, gap)
-    assert closed == [(0, 100, 2)] and tail == (5000, 5000, 1)
-    # carried merges and a later in-batch gap still closes the merged one
-    closed, tail = _merge_sessions([1200, 9000], (0, 1000, 2), gap)
-    assert closed == [(0, 1200, 3)] and tail == (9000, 9000, 1)
-
-
-def test_sessionize_rejects_unsafe_watermark(spark, tmp_path):
-    """Nonzero watermark delay + immediate emission can fragment sessions
-    around admitted late events — must be an explicit opt-in."""
-    import pytest
-
-    from poc_parquet_aggregator_spark.streaming import streaming_sessionize
-
-    with pytest.raises(ValueError, match="fragment"):
-        streaming_sessionize(spark, str(tmp_path), watermark="10 minutes")
-    # explicit opt-in builds the plan without error
-    df = streaming_sessionize(
-        spark, str(tmp_path), watermark="10 minutes",
-        allow_fragmented_late_sessions=True,
-    )
-    assert df.isStreaming

@@ -33,12 +33,13 @@ from poc_parquet_aggregator_spark.encode.tokfilter import (
     MODE_EXACT,
     MODE_HASHED,
     _HDR,
+    _bits,
+    _hash_slots,
     _pack,
     _parse,
     build_token_filter,
     merge_token_filters,
     token_filter_bounds,
-    token_filter_contains,
     token_filter_contains_any,
 )
 from poc_parquet_aggregator_spark.plans import get_spark
@@ -46,6 +47,20 @@ from poc_parquet_aggregator_spark.sources import write_token_table
 
 
 # ----------------------------------------------------------------- unit
+
+
+def token_filter_contains(blob: bytes, token: int) -> bool:
+    """Per-id reference probe: may the filtered value set contain
+    ``token``? The ANY-match probe the engine uses is checked against it."""
+    mode, lo, hi, nbits, payload = _parse(blob)
+    if token < lo or token > hi:
+        return False
+    bits = _bits(payload, nbits)
+    if mode == MODE_EXACT:
+        j = token - lo
+    else:
+        j = int(_hash_slots(np.asarray([token]), nbits)[0])
+    return bool((bits[j >> 3] >> (j & 7)) & 1)
 
 
 def test_exact_mode_semantics():
@@ -66,8 +81,8 @@ def test_exact_mode_semantics():
 
 def test_contains_any_equals_per_id_loop():
     """token_filter_contains_any (one parse + one decompression) must give
-    the exact verdict of the per-id token_filter_contains loop it replaced
-    (r7: the r6-ADVICE K-decompression fix), across both filter modes."""
+    the exact verdict of a loop over the per-id reference probe, across
+    both filter modes."""
     rng = np.random.default_rng(11)
     for vals in (
         rng.integers(500, 4000, 5000).astype(np.int32),  # exact mode
@@ -205,6 +220,8 @@ def test_old_filter_layout_rejected():
         with pytest.raises(ValueError, match="re-encode"):
             token_filter_contains(old, 3)
         with pytest.raises(ValueError, match="re-encode"):
+            token_filter_contains_any(old, [3])
+        with pytest.raises(ValueError, match="re-encode"):
             merge_token_filters([build_token_filter(np.arange(4, dtype=np.int32)), old])
 
 
@@ -232,6 +249,8 @@ def test_filter_payload_arbitrary_bitmaps(first, body, repeat, lo):
         assert token_filter_contains(m, t) == (t in s or t == lo - 5)
     with pytest.raises(ValueError):
         token_filter_contains(f[:-1], lo)
+    with pytest.raises(ValueError):
+        token_filter_contains_any(f[:-1], [lo])
 
 
 # ---------------------------------------------------------- end to end
