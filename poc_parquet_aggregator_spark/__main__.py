@@ -2,16 +2,15 @@
 
 Commands:
   gen     --out DIR --docs N [--docs-per-file K] [--seed S]
-  encode  --input DIR --out DIR [--by-source] [--zstd-level L] [--cores N]
+  encode  --input DIR --out DIR [--by-source] [--zstd-level L]
           (--by-source: buckets sized from each source's token count)
   decode  --out DIR [--sources a,b] [--doc-id-min X --doc-id-max Y]
           [--n-tok-min A --n-tok-max B] [--columns a,b] [--show N]
-  verify  --input DIR --out DIR [--fraction F] [--cores N]
+  verify  --input DIR --out DIR [--fraction F]
   stream  --input DIR --out DIR           (encode new or changed files only)
   manifest --out DIR                       (lineage summary)
   compact --out DIR                        (fold manifest JSONs into JSONL segment)
-  compact-data --out DIR [--max-parts K]   (merge multi-part encoded stems, delete
-                                           stem dirs no record names)
+  compact-data --out DIR                   (delete stem dirs no record names)
 """
 
 from __future__ import annotations
@@ -21,10 +20,10 @@ import json
 import sys
 
 
-def _spark(cores: int):
+def _spark():
     from .plans import get_spark
 
-    return get_spark("cli", cores=cores, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    return get_spark("cli", extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -42,7 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("--out", required=True)
     e.add_argument("--by-source", action="store_true")
     e.add_argument("--zstd-level", type=int, default=3)
-    e.add_argument("--cores", type=int, default=8)
 
     d = sub.add_parser("decode")
     d.add_argument("--out", required=True)
@@ -53,18 +51,15 @@ def main(argv: list[str] | None = None) -> int:
     d.add_argument("--n-tok-min", type=int)
     d.add_argument("--n-tok-max", type=int)
     d.add_argument("--show", type=int, default=5)
-    d.add_argument("--cores", type=int, default=8)
 
     v = sub.add_parser("verify")
     v.add_argument("--input", required=True)
     v.add_argument("--out", required=True)
     v.add_argument("--fraction", type=float, default=1.0)
-    v.add_argument("--cores", type=int, default=8)
 
     s = sub.add_parser("stream")
     s.add_argument("--input", required=True)
     s.add_argument("--out", required=True)
-    s.add_argument("--cores", type=int, default=8)
 
     m = sub.add_parser("manifest")
     m.add_argument("--out", required=True)
@@ -74,7 +69,6 @@ def main(argv: list[str] | None = None) -> int:
 
     cd = sub.add_parser("compact-data")
     cd.add_argument("--out", required=True)
-    cd.add_argument("--max-parts", type=int, default=1)
 
     args = ap.parse_args(argv)
 
@@ -96,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "compact-data":
         from .encode import compact_encoded
 
-        print(json.dumps(compact_encoded(args.out, max_parts=args.max_parts)))
+        print(json.dumps(compact_encoded(args.out)))
         return 0
 
     if args.cmd == "manifest":
@@ -113,7 +107,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(total))
         return 0
 
-    spark = _spark(args.cores)
+    spark = _spark()
     try:
         if args.cmd == "encode":
             from .encode import encode_dataset, encode_dataset_by_source

@@ -38,13 +38,13 @@ on doc_id (the reference's expected-results oracle discipline,
 from __future__ import annotations
 
 import glob
+import heapq
 import json
 import operator
 import os
 import re
 import shutil
 import time
-import urllib.parse
 import uuid
 import zlib
 from collections.abc import Callable, Iterable, Iterator
@@ -118,8 +118,8 @@ _META_ARROW_SCHEMA = pa.schema(
         pa.field("n_tok_min", pa.int64()),
         pa.field("n_tok_max", pa.int64()),
         # token VALUE bounds + membership filter (OR of the part's chunk
-        # filters); the commit merges parts per stem into the sidecar its
-        # record names (see encode/tokfilter.py)
+        # filters); the commit writes it to the sidecar its record names
+        # (see encode/tokfilter.py)
         pa.field("tok_min", pa.int64()),
         pa.field("tok_max", pa.int64()),
         pa.field("tok_filter", pa.large_binary()),
@@ -302,12 +302,6 @@ def _stem(path: str) -> str:
     return os.path.splitext(os.path.basename(path))[0]
 
 
-def _local_path(uri: str) -> str:
-    """The local path an ``input_file_name()`` URI names: Spark
-    percent-encodes it (``tok en.parquet`` arrives as ``tok%20en``)."""
-    return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
-
-
 def _stem_dir(stem: str) -> str:
     """``stem``'s data dir, relative to the output dir like every file
     name a record holds: the one place the layout lives. Writers give
@@ -406,37 +400,17 @@ def _encode_chunk_row(
     return row
 
 
-def _split_by_file(batch: pa.RecordBatch, key: str = "_file") -> Iterator[tuple[str, pa.RecordBatch]]:
-    """Split a batch at commit-key boundaries (a batch straddles keys
-    where one unit ends and the next begins; the common case is a single
-    slice, zero-copy)."""
-    files = batch.column(batch.schema.get_field_index(key))
-    if len(files) == 0:
-        return
-    first, last = files[0].as_py(), files[len(files) - 1].as_py()
-    if first == last:
-        yield first, batch
-        return
-    arr = np.asarray(files.to_pylist(), dtype=object)
-    change = np.flatnonzero(arr[1:] != arr[:-1])
-    starts = np.concatenate(([0], change + 1, [len(arr)]))
-    for i in range(len(starts) - 1):
-        s, e = int(starts[i]), int(starts[i + 1])
-        yield str(arr[s]), batch.slice(s, e - s)
-
-
 _FOLD_SUMS = ("n_chunks", "n_docs", "n_tokens", "bytes_in", "bytes_out")
 
 
 def fold_parts(rows: list[dict]) -> dict:
-    """Fold rows into one coarser record — chunks into a part, parts into
-    a file or bucket record; rows and result share one shape, so folds
-    compose. Sums, checksum XOR and codec counts add up. Zone bounds skip
-    only MISSING values (an empty doc_id is a real bound: dropping it let
-    the manifest prune files holding matching rows); token zones skip
-    empty rows (``tok_max < tok_min``). The membership filter is the OR of
-    the rows' filters, and only if EVERY row has one — a row missing from
-    the OR would be a false negative."""
+    """Fold a unit's chunk rows into its part's row (no rows: the zero
+    record of an empty input file). Sums, checksum XOR and codec counts
+    add up. Zone bounds skip only MISSING values (an empty doc_id is a
+    real bound: dropping it let the manifest prune files holding matching
+    rows); token zones skip empty rows (``tok_max < tok_min``). The
+    membership filter is the OR of the rows' filters, and only if EVERY
+    row has one — a row missing from the OR would be a false negative."""
     toks = [r for r in rows if r["tok_min"] is not None and r["tok_max"] is not None
             and r["tok_max"] >= r["tok_min"]]
 
@@ -536,15 +510,13 @@ def _encode_local(
         return [row for rows in pool.map(encode, units) for row in rows]
 
 
-def _make_encode_fn(out_dir: str, zstd_level: int, key: str, extras: list[list[str]]):
-    """``_encode_units`` as a ``mapInArrow`` function: each batch is split
-    at its ``key`` column (an ``input_file_name()`` URI, or a by-source
-    bucket) and the task's part rows come back as one batch."""
-    stem_of = (lambda f: _stem(_local_path(f))) if key == "_file" else str
+def _make_encode_fn(out_dir: str, zstd_level: int, extras: list[list[str]], pieces: Callable):
+    """``_encode_units`` as a ``mapInArrow`` function: ``pieces`` turns a
+    task's batches into its units' (stem, batch) pieces, and the task's
+    part rows come back as one batch."""
 
     def encode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pieces = ((stem_of(k), part) for b in batches for k, part in _split_by_file(b, key))
-        out_rows = list(_encode_units(pieces, out_dir, zstd_level, extras))
+        out_rows = list(_encode_units(pieces(batches), out_dir, zstd_level, extras))
         if out_rows:
             yield pa.RecordBatch.from_pylist(out_rows, schema=_META_ARROW_SCHEMA)
 
@@ -936,40 +908,18 @@ def compact_manifest(out_dir: str) -> dict:
     return {"records": len(records), "absorbed": len(loose), "segments": 1}
 
 
-def compact_encoded(out_dir: str, max_parts: int = 1) -> dict:
-    """Merge multi-part encoded stems into one part each — the small-file
-    maintenance pass. An encode writes one part per unit, but tables
-    written by builds that split an input file across Spark tasks hold
-    several small parts per stem; at the 10^12-sequence target that's the
-    classic small-file problem on the READ side (footer/open cost per
-    part). Chunk rows are opaque, already-encoded blobs, so
-    compaction is a driver-side pyarrow concat — NO re-encode, checksums
-    unchanged.
-
-    The merged part is written under a fresh name and committed like an
-    encode (``_commit``): the record naming it is the switch, and the old
-    parts are deleted after it. A crash at any point leaves either the
-    old record with its parts or the new record with the merged part.
-
-    Then every ``data/<stem>/`` dir no record names is deleted: a stem
-    whose first encode crashed before its record, and whose input is gone,
-    is never committed again. The sweep must not run beside an encode job
-    into the same out_dir, whose new stems have no record yet.
-    """
-    compacted = 0
+def compact_encoded(out_dir: str) -> dict:
+    """Delete every ``data/<stem>/`` dir no record names: a stem whose
+    first encode crashed before its record, and whose input is gone, is
+    never committed again (a committed stem's stray files go at its next
+    commit, ``_commit``). The sweep must not run beside an encode job
+    into the same out_dir, whose new stems have no record yet."""
     records = read_manifest(out_dir)
-    for stem, rec in sorted(records.items()):
-        parts = _part_files(out_dir, rec)
-        if len(parts) <= max_parts:
-            continue
-        part = _write_part(out_dir, stem, pa.concat_tables([pq.read_table(p) for p in parts]))
-        _commit(out_dir, {**rec, "parts": [part], "n_parts": 1, "compacted_at": time.time()})
-        compacted += 1
     data = os.path.join(out_dir, "data")
     orphans = sorted(set(os.listdir(data)) - set(records)) if os.path.isdir(data) else []
     for stem in orphans:
         shutil.rmtree(os.path.join(data, stem))
-    return {"stems_compacted": compacted, "stems_swept": len(orphans)}
+    return {"stems_swept": len(orphans)}
 
 
 def _snapshot(path: str) -> dict:
@@ -1011,17 +961,20 @@ def _commit(out_dir: str, rec: dict) -> None:
             os.remove(os.path.join(path, name))
 
 
-def _commit_parts(out_dir: str, stem: str, rows: list[dict], **fields) -> None:
-    """Commit the part rows (META_SCHEMA) the encode kernel wrote for one
-    stem: they fold into the manifest record, plus the caller's
-    ``fields``; the merged token filter goes to a fresh sidecar name the
-    record names, and ``_commit`` writes the record."""
-    rec = fold_parts([{**r, "codecs": json.loads(r["codecs_json"])} for r in rows])
+def _commit_parts(out_dir: str, stem: str, row: dict | None, **fields) -> None:
+    """Commit the one part row (META_SCHEMA) the encode kernel wrote for
+    a unit, or None for an empty input file (a zero record that names no
+    part): the record is the part row plus the caller's ``fields``; its
+    token filter goes to a fresh sidecar name the record names, and
+    ``_commit`` writes the record."""
+    if row is None:
+        rec, parts = fold_parts([]), []
+    else:
+        rec = {**row, "codecs": json.loads(row["codecs_json"])}
+        parts = [rec.pop("part_path")]
+        del rec["codecs_json"]
     tok_filter = rec.pop("tok_filter")
-    rec.update({
-        "file_stem": stem, "parts": sorted(r["part_path"] for r in rows),
-        "n_parts": len(rows), "committed_at": time.time(), **fields,
-    })
+    rec.update({"file_stem": stem, "parts": parts, "committed_at": time.time(), **fields})
     if tok_filter is not None:
         rec["tok_filter"] = os.path.join(_stem_dir(stem), f"tokfilter-{uuid.uuid4().hex}.bin")
         _atomic_write(os.path.join(out_dir, rec["tok_filter"]), bytes(tok_filter))
@@ -1099,51 +1052,25 @@ def _input_extras(files: list[str]) -> list[list[str]]:
 
 
 def _encode_spark(
-    spark: SparkSession, df: DataFrame, sizes: list[int], out_dir: str, key: str,
-    zstd_level: int, extras: list[list[str]],
+    df: DataFrame, pieces: Callable, out_dir: str, zstd_level: int, extras: list[list[str]],
 ) -> list[dict]:
-    """The Spark runner: ``df`` through the kernel in a ``mapInArrow`` job;
-    returns the part rows. ``sizes`` are the scanned files' bytes. The
-    splits are sized to the cluster (Spark's default 128 MB bin-packing
-    would coalesce many small files into a handful of tasks and leave
-    most cores idle): the bytes over ≥2 waves of parallelism, but never
-    less than the largest file, and with ``minPartitionNum`` 1 Spark's
-    split size is the ``maxPartitionBytes`` set here (it is
-    ``min(maxPartitionBytes, max(openCostInBytes, totalBytes /
-    minPartitionNum))``), so no input file is split across tasks: a
-    task reads whole units. The split confs hold for this job's scan
-    only and are restored, or unset, when it returns or raises."""
-    n_tasks = 2 * spark.sparkContext.defaultParallelism
-    split = max(sum(sizes) // n_tasks + 1, max(sizes), 1 << 20)
-    confs = {"spark.sql.files.maxPartitionBytes": str(split),
-             "spark.sql.files.openCostInBytes": "0",
-             "spark.sql.files.minPartitionNum": "1"}
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        meta_rows = df.mapInArrow(
-            _make_encode_fn(out_dir, zstd_level, key, extras),
-            schema=META_SCHEMA,
-        ).collect()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return [r.asDict() for r in meta_rows]
+    """The Spark runner: ``df``'s partitions through the kernel in a
+    ``mapInArrow`` job, each task's batches cut into (stem, batch)
+    pieces by ``pieces``; returns the part rows."""
+    return [r.asDict() for r in df.mapInArrow(
+        _make_encode_fn(out_dir, zstd_level, extras, pieces), schema=META_SCHEMA
+    ).collect()]
 
 
 def _encode_parts(
-    spark: SparkSession, files: list[str], out_dir: str, done: dict[str, dict],
-    key: str, zstd_level: int, metrics: dict,
-    spark_df: Callable[[], DataFrame],
+    files: list[str], out_dir: str, done: dict[str, dict], by_source: bool,
+    zstd_level: int, metrics: dict,
+    spark_units: Callable[[], tuple[DataFrame, Callable]],
     local_units: Callable[[], list[Iterable[tuple[str, pa.RecordBatch]]]],
-) -> tuple[dict[str, list[dict]], list[list[str]]]:
-    """The encode job of both layouts over ``files``; returns (the part
-    rows by stem, the extra columns [[name, spark type], …] each of the
-    job's records declares).
+) -> tuple[dict[str, dict], list[list[str]]]:
+    """The encode job of both layouts over ``files``; returns (each
+    unit's one part row by stem, the extra columns [[name, spark type],
+    …] each of the job's records declares).
 
     Before any task runs, every file in ``files`` must declare the same
     extra columns (``_input_extras``), and every committed record in
@@ -1156,12 +1083,13 @@ def _encode_parts(
     one runner for the whole job: at or below ``_LOCAL_ENCODE_BYTES`` the
     kernel runs in this process over ``local_units()`` (each unit's
     (stem, batch) pieces) on a thread pool (``_encode_local``) and makes
-    no JVM call; above it ``spark_df()`` (the rows plus the commit
-    ``key`` column, each unit within one task and in a row) runs
-    through it in a Spark job (``_encode_spark``). A unit's chunks are
-    cut from its own rows alone, so both runners write the same bytes."""
+    no JVM call; above it the DataFrame ``spark_units()`` returns runs
+    through it in a Spark job (``_encode_spark``), each task's batches
+    cut into whole units by the function it returns with it. A unit's
+    chunks are cut from its own rows alone, so both runners write the
+    same bytes, and a unit is one part: a stem that comes back as two
+    part rows raises before anything is committed."""
     extras = _input_extras(files)
-    by_source = key == "_bucket"
     for stem, rec in done.items():
         if ("n_salts" in rec) != by_source or rec.get("extras") != extras:
             raise ValueError(
@@ -1169,24 +1097,53 @@ def _encode_parts(
                 f"does not match this job (by-source: {by_source}, extras {extras}); "
                 "encode into a fresh out_dir"
             )
-    sizes = [os.stat(f).st_size for f in files]
-    local = sum(sizes) <= _LOCAL_ENCODE_BYTES
-    metrics.update(runner="local" if local else "spark", input_bytes=sum(sizes))
+    size = sum(os.stat(f).st_size for f in files)
+    local = size <= _LOCAL_ENCODE_BYTES
+    metrics.update(runner="local" if local else "spark", input_bytes=size)
     if local:
         part_rows = _encode_local(local_units(), out_dir, zstd_level, extras)
     else:
-        part_rows = _encode_spark(spark, spark_df(), sizes, out_dir, key, zstd_level, extras)
-    by_stem: dict[str, list[dict]] = {}
+        part_rows = _encode_spark(*spark_units(), out_dir, zstd_level, extras)
+    by_stem: dict[str, dict] = {}
     for r in part_rows:
-        by_stem.setdefault(r["file_stem"], []).append(r)
+        if r["file_stem"] in by_stem:
+            raise ValueError(
+                f"commit unit {r['file_stem']!r} was encoded as more than one part; "
+                "a unit must be whole within one task"
+            )
+        by_stem[r["file_stem"]] = r
     return by_stem, extras
 
 
 def _file_pieces(f: str) -> Iterator[tuple[str, pa.RecordBatch]]:
-    """One per-file unit for the in-process runner: the file's batches,
-    keyed by the stem of its path, read by the task that encodes them."""
+    """One per-file unit, for either runner: the file's batches, keyed by
+    the stem of its path, read whole by the task that encodes them."""
     for batch in pq.ParquetFile(f).iter_batches(batch_size=_CHUNK_ROWS):
         yield _stem(f), batch
+
+
+def _path_pieces(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """A per-file Spark task's units: the files its row of paths names."""
+    for batch in batches:
+        for paths in batch.column(0).to_pylist():
+            for f in paths:
+                yield from _file_pieces(f)
+
+
+def _path_df(spark: SparkSession, files: list[str]) -> DataFrame:
+    """The per-file Spark runner's input: one row per task, the paths it
+    reads whole (``_path_pieces``), so no file is split. Largest first,
+    each file goes to the task with the fewest bytes so far, across
+    ``min(files, defaultParallelism)`` tasks, so no task reads more than
+    the mean plus one file. A local DataFrame is cut into
+    ``defaultParallelism`` partitions, so each row is one task, and a
+    task carries its own paths and no others."""
+    tasks = [(0, k, []) for k in range(min(len(files), spark.sparkContext.defaultParallelism))]
+    for size, f in sorted(((os.stat(f).st_size, f) for f in files), reverse=True):
+        nbytes, k, paths = heapq.heappop(tasks)
+        paths.append(f)
+        heapq.heappush(tasks, (nbytes + size, k, paths))
+    return spark.createDataFrame([(paths,) for _, _, paths in tasks], "paths array<string>")
 
 
 def encode_dataset(
@@ -1220,15 +1177,15 @@ def encode_dataset(
     }
     if todo:
         by_stem, extras = _encode_parts(
-            spark, todo, out_dir, done, "_file", zstd_level, metrics,
-            lambda: spark.read.parquet(*todo).withColumn("_file", F.input_file_name()),
+            todo, out_dir, done, False, zstd_level, metrics,
+            lambda: (_path_df(spark, todo), _path_pieces),
             lambda: [_file_pieces(f) for f in todo],
         )
         # commit per file; an empty input file yields no part row and
         # commits a zero record, so resume doesn't rescan it forever
         for f in todo:
-            rows = by_stem.get(_stem(f), [])
-            _commit_parts(out_dir, _stem(f), rows, extras=extras, snapshot=_snapshot(f))
+            _commit_parts(out_dir, _stem(f), by_stem.get(_stem(f)), extras=extras,
+                          snapshot=_snapshot(f))
 
     _job_metrics(metrics, out_dir, files, t0)
     return metrics

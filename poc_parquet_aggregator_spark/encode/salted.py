@@ -39,6 +39,7 @@ from __future__ import annotations
 import os
 import time
 import zlib
+from collections.abc import Iterable, Iterator
 from itertools import groupby
 from operator import itemgetter
 
@@ -56,7 +57,6 @@ from .pipeline import (
     _files_present,
     _input_files,
     _job_metrics,
-    _split_by_file,
     read_manifest,
 )
 
@@ -96,6 +96,17 @@ def _salt_counts(tokens: dict[str, int], done: dict[str, dict]) -> dict[str, int
                 f"{_BUCKET_TOKENS}), so a resume would lose rows — encode into a fresh out_dir"
             )
     return salts
+
+
+def _bucket_batch_pieces(batches: Iterable[pa.RecordBatch]) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """(bucket, batch) pieces of batches whose rows come sorted by bucket:
+    each batch sliced where its ``_bucket`` changes (zero-copy)."""
+    for batch in batches:
+        runs = pc.run_end_encode(batch.column(batch.schema.get_field_index("_bucket")))
+        start = 0
+        for bucket, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
+            yield bucket, batch.slice(start, end - start)
+            start = end
 
 
 def _bucket_df(
@@ -155,7 +166,7 @@ def _bucket_pieces(
     if done:
         tbl = tbl.filter(pc.invert(pc.is_in(tbl.column("_bucket"), pa.array(list(done)))))
     tbl = tbl.sort_by([("_bucket", "ascending"), ("doc_id", "ascending")])
-    pieces = (piece for batch in tbl.to_batches() for piece in _split_by_file(batch, "_bucket"))
+    pieces = _bucket_batch_pieces(tbl.to_batches())
     return [list(unit) for _, unit in groupby(pieces, key=itemgetter(0))]
 
 
@@ -197,15 +208,15 @@ def encode_dataset_by_source(
     if not done or any(r.get("n_buckets") != len(done) for r in done.values()):
         salts: dict[str, int] = {}
         by_bucket, extras = _encode_parts(
-            spark, files, out_dir, done, "_bucket", zstd_level, metrics,
-            lambda: _bucket_df(spark, files, done, salts),
+            files, out_dir, done, True, zstd_level, metrics,
+            lambda: (_bucket_df(spark, files, done, salts), _bucket_batch_pieces),
             lambda: _bucket_pieces(files, done, salts),
         )
         n_buckets = len(set(done) | set(by_bucket))
-        for stem, rows in by_bucket.items():
+        for stem, row in by_bucket.items():
             source, salt = stem.rsplit("_s", 1)
             _commit_parts(
-                out_dir, stem, rows, extras=extras, source=source, salt=int(salt),
+                out_dir, stem, row, extras=extras, source=source, salt=int(salt),
                 n_salts=salts[source], n_buckets=n_buckets, snapshot=snapshot,
             )
 

@@ -206,9 +206,9 @@ def q_encoded_roundtrip_rollup(spark: SparkSession, sf: str) -> DataFrame:
         encode_stream(spark, in_dir, out_stream)
         # run BOTH maintenance passes on the per-file table before reading
         # it back: manifest compaction (loose JSONs → JSONL segment) and
-        # small-file compaction (multi-part stems → one part, committed
-        # through the manifest record). Every per-file-branch row in the gate thereby also
-        # certifies that maintenance preserves the table bit-exactly.
+        # the sweep of stem dirs no record names. Every per-file-branch row
+        # in the gate thereby also certifies that maintenance preserves the
+        # table bit-exactly.
         from ..encode import compact_encoded, compact_manifest
 
         compact_manifest(out_file)

@@ -1,7 +1,7 @@
 """Small-input spread: fix scan underparallelization for per-row-heavy ops.
 
 A single small parquet file scans as ONE task (Spark bin-packs splits up to
-``spark.sql.files.maxPartitionBytes``), so compute-heavy per-row work —
+its 128 MB default partition size), so compute-heavy per-row work —
 shingling, hashing, vector math — runs on one core no matter how many the
 session has. ``spread`` repartitions such inputs up to the session's default
 parallelism; at real scale the input has at least as many splits as cores

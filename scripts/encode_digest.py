@@ -7,17 +7,14 @@ Usage: python scripts/encode_digest.py OUT_DIR
 Prints one sha256 per blob column of the data files (tokens_blob,
 doc_id_blob, source_blob, extras_blob, tok_filter), one over the token
 filter sidecars, and one over the manifest records. Part files carry
-random names and a stem may have several, so each digest is taken over
-the sorted (stem, value digest) pairs: it is independent of file order
-and still changes when any single value does.
+random names, so each digest is taken over the sorted (stem, value
+digest) pairs: it is independent of file order and still changes when
+any single value does.
 
 Files are found through the manifest records (``parts``, ``tok_filter``).
-Records without ``parts`` come from builds whose data lived in
-``data/file_stem=<stem>/`` with sidecars in ``_tokfilters/<stem>.bin``;
-those are found there, so the output of both builds can be compared.
 The manifest digest drops what names files or times rather than content:
-``committed_at``, ``compacted_at`` and ``parts``, and it reduces
-``tok_filter`` to "has a filter".
+``committed_at`` and ``parts``, and it reduces ``tok_filter`` to "has a
+filter".
 
 With ``--runners``, the script encodes IN_DIR in both layouts
 (``encode_dataset``, ``encode_dataset_by_source``) with each encode
@@ -30,7 +27,6 @@ Python workers.
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import json
 import os
@@ -59,36 +55,19 @@ def _value_digest(v) -> bytes:
     return b"null" if v is None else hashlib.sha256(v).digest()
 
 
-def _files(out_dir: str, stem: str, rec: dict) -> tuple[list[str], str | None]:
-    """(part files, sidecar file or None) of one record."""
-    if "parts" in rec:
-        sidecar = rec.get("tok_filter")
-        return (
-            [os.path.join(out_dir, p) for p in rec["parts"]],
-            os.path.join(out_dir, sidecar) if sidecar else None,
-        )
-    stem_dir = glob.escape(os.path.join(out_dir, "data", f"file_stem={stem}"))
-    sidecar = os.path.join(out_dir, "_tokfilters", f"{stem}.bin")
-    return (
-        glob.glob(os.path.join(stem_dir, "*.parquet")),
-        sidecar if os.path.exists(sidecar) else None,
-    )
-
-
 def encode_digest(out_dir: str) -> dict[str, str]:
     pairs: dict[str, list] = {c: [] for c in BLOB_COLUMNS}
     sidecars, records = [], []
     for stem, rec in read_manifest(out_dir).items():
-        parts, sidecar = _files(out_dir, stem, rec)
-        for path in parts:
-            tbl = pq.read_table(path)
+        for part in rec["parts"]:
+            tbl = pq.read_table(os.path.join(out_dir, part))
             for col in BLOB_COLUMNS:
                 values = tbl.column(col).to_pylist() if col in tbl.column_names else [None]
                 pairs[col] += [(stem, _value_digest(v)) for v in values]
-        if sidecar is not None:
-            with open(sidecar, "rb") as f:
+        if "tok_filter" in rec:
+            with open(os.path.join(out_dir, rec["tok_filter"]), "rb") as f:
                 sidecars.append((f"{stem}.bin", _value_digest(f.read())))
-        rec = {k: v for k, v in rec.items() if k not in ("committed_at", "compacted_at", "parts")}
+        rec = {k: v for k, v in rec.items() if k not in ("committed_at", "parts")}
         if "tok_filter" in rec:
             rec["tok_filter"] = True
         records.append((stem, _value_digest(json.dumps(rec, sort_keys=True).encode())))

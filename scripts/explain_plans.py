@@ -21,7 +21,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from poc_parquet_aggregator_spark.plans import get_spark
 
-    spark = get_spark(cores=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     for name, fn in entry.queries().items():
         if only and not name.startswith(only):
             continue

@@ -37,24 +37,3 @@ def encode_runners(monkeypatch):
             yield name
 
     return each
-
-
-@pytest.fixture(scope="session")
-def split_parts():
-    """``split_parts(out_dir)`` rewrites each record's one part as two,
-    committed through the record: the multi-part stems that builds which
-    split an input file across Spark tasks wrote, and that
-    ``compact_encoded`` merges. Each part needs two chunk rows."""
-    import pyarrow.parquet as pq
-
-    def split(out_dir: str) -> None:
-        for stem, rec in pipeline.read_manifest(out_dir).items():
-            (part,) = rec["parts"]
-            tbl = pq.read_table(f"{out_dir}/{part}")
-            assert tbl.num_rows > 1, stem
-            half = tbl.num_rows // 2
-            parts = sorted(pipeline._write_part(out_dir, stem, t)
-                           for t in (tbl.slice(0, half), tbl.slice(half)))
-            pipeline._commit(out_dir, {**rec, "parts": parts, "n_parts": 2})
-
-    return split

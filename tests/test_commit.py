@@ -1,7 +1,7 @@
-"""The manifest record is the one commit step. Encode tasks write fresh
-part files, the driver writes a fresh token-filter sidecar, then the
-record that names them, then deletes the stem's files the record does not
-name; ``compact_encoded`` commits its merged part the same way.
+"""The manifest record is the one commit step. Encode tasks write one
+fresh part file per unit, the driver writes a fresh token-filter
+sidecar, then the record that names them, then deletes the stem's files
+the record does not name.
 
 A crash at every write or delete of that sequence leaves a table whose
 full read and token read both answer as the old version or both as the
@@ -171,23 +171,6 @@ def test_crash_at_every_commit_step_of_a_re_encode(spark, tmp_path, encode_runne
         state = partial(_state, spark, token=token)
         seen = _crash_suite(tmp, base, run, state, [want_old, want_new])
         assert seen[0] == 0 and seen[-1] == 1, (runner, seen)
-
-
-def test_crash_at_every_commit_step_of_compact_encoded(spark, tmp_path, split_parts):
-    """Compaction of multi-part stems never changes what the table reads."""
-    src = str(tmp_path / "src")
-    first = _write(src, 0, seed=3, n=2 * DOCS_PER_FILE + 500)
-    second = _write(src, 3 * DOCS_PER_FILE, seed=3, n=2 * DOCS_PER_FILE + 500)
-    base = str(tmp_path / "base")
-    encode_dataset(spark, src, base)
-    split_parts(base)
-    assert all(r["n_parts"] > 1 for r in read_manifest(base).values())
-    token = min(_tokens(first) - _tokens(second))
-    want = _state(spark, base, token)
-    assert want[1]
-    state = partial(_state, spark, token=token)
-    seen = _crash_suite(tmp_path, base, compact_encoded, state, [want])
-    assert seen == [0] * len(seen) and len(seen) > 2, seen
 
 
 def test_crash_at_every_commit_step_of_a_by_source_resume(

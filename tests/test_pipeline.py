@@ -674,64 +674,6 @@ def test_length_bounds_prune_files_via_manifest(runners, spark, tmp_path, monkey
     assert _stems(files, rec) == {"long"}
 
 
-def test_compact_encoded_merges_parts_and_recovers(spark, token_dir, tmp_path, split_parts):
-    """Small-file maintenance: multi-part stems merge to one part with NO
-    re-encode (bit-identical decode, manifest checksum untouched, resume
-    still skips, the old parts deleted), and a merged part an interrupted
-    run left behind is not read and is deleted by the next compaction.
-    Crash points inside the commit are covered in test_commit.py."""
-    import pyarrow.parquet as pq_
-
-    from poc_parquet_aggregator_spark.encode import compact_encoded
-    from poc_parquet_aggregator_spark.sources.tokens import generate_token_table
-
-    # inputs of several chunks each; an encode writes one part per file,
-    # so the parts are split afterwards, as older builds wrote them
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for start in (0, 4500, 9000):
-        tbl = generate_token_table(4500, start_id=start)
-        pq_.write_table(
-            tbl, f"{src}/tokens-{start:012d}.parquet",
-            compression="zstd", row_group_size=500,
-        )
-    token_dir = src
-    out = str(tmp_path / "enc")
-    encode_dataset(spark, token_dir, out)
-    split_parts(out)
-    rec_before = read_manifest(out)
-    n_parts_before = [len(r["parts"]) for r in rec_before.values()]
-    assert max(n_parts_before) > 1, n_parts_before
-    assert all(r["n_parts"] == len(r["parts"]) for r in rec_before.values())
-
-    def data_files(stem):
-        return sorted(os.listdir(os.path.join(out, "data", stem)))
-
-    m = compact_encoded(out)
-    assert m["stems_compacted"] == sum(1 for n in n_parts_before if n > 1)
-    assert decode_verify(spark, token_dir, out)["bit_identical"]
-    rec_after = read_manifest(out)
-    for stem, rec in rec_after.items():
-        assert rec["checksum"] == rec_before[stem]["checksum"]
-        assert rec["n_parts"] == len(rec["parts"]) == 1
-        assert rec["tok_filter"] == rec_before[stem]["tok_filter"]
-        named = [*rec["parts"], rec["tok_filter"]]
-        assert data_files(stem) == sorted(os.path.basename(p) for p in named)
-    # resume unaffected: snapshots still match, nothing re-encodes
-    m2 = encode_dataset(spark, token_dir, out)
-    assert m2["files_encoded"] == 0
-
-    # an interrupted compaction's merged part (written, never committed)
-    stem = sorted(rec_after)[0]
-    (part,) = rec_after[stem]["parts"]
-    orphan = os.path.join(out, "data", stem, "part-orphan.parquet")
-    shutil.copy(os.path.join(out, part), orphan)
-    assert decode_verify(spark, token_dir, out)["bit_identical"]
-    assert compact_encoded(out, max_parts=0)["stems_compacted"] == len(rec_after)
-    assert not os.path.exists(orphan)
-    assert decode_verify(spark, token_dir, out)["bit_identical"]
-
-
 def test_selective_reads_equal_posthoc_filters_randomized(spark, token_dir, tmp_path):
     """Randomized equivalence sweep: for seeded random length bands and
     doc_id ranges, the pruned selective read returns EXACTLY the rows a
@@ -980,7 +922,7 @@ def test_empty_doc_id_keeps_file_bounds(spark, tmp_path):
 def test_fold_parts_rules():
     """fold_parts on synthetic rows: "" is a real doc_id bound, an empty
     row's token zone (tok_max < tok_min) is ignored, one row without a
-    filter means no merged filter, and folds compose."""
+    filter means no merged filter, and no rows fold to the zero record."""
     import numpy as np
 
     from poc_parquet_aggregator_spark.encode.pipeline import fold_parts
@@ -1017,7 +959,6 @@ def test_fold_parts_rules():
     assert fold_parts([a, {**b, "tok_filter": None}])["tok_filter"] is None
     nothing = fold_parts([])
     assert nothing["tok_filter"] is None and nothing["doc_id_min"] is None
-    assert fold_parts([fold_parts([a, b]), empty]) == f
 
 
 _SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes",
@@ -1190,7 +1131,8 @@ def test_runners_write_the_same_bytes(spark, tmp_path, encode_runners):
     """Both layouts, over files of one to three chunks (one in several row
     groups), an empty file and extra columns of every type: the two
     encode runners write the same stored bytes and records
-    (``scripts/encode_digest.py``)."""
+    (``scripts/encode_digest.py``), and every record names at most one
+    part."""
     encode_digest = _encode_digest()
     src = str(tmp_path / "src")
     _write_mixed_files(src, ((0, 5000, 700), (5000, 2000, None), (7000, 900, None), (7900, 0, None)))
@@ -1200,8 +1142,54 @@ def test_runners_write_the_same_bytes(spark, tmp_path, encode_runners):
             out = str(tmp_path / f"{runner}-{encode.__name__}")
             assert encode(spark, src, out)["runner"] == runner
             digests[runner] = encode_digest(out)
+            parts = {s: len(r["parts"]) for s, r in read_manifest(out).items()}
+            assert max(parts.values()) == 1, (encode.__name__, runner, parts)
         assert digests["local"] == digests["spark"], encode.__name__
         assert decode_verify(spark, src, out)["bit_identical"], encode.__name__
+
+
+def test_path_tasks_balance_bytes(spark, tmp_path):
+    """The per-file Spark runner's tasks over files of skewed sizes (4
+    large, 60 small): each task is one partition, every file is in one
+    task, the large files are in different tasks, and no task reads more
+    than the mean plus the largest file."""
+    from poc_parquet_aggregator_spark.encode.pipeline import _path_df
+
+    sizes = {}
+    for k, size in enumerate([10_000] * 4 + [100] * 60):
+        f = str(tmp_path / f"f{k:02d}.parquet")
+        with open(f, "wb") as fh:
+            fh.write(b"\0" * size)
+        sizes[f] = size
+    n = min(len(sizes), spark.sparkContext.defaultParallelism)
+    parts = _path_df(spark, list(sizes)).rdd.glom().collect()
+    assert all(len(part) <= 1 for part in parts)
+    tasks = [part[0].paths for part in parts if part]
+    assert len(tasks) == n
+    assert sorted(p for t in tasks for p in t) == sorted(sizes)
+    big = [sum(sizes[p] == 10_000 for p in t) for t in tasks]
+    assert max(big) == -(-4 // n), big
+    assert max(sum(sizes[p] for p in t) for t in tasks) <= sum(sizes.values()) / n + 10_000
+
+
+def test_a_unit_encoded_as_two_parts_raises_before_any_commit(tmp_path, monkeypatch):
+    """A commit unit is one part: when one file's batches come back from
+    the kernel as two units of the same stem, the job raises naming the
+    stem and commits no record, not a two-part record."""
+    from poc_parquet_aggregator_spark.encode import pipeline
+
+    src = str(tmp_path / "src")
+    write_token_table(src, 5000, docs_per_file=5000)
+    (f,) = (os.path.join(src, n) for n in os.listdir(src))
+    batches = list(pipeline._file_pieces(f))
+    assert len(batches) > 1
+    real = pipeline._encode_parts
+    monkeypatch.setattr(pipeline, "_encode_parts",
+                        lambda *a: real(*a[:-1], lambda: [batches[:1], batches[1:]]))
+    out = str(tmp_path / "enc")
+    with pytest.raises(ValueError, match=pipeline._stem(f)):
+        encode_dataset(None, src, out)
+    assert read_manifest(out) == {}
 
 
 def _pool_width(monkeypatch, width: int) -> None:

@@ -295,9 +295,9 @@ def test_reads_match_pyarrow_truth(runners, spark, table, enc_dir, salted_dir, l
 
 
 def test_percent_encoded_input_file_names(runners, encode_runners, spark, table, tmp_path):
-    """``input_file_name()`` percent-encodes a file's URI: a space or a
-    ``%`` in an input name must still map to its file, through the batch
-    encode and the stream, on each encode runner. A by-source bucket stem
+    """A space or a ``%`` in an input name maps to its own stem, through
+    the batch encode and the stream, on each encode runner: both runners
+    get file paths, never a percent-encoded URI. A by-source bucket stem
     with a ``%`` and glob metacharacters reads back exactly through each
     read runner: part paths are literal."""
     from poc_parquet_aggregator_spark.streaming import encode_stream
